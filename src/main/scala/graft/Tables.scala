@@ -43,14 +43,17 @@ object Tables {
   // `spark.read.parquet` pays a footer read + schema resolution PER
   // CALL (~55 ms warm), and a session that runs many queries over the
   // same immutable tables re-pays it every time. The cache key carries
-  // the file's (path, mtime, length), so a rewritten path resolves a
-  // FRESH relation (metadata cache with stat-based invalidation, not
-  // result caching: the DataFrame is a logical plan — every action
-  // still reads the parquet bytes). Weak session keys as above.
+  // the path's (file count, newest mtime, total length) over every file
+  // at or below it, so a rewritten path resolves a FRESH relation
+  // (metadata cache with stat-based invalidation, not result caching:
+  // the DataFrame is a logical plan — every action still reads the
+  // parquet bytes). A directory's own stats are not enough: its length
+  // is 0 and its mtime stays put when a part file is rewritten in
+  // place. Weak session keys as above.
   private val relCache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
+        java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long),
           DataFrame]]())
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -77,13 +80,21 @@ object Tables {
       val df = spark.read.parquet(p)
       if (name == "events") normalizeTs(df) else df
     }
-    // stat the path (one FS call); unstat-able paths skip the cache so
-    // spark.read surfaces its usual missing-path error
+    // list the files at or below the path (one recursive listing);
+    // unlistable paths skip the cache so spark.read surfaces its usual
+    // missing-path error
     val key = try {
       val hp = new org.apache.hadoop.fs.Path(p)
-      val st = hp.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(hp)
-      Some((p, st.getModificationTime, st.getLen))
+      val it = hp.getFileSystem(spark.sessionState.newHadoopConf())
+        .listFiles(hp, true)
+      var (files, mtime, len) = (0L, 0L, 0L)
+      while (it.hasNext) {
+        val f = it.next()
+        files += 1
+        mtime = math.max(mtime, f.getModificationTime)
+        len += f.getLen
+      }
+      Some((p, files, mtime, len))
     } catch { case _: java.io.IOException => None }
     key match {
       case None => resolve()

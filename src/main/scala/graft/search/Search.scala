@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 import graft.text.Analyzer
 
@@ -12,10 +12,15 @@ import graft.text.Analyzer
   * TF-IDF and blended with a stored prior (PageRank in the reference,
   * `es.go:196-209`: `_score + doc['PageRank'].value`).
   *
-  * Scale notes: the postings build is one explode + two hash aggregations —
-  * all shuffle-partitioned by (term) or (doc); the per-term document
-  * frequency table is tiny (vocabulary-sized) and broadcast. Nothing is
-  * collected to the driver.
+  * Scale notes: the served query path ([[search]]) never builds postings.
+  * It counts each query term per document row straight off the token
+  * array, so the corpus scan is shuffle-free; only the rows that hold a
+  * query term are grouped by document id (one shuffle of hits, not of
+  * the corpus). One small driver action per request fetches N, every
+  * term's df and the hit total; idf reaches the page plan as a literal.
+  * The batch scorers ([[matchScores]], [[bm25Scores]]) keep the postings
+  * shape: one explode + hash aggregations by (term) or (doc), with the
+  * vocabulary-sized df table broadcast.
   */
 object Search {
 
@@ -40,10 +45,15 @@ object Search {
     val n = docs.agg(count(lit(1)).as("n"))
     tf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(n))
-      .withColumn("w", col("tf") * log(col("n").cast("double") / col("df")))
+      .withColumn("w", tfIdf(col("tf"), col("n"), col("df")))
       .groupBy(idCol)
       .agg(sum("w").as("score"))
   }
+
+  /** The TF-IDF weight of one (document, term) pair, tf · ln(N / df):
+    * the one definition [[matchScores]] and [[search]] both score with. */
+  private def tfIdf(tf: Column, n: Column, df: Column): Column =
+    tf * log(n.cast("double") / df)
 
   /** BM25 scores for an OR-terms query (Okapi, Lucene-style +1 idf):
     * idf(t) = ln((N - df + 0.5)/(df + 0.5) + 1),
@@ -189,8 +199,12 @@ object Search {
   }
 
   /** A page plus the corpus-wide hit count (reference R4 `TotalCount`,
-    * `indexer.go:40-41` — the gRPC stream's first frame). One extra
-    * scalar aggregate; the page itself stays a top-(offset+size) plan. */
+    * `indexer.go:40-41` — the gRPC stream's first frame). `total` is a
+    * Long fetched when the page is built; `rows` stays a lazy
+    * top-(offset+size) plan. [[searchPage]] counts by evaluating
+    * `scored` once more, so it suits cheap inputs such as a phrase
+    * filter; the match path of [[search]] gets its total from the one
+    * small action that also fetches N and df. */
   final case class Page(rows: DataFrame, total: Long)
 
   def searchPage(scored: DataFrame,
@@ -330,17 +344,91 @@ object Search {
   def search(docs: DataFrame, priors: DataFrame, raw: String,
              offset: Int = 0, size: Int = 10,
              idCol: String = "doc_id", textCol: String = "text"): Page = {
-    val scored = parseQuery(raw) match {
+    val order = Seq(col("blended").desc, col(idCol))
+    parseQuery(raw) match {
       case PhraseQuery(p) =>
-        phraseMatch(docs, p, textCol)
+        val scored = phraseMatch(docs, p, textCol)
           .select(col(idCol), lit(1.0).as("score"))
+        searchPage(blend(scored, priors, idCol, "prior"), order, offset, size)
       case MatchQuery(m) =>
-        matchScores(docs,
-          m.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq,
-          idCol, textCol)
+        val terms = m.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)
+        matchPage(docs, priors, terms.distinct, order, offset, size, idCol,
+          textCol)
     }
-    val blended = blend(scored, priors, idCol, "prior")
-    searchPage(blended,
-      Seq(col("blended").desc, col(idCol)), offset, size)
+  }
+
+  /** The match branch of [[search]]: the same page and total as
+    * `searchPage(blend(matchScores(docs, terms), priors), ...)`, from one
+    * scan of `docs` per action and no postings.
+    *
+    *  - Each row gets one `size(filter(tokens, _ === t))` count per
+    *    distinct query term; rows holding none of the terms are dropped
+    *    before any shuffle.
+    *  - Hit rows are grouped by id, so rows sharing a `doc_id` sum their
+    *    term counts (tf) and count once towards df, exactly as the
+    *    postings aggregation does; all null-id hit rows form one group
+    *    that scores but never counts towards df. Non-hit rows group
+    *    under one (false, null) key, which partial aggregation folds to
+    *    a row per task: that is how N rides along in the same scan.
+    *  - One small action returns N (all document rows), every term's df
+    *    (distinct non-null ids) and the total: the blended row count,
+    *    i.e. hit groups times their matching prior rows, at least one.
+    *  - The page plan scores hit groups with idf = ln(N/df) folded to a
+    *    literal — no df or N join — then blends and paginates.
+    */
+  private def matchPage(docs: DataFrame, priors: DataFrame, terms: Seq[String],
+                        order: Seq[Column], offset: Int, size: Int,
+                        idCol: String, textCol: String): Page = {
+    val tfs = terms.indices.map(i => s"__tf$i")
+    // tokens bound once per row: every per-term count reads the column
+    val counts = docs
+      .select(col(idCol), Analyzer.tokenize(col(textCol)).as("__toks"))
+      .select(col(idCol) +: terms.zip(tfs).map { case (t, c) =>
+        functions.size(filter(col("__toks"), _ === t)).as(c) }: _*)
+    val hit = tfs.map(c => col(c) > 0).foldLeft(lit(false))(_ || _)
+    val groups = counts
+      .groupBy(hit.as("__hit"), when(hit, col(idCol)).as(idCol))
+      .agg(count(lit(1)).as("__rows"), tfs.map(c => sum(c).as(c)): _*)
+
+    // the blended row count needs the prior multiplicity of each hit
+    // group: a left join keeps the groups' (__hit, id) partitioning, so
+    // folding the join back to one row per group takes no shuffle
+    val perGroup = groups
+      .join(priors.select(idCol), Seq(idCol), "left")
+      .groupBy("__hit", idCol)
+      .agg(max("__rows").as("__rows"), count(lit(1)).as("__blended") +:
+        tfs.map(c => max(c).as(c)): _*)
+    // each task folds its groups to (N, total, df...) and the driver adds
+    // the task sums: a global aggregate would cost one more shuffle stage
+    val counted = col("__hit") && col(idCol).isNotNull
+    val width = 2 + tfs.size
+    def add(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < width) { a(i) += b(i); i += 1 }
+      a
+    }
+    import docs.sparkSession.implicits._
+    val Array(n, total, dfs @ _*) = perGroup
+      .select(array(col("__rows") +:
+        when(col("__hit"), col("__blended")).otherwise(0L) +:
+        tfs.map(c => when(counted && col(c) > 0, 1L).otherwise(0L)): _*))
+      .as[Array[Long]]
+      .mapPartitions(it => Iterator(it.foldLeft(new Array[Long](width))(add)))
+      .collect()
+      .foldLeft(new Array[Long](width))(add): @unchecked
+
+    // a term weighs in only where it occurs. A weight is null (or, under
+    // ANSI, raises) only where df = 0, i.e. only null ids hold the term;
+    // like the postings sum, a doc whose every weight is null scores null
+    val ws = tfs.zip(dfs).map { case (c, df) =>
+      when(col(c) > 0, tfIdf(col(c), lit(n), lit(df))) }
+    val score =
+      if (ws.isEmpty) lit(null).cast("double")
+      else when(ws.map(_.isNotNull).reduce(_ || _),
+        ws.map(coalesce(_, lit(0d))).reduce(_ + _))
+    val scored = groups.filter(col("__hit"))
+      .select(col(idCol), score.as("score"))
+    Page(paginate(blend(scored, priors, idCol, "prior"), order, offset, size),
+      total)
   }
 }

@@ -33,6 +33,53 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "doc-frequency join must broadcast")
   }
 
+  private def servedSearchInputs = {
+    val docs = Tables.documents(spark, dir)
+    (docs, docs.select(col("doc_id"),
+      (col("n_chars") / lit(1000.0d)).as("prior")))
+  }
+
+  test("served match search pages without postings or sort-merge joins") {
+    val (docs, priors) = servedSearchInputs
+    val p = graft.search.Search.search(docs, priors, "spark join window",
+      offset = 10).rows.queryExecution.executedPlan.toString
+    assert(!p.contains("Generate") && !p.contains("posexplode"), p)
+    assert(!p.contains("SortMergeJoin"), p)
+    assert(p.contains("TakeOrderedAndProject"), p)
+  }
+
+  test("building a match search runs one small action before the page") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (docs, priors) = servedSearchInputs
+    docs.schema // resolve the relation before counting
+    val sc = spark.sparkContext
+    val tag = "graft.planspec.search"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(tag) != null)
+          .foreach(p => jobs.add(
+            String.valueOf(p.getProperty("spark.sql.execution.id"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "build")
+    try graft.search.Search.search(docs, priors, "spark join window")
+    finally sc.setLocalProperty(tag, null)
+    // the listener bus is asynchronous; drain it (private[spark] is
+    // public bytecode, so plain reflection reaches waitUntilEmpty)
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+      .get.invoke(bus)
+    sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val ids = jobs.asScala.toSeq
+    assert(ids.distinct.size <= 1, s"actions before the page: $ids")
+    // the statistics action: the docs scan up to the id shuffle, the
+    // priors broadcast and one stage folding the grouped hits
+    assert(ids.size <= 3, s"jobs before the page: $ids")
+  }
+
   test("top-k queries plan TakeOrderedAndProject, not a global sort") {
     assert(planOf("q18_cosine_topk").contains("TakeOrderedAndProject"))
     assert(planOf("q08_match_search").contains("TakeOrderedAndProject"))

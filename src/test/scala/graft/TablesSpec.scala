@@ -83,4 +83,45 @@ class TablesSpec extends SparkSpec {
       .select("event_id").queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(ts), LessThan(ts,"), plan)
   }
+
+  test("relation cache sees a part file rewritten in place in a directory table") {
+    // A Spark-written table is a directory: its own length is 0 and its
+    // mtime stays put when a part file is rewritten in place, so a key
+    // of the directory's stats alone would keep serving the old relation.
+    import spark.implicits._
+    import java.io.File
+    import java.nio.file.{Files, StandardCopyOption}
+    val root = Files.createTempDirectory("tables-relcache").toFile
+    try {
+      val table = new File(root, "docs.parquet")
+      Seq((1L, "a")).toDF("id", "s").coalesce(1).write.parquet(table.getPath)
+      assert(Tables.read(spark, root.getPath, "docs").count() == 1)
+
+      val next = new File(root, "next")
+      val rows = (1L to 500L).map(i => (i, s"row $i of the rewrite"))
+      rows.toDF("id", "s").coalesce(1).write.parquet(next.getPath)
+      val dirMtime = table.lastModified()
+      def part(d: File) = d.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      val (oldPart, newPart) = (part(table), part(next))
+      Files.copy(newPart.toPath, oldPart.toPath,
+        StandardCopyOption.REPLACE_EXISTING)
+      // the local filesystem verifies each file against its .crc sibling
+      Files.copy(new File(next, s".${newPart.getName}.crc").toPath,
+        new File(table, s".${oldPart.getName}.crc").toPath,
+        StandardCopyOption.REPLACE_EXISTING)
+      assert(table.setLastModified(dirMtime))
+      assert(table.lastModified() == dirMtime)
+
+      val got = Tables.read(spark, root.getPath, "docs").as[(Long, String)]
+        .collect().sortBy(_._1).toSeq
+      assert(got == rows)
+    } finally {
+      def rm(f: File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(root)
+    }
+  }
 }
