@@ -49,7 +49,9 @@ object Tables {
   // the DataFrame is a logical plan — every action still reads the
   // parquet bytes). A directory's own stats are not enough: its length
   // is 0 and its mtime stays put when a part file is rewritten in
-  // place. Weak session keys as above.
+  // place. Weak keys alone cannot free a session here — each cached
+  // DataFrame references its session, so the key stays reachable — so
+  // a session's entries are dropped when its SparkContext stops.
   private val relCache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
@@ -99,11 +101,19 @@ object Tables {
     key match {
       case None => resolve()
       case Some(k) =>
-        relCache.computeIfAbsent(spark,
-          _ => new java.util.concurrent.ConcurrentHashMap())
-          .computeIfAbsent(k, _ => resolve())
+        relCache.computeIfAbsent(spark, s => {
+          releaseOnStop(s.sparkContext)
+          new java.util.concurrent.ConcurrentHashMap()
+        }).computeIfAbsent(k, _ => resolve())
     }
   }
+
+  private def releaseOnStop(sc: org.apache.spark.SparkContext): Unit =
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onApplicationEnd(
+          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+        relCache.keySet.removeIf(_.sparkContext eq sc)
+    })
 
   /** Normalize `ts` to ns-since-epoch LONG regardless of how the parquet
     * writer encoded it (see class doc). Column order is preserved.

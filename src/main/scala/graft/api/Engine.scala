@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.crawl.Crawl
 import graft.graph.PageRank
 import graft.search.Search
-import graft.store.StoreOps
+import graft.store.{StoreOps, Versioned}
 
 /** SURVEY §7's `api` facade — the single object a user of the reference
   * system programs against, mirroring its three service entry points:
@@ -67,7 +67,9 @@ object Engine {
     * predicate is applied on top (sidecar bounds prune FILES; the
     * filter prunes rows and parquet row groups), so results are
     * identical to an unpruned scan + filter. An all-pruned range
-    * returns an empty frame with the table's schema. */
+    * returns an empty frame with the table's schema. The admitted
+    * files, the tombstones and the schema all come from ONE store
+    * snapshot, resolved once per call (Versioned.readSkipped). */
   def scanRange(spark: org.apache.spark.sql.SparkSession, root: String,
                 idFrom: Long, idTo: Long, tsBefore: Long,
                 idCol: String = "src", tsCol: String = "ts",
@@ -77,9 +79,9 @@ object Engine {
       col(tsCol) < tsBefore
     val bounds = Map(idCol -> (idFrom, idTo - 1),
       tsCol -> (Long.MinValue, tsBefore - 1))
-    // ONE scan-composition path (Versioned.readSkipped) plans the
-    // admitted files and applies deletion vectors — the facade never
-    // hand-builds a scan (r12's DV-resurrection bug class)
+    // the facade never hand-builds a scan (r12's DV-resurrection bug
+    // class): readSkipped admits files and applies tombstones over one
+    // snapshot
     graft.store.Versioned.readSkipped(spark, root, bounds, version)
       .filter(pred)
   }
@@ -113,9 +115,11 @@ object Engine {
   /** COUNT(*) of a versioned table: metadata-only when the stats
     * sidecar covers every file (no job runs), scan fallback otherwise. */
   def tableCount(spark: org.apache.spark.sql.SparkSession, root: String,
-                 version: Long = 0L): Long =
-    graft.store.Versioned.metadataCount(root, version).getOrElse(
-      graft.store.Versioned.read(spark, root, version).count())
+                 version: Long = 0L): Long = {
+    val s = Versioned.snapshot(root, version)
+    Versioned.metadataCount(s).getOrElse(
+      Versioned.scanAdmitted(spark, s, s.dataFiles).count())
+  }
 
   /** SQL-first entry: register every testdata table as a temp view
     * (normalized exactly as [[graft.Tables.read]] does — ns-LONG

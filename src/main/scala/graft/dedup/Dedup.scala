@@ -374,8 +374,9 @@ object Dedup {
       : (String, String) = {
     import graft.store.Versioned
     val root = admissionRoot(tag, storeRoot)
-    val v = if (version == 0L) Versioned.latestVersion(root) else version
-    val fileList = Versioned.files(root, v)
+    val snap = Versioned.snapshot(root, version)
+    val v = snap.version
+    val fileList = snap.entries.map(snap.path(_).toString)
     def dirOf(sub: String): String = {
       val fs = fileList.filter(_.contains(s"/$sub/"))
       require(fs.nonEmpty, s"version $v at $root has no $sub layout")

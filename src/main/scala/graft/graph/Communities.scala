@@ -69,27 +69,10 @@ object Communities {
         .join(lab.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), col("lab"))
         .unionAll(lab.select(col("id"), col("lab"))), // self-vote
-      mergeMsg = raw => {
-        // Lexicographic argmax (more votes wins, then smaller label)
-        // as ONE packed decimal — max(struct(cnt, -lab)) planned as
-        // SortAggregate (struct buffers are not HashAggregate-mutable),
-        // i.e. a full sort of the vote stream with interpreted struct
-        // comparisons EVERY round. v = cnt·2⁶³ + (2⁶³−1−lab) is
-        // strictly monotone in the same order and exact (cnt ≤ V,
-        // lab < 2⁶² ⇒ v < 2¹²⁶ < 10³⁸), so the elected label is
-        // bit-identical and the agg is a codegen'd HashAggregate.
-        val m = lit(new java.math.BigDecimal("9223372036854775808"))
-          .cast("decimal(38,0)") // 2^63
-        raw
-          .groupBy("id", "lab").agg(count(lit(1)).as("cnt"))
-          .groupBy("id")
-          .agg(max(col("cnt").cast("decimal(38,0)") * m +
-            (lit(Long.MaxValue) - col("lab")).cast("decimal(19,0)"))
-            .as("w"))
-          .select(col("id"),
-            (lit(Long.MaxValue).cast("decimal(19,0)") - pmod(col("w"), m))
-              .cast("long").as("lab"))
-      },
+      // lexicographic argmax: more votes wins, then smaller label
+      mergeMsg = raw => GraphUtil.argmaxLabel(
+        raw.groupBy("id", "lab").agg(count(lit(1)).as("cnt")),
+        "id", col("cnt"), col("lab"), "lab"),
       vprog = (_, newLab) => newLab.withColumn("changed", lit(true)),
       maxRounds = rounds,
       earlyStop = false)

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, max, pmod}
 
 /** Shared sizing rules for the iterative graph operators. */
 object GraphUtil {
@@ -16,4 +17,28 @@ object GraphUtil {
   def partitionLaw(edges: Long, spark: SparkSession): Int =
     math.max(4, math.min(spark.sparkContext.defaultParallelism,
       (edges / 128000L).toInt + 1))
+
+  /** Per `key` group, the LONG `label` of the row with the highest
+    * integral `score`, ties to the smaller label — the
+    * `max(struct(score, -label))` argmax as ONE packed decimal. A
+    * struct-typed aggregation buffer is not HashAggregate-mutable, so
+    * the struct form plans as SortAggregate: a full sort of the input
+    * with interpreted struct comparisons, every round of LPA and
+    * Louvain. v = score·2⁶⁴ + (2⁶³−1−label) orders the same way: the
+    * offset is computed in DECIMAL, so it spans [0, 2⁶⁴) for every
+    * long label (negative ones included) and never reaches the next
+    * score step; pmod(v, 2⁶⁴) decodes it for a negative score too. v
+    * is exact in DECIMAL(38,0) while |score| < 2⁶², and the agg is a
+    * codegen'd HashAggregate. Output: (`key`, `label` as `as`). */
+  def argmaxLabel(df: DataFrame, key: String, score: Column,
+                  label: Column, as: String): DataFrame = {
+    val step = lit(new java.math.BigDecimal("18446744073709551616"))
+      .cast("decimal(38,0)") // 2^64
+    val top = lit(Long.MaxValue).cast("decimal(20,0)")
+    df.groupBy(key)
+      .agg(max(score.cast("decimal(38,0)") * step +
+        (top - label.cast("decimal(20,0)"))).as("__packed"))
+      .select(col(key),
+        (top - pmod(col("__packed"), step)).cast("long").as(as))
+  }
 }

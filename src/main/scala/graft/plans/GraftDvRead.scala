@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.{GraftDvRelation, GraftFileIndex}
-import graft.store.Versioned
+import graft.store.{Snapshot, Versioned}
 
 /** Keeps `format("graft")` reads CORRECT and VECTORIZED under live
   * deletion vectors.
@@ -46,17 +46,17 @@ import graft.store.Versioned
   * resolves unchanged. */
 class GraftDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
 
-  private def rewrite(lr: LogicalRelation, root: String,
-                      pinned: Option[Long]): LogicalPlan = {
-    val v = pinned.getOrElse(Versioned.latestVersion(root))
-    if (v == 0L || !GraftDvReadRule.hasDv(root, v)) return lr
-    val index = new GraftFileIndex(session, root, Some(v),
-      dvApplied = true)
-    if (index.inputFiles.isEmpty) return lr
+  /** `snap` is the one snapshot this execution reads (the relation's
+    * own, re-resolved for an unpinned relation): its tombstones, data
+    * files and schema-DDL state all come from it. */
+  private def rewrite(lr: LogicalRelation, snap: Snapshot): LogicalPlan = {
+    if (snap.dvFiles.isEmpty || snap.dataFiles.isEmpty) return lr
+    val index = new GraftFileIndex(session, snap.root, Some(snap.version),
+      dvApplied = true, seed = Some(snap))
     val rel = HadoopFsRelation(index, new StructType(), index.schemaOf,
       None, new ParquetFileFormat, Map.empty)(session)
     val scan = session.baseRelationToDataFrame(rel)
-    val applied = Versioned.applyDeleteVectors(session, root, scan, v)
+    val applied = Versioned.applyDeleteVectors(session, snap, scan)
     // pick the column space the stale relation actually exposes: a
     // relation under the schema-DDL mapping wrap outputs PHYSICAL
     // names (the native scan already matches); a GraftDvRelation (or
@@ -72,8 +72,7 @@ class GraftDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
       }, child))
     }
     rebind(applied).orElse {
-      Versioned.schemaDdl(root, v)
-        .flatMap(s => rebind(Versioned.toLogicalFrame(applied, s)))
+      snap.ddl.flatMap(s => rebind(Versioned.toLogicalFrame(applied, s)))
     // schema drift between the stale relation and the live table:
     // keep the self-contained fallback rather than emit a wrong plan
     }.getOrElse(lr)
@@ -85,35 +84,11 @@ class GraftDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
         lr.relation match {
           case fsrel: HadoopFsRelation => fsrel.location match {
             case gi: GraftFileIndex if !gi.dvApplied =>
-              rewrite(lr, gi.root, gi.pinned)
+              gi.snapshot().fold(lr: LogicalPlan)(rewrite(lr, _))
             case _ => lr
           }
-          case dv: GraftDvRelation => rewrite(lr, dv.root, dv.pinned)
+          case dv: GraftDvRelation => rewrite(lr, dv.snapshot())
           case _ => lr
         }
     }
-}
-
-private[plans] object GraftDvReadRule {
-  /** DV presence is IMMUTABLE per (root, version) — a published
-    * manifest never changes — so the per-optimizer-run probe memoizes
-    * (bounded LRU; the latest-version lookup itself stays live). */
-  private val dvCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, java.lang.Boolean](64, 0.75f,
-        true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Boolean]): Boolean =
-        size() > 256
-    })
-
-  def hasDv(root: String, version: Long): Boolean = {
-    val key = s"$root#$version"
-    val c = dvCache.get(key)
-    if (c != null) c.booleanValue()
-    else {
-      val v = Versioned.hasDeleteVectors(root, version)
-      dvCache.put(key, java.lang.Boolean.valueOf(v))
-      v
-    }
-  }
 }

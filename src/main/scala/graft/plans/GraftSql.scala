@@ -291,18 +291,12 @@ case class GraftDescribeDetailCommand(table: TableRef)
     GraftSqlOut.attr("num_constraints", LongType))
   override def run(session: SparkSession): Seq[Row] = {
     val root = table.root(session)
-    val v = Versioned.latestVersion(root)
-    val statuses =
-      if (v == 0L) Nil else Versioned.dataFileStatuses(root, v)
-    val dvFiles =
-      if (v == 0L) 0L
-      else Versioned.history(session, root)
-        .limit(1).collect().headOption
-        .map(_.getAs[Long]("n_dv_files")).getOrElse(0L)
-    Seq(Row(root, v, statuses.size.toLong,
+    val snap = Versioned.snapshotOf(root, 0L)
+    val statuses = snap.toSeq.flatMap(_.statuses)
+    Seq(Row(root, snap.fold(0L)(_.version), statuses.size.toLong,
       statuses.map(_.getLen).sum,
       Versioned.currentLayout(root).mkString(","),
-      dvFiles,
+      snap.fold(0L)(_.dvFiles.size.toLong),
       Versioned.checkConstraints(root).size.toLong))
   }
 }

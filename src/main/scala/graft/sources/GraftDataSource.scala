@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.store.Versioned
+import graft.store.{Snapshot, Versioned}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * versioned store as a first-class Spark data source, so plain
@@ -167,22 +167,22 @@ class GraftDataSource extends RelationProvider
       return new GraftCdfRelation(sqlContext, root, from, to)
     }
     val pinned = pinnedVersion(root, parameters)
-    val creationVersion = pinned.getOrElse(Versioned.latestVersion(root))
-    require(creationVersion > 0 || userSchema.nonEmpty ||
+    val snap = Versioned.snapshotOf(root, pinned.getOrElse(0L))
+    require(snap.nonEmpty || userSchema.nonEmpty ||
       Versioned.tableSchema(root).nonEmpty ||
       Versioned.schemaDdl(root).nonEmpty,
       s"no committed version at $root (and no declared schema to " +
         "serve an empty relation from)")
-    if (creationVersion > 0 &&
-        Versioned.hasDeleteVectors(root, creationVersion))
+    if (snap.exists(_.dvFiles.nonEmpty))
       // correct without session extensions (self-contained anti-join
       // RDD); with GraftExtensions, GraftDvReadRule replaces this per
       // query with the native scan + logical anti-join plan, keeping
       // whole-stage codegen and the vectorized parquet reader
-      new GraftDvRelation(sqlContext, root, pinned, creationVersion)
+      new GraftDvRelation(sqlContext, root, pinned, snap.get)
     else {
-      val index = new GraftFileIndex(spark, root, pinned)
-      val files = index.inputFiles
+      val index = new GraftFileIndex(spark, root, pinned, seed = snap)
+      val files =
+        snap.toSeq.flatMap(s => s.dataFiles.map(s.path(_).toString))
       // schema-DDL tables scan in PHYSICAL space (the state's explicit
       // read schema — files predating an added column null-fill it);
       // GraftMappingRule projects the relation to logical names per
@@ -194,7 +194,7 @@ class GraftDataSource extends RelationProvider
           Versioned.tableSchema(root).orElse(userSchema).get
         else if (opt(parameters, "mergeSchema").exists(_.toBoolean))
           spark.read.option("mergeSchema", "true")
-            .parquet(files.toSeq: _*).schema
+            .parquet(files: _*).schema
         else index.schemaOf
       }
       HadoopFsRelation(index, new StructType(), dataSchema, None,
@@ -266,47 +266,42 @@ class GraftDataSource extends RelationProvider
   * applied row-wise by the scan above, so admission is never a
   * correctness gate.
   *
-  * `pinned = None` means "the LATEST version, re-resolved at every
-  * listFiles call" — a relation resolved once into a temp view or a
-  * catalog table keeps seeing new commits (the snapshot is chosen per
-  * scan, Delta's TahoeLogFileIndex semantics); a DML command that
-  * advanced the table needs no invalidation hook. The per-version
-  * snapshot is cached, so repeated scans of an unchanged table pay one
-  * manifest read. `dvApplied = true` marks an index planned UNDER the
-  * logical anti-join [[graft.plans.GraftDvReadRule]] builds — the
-  * guard below must not re-fire for it. */
+  * Every scan reads ONE [[graft.store.Snapshot]]: its files, their
+  * statuses, its tombstone check and its sidecar admission all come
+  * from the snapshot resolved for that scan, never from a second look
+  * at the store. `pinned = None` means "the LATEST version, re-resolved
+  * at every listFiles call" — a relation resolved once into a temp
+  * view or a catalog table keeps seeing new commits (the snapshot is
+  * chosen per scan, Delta's TahoeLogFileIndex semantics); a DML command
+  * that advanced the table needs no invalidation hook. The index keeps
+  * its last snapshot, so repeated scans of an unchanged table pay one
+  * root listing and no manifest read. `dvApplied = true` marks an index
+  * planned UNDER the logical anti-join [[graft.plans.GraftDvReadRule]]
+  * builds — the guard below must not re-fire for it. */
 final class GraftFileIndex(spark: SparkSession, val root: String,
                            val pinned: Option[Long],
                            val dvApplied: Boolean = false,
-                           val mapped: Boolean = false)
+                           val mapped: Boolean = false,
+                           seed: Option[Snapshot] = None)
     extends FileIndex {
 
   def this(spark: SparkSession, root: String, version: Long) =
     this(spark, root, Some(version))
 
+  @volatile private var cached: Option[Snapshot] = seed
+
   /** Copy flagged as already sitting under a [[graft.plans]] mapping
     * projection (stops the wrap rule re-firing in its fixpoint). */
   private[graft] def asMapped: GraftFileIndex =
-    new GraftFileIndex(spark, root, pinned, dvApplied, mapped = true)
+    new GraftFileIndex(spark, root, pinned, dvApplied, mapped = true,
+      seed = cached)
 
-  /** The version this scan reads: pinned, or latest-right-now. */
-  def resolvedVersion: Long =
-    pinned.getOrElse(Versioned.latestVersion(root))
-
-  // per-version snapshot cache: (version, statuses). Version 0 (an
-  // uncommitted table) holds zero files.
-  @volatile private var cached: (Long, Seq[FileStatus]) = (-1L, Nil)
-
-  private def snapshot(): (Long, Seq[FileStatus]) = {
-    val v = resolvedVersion
-    val c = cached
-    if (c._1 == v) c
-    else {
-      val fresh =
-        (v, if (v == 0L) Nil else Versioned.dataFileStatuses(root, v))
-      cached = fresh
-      fresh
-    }
+  /** The snapshot this scan reads — pinned, or latest-right-now; None
+    * while the table has no commit. */
+  private[graft] def snapshot(): Option[Snapshot] = {
+    val s = Versioned.snapshotOf(root, pinned.getOrElse(0L), cached)
+    cached = s
+    s
   }
 
   /** Schema used for probe translation and (when files exist) as the
@@ -316,18 +311,14 @@ final class GraftFileIndex(spark: SparkSession, val root: String,
     * with a schema no committed version carries), so it only serves
     * the zero-data-file case where there is no footer to read. */
   private[graft] lazy val schemaOf: StructType =
-    // a schema-DDL state is authoritative for the PHYSICAL read space
-    // (footers of old files predate added columns); otherwise footers
-    // rule as before
-    Versioned.schemaDdl(root, pinned.getOrElse(0L))
-      .map(_.physicalReadSchema).getOrElse {
-        val (_, statuses) = snapshot()
-        if (statuses.nonEmpty)
-          spark.read.parquet(statuses.head.getPath.toString).schema
-        else Versioned.tableSchema(root).getOrElse(
-          throw new IllegalStateException(
-            s"$root holds no data files and no schema of record"))
-      }
+    // the snapshot's one schema: a schema-DDL state is authoritative
+    // for the PHYSICAL read space (footers of old files predate added
+    // columns); otherwise the first data file's footer rules
+    snapshot().filter(s => s.ddl.nonEmpty || s.dataFiles.nonEmpty)
+      .map(_.schema(spark))
+      .orElse(Versioned.tableSchema(root)).getOrElse(
+        throw new IllegalStateException(
+          s"$root holds no data files and no schema of record"))
 
   override val rootPaths: Seq[Path] = Seq(new Path(root))
 
@@ -336,46 +327,46 @@ final class GraftFileIndex(spark: SparkSession, val root: String,
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
       : Seq[PartitionDirectory] = {
-    val (version, statuses) = snapshot()
+    val snap = snapshot()
     // planning data files alone over live tombstones would RESURRECT
     // deleted rows; GraftDvReadRule (installed by GraftExtensions)
     // rewrites such reads into scan + anti-join before execution, so
     // reaching this guard means the rule isn't installed
-    require(dvApplied || version == 0L ||
-      !Versioned.hasDeleteVectors(root, version),
-      s"$root carries deletion vectors at version $version: install " +
-        "graft.plans.GraftExtensions (spark.sql.extensions) so reads " +
-        "apply them (a relation analyzed BEFORE the tombstone commit " +
-        "must be re-created), or read via graft.store.Versioned.read")
-    if (statuses.isEmpty)
+    snap.foreach(s => require(dvApplied || s.dvFiles.isEmpty,
+      s"$root carries deletion vectors at version ${s.version}: " +
+        "install graft.plans.GraftExtensions (spark.sql.extensions) so " +
+        "reads apply them (a relation analyzed BEFORE the tombstone " +
+        "commit must be re-created), or read via " +
+        "graft.store.Versioned.read"))
+    val kept: Seq[FileStatus] = snap match {
       // uncommitted or emptied table: zero files, and no schema is
       // needed to say so
-      return Seq(PartitionDirectory(InternalRow.empty,
-        Array.empty[FileStatus]))
-    val probes = GraftProbes.fromCatalyst(
-      partitionFilters ++ dataFilters, schemaOf)
-    val kept: Seq[FileStatus] =
-      if (probes.contradiction || version == 0L) Nil
-      else if (probes.isEmpty) statuses
-      else {
-        val byPath: Map[String, FileStatus] =
-          statuses.map(s => s.getPath.toString -> s).toMap
-        // filters push through the mapping projection into PHYSICAL
-        // attributes, so these probes are already in sidecar space
-        val (admitted, _) = Versioned.admittedDataFiles(root, version,
-          probes.bounds, probes.equalitySets, probes.hashEqualitySets,
-          physicalKeys = true)
-        admitted.flatMap(byPath.get)
-      }
+      case Some(s) if s.dataFiles.nonEmpty =>
+        val probes = GraftProbes.fromCatalyst(
+          partitionFilters ++ dataFilters, schemaOf)
+        if (probes.contradiction) Nil
+        else if (probes.isEmpty) s.statuses
+        else {
+          val byEntry = s.dataFiles.zip(s.statuses).toMap
+          // filters push through the mapping projection into PHYSICAL
+          // attributes, so these probes are already in sidecar space
+          Versioned.admit(s, probes.bounds, probes.equalitySets,
+            probes.hashEqualitySets, physicalKeys = true).map(byEntry)
+        }
+      case _ => Nil
+    }
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 
+  private def statuses: Seq[FileStatus] =
+    snapshot().map(_.statuses).getOrElse(Nil)
+
   override def inputFiles: Array[String] =
-    snapshot()._2.map(_.getPath.toString).toArray
+    statuses.map(_.getPath.toString).toArray
 
-  override def refresh(): Unit = cached = (-1L, Nil)
+  override def refresh(): Unit = cached = None
 
-  override def sizeInBytes: Long = snapshot()._2.map(_.getLen).sum
+  override def sizeInBytes: Long = statuses.map(_.getLen).sum
 }
 
 /** Deletion-vector fallback relation: admitted files + tombstone
@@ -383,21 +374,28 @@ final class GraftFileIndex(spark: SparkSession, val root: String,
   * InternalRow RDD (`needConversion = false`). Spark re-applies every
   * filter above this scan, so only translatable probes matter here —
   * they bound IO, not answers. Like the file index, an unpinned
-  * relation re-resolves the latest version per scan. With
-  * GraftExtensions installed this relation never executes:
-  * GraftDvReadRule replaces it with the native logical plan. */
+  * relation re-resolves the latest version per scan, and each scan
+  * reads one [[graft.store.Snapshot]]. With GraftExtensions installed
+  * this relation never executes: GraftDvReadRule replaces it with the
+  * native logical plan. */
 private[graft] final class GraftDvRelation(
     override val sqlContext: SQLContext, val root: String,
-    val pinned: Option[Long], creationVersion: Long)
+    val pinned: Option[Long], creation: Snapshot)
     extends BaseRelation with PrunedFilteredScan {
 
   private def spark = sqlContext.sparkSession
 
-  private def scanVersion: Long =
-    pinned.getOrElse(Versioned.latestVersion(root))
+  @volatile private var cached: Snapshot = creation
+
+  /** The snapshot this scan reads: pinned, or latest-right-now. */
+  private[graft] def snapshot(): Snapshot = {
+    val s = Versioned.snapshot(root, pinned.getOrElse(0L), Some(cached))
+    cached = s
+    s
+  }
 
   override val schema: StructType =
-    Versioned.read(spark, root, creationVersion).schema
+    Versioned.scanAdmitted(spark, creation, creation.dataFiles).schema
 
   // buildScan returns InternalRows (the contract this flag selects);
   // the declared RDD[Row] element type is erased at runtime
@@ -405,12 +403,11 @@ private[graft] final class GraftDvRelation(
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    val version = scanVersion
+    val snap = snapshot()
     val probes = GraftProbes.fromSources(filters, schema)
     val base =
-      if (probes.contradiction)
-        Versioned.read(spark, root, version).limit(0)
-      else Versioned.readProbed(spark, root, version, probes.bounds,
+      if (probes.contradiction) Versioned.scanAdmitted(spark, snap, Nil)
+      else Versioned.readProbed(spark, snap, probes.bounds,
         probes.equalitySets, probes.hashEqualitySets)
     // row-wise application of whatever translates cheaply; Spark
     // re-applies the full set above, this only trims the exchange

@@ -431,19 +431,10 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
       math.min(until, Int.MaxValue.toLong).toInt)
     if (files.isEmpty) (emptyBatch(spark), false)
     else {
-      val dv = Versioned.hasDeleteVectors(root, v)
-      // schema-DDL tables: scan the slice in physical space and
-      // project to the logical schema (every other batch shape goes
-      // through Versioned.read/readChanges/readChangeFeed, which
-      // already do this)
-      val ddl = Versioned.schemaDdl(root, v)
-      val scan = Versioned.fastScanAbs(spark, root, files,
-        ddl.map(_.physicalReadSchema))
-      val applied =
-        if (dv) Versioned.applyDeleteVectors(spark, root, scan, v)
-        else scan
-      (ddl.map(s => Versioned.toLogicalFrame(applied, s))
-        .getOrElse(applied), dv)
+      // the store's one read path over version v's snapshot: its
+      // tombstones and schema-DDL state apply to the slice
+      val s = Versioned.snapshot(root, v)
+      (Versioned.scanAdmitted(spark, s, files), s.dvFiles.nonEmpty)
     }
   }
 
@@ -501,8 +492,11 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
         // semantics: the snapshot is the LIVE rows) — an anti-join, so
         // it must ride opaque when tombstones exist
         if (cdf) (cdfBatch(spark, 0L, endV), true)
-        else (Versioned.read(spark, root, endV),
-          Versioned.hasDeleteVectors(root, endV))
+        else {
+          val s = Versioned.snapshot(root, endV)
+          (Versioned.scanAdmitted(spark, s, s.dataFiles),
+            s.dvFiles.nonEmpty)
+        }
       case _ =>
         // initial snapshot cut at startingVersion: manifest(end) minus
         // manifest(startingVersion - 1) - exact for append lineages,

@@ -1,0 +1,42 @@
+package graft.store
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
+
+/** One committed version of a versioned table, resolved once: the
+  * store metadata every read needs, taken from ONE root listing (the
+  * highest `manifest-v*` and `schemaddl-v*`) and ONE manifest open by
+  * [[Versioned.snapshot]]. Every read entry point of [[Versioned]] is a
+  * projection of a snapshot, so a read can never compose version v's
+  * files with v+1's tombstones or schema-DDL state, however many
+  * commits land while it plans. Published manifests never change: a
+  * snapshot stays exact for as long as its version is retained.
+  *
+  * `entries` is the manifest as written (data, deletion-vector and CDC
+  * entries, root-relative or absolute); `ddl` the schema-DDL state in
+  * force at `version`. */
+private[graft] final case class Snapshot(root: String, fs: FileSystem,
+    rootPath: Path, version: Long, entries: Seq[String],
+    ddl: Option[Versioned.SchemaDdl]) {
+
+  /** Scannable data files and tombstone files, in manifest order. */
+  val (dataFiles, dvFiles) = Versioned.splitEntries(entries)
+
+  /** Absolute path of a manifest entry. */
+  def path(entry: String): Path = Versioned.resolve(rootPath, entry)
+
+  /** FileStatus of every data file, in manifest order; one listStatus
+    * per commit directory. */
+  lazy val statuses: Seq[FileStatus] =
+    FastScan.statusesOf(fs, dataFiles.map(path))
+
+  /** The one physical schema every projection scans with: the
+    * schema-DDL read schema when a state applies, else the first
+    * manifest data file's footer. A pruned read therefore returns the
+    * full read's columns whichever files it admits. Needs a data file
+    * or a DDL state. */
+  def schema(spark: SparkSession): StructType =
+    ddl.map(_.physicalReadSchema).getOrElse(
+      spark.read.parquet(path(dataFiles.head).toString).schema)
+}

@@ -122,7 +122,7 @@ object Versioned {
     * CDC sidecars are NEITHER: they are excluded from the data side so
     * every read/stats/bloom/compaction path ignores them, and from the
     * dv side so tombstone application never scans them. */
-  private def splitEntries(files: Seq[String])
+  private[store] def splitEntries(files: Seq[String])
       : (Seq[String], Seq[String]) =
     (files.filterNot(f => isDvEntry(f) || isCdcEntry(f)),
       files.filter(isDvEntry))
@@ -312,12 +312,55 @@ object Versioned {
   /** Highest committed version at `root`, or 0 if none. */
   def latestVersion(root: String): Long = {
     val (fs, rootPath) = fsRoot(root)
-    if (!fs.exists(rootPath)) return 0L
-    val vs = fs.listStatus(rootPath).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("manifest-v") && n.endsWith(".json") =>
-        n.stripPrefix("manifest-v").stripSuffix(".json").toLong
+    highest(rootNames(fs, rootPath), "manifest")
+  }
+
+  /** Entry names of the table root; empty when it doesn't exist. */
+  private def rootNames(fs: FileSystem, rootPath: Path): Seq[String] =
+    try fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The n of every `<prefix>-v<n>.json` among root entry `names`. */
+  private def versionsOf(names: Seq[String], prefix: String): Seq[Long] =
+    names.collect {
+      case n if n.startsWith(prefix + "-v") && n.endsWith(".json") =>
+        n.stripPrefix(prefix + "-v").stripSuffix(".json").toLong
     }
-    if (vs.isEmpty) 0L else vs.max
+
+  private def highest(names: Seq[String], prefix: String): Long =
+    versionsOf(names, prefix).foldLeft(0L)(math.max)
+
+  /** The snapshot at `version` (latest when 0): ONE listing of the
+    * root yields both the highest manifest and the highest schema-DDL
+    * state, then ONE manifest open. Every read resolves "latest" here
+    * and nowhere else. */
+  private[graft] def snapshot(root: String, version: Long = 0L,
+                              prior: Option[Snapshot] = None): Snapshot = {
+    val s = snapshotOf(root, version, prior)
+    require(s.nonEmpty, s"no committed version 0 at $root")
+    s.get
+  }
+
+  /** [[snapshot]] of a table that may have no commit yet (None when
+    * `version` is 0 and nothing was ever committed). `prior` comes back
+    * unchanged when it already holds the resolved version: published
+    * manifests never change, so a long-lived reader pays nothing for a
+    * pinned version and one listing for "latest" while the table is
+    * idle. */
+  private[graft] def snapshotOf(root: String, version: Long,
+                                prior: Option[Snapshot] = None)
+      : Option[Snapshot] = {
+    if (version != 0L && prior.exists(_.version == version)) return prior
+    val (fs, rootPath) = fsRoot(root)
+    val names = rootNames(fs, rootPath)
+    val v = if (version == 0L) highest(names, "manifest") else version
+    if (version == 0L && v == 0L) None
+    else prior.filter(_.version == v).orElse {
+      require(v > 0 && names.contains(manifestPath(rootPath, v).getName),
+        s"no committed version $v at $root")
+      Some(Snapshot(root, fs, rootPath, v, readManifest(fs, rootPath, v)._2,
+        schemaDdlAsOf(fs, rootPath, highest(names, SchemaDdlPrefix), v)))
+    }
   }
 
   /** (writer token, root-relative file list) of manifest v. Pre-r9
@@ -340,7 +383,7 @@ object Versioned {
     (writer, files)
   }
 
-  private def resolve(rootPath: Path, f: String): Path =
+  private[store] def resolve(rootPath: Path, f: String): Path =
     if (f.contains("://") || f.startsWith("/")) new Path(f)
     else new Path(rootPath, f)
 
@@ -531,15 +574,8 @@ object Versioned {
     new Path(rootPath, s"$prefix-v$n.json")
 
   private def latestKvVersion(fs: FileSystem, rootPath: Path,
-                              prefix: String): Long = {
-    if (!fs.exists(rootPath)) return 0L
-    fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .collect {
-        case n if n.startsWith(prefix + "-v") && n.endsWith(".json") =>
-          n.stripPrefix(prefix + "-v").stripSuffix(".json").toLong
-      }
-      .foldLeft(0L)(math.max)
-  }
+                              prefix: String): Long =
+    highest(rootNames(fs, rootPath), prefix)
 
   private def constraintsVersionPath(rootPath: Path, n: Long): Path =
     kvVersionPath(rootPath, "constraints", n)
@@ -582,12 +618,11 @@ object Versioned {
   /** Typed EMPTY frame in the schema of record — the read of a version
     * whose manifest lists zero data files. A schema-DDL state (which
     * holds the LOGICAL schema) outranks the legacy advisory file. */
-  private def emptyTyped(spark: SparkSession, root: String,
-                         version: Long = 0L): DataFrame = {
-    val schema = schemaDdl(root, version).map(_.schema)
-      .orElse(tableSchema(root)).getOrElse(
+  private def emptyTyped(spark: SparkSession, s: Snapshot): DataFrame = {
+    val schema = s.ddl.map(_.schema)
+      .orElse(tableSchema(s.root)).getOrElse(
         throw new IllegalStateException(
-          s"version at $root lists no data files and no schema of " +
+          s"version at ${s.root} lists no data files and no schema of " +
             "record (schema.json) survives - the table predates " +
             "empty-state support; recommit any data to repair"))
     spark.createDataFrame(
@@ -874,18 +909,16 @@ object Versioned {
     * takes its legacy footer-driven branch. */
   def schemaDdl(root: String, version: Long = 0L): Option[SchemaDdl] = {
     val (fs, rootPath) = fsRoot(root)
-    val latest = latestKvVersion(fs, rootPath, SchemaDdlPrefix)
-    if (latest == 0L) return None
-    val v = if (version == 0L) Long.MaxValue else version
-    var n = latest
-    while (n > 0L) {
-      schemaDdlAtN(fs, rootPath, n) match {
-        case Some(s) if s.asOf <= v => return Some(s)
-        case _ => n -= 1L
-      }
-    }
-    None
+    schemaDdlAsOf(fs, rootPath, latestKvVersion(fs, rootPath,
+      SchemaDdlPrefix), if (version == 0L) Long.MaxValue else version)
   }
+
+  /** The newest of states 1..`latest` whose `asOf` manifest `v` has
+    * reached. */
+  private def schemaDdlAsOf(fs: FileSystem, rootPath: Path, latest: Long,
+                            v: Long): Option[SchemaDdl] =
+    (latest to 1L by -1L).iterator.map(schemaDdlAtN(fs, rootPath, _))
+      .collectFirst { case Some(s) if s.asOf <= v => s }
 
   /** Project a PHYSICAL-space frame (a data-file scan) into `s`'s
     * logical schema, null-filling columns the files predate and
@@ -945,17 +978,6 @@ object Versioned {
     * when a state applies (absent columns null-fill; dropped columns
     * are simply not requested), the plain footer-driven read —
     * byte-identical to the legacy path — otherwise. */
-  /** [[FastScan]] over ABSOLUTE paths for graft-internal callers
-    * outside this object (the streaming source's snapshot-cut slices):
-    * same known-file-set relation construction as [[dataScan]]. */
-  private[graft] def fastScanAbs(spark: SparkSession, root: String,
-      paths: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
-    val (fs, rootPath) = fsRoot(root)
-    FastScan.parquetPaths(spark, fs, rootPath, paths, schema)
-  }
-
   private def dataScan(spark: SparkSession, rootPath: Path,
                        files: Seq[String], ddl: Option[SchemaDdl])
       : DataFrame = {
@@ -1386,12 +1408,9 @@ object Versioned {
   /** [[detectPartitionBy]] over the LATEST version's data files — the
     * layout an append that cannot name one (SQL INSERT INTO) should
     * land under. Nil on an empty table or a mixed layout. */
-  private[graft] def currentLayout(root: String): Seq[String] = {
-    if (latestVersion(root) == 0L) return Nil
-    val (fs, rootPath) = fsRoot(root)
-    detectPartitionBy(
-      splitEntries(readManifest(fs, rootPath, latestVersion(root))._2)._1)
-  }
+  private[graft] def currentLayout(root: String): Seq[String] =
+    snapshotOf(root, 0L).map(s => detectPartitionBy(s.dataFiles))
+      .getOrElse(Nil)
 
   /** Latest transaction batch id committed at `root` by `appId`, or
     * None. Scans manifest headers newest-first — driver-side and
@@ -2514,11 +2533,8 @@ object Versioned {
     * the admission index pins its probe to a version). Manifest-sized,
     * driver-side. */
   def files(root: String, version: Long = 0L): Seq[String] = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    readManifest(fs, rootPath, v)._2.map(resolve(rootPath, _).toString)
+    val s = snapshot(root, version)
+    s.entries.map(s.path(_).toString)
   }
 
   /** Fresh, isolated staging directory under the store's data path,
@@ -2571,33 +2587,13 @@ object Versioned {
     * original narrower schema either way. */
   def read(spark: SparkSession, root: String, version: Long = 0L,
            mergeSchema: Boolean = false): DataFrame = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    val (files, dvFiles) = splitEntries(readManifest(fs, rootPath, v)._2)
-    // zero data files is a LEGAL state (a delete that removed every
-    // row): serve the typed empty frame from the schema of record
-    if (files.isEmpty) return emptyTyped(spark, root, v)
-    schemaDdl(root, v) match {
-      case Some(s) =>
-        // schema-DDL table: scan in physical space (explicit read
-        // schema — files predating an added column null-fill it),
-        // apply tombstones while the scan still owns its _metadata,
-        // then project to the logical schema of record
-        toLogicalFrame(applyDv(spark, fs, rootPath,
-          dataScan(spark, rootPath, files, Some(s)), dvFiles), s)
-      case None =>
-        // mergeSchema reads genuinely need every footer — keep the
-        // generic reader there; the common path reads the manifest's
-        // file set through FastScan (no per-file driver work)
-        val scan =
-          if (mergeSchema)
-            spark.read.option("mergeSchema", "true")
-              .parquet(files.map(resolve(rootPath, _).toString): _*)
-          else dataScan(spark, rootPath, files, None)
-        applyDv(spark, fs, rootPath, scan, dvFiles)
-    }
+    val s = snapshot(root, version)
+    // mergeSchema reads genuinely need every footer — keep the generic
+    // reader there (a schema-DDL state already fixes the read schema)
+    if (mergeSchema && s.ddl.isEmpty && s.dataFiles.nonEmpty)
+      applyDeleteVectors(spark, s, spark.read.option("mergeSchema", "true")
+        .parquet(s.dataFiles.map(s.path(_).toString): _*))
+    else scanAdmitted(spark, s, s.dataFiles)
   }
 
   /** Incremental consumption (the CDC-read of every lakehouse log):
@@ -2696,12 +2692,7 @@ object Versioned {
     * from the bottom), or 0 on an empty table. */
   def earliestVersion(root: String): Long = {
     val (fs, rootPath) = fsRoot(root)
-    if (!fs.exists(rootPath)) return 0L
-    val vs = fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .collect {
-        case n if n.startsWith("manifest-v") && n.endsWith(".json") =>
-          n.stripPrefix("manifest-v").stripSuffix(".json").toLong
-      }
+    val vs = versionsOf(rootNames(fs, rootPath), "manifest")
     if (vs.isEmpty) 0L else vs.min
   }
 
@@ -3273,85 +3264,51 @@ object Versioned {
     * columns without metadata always survive. Equalities also apply as
     * degenerate [v, v] bounds, so a column carrying BOTH stats and a
     * bloom prunes by whichever is tighter. Absolute paths, ready for a
-    * parquet scan. */
+    * parquet scan; tombstones are not data, so a caller composing its
+    * own scan over them applies [[applyDeleteVectors]] on top. */
   def prunedFiles(root: String, bounds: Map[String, (Long, Long)],
                   version: Long = 0L,
                   equalities: Map[String, Long] = Map.empty,
                   stringEqualities: Map[String, String] = Map.empty)
       : (Seq[String], Long) = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    // tombstones are not scannable data: prune over data entries only.
-    // Callers composing their own scan over the kept files must apply
-    // [[applyDeleteVectors]] on top when the table carries tombstones.
-    val manifestFiles =
-      splitEntries(readManifest(fs, rootPath, v)._2)._1
-    // a string equality probes BOTH sidecars in their own key spaces:
-    // the stats interval as a degenerate prefix-key bound, the bloom
-    // as the full-value hash (prefixes of URL tables collide; the
-    // hash discriminates)
-    val strBounds = stringEqualities.map { case (c, s) =>
-      val pk = prefixKeyOf(s); c -> (pk, pk)
-    }
-    // facade callers probe in LOGICAL names; sidecars key physical
-    val ddl = schemaDdl(root, v)
-    val kept = admittedFiles(fs, rootPath, v, manifestFiles,
-      physProbeKeys(ddl, bounds ++ strBounds),
-      physProbeKeys(ddl, equalities.view.mapValues(Seq(_)).toMap),
-      physProbeKeys(ddl,
-        stringEqualities.map { case (c, s) => c -> Seq(hashKeyOf(s)) }))
-    (kept.map(resolve(rootPath, _).toString), manifestFiles.size.toLong)
+    val s = snapshot(root, version)
+    (admitFacade(s, bounds, equalities, stringEqualities)
+      .map(s.path(_).toString), s.dataFiles.size.toLong)
   }
 
-  /** The admitted-file planning step with the prober's probes already
-    * translated into sidecar key spaces — the entry point
-    * `graft.sources.GraftDataSource`'s FileIndex uses to turn Catalyst
-    * filter expressions into file skipping. `bounds` and
-    * `equalitySets` are STATS-space longs (integral raw values or
-    * string prefix keys), `hashEqualitySets` BLOOM-space hashes
-    * ([[hashKeyOf]]); missing sidecars/columns admit. Returns
-    * (absolute admitted paths, total data files at the version). */
-  private[graft] def admittedDataFiles(root: String, version: Long,
+  /** The data files (manifest entries) of snapshot `s` that its
+    * sidecars admit, with the probes already in sidecar key spaces —
+    * how `graft.sources.GraftDataSource` turns Catalyst filters into
+    * file skipping. `bounds` and `equalitySets` are STATS-space longs
+    * (integral raw values or string prefix keys), `hashEqualitySets`
+    * BLOOM-space hashes ([[hashKeyOf]]); missing sidecars/columns
+    * admit. Probe names are LOGICAL unless `physicalKeys` (the file
+    * index's filters push through the mapping projection into
+    * physical attributes). */
+  private[graft] def admit(s: Snapshot,
       bounds: Map[String, (Long, Long)],
       equalitySets: Map[String, Seq[Long]],
       hashEqualitySets: Map[String, Seq[Long]],
-      physicalKeys: Boolean = false): (Seq[String], Long) = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    val dataFiles = splitEntries(readManifest(fs, rootPath, v)._2)._1
-    // GraftFileIndex probes arrive pre-translated (its filters push
-    // through the mapping projection into physical attributes);
-    // facade and DV-relation probes speak logical names
-    val ddl = if (physicalKeys) None else schemaDdl(root, v)
-    val kept = admittedFiles(fs, rootPath, v, dataFiles,
+      physicalKeys: Boolean = false): Seq[String] = {
+    val ddl = if (physicalKeys) None else s.ddl
+    admittedFiles(s.fs, s.rootPath, s.version, s.dataFiles,
       physProbeKeys(ddl, bounds), physProbeKeys(ddl, equalitySets),
       physProbeKeys(ddl, hashEqualitySets))
-    (kept.map(resolve(rootPath, _).toString), dataFiles.size.toLong)
   }
 
-  /** FileStatus of every data file at `version` (0 = latest), in
-    * manifest order. Sizes feed the scan planner's split/coalesce
-    * arithmetic, so they must be real. One `listStatus` per commit
-    * directory — O(commits) namenode calls, not O(files) — because
-    * staged files of one commit share a `data/<uuid>/` parent. */
-  private[graft] def dataFileStatuses(root: String, version: Long)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    val abs = splitEntries(readManifest(fs, rootPath, v)._2)._1
-      .map(f => fs.makeQualified(resolve(rootPath, f)))
-    val listed: Map[Path, org.apache.hadoop.fs.FileStatus] =
-      abs.map(_.getParent).distinct
-        .flatMap(d => fs.listStatus(d).toSeq)
-        .map(s => s.getPath -> s).toMap
-    abs.map(p => listed.getOrElse(p, fs.getFileStatus(p)))
-  }
+  /** [[admit]] for the facade's raw probes. A string equality probes
+    * BOTH sidecars in their own key spaces: the stats interval as a
+    * degenerate prefix-key bound, the bloom as the full-value hash
+    * (prefixes of URL tables collide; the hash discriminates). */
+  private def admitFacade(s: Snapshot, bounds: Map[String, (Long, Long)],
+                          equalities: Map[String, Long],
+                          stringEqualities: Map[String, String])
+      : Seq[String] =
+    admit(s,
+      bounds ++ stringEqualities.map { case (c, v) =>
+        val pk = prefixKeyOf(v); c -> (pk, pk) },
+      equalities.map { case (c, v) => c -> Seq(v) },
+      stringEqualities.map { case (c, v) => c -> Seq(hashKeyOf(v)) })
 
   /** Core of file-level skipping over ROOT-RELATIVE manifest entries:
     * the subset of `files` that can possibly satisfy `bounds` AND, per
@@ -3502,16 +3459,14 @@ object Versioned {
     * version lacks a stats entry (caller falls back to
     * `read(...).count()`). The Delta-style metadata-only aggregate:
     * at 100 TB a row count is a manifest read, not a table pass. */
-  def metadataCount(root: String, version: Long = 0L): Option[Long] = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
-    val (files, dvFiles) = splitEntries(readManifest(fs, rootPath, v)._2)
-    val (_, stats) = readStatsSidecar(fs, rootPath, v)
-    val counts = files.map(stats.get(_).map(_.head))
+  def metadataCount(root: String, version: Long = 0L): Option[Long] =
+    metadataCount(snapshot(root, version))
+
+  private[graft] def metadataCount(s: Snapshot): Option[Long] = {
+    val (_, stats) = readStatsSidecar(s.fs, s.rootPath, s.version)
+    val counts = s.dataFiles.map(stats.get(_).map(_.head))
     if (counts.exists(_.isEmpty)) None
-    else Some(counts.flatten.sum - dvRowCount(fs, rootPath, dvFiles))
+    else Some(counts.flatten.sum - dvRowCount(s.fs, s.rootPath, s.dvFiles))
   }
 
   /** Exact tombstone count from the DV files' parquet FOOTERS — still
@@ -3577,78 +3532,76 @@ object Versioned {
                  equalities: Map[String, Long] = Map.empty,
                  stringEqualities: Map[String, String] = Map.empty)
       : DataFrame = {
-    val (kept, _) = prunedFiles(root, bounds, version, equalities,
-      stringEqualities)
+    val s = snapshot(root, version)
+    val kept = admitFacade(s, bounds, equalities, stringEqualities)
     require(kept.nonEmpty,
       // an empty parquet scan needs a schema; give the caller a crisp
       // signal instead of an analysis error
       s"every file of $root was pruned by $bounds/$equalities/" +
         s"$stringEqualities - the result is empty; guard with " +
         "prunedFiles if an empty match is expected, or use readSkipped")
-    composeKept(spark, root, kept, version)
+    scanAdmitted(spark, s, kept)
   }
 
-  /** THE admitted-files read path: every caller that plans a pruned
-    * scan of a versioned table composes it here, so deletion-vector
-    * application can never be forgotten by a hand-built scan (the
-    * facade's r12 DV-resurrection bug). Kept files in, live rows out. */
-  private def composeKept(spark: SparkSession, root: String,
-                          kept: Seq[String], version: Long): DataFrame = {
-    val (fs, rootPath) = fsRoot(root)
-    def scan(schema: Option[org.apache.spark.sql.types.StructType]) =
-      FastScan.parquetPaths(spark, fs, rootPath, kept, schema)
-    schemaDdl(root, version) match {
-      case Some(s) =>
-        toLogicalFrame(applyDeleteVectors(spark, root,
-          scan(Some(s.physicalReadSchema)), version), s)
-      case None =>
-        applyDeleteVectors(spark, root, scan(None), version)
+  /** THE read path: every read of a versioned table — full, pruned,
+    * probed, a stream's snapshot slice — is this one body over one
+    * [[Snapshot]]: FastScan of the admitted `kept` entries under the
+    * snapshot's one schema, then the snapshot's tombstones as an
+    * anti-join (while the scan still owns its `_metadata`), then the
+    * projection to its schema-DDL state's logical names. Nothing here
+    * re-reads store metadata, so a read cannot mix one version's files
+    * with another's tombstones or DDL state, and no hand-built scan can
+    * forget the tombstones (the facade's r12 DV-resurrection bug).
+    * Kept files in, live rows out; an empty `kept` is an empty frame
+    * with the full read's columns, and a zero-file version (a delete
+    * that removed every row) the typed empty frame of record. */
+  private[graft] def scanAdmitted(spark: SparkSession, s: Snapshot,
+                                  kept: Seq[String]): DataFrame =
+    if (s.dataFiles.isEmpty) emptyTyped(spark, s)
+    else {
+      val scan = FastScan.parquet(spark, s.rootPath,
+        FastScan.statusesOf(s.fs, kept.map(s.path)), s.schema(spark))
+      val live =
+        if (kept.isEmpty) scan.limit(0)
+        else applyDeleteVectors(spark, s, scan)
+      s.ddl.fold(live)(toLogicalFrame(live, _))
     }
-  }
 
   /** [[readPruned]] that tolerates a fully-pruned admission: returns
     * an EMPTY frame with the table's schema instead of raising — the
     * facade's point-lookup/range-scan contract (a miss is an empty
-    * result, not an error). Same single scan-composition path. */
+    * result, not an error). */
   def readSkipped(spark: SparkSession, root: String,
                   bounds: Map[String, (Long, Long)],
                   version: Long = 0L,
                   equalities: Map[String, Long] = Map.empty,
                   stringEqualities: Map[String, String] = Map.empty)
       : DataFrame = {
-    val (kept, _) = prunedFiles(root, bounds, version, equalities,
-      stringEqualities)
-    if (kept.isEmpty) read(spark, root, version).limit(0)
-    else composeKept(spark, root, kept, version)
+    val s = snapshot(root, version)
+    scanAdmitted(spark, s,
+      admitFacade(s, bounds, equalities, stringEqualities))
   }
 
-  /** [[readSkipped]] over pre-translated probes (the
-    * [[admittedDataFiles]] key spaces) — the scan
-    * `graft.sources.GraftDataSource`'s deletion-vector relation
-    * composes. Same single [[composeKept]] path: admitted files in,
-    * LIVE rows out, empty admission tolerated. */
-  private[graft] def readProbed(spark: SparkSession, root: String,
-      version: Long,
+  /** [[readSkipped]] over probes already in the [[admit]] key spaces —
+    * the scan `graft.sources.GraftDataSource`'s deletion-vector
+    * relation composes over the snapshot it resolved. */
+  private[graft] def readProbed(spark: SparkSession, s: Snapshot,
       bounds: Map[String, (Long, Long)],
       equalitySets: Map[String, Seq[Long]],
-      hashEqualitySets: Map[String, Seq[Long]]): DataFrame = {
-    val (kept, _) = admittedDataFiles(root, version, bounds,
-      equalitySets, hashEqualitySets)
-    if (kept.isEmpty) read(spark, root, version).limit(0)
-    else composeKept(spark, root, kept, version)
-  }
+      hashEqualitySets: Map[String, Seq[Long]]): DataFrame =
+    scanAdmitted(spark, s, admit(s, bounds, equalitySets, hashEqualitySets))
 
   /** Apply the table's deletion vectors (if any) to `df`, a scan the
     * caller composed over this table's data files (e.g. from
     * [[prunedFiles]]). A no-op — and zero plan overhead — when the
     * version carries no tombstones. */
   def applyDeleteVectors(spark: SparkSession, root: String,
-                         df: DataFrame, version: Long = 0L): DataFrame = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    val dvFiles = splitEntries(readManifest(fs, rootPath, v)._2)._2
-    applyDv(spark, fs, rootPath, df, dvFiles)
-  }
+                         df: DataFrame, version: Long = 0L): DataFrame =
+    applyDeleteVectors(spark, snapshot(root, version), df)
+
+  private[graft] def applyDeleteVectors(spark: SparkSession, s: Snapshot,
+                                        df: DataFrame): DataFrame =
+    applyDv(spark, s.fs, s.rootPath, df, s.dvFiles)
 
   /** Row-level DELETE as a MERGE-ON-READ commit (Delta's deletion
     * vectors / Iceberg's positional deletes): rows matching
@@ -3800,11 +3753,8 @@ object Versioned {
 
   /** Does the snapshot at `version` (latest when 0) carry live
     * deletion-vector tombstones? Manifest-sized, driver-side. */
-  def hasDeleteVectors(root: String, version: Long = 0L): Boolean = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    readManifest(fs, rootPath, v)._2.exists(isDvEntry)
-  }
+  def hasDeleteVectors(root: String, version: Long = 0L): Boolean =
+    snapshot(root, version).dvFiles.nonEmpty
 
   /** Do two committed versions list the IDENTICAL file set? (0 = the
     * empty pre-birth table.) The metadata-only emptiness check a
@@ -4322,10 +4272,8 @@ object Versioned {
     * sweep walks only its own data directory. */
   def cloneShallow(root: String, targetRoot: String,
                    version: Long = 0L): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val v = if (version == 0L) latestVersion(root) else version
-    require(v > 0 && fs.exists(manifestPath(rootPath, v)),
-      s"no committed version $v at $root")
+    val s = snapshot(root, version)
+    val (fs, rootPath, v) = (s.fs, s.rootPath, s.version)
     require(latestVersion(targetRoot) == 0L,
       s"clone target $targetRoot already has commits")
     // deletion vectors clone along: the tombstone key is the file's
@@ -4334,9 +4282,8 @@ object Versioned {
     // cdc sidecars stay behind: the clone's v1 is a fresh table birth
     // (its feed derives every row as an insert), not a replay of the
     // source commit's change record
-    val absolute = readManifest(fs, rootPath, v)._2
-      .filterNot(isCdcEntry)
-      .map(f => fs.makeQualified(resolve(rootPath, f)).toString)
+    val absolute = s.entries.filterNot(isCdcEntry)
+      .map(f => fs.makeQualified(s.path(f)).toString)
     val (tfs, tRootPath) = fsRoot(targetRoot)
     tfs.mkdirs(tRootPath)
     val cv = commitFiles(targetRoot, absolute, appendBase = false,

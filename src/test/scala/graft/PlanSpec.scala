@@ -666,4 +666,45 @@ class PlanSpec extends SparkSpec {
         (10L to 999L).sum)
     } finally hconf.unset("graft.versioned.dv.broadcastBytes")
   }
+
+  test("LPA and Louvain elect labels with a hash-aggregated packed argmax") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    val labels = (1L to 5L).map(i => (i, i)).toDF("id", "lab")
+    // LPA's rounds run inside Iterate's lazy checkpoints, so its argmax
+    // plan is only visible to the session's execution listeners
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.graph.Communities.labelPropagation(edges, 1).collect()
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .get.invoke(bus)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // the argmax aggregate: a max over a score packed by 2^64
+    def argmaxLines(p: String) = p.linesIterator
+      .filter(l => l.contains("max(") && l.contains("18446744073709551616"))
+      .toSeq
+    val lpa = plans.asScala.filter(argmaxLines(_).nonEmpty).toSeq
+    val louvain = graft.graph.Louvain.moveRound(edges, labels,
+      allowUp = false).queryExecution.executedPlan.toString
+    assert(lpa.nonEmpty, s"no LPA argmax plan among ${plans.size}")
+    (lpa :+ louvain).foreach { p =>
+      assert(argmaxLines(p).nonEmpty &&
+        argmaxLines(p).forall(_.contains("HashAggregate")), p)
+      assert(!p.contains("SortAggregate"), p)
+    }
+  }
 }

@@ -210,4 +210,44 @@ class PropertySpec extends SparkSpec {
       assert(r.getAs[Int]("keep") === flags.product)
     }
   }
+
+  // ids at the long extremes: a tie-break offset computed in LONG
+  // arithmetic wraps (or overflows under ANSI) on every negative one
+  private val extremeIds = Seq(Long.MinValue, -1L, 0L, Long.MaxValue)
+
+  /** (score desc, label asc) winner — the max(struct(score, -label))
+    * order, negated exactly (BigInt: -Long.MinValue does not wrap). */
+  private def refArgmax(rows: Seq[(Long, Long)]): Long =
+    rows.maxBy { case (score, lab) => (score, -BigInt(lab)) }._2
+
+  test("packed argmax elects the struct-order winner for extreme labels") {
+    val g = Gen.zip(Gen.chooseNum(0L, 5L), Gen.chooseNum(-3L, 3L),
+      Gen.oneOf(extremeIds))
+    val rows = cases(g, 400, 53L)
+    val got = graph.GraphUtil.argmaxLabel(rows.toDF("k", "score", "lab"),
+      "k", col("score"), col("lab"), "lab")
+      .as[(Long, Long)].collect().toMap
+    val want = rows.groupBy(_._1).map { case (k, rs) =>
+      k -> refArgmax(rs.map(r => (r._2, r._3))) }
+    assert(got === want)
+  }
+
+  test("label propagation elects by votes then smallest label at long extremes") {
+    val pairs = for (a <- extremeIds; b <- extremeIds if a < b) yield (a, b)
+    val graphs = cases(Gen.someOf(pairs).map(_.toSeq), 12, 59L)
+      .filter(_.nonEmpty)
+    assert(graphs.size >= 6)
+    graphs.foreach { es =>
+      val und = (es ++ es.map(_.swap)).distinct
+      // one synchronous round from lab = id: neighbours' labels + self
+      val want = und.map(_._1).distinct.map { v =>
+        val votes = und.filter(_._2 == v).map(_._1) :+ v
+        v -> refArgmax(votes.groupBy(identity).toSeq
+          .map { case (lab, vs) => (vs.size.toLong, lab) })
+      }.toMap
+      val got = graph.Communities.labelPropagation(es.toDF("src", "dst"), 1)
+        .as[(Long, Long)].collect().toMap
+      assert(got === want, s"edges $es")
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -116,6 +118,37 @@ class TablesSpec extends SparkSpec {
       val got = Tables.read(spark, root.getPath, "docs").as[(Long, String)]
         .collect().sortBy(_._1).toSeq
       assert(got == rows)
+    } finally {
+      def rm(f: File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(root)
+    }
+  }
+
+  test("relation cache serves a live session and releases a stopped one") {
+    import spark.implicits._
+    import java.io.File
+    val root = java.nio.file.Files.createTempDirectory("tables-release")
+      .toFile
+    try {
+      Seq((1L, "a")).toDF("id", "s").write
+        .parquet(new File(root, "docs.parquet").getPath)
+      // search serving re-reads its tables per request: same relation
+      assert(Tables.read(spark, root.getPath, "docs") eq
+        Tables.read(spark, root.getPath, "docs"))
+      val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+      val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++
+        jvm.getInputArguments.asScala ++ Seq("-Xmx768m", "-cp",
+          System.getProperty("java.class.path"),
+          "graft.TablesReleaseCheck", root.getPath)
+      val out = new StringBuilder
+      val code = scala.sys.process.Process(cmd).!(
+        scala.sys.process.ProcessLogger(l => { out.append(l).append('\n'); () },
+          _ => ()))
+      assert(code == 0 && out.toString.linesIterator.contains("released"),
+        s"exit $code: $out")
     } finally {
       def rm(f: File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm))
