@@ -32,38 +32,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE keep a few tasks of parallelism on the small V-sized
-      // exchanges of the iterative loops instead of collapsing a 1-2 MB
-      // shuffle to one serial task (default minPartitionSize is 1 MB);
-      // at production shuffle sizes this setting is never the binding
-      // constraint.
-      // 64k (was 256k): AQE's byte-targeted coalescing is sized for
-      // shuffle-IO-bound stages, but the dedup/text band's post-shuffle
-      // stages are CPU-bound per ROW (shingle hashing, edit distance) —
-      // a 1 MB exchange collapsing to 2 tasks serializes them on a
-      // 32-core host (measured: q77 5.5 -> 4.5 s, q63 5.3 -> 4.5 s at
-      // 64k; loop-band queries unchanged). Env-overridable; production
-      // guidance in OPTIMIZATION_r14.md (size to bytes-per-core of the
-      // CPU-heaviest stage, not to the 64 MB IO advisory).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_BENCH_MIN_PARTITION", "64k"))
-      // file:// without fork-per-file chmods or .crc sidecars (see
-      // graft.util.FastLocalFileSystem): a JFR capture counted 286
-      // forked `chmod` processes in ONE store-band query via Hadoop's
-      // Shell fallback (no libhadoop in this image). Scheme-scoped:
-      // hdfs:///s3a:// tables are untouched in production.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.FastLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     val debug = sys.env.contains("GRAFT_BENCH_DEBUG")
 
     def gcMillis: Long = {

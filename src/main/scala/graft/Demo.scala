@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Library usage sample: one crawl pass against a stubbed site, then a
@@ -8,11 +7,7 @@ import org.apache.spark.sql.functions._
   * non-query surfaces. Run: `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
+    val spark = Session.local()
     import spark.implicits._
 
     // --- crawl pass over a two-page stub site -------------------------

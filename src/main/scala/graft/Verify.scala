@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,23 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "256k")
-      .config("spark.sql.session.timeZone", "UTC")
-      // no fork-per-file chmods / .crc sidecars on file:// (see
-      // graft.util.FastLocalFileSystem and the Bench session)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.FastLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Queries are independent — run them on a small thread pool so the
     // cluster stays busy (Spark's FIFO scheduler interleaves concurrent

@@ -83,13 +83,6 @@ object Coloring {
           speculative: Boolean): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(what: String): Unit = if (debug) {
-      val t1 = System.nanoTime()
-      println(f"[coloring] $what: ${(t1 - t0) / 1e9}%.2fs")
-      t0 = t1
-    }
 
     // Partitioned by src so the per-round neighbour-max aggregation and
     // the src-side joins run without re-shuffling the edge table (the
@@ -171,7 +164,6 @@ object Coloring {
     }
 
     var (remaining, activeEdges) = countBoth(uncolored, "v", active, "e")
-    lap("setup+init counts")
     var doneParts: List[DataFrame] = List(preColored)
     var round = 0
     var finishLocally = false
@@ -237,11 +229,6 @@ object Coloring {
           .localCheckpoint(false))
       remaining -= nWon
       round += 1
-      if (debug) {
-        println(s"[coloring] round=$round won=$nWon " +
-          s"remaining=$remaining activeEdges=$activeEdges")
-        lap(s"round $round")
-      }
       }
     }
 
@@ -258,8 +245,8 @@ object Coloring {
       // directions), already materialized — no extra joins to collect it.
       doneParts ::= (uncolored.schema("id").dataType match {
         case org.apache.spark.sql.types.LongType =>
-          localGreedy[Long](uncolored, active, debug, lap)
-        case _ => localGreedy[String](uncolored, active, debug, lap)
+          localGreedy[Long](uncolored, active)
+        case _ => localGreedy[String](uncolored, active)
       })
     }
     und.unpersist(false)
@@ -272,9 +259,8 @@ object Coloring {
     * binary UTF8 compare matches `Ordering.String` on the ASCII ids used
     * here (same assumption the distributed struct compare has always
     * made). */
-  private def localGreedy[I](uncolored: DataFrame, active: DataFrame,
-      debug: Boolean, lap: String => Unit)(implicit
-      vEnc: org.apache.spark.sql.Encoder[(I, Long, Seq[Int])],
+  private def localGreedy[I](uncolored: DataFrame, active: DataFrame)(
+      implicit vEnc: org.apache.spark.sql.Encoder[(I, Long, Seq[Int])],
       eEnc: org.apache.spark.sql.Encoder[(I, I)],
       oEnc: org.apache.spark.sql.Encoder[(I, Int)],
       ord: Ordering[I]): DataFrame = {
@@ -282,11 +268,6 @@ object Coloring {
     val vs = uncolored.select("id", "token", "forbidden")
       .as[(I, Long, Seq[Int])].collect()
     val es = active.select("src", "dst").as[(I, I)].collect()
-    if (debug) {
-      println(s"[coloring] local finish: ${vs.length} vertices, " +
-        s"${es.length} edges")
-      lap("local collect")
-    }
 
     val forbidden = scala.collection.mutable.Map(
       vs.map(v => v._1 -> scala.collection.mutable.Set(v._3: _*)): _*)
@@ -303,9 +284,6 @@ object Coloring {
       out += ((v, c))
       nbrs(v).foreach(u => forbidden.get(u).foreach(_ += c))
     }
-    lap("local greedy")
-    val df = spark.createDataset(out.toSeq).toDF("id", "color")
-    lap("local toDF")
-    df
+    spark.createDataset(out.toSeq).toDF("id", "color")
   }
 }

@@ -84,8 +84,6 @@ object Mis {
       undecided = undecided
         .join(joiners.unionAll(dominated), Seq("id"), "left_anti")
         .localCheckpoint(false)
-      if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-        println(s"[mis] round $round undecided=${undecided.count()}")
       if (undecided.limit(1).count() == 0) done = true
       else {
         val ids = undecided.select("id")

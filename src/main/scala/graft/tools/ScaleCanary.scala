@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale canary: a seeded synthetic corpus roughly 10× the sf0.1
@@ -21,15 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCanary {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nV = sys.env.getOrElse("GRAFT_CANARY_V", "500000").toLong
     val nE = sys.env.getOrElse("GRAFT_CANARY_E", "5000000").toLong
     val nD = sys.env.getOrElse("GRAFT_CANARY_DOCS", "500000").toLong
-    val spark = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietExpected()
+    val spark = graft.Session.local()
 
     // ---- graph: uniform sources, 10% of edges into 1k hubs ----
     val edges = spark.range(nE).select(

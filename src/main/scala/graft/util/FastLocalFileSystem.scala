@@ -28,8 +28,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Hadoop libraries never hits the Shell fallback in the first place.
   * Results are byte-identical; this is IO-layer latency only.
   *
-  * Wired via `spark.hadoop.fs.file.impl` in the Bench/Verify session
-  * builders. Sticky/setuid bits (inexpressible as
+  * Wired via `spark.hadoop.fs.file.impl` in [[graft.Session]], the one
+  * session builder. Sticky/setuid bits (inexpressible as
   * [[PosixFilePermission]]s) are masked off — nothing on a table root
   * ever carries them. */
 class FastLocalFileSystem extends RawLocalFileSystem {

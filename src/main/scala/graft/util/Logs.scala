@@ -3,9 +3,9 @@ package graft.util
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 
-/** Log hygiene for the runnable mains: suppress warnings that are
-  * expected BY DESIGN, so real plan regressions stand out in bench and
-  * verify output. */
+/** Log hygiene for every [[graft.Session]]: suppress warnings that are
+  * expected BY DESIGN, so real plan regressions stand out in bench,
+  * verify and test output. */
 object Logs {
 
   /** `Search.paginate` runs a partitionless row_number window on
@@ -16,7 +16,7 @@ object Logs {
   def quietExpected(): Unit = {
     Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
-    // Bench/ScaleCanary intentionally unpersist finished queries'
+    // Bench, Prof and ScaleCanary intentionally unpersist finished queries'
     // localCheckpoint blocks (they are invisible to clearCache); Spark
     // warns "lineage has been truncated and cannot be recomputed" per
     // RDD, which is precisely the intent — the result was consumed.

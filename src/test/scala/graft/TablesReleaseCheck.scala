@@ -25,10 +25,7 @@ object TablesReleaseCheck {
 
   private def cacheAndStop(dir: String)
       : java.lang.ref.WeakReference[SparkSession] = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[1]").appName("tables-release")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(1)
     require(Tables.read(spark, dir, "docs") eq
       Tables.read(spark, dir, "docs"), "relation not cached")
     spark.stop()

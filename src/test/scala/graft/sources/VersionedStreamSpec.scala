@@ -195,10 +195,10 @@ class VersionedStreamSpec extends SparkSpec {
     // the boundary itself: a commit published EXACTLY at the instant
     // is INCLUDED (versionAtOrAfter, Delta semantics — the old
     // versionAt+1 resolution skipped it)
-    val mt2 = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(new org.apache.hadoop.fs.Path(
-        root, "manifest-v2.json")).getModificationTime
+    val manifest2 = new org.apache.hadoop.fs.Path(root, "manifest-v2.json")
+    val mt2 = manifest2
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(manifest2).getModificationTime
     assert(Versioned.versionAtOrAfter(root, mt2).contains(2L))
     val atCut = scala.collection.mutable.ArrayBuffer[Set[Long]]()
     drain(readVersioned(root, "startingTimestamp" -> mt2.toString),

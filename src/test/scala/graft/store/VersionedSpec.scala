@@ -742,8 +742,8 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.metadataCount(bare).isEmpty)
 
     // timestamp travel: pin manifest publication times explicitly
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration).getRaw
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def setT(v: Long, t: Long) = fs.setTimes(
       new org.apache.hadoop.fs.Path(root, s"manifest-v$v.json"), t, -1)
     setT(1, 1000000L); setT(2, 2000000L)
@@ -795,8 +795,8 @@ class VersionedSpec extends SparkSpec {
     // copy-on-write delete recomputes blooms only for rewritten files
     // and the probe still answers correctly at the new version
     val v = Versioned.commitDelete(spark, root, col("k") === 300L)
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration).getRaw
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(root,
       s"bloom-v$v.json")), "delete dropped the bloom sidecar")
     assert(Versioned.readPruned(spark, root, Map.empty, v,
@@ -851,8 +851,8 @@ class VersionedSpec extends SparkSpec {
   test("metadata shard format roundtrips randomized entries — bulk " +
       "read, selective seek read, header-only key table") {
     val root = freshRoot()
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration).getRaw
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootPath = fs.makeQualified(new org.apache.hadoop.fs.Path(root))
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { trial =>
