@@ -33,6 +33,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger(
+    "graft.Tables")
+
   // Sessions already warned about a missing TsLiteralPushdown rule
   // (weak keys: never pins a stopped session in memory).
   private val pushdownWarned =
@@ -71,8 +74,8 @@ object Tables {
     if (!spark.sessionState.optimizer.extendedOperatorOptimizationRules
           .contains(plans.TsLiteralPushdown)
         && pushdownWarned.add(spark))
-      System.err.println(
-        "[graft] WARN: TsLiteralPushdown is not installed in this " +
+      log.warn(
+        "TsLiteralPushdown is not installed in this " +
         "session - event-time range scans will not prune parquet row " +
         "groups. Build the session with .withExtensions(new " +
         "graft.plans.GraftExtensions) or --conf spark.sql.extensions=" +

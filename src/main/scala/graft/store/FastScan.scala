@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterSchema, ParquetFileFormat}
 import org.apache.spark.sql.types.StructType
 
 /** Parquet relation construction for a KNOWN file set — the versioned
@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Row-level semantics are identical to `spark.read.parquet`: same
   * scan operator, same split planning inputs (real file lengths), and
-  * Spark re-applies every predicate above the scan. */
+  * Spark re-applies every predicate above the scan. A scan that needs
+  * the schema of one known file takes it from [[footerSchema]]: a
+  * driver-side footer read, no Spark job. */
 private[graft] object FastScan {
 
   private final class StaticFileIndex(root: Path, ss: Seq[FileStatus])
@@ -65,17 +67,25 @@ private[graft] object FastScan {
       None, new ParquetFileFormat, Map.empty[String, String])(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
 
-  /** Parquet scan over absolute `paths`; schema `None` infers from the
-    * FIRST file's footer (manifest order — one footer read instead of
-    * a full listing; homogeneous-footer tables, the store's invariant
-    * outside explicit mergeSchema/DDL reads, resolve identically to
-    * the generic path). */
+  /** The schema `spark.read.parquet(path).schema` returns for one
+    * parquet file, read from its footer on the driver: no Spark job
+    * (Spark infers it with a one-task `parallelize(...).collect()`).
+    * Published store files never change, so nothing is cached. */
+  def footerSchema(spark: SparkSession, fs: FileSystem,
+                   path: Path): StructType =
+    GraftFooterSchema.read(spark, fs, path)
+
+  /** Parquet scan over absolute `paths`; schema `None` takes the
+    * FIRST file's footer schema (manifest order — a driver-side footer
+    * read, no Spark job; homogeneous-footer tables, the store's
+    * invariant outside explicit mergeSchema/DDL reads, resolve
+    * identically to the generic path). */
   def parquetPaths(spark: SparkSession, fs: FileSystem, root: Path,
                    paths: Seq[String],
                    schema: Option[StructType]): DataFrame = {
     require(paths.nonEmpty, "FastScan needs at least one file")
     val statuses = statusesOf(fs, paths.map(new Path(_)))
-    val s = schema.getOrElse(spark.read.parquet(paths.head).schema)
+    val s = schema.getOrElse(footerSchema(spark, fs, statuses.head.getPath))
     parquet(spark, root, statuses, s)
   }
 }

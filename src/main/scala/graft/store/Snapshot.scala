@@ -33,10 +33,11 @@ private[graft] final case class Snapshot(root: String, fs: FileSystem,
 
   /** The one physical schema every projection scans with: the
     * schema-DDL read schema when a state applies, else the first
-    * manifest data file's footer. A pruned read therefore returns the
-    * full read's columns whichever files it admits. Needs a data file
-    * or a DDL state. */
+    * manifest data file's footer schema, read on the driver
+    * ([[FastScan.footerSchema]], no Spark job). A pruned read
+    * therefore returns the full read's columns whichever files it
+    * admits. Needs a data file or a DDL state. */
   def schema(spark: SparkSession): StructType =
     ddl.map(_.physicalReadSchema).getOrElse(
-      spark.read.parquet(path(dataFiles.head).toString).schema)
+      FastScan.footerSchema(spark, fs, path(dataFiles.head)))
 }

@@ -57,10 +57,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * All metadata I/O goes through `org.apache.hadoop.fs.FileSystem`, so
   * a root of `/local/path`, `file:///…` or `hdfs://nn/…` behaves
-  * identically; the data path is ordinary `spark.read.parquet(files*)`,
-  * so pushdown, pruning and split planning are unchanged. Driver-side
-  * work is manifest-sized. */
+  * identically; the data path is Spark's ordinary parquet scan over
+  * the manifest's file list ([[FastScan]]), so pushdown, pruning and
+  * split planning are unchanged. Driver-side work is manifest-sized,
+  * and building a read runs no Spark job. */
 object Versioned {
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(
+    "graft.store.Versioned")
 
   private def hadoopConf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -194,8 +198,8 @@ object Versioned {
     val dvSide =
       if (bytes <= dvBroadcastBytes) broadcast(dv)
       else {
-        System.err.println(
-          s"[graft] $rootPath carries $bytes tombstone parquet bytes " +
+        log.warn(
+          s"$rootPath carries $bytes tombstone parquet bytes " +
             s"(> broadcast cap $dvBroadcastBytes): reads fall back to " +
             "a shuffled anti-join; run commitPurgeDeleteVectors to " +
             "restore the read-optimized table")
@@ -1555,8 +1559,7 @@ object Versioned {
     val entries = out.sorted.toSeq
     // schema of record from the adopted files (footer-read, advisory)
     try writeTableSchema(fs, rootPath,
-      spark.read.parquet(resolve(rootPath, entries.head).toString)
-        .schema)
+      FastScan.footerSchema(spark, fs, resolve(rootPath, entries.head)))
     catch { case scala.util.control.NonFatal(_) => () }
     commitFiles(root, entries, appendBase = false,
       expectedParent = Some(0L), op = "convert")
@@ -1978,7 +1981,7 @@ object Versioned {
       if (!cdcOn) Nil
       else {
         val ins = updates.withColumn("_change_type", lit("insert"))
-        stageCdc(spark, fs, rootPath, deletes
+        stageCdc(fs, rootPath, deletes
           .map(_.withColumn("_change_type", lit("delete"))
             .unionByName(ins)).getOrElse(ins), ddl)
       }
@@ -2092,8 +2095,8 @@ object Versioned {
     val fields: Seq[org.apache.spark.sql.types.StructField] =
       ddl.map(_.schema.fields.toSeq).getOrElse {
         if (parentFiles.nonEmpty)
-          spark.read.parquet(resolve(rootPath, parentFiles.head).toString)
-            .schema.fields.toSeq
+          FastScan.footerSchema(spark, fs,
+            resolve(rootPath, parentFiles.head)).fields.toSeq
         else tableSchema(root).map(_.fields.toSeq).getOrElse(
           // table birth by merge: the insert clauses define the shape
           source.schema.fields.toSeq)
@@ -2251,7 +2254,7 @@ object Versioned {
               .withColumn("_change_type", lit("delete"))
             val ins = changed.filter(keep).select(outCols: _*)
               .withColumn("_change_type", lit("insert"))
-            stageCdc(spark, fs, rootPath, dels.unionByName(ins), ddl)
+            stageCdc(fs, rootPath, dels.unionByName(ins), ddl)
           }
         (joined.filter(keep).select(outCols: _*), cdcFiles)
     }
@@ -2325,7 +2328,7 @@ object Versioned {
     // derivable across the rewrite
     val cdcStaged =
       if (!cdcOn) Nil
-      else stageCdc(spark, fs, rootPath, touchedScan
+      else stageCdc(fs, rootPath, touchedScan
         .filter(org.apache.spark.sql.functions.coalesce(predicate,
           org.apache.spark.sql.functions.lit(false)))
         .withColumn("_change_type",
@@ -2408,7 +2411,7 @@ object Versioned {
       } :+ col(flag)): _*)
     val cdcStaged =
       if (!cdcOn) Nil
-      else stageCdc(spark, fs, rootPath,
+      else stageCdc(fs, rootPath,
         flagged.filter(col(flag)).drop(flag)
           .withColumn("_change_type", lit("delete"))
           .unionByName(rewritten.filter(col(flag)).drop(flag)
@@ -2507,13 +2510,13 @@ object Versioned {
       if (!cdcOn) Nil
       else {
         val deletes = touchedScan.map(t =>
-          stageCdc(spark, fs, rootPath, t
+          stageCdc(fs, rootPath, t
             .filter(coalesce(predicate, lit(false)))
             .withColumn("_change_type",
               org.apache.spark.sql.functions.lit("delete")), ddl))
           .getOrElse(Nil)
         // insert records from the staged bytes, not a re-evaluation
-        deletes ++ newScan.map(n => stageCdc(spark, fs, rootPath,
+        deletes ++ newScan.map(n => stageCdc(fs, rootPath,
           n.withColumn("_change_type",
             org.apache.spark.sql.functions.lit("insert")), ddl))
           .getOrElse(Nil)
@@ -3466,17 +3469,19 @@ object Versioned {
     val (_, stats) = readStatsSidecar(s.fs, s.rootPath, s.version)
     val counts = s.dataFiles.map(stats.get(_).map(_.head))
     if (counts.exists(_.isEmpty)) None
-    else Some(counts.flatten.sum - dvRowCount(s.fs, s.rootPath, s.dvFiles))
+    // tombstones are unique (file, idx) pairs by construction, so the
+    // dv files' row count IS the number of deleted live rows
+    else Some(counts.flatten.sum -
+      footerRowCount(s.fs, s.rootPath, s.dvFiles))
   }
 
-  /** Exact tombstone count from the DV files' parquet FOOTERS — still
-    * metadata-only (no job runs; one footer read per dv file, and dv
-    * files are deleted-rows-sized). Tombstones are unique (file, idx)
-    * pairs by construction, so the footer row count IS the number of
-    * deleted live rows. */
-  private def dvRowCount(fs: FileSystem, rootPath: Path,
-                         dvFiles: Seq[String]): Long =
-    dvFiles.map { f =>
+  /** Rows in the parquet `files` (manifest entries), summed from their
+    * FOOTERS: metadata-only, one driver-side footer read per file and
+    * no Spark job. Serves the tombstone count of [[metadataCount]] and
+    * the "did this stage write anything" check of [[stageRows]]. */
+  private def footerRowCount(fs: FileSystem, rootPath: Path,
+                             files: Seq[String]): Long =
+    files.map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(resolve(rootPath, f), fs.getConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -3650,8 +3655,8 @@ object Versioned {
     val live =
       if (dvFiles.isEmpty) keyed
       else keyed.join(
-        org.apache.spark.sql.functions.broadcast(spark.read.parquet(
-          dvFiles.map(resolve(rootPath, _).toString): _*)),
+        org.apache.spark.sql.functions.broadcast(
+          dataScan(spark, rootPath, dvFiles, None)),
         Seq("__dv_file", "__dv_idx"), "left_anti")
     val tombstones =
       logicalOf(live, extra = Seq("__dv_file", "__dv_idx"))
@@ -3665,17 +3670,9 @@ object Versioned {
     // commit rates file count IS manifest + footer-open cost. A delete
     // too large for one writer task belongs in copy-on-write
     // commitDelete anyway — its economics beat tombstones there.
-    val uuid = java.util.UUID.randomUUID().toString
-    val dir = new Path(new Path(rootPath, "dv"), uuid)
-    tombstones.repartition(1).write.parquet(dir.toString)
-    val staged = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".parquet") => s"dv/$uuid/$n" }
-      .sorted
-    // nothing matched: drop the empty stage, metadata no-op
-    val wrote = staged.nonEmpty && spark.read
-      .parquet(staged.map(resolve(rootPath, _).toString): _*)
-      .take(1).nonEmpty
-    if (!wrote) { fs.delete(dir, true); return parent }
+    val staged = stageRows(fs, rootPath, "dv", tombstones.repartition(1))
+    // nothing matched: metadata no-op
+    if (staged.isEmpty) return parent
     val v = commitFiles(root, entries ++ staged, appendBase = false,
       expectedParent = Some(parent), op = "dv-delete")
     // data files unchanged: sidecar entries carry fully, O(1) jobs
@@ -3808,24 +3805,31 @@ object Versioned {
     * `cdc/<uuid>/` sidecar; returns the staged root-relative entries,
     * or Nil when no row changed (the empty stage is deleted). Invisible
     * until the caller's manifest publishes, like every stage here. */
-  private def stageCdc(spark: SparkSession, fs: FileSystem,
-                       rootPath: Path, changes: DataFrame,
+  private def stageCdc(fs: FileSystem, rootPath: Path,
+                       changes: DataFrame,
                        ddl: Option[SchemaDdl] = None)
-      : Seq[String] = {
-    val uuid = java.util.UUID.randomUUID().toString
-    val dir = new Path(new Path(rootPath, "cdc"), uuid)
+      : Seq[String] =
     // cdc sidecars live in the same PHYSICAL column space as data
     // files (the feed projects to logical at read); `_change_type`
     // is outside the mapping and passes through unrenamed
-    ddl.map(toPhysicalFrame(changes, _)).getOrElse(changes)
-      .write.parquet(dir.toString)
+    stageRows(fs, rootPath, "cdc",
+      ddl.map(toPhysicalFrame(changes, _)).getOrElse(changes))
+
+  /** Write `rows` as parquet under `<kind>/<uuid>/` and return the
+    * staged root-relative entries, or Nil when no row was written: the
+    * empty stage directory is deleted, so a no-op commit leaves nothing
+    * behind. The emptiness check reads the staged footers' row counts
+    * ([[footerRowCount]]), no Spark job. */
+  private def stageRows(fs: FileSystem, rootPath: Path, kind: String,
+                        rows: DataFrame): Seq[String] = {
+    val uuid = java.util.UUID.randomUUID().toString
+    val dir = new Path(new Path(rootPath, kind), uuid)
+    rows.write.parquet(dir.toString)
     val staged = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".parquet") => s"cdc/$uuid/$n" }
+      .collect { case n if n.endsWith(".parquet") => s"$kind/$uuid/$n" }
       .sorted
-    val wrote = staged.nonEmpty && spark.read
-      .parquet(staged.map(resolve(rootPath, _).toString): _*)
-      .take(1).nonEmpty
-    if (!wrote) { fs.delete(dir, true); Nil } else staged
+    if (footerRowCount(fs, rootPath, staged) > 0) staged
+    else { fs.delete(dir, true); Nil }
   }
 
   def readChangeFeed(spark: SparkSession, root: String,
@@ -4031,16 +4035,7 @@ object Versioned {
         val tombstones = liveLogical.join(updKeys, keys, "left_semi")
           .select(col("__dv_file"), col("__dv_idx"))
         // one tombstone file per commit (see commitDeleteVectors)
-        val uuid = java.util.UUID.randomUUID().toString
-        val dir = new Path(new Path(rootPath, "dv"), uuid)
-        tombstones.repartition(1).write.parquet(dir.toString)
-        val staged = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-          .collect { case n if n.endsWith(".parquet") => s"dv/$uuid/$n" }
-          .sorted
-        val wrote = staged.nonEmpty && spark.read
-          .parquet(staged.map(resolve(rootPath, _).toString): _*)
-          .take(1).nonEmpty
-        if (!wrote) { fs.delete(dir, true); Nil } else staged
+        stageRows(fs, rootPath, "dv", tombstones.repartition(1))
       }
     val stagedData = stage(updates, root, detectPartitionBy(dataFiles))
     val v = commitFiles(root, entries ++ stagedDv ++ stagedData,
@@ -4300,7 +4295,7 @@ object Versioned {
       s"""{"clone_root": "${tfs.makeQualified(tRootPath)}", """ +
         s""""source_version": $v}""")
     catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[graft] clone $targetRoot committed but " +
+      log.warn(s"clone $targetRoot committed but " +
         s"its borrow registration on $root failed ($e): source-side " +
         "vacuum warnings will not cover this clone")
     }
@@ -4418,8 +4413,8 @@ object Versioned {
     // and cloneBorrowsAtRisk is the programmatic pre-check.
     val atRisk = cloneBorrowsAtRisk(root, keepFrom)
     atRisk.foreach { case (cloneRoot, files) =>
-      System.err.println(
-        s"[graft] vacuum($root, keepFrom=$keepFrom)" +
+      log.warn(
+        s"vacuum($root, keepFrom=$keepFrom)" +
           (if (dryRun) " [dry-run]" else "") +
           s": shallow clone $cloneRoot borrows ${files.size} file(s) " +
           "this sweep can reclaim - the clone's reads will break; " +

@@ -49,31 +49,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("building a match search runs one small action before the page") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (docs, priors) = servedSearchInputs
     docs.schema // resolve the relation before counting
-    val sc = spark.sparkContext
-    val tag = "graft.planspec.search"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty(tag) != null)
-          .foreach(p => jobs.add(
-            String.valueOf(p.getProperty("spark.sql.execution.id"))))
+    val ids = BuildJobs.during(spark, "graft.planspec.search") {
+      graft.search.Search.search(docs, priors, "spark join window")
     }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "build")
-    try graft.search.Search.search(docs, priors, "spark join window")
-    finally sc.setLocalProperty(tag, null)
-    // the listener bus is asynchronous; drain it (private[spark] is
-    // public bytecode, so plain reflection reaches waitUntilEmpty)
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .get.invoke(bus)
-    sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val ids = jobs.asScala.toSeq
     assert(ids.distinct.size <= 1, s"actions before the page: $ids")
     // the statistics action: the docs scan up to the id shuffle, the
     // priors broadcast and one stage folding the grouped hits

@@ -22,21 +22,40 @@ class SessionSpec extends SparkSpec {
     assert(dot.getDouble(0) == 11.0)
   }
 
-  test("no code outside graft/Session.scala builds a SparkSession") {
-    val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
-    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+  private val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+
+  /** Every .scala file under `root`, with its comments stripped. */
+  private def codeUnder(root: String): Seq[(String, String)] = {
     def scalaFiles(d: File): Seq[File] =
       Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val roots = Seq("src/main/scala", "src/test/scala").map(new File(_))
-    assert(roots.forall(_.isDirectory), roots.map(_.getAbsolutePath))
-    val sites = roots.flatMap(scalaFiles).filter { f =>
-      val code = comments.replaceAllIn(
-        java.nio.file.Files.readString(f.toPath), "")
-      builder.findFirstIn(code).isDefined
-    }.map(_.getPath.replace(File.separatorChar, '/'))
+    val dir = new File(root)
+    assert(dir.isDirectory, dir.getAbsolutePath)
+    scalaFiles(dir).map(f =>
+      f.getPath.replace(File.separatorChar, '/') -> comments.replaceAllIn(
+        java.nio.file.Files.readString(f.toPath), ""))
+  }
+
+  test("no code outside graft/Session.scala builds a SparkSession") {
+    val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
+    val sites = Seq("src/main/scala", "src/test/scala").flatMap(codeUnder)
+      .collect { case (path, code) if builder.findFirstIn(code).isDefined =>
+        path }
     assert(sites == Seq("src/main/scala/graft/Session.scala"))
+  }
+
+  test("engine code warns through log4j, not System.err") {
+    val errPrintln = """System\s*\.\s*err\s*\.\s*println""".r
+    // the mains own their console: Bench, Verify, Demo and tools/
+    val mains = Seq("Bench.scala", "Verify.scala", "Demo.scala")
+      .map("src/main/scala/graft/" + _)
+    val sites = codeUnder("src/main/scala/graft").collect {
+      case (path, code) if !mains.contains(path) &&
+          !path.startsWith("src/main/scala/graft/tools/") &&
+          errPrintln.findFirstIn(code).isDefined => path
+    }
+    assert(sites.isEmpty, sites)
   }
 }

@@ -1218,6 +1218,12 @@ class VersionedSpec extends SparkSpec {
     // a matching-nothing predicate is a metadata no-op
     assert(Versioned.commitDeleteVectors(spark, root,
       col("k") === 999L) == 5L)
+    // so is one whose admitted rows are all tombstoned already: its
+    // tombstone stage comes out empty and no dv/<uuid> dir stays behind
+    assert(Versioned.commitDeleteVectors(spark, root,
+      col("k") === 7L) == 5L)
+    assert(new java.io.File(root, "dv").listFiles()
+      .count(_.isDirectory) == 2, "only v4's and v5's tombstone stages")
     // facade paths apply tombstones too: metadataCount stays
     // metadata-only (stats counts minus the dv footers' row counts),
     // pruned reads anti-join
