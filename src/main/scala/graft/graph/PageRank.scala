@@ -25,8 +25,9 @@ import org.apache.spark.storage.StorageLevel
   *  - with a tolerance, the only driver-side value per step is the SAD
   *    scalar (one action), and generations are cached so each step
   *    reads the previous step's materialized scores;
-  *  - lineage is cut with `localCheckpoint` every `checkpointEvery`
-  *    iterations so long runs don't blow the plan stack.
+  *  - every generation is a lazy `localCheckpoint`, so the plan never
+  *    nests earlier generations and long runs don't blow the plan
+  *    stack.
   *
   * `gridSnap = Some(g)` snaps every score to the 1/g grid each iteration
   * (`floor(x·g + 0.5)/g`) making results bit-reproducible across engines
@@ -58,7 +59,6 @@ object PageRank {
           maxIter: Int = 20,
           stopTol: Option[Double] = Some(1e-3),
           gridSnap: Option[Double] = None,
-          checkpointEvery: Int = 5,
           seeds: Option[DataFrame] = None,
           weightCol: Option[String] = None,
           initScores: Option[DataFrame] = None): Result = {

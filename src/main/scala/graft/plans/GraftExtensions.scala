@@ -1,6 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.logging.log4j.LogManager
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** THE session-extension entry point — the single place the engine's
   * optimizer rule and SQL functions are installed (at session build time;
@@ -24,7 +29,15 @@ import org.apache.spark.sql.SparkSessionExtensions
   *     the ns-normalization projection (see the rule's doc — at 100 TB
   *     this is the difference between min/max-skipping and a full scan);
   *   - the [[graft.functions.Registry]] SQL functions (`graft_dot`,
-  *     `graft_jaro_winkler`) backed by the native codegen expressions.
+  *     `graft_jaro_winkler`) backed by the native codegen expressions;
+  *   - a generated-class cache sized to the engine's working set
+  *     ([[GraftExtensions.sizeCodegenCache]]): Spark's JVM-wide cache
+  *     holds 100 classes by default, one crawl cycle's plans need about
+  *     200, so under the default every cycle recompiled all of them.
+  *     Executor JVMs initialize their own `CodeGenerator` from their own
+  *     conf, so cluster deployments set
+  *     `spark.sql.codegen.cache.maxEntries` explicitly; this sizes only
+  *     the driver's cache, which under `local[n]` is the only one.
   *
   * Installation is idempotent: the rule is an `object`,
   * `transformAllExpressions` is a no-op once the pattern no longer
@@ -64,5 +77,49 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // …): the same descriptions graft.functions.Registry.register
     // installs post-hoc, here wired at session build time.
     graft.functions.Registry.functions.foreach(ext.injectFunction)
+    // Not a check: the builder runs when a session's analyzer is built,
+    // after the SparkContext (and so every user-set key) exists and
+    // before the session's first plan can compile a class
+    ext.injectCheckRule { session =>
+      GraftExtensions.sizeCodegenCache(session)
+      _ => ()
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** Entries of Spark's generated-class cache once graft is installed:
+    * about five crawl cycles' worth of distinct classes. */
+  val CodegenCacheEntries = 1000
+
+  private val log = LogManager.getLogger(classOf[GraftExtensions])
+  private val decided = new AtomicBoolean(false)
+
+  /** `CodeGenerator` reads `SQLConf.get.codegenCacheMaxEntries` exactly
+    * once, when its object is initialized, so the size is fixed by
+    * forcing that initialization under a conf carrying
+    * [[CodegenCacheEntries]]. Skipped when the session's SparkConf sets
+    * `spark.sql.codegen.cache.maxEntries` (the user's value then sizes
+    * the cache as usual); a JVM that compiled a class before keeps the
+    * size it started with. Decided once per JVM; logs which size is in
+    * force, since `spark.conf.get` keeps reporting Spark's default. */
+  private[plans] def sizeCodegenCache(session: SparkSession): Unit =
+    if (decided.compareAndSet(false, true)) {
+      val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+      session.sparkContext.getConf.getOption(key) match {
+        case Some(n) => log.info(s"codegen class cache: kept user value $n")
+        case None =>
+          var read = false
+          val conf = new SQLConf {
+            override def codegenCacheMaxEntries: Int = {
+              read = true; CodegenCacheEntries
+            }
+          }
+          SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+          log.info(
+            if (read) s"codegen class cache sized to $CodegenCacheEntries"
+            else "codegen class cache already initialized; kept its size")
+      }
+    }
 }

@@ -1,7 +1,9 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 
 /** Stage-level profiler over the engine Bench times (`graft.Session`):
@@ -9,8 +11,9 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * profiles the second attempt, and prints its formatted executed plan
   * (pushdown, pruning, join strategy, codegen spans) and a per-stage
   * table of task counts, wall/run/cpu/gc time, fetch wait and shuffle
-  * volume: the feedback loop for judging whether a plan is
-  * overhead-bound or work-bound.
+  * volume, then the classes the attempt compiled and their compile
+  * time: the feedback loop for judging whether a plan is overhead-bound
+  * or work-bound.
   *
   * Usage: `tools/run.sh graft.tools.Prof q11_pagerank [query ...]`. */
 object Prof {
@@ -41,18 +44,29 @@ object Prof {
         println(f"== $qname attempt $n: $secs%.2f s, rows=$rows ==")
         qe
       }
-      // Attempt 1 warms JIT/codegen caches like Bench's best-of-2; the
-      // profiled run is attempt 2.
+      // Attempt 1 warms the JIT and compiles the query's generated
+      // classes, which attempt 2 finds in Spark's class cache (sized by
+      // GraftExtensions). An attempt 2 that still compiles dozens of
+      // classes means cache thrash or literals inlined per call.
       attempt(1)
       drain(spark)
       recorder.start()
+      val (compiled0, compileNs0) = codegen
       val profiled = attempt(2)
       drain(spark)
+      val (compiled1, compileNs1) = codegen
       println(profiled.explainString(FormattedMode))
       printStages(recorder.stages)
+      println(s"-- codegen: ${compiled1 - compiled0} classes compiled, " +
+        s"${(compileNs1 - compileNs0) / 1000000} ms")
     }
     spark.stop()
   }
+
+  /** (classes compiled, compile ns) so far in this JVM. */
+  private def codegen: (Long, Long) = (
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    CodeGenerator.compileTime)
 
   /** Waits until the async listener bus has delivered every posted
     * event (private[spark] is public bytecode, so plain reflection

@@ -84,4 +84,20 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT graft_dot(array(2.0), array(8.0)) AS d").collect().head
     assert(r.getDouble(0) == 16.0, r)
   }
+
+  test("codegen class cache holds a working set past Spark's default 100") {
+    // child JVMs: the test JVM's CodeGenerator was sized long ago
+    val (code, out) = ChildJvm.run("graft.CodegenCacheCheck", Nil)
+    assert(code == 0 && out.linesIterator.contains("recompiled 0"),
+      s"exit $code: $out")
+    assert(out.contains("codegen class cache sized to " +
+      GraftExtensions.CodegenCacheEntries), out)
+    // a value the user set is kept, and a 16-entry cache thrashes
+    val (code16, out16) = ChildJvm.run("graft.CodegenCacheCheck",
+      Seq("-Dspark.sql.codegen.cache.maxEntries=16"))
+    val recompiled =
+      out16.linesIterator.collectFirst { case s"recompiled $n" => n.toLong }
+    assert(code16 == 0 && recompiled.exists(_ >= 100), s"exit $code16: $out16")
+    assert(out16.contains("codegen class cache: kept user value 16"), out16)
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -134,16 +132,9 @@ class TablesSpec extends SparkSpec {
       // search serving re-reads its tables per request: same relation
       assert(Tables.read(spark, root.getPath, "docs") eq
         Tables.read(spark, root.getPath, "docs"))
-      val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
-      val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++
-        jvm.getInputArguments.asScala ++ Seq("-Xmx768m", "-cp",
-          System.getProperty("java.class.path"),
-          "graft.TablesReleaseCheck", root.getPath)
-      val out = new StringBuilder
-      val code = scala.sys.process.Process(cmd).!(
-        scala.sys.process.ProcessLogger(l => { out.append(l).append('\n'); () },
-          _ => ()))
-      assert(code == 0 && out.toString.linesIterator.contains("released"),
+      val (code, out) =
+        ChildJvm.run("graft.TablesReleaseCheck", Nil, root.getPath)
+      assert(code == 0 && out.linesIterator.contains("released"),
         s"exit $code: $out")
     } finally {
       def rm(f: File): Unit = {
