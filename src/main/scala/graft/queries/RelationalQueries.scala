@@ -1744,9 +1744,8 @@ object RelationalQueries {
               .coalesce(1), root,
             statsCols = Seq("url"), bloomCols = Seq("url"))
         }
-        val parent = graft.store.Versioned.latestVersion(root)
-        val rels = graft.store.Versioned.files(root, parent)
-          .map(p => p.substring(p.indexOf("data/")))
+        val parent = graft.store.Versioned.snapshot(root)
+        val rels = parent.dataFiles
         // URL-keyed upsert: touched keys live in ONE slice (doc_id %
         // 40 ∈ {3, 11} ⊂ slice 3); the bloom probe must admit a
         // minority of files even though prefix stats are blind here
@@ -1759,7 +1758,7 @@ object RelationalQueries {
             .select(concat(lit("https://new.example/doc/"),
               col("doc_id")).as("url"), col("doc_id"), col("n_chars")))
         val (cands, _) = graft.store.Versioned.pruneMergeScan(
-          updates, root, parent, rels, Seq("url"))
+          updates, parent, Seq("url"))
         require(cands.size < rels.size,
           s"URL merge scanned ${cands.size} of ${rels.size} files - " +
             "string-key skipping is not engaging")

@@ -335,9 +335,9 @@ object Versioned {
     versionsOf(names, prefix).foldLeft(0L)(math.max)
 
   /** The snapshot at `version` (latest when 0): ONE listing of the
-    * root yields both the highest manifest and the highest schema-DDL
-    * state, then ONE manifest open. Every read resolves "latest" here
-    * and nowhere else. */
+    * root yields the highest manifest, schema-DDL state and properties
+    * state, then ONE manifest open. Every read and every rewrite
+    * commit resolves "latest" here and nowhere else. */
   private[graft] def snapshot(root: String, version: Long = 0L,
                               prior: Option[Snapshot] = None): Snapshot = {
     val s = snapshotOf(root, version, prior)
@@ -363,7 +363,8 @@ object Versioned {
       require(v > 0 && names.contains(manifestPath(rootPath, v).getName),
         s"no committed version $v at $root")
       Some(Snapshot(root, fs, rootPath, v, readManifest(fs, rootPath, v)._2,
-        schemaDdlAsOf(fs, rootPath, highest(names, SchemaDdlPrefix), v)))
+        schemaDdlAsOf(fs, rootPath, highest(names, SchemaDdlPrefix), v),
+        highest(names, "properties")))
     }
   }
 
@@ -780,7 +781,7 @@ object Versioned {
       latestKvVersion(fs, rootPath, "properties"))
   }
 
-  private def propertiesStateAt(fs: FileSystem, rootPath: Path,
+  private[store] def propertiesStateAt(fs: FileSystem, rootPath: Path,
                                 n: Long): Seq[(String, String)] =
     if (n == 0L) Nil
     else kvFileState(fs, kvVersionPath(rootPath, "properties", n))
@@ -798,12 +799,13 @@ object Versioned {
     publishKv(root, "properties", propertiesStateAt,
       _.filterNot(p => keys.contains(p._1)))
 
-  /** Is the change-data-feed property on? Read at every rewrite
-    * commit (one small driver-side state read). */
-  def cdfEnabled(root: String): Boolean =
-    tableProperties(root)
-      .exists(p => p._1 == EnableChangeDataFeedKey &&
-        p._2.equalsIgnoreCase("true"))
+  /** Is the change-data-feed property on? Rewrite commits read it
+    * from their parent [[Snapshot]] instead (no second listing). */
+  def cdfEnabled(root: String): Boolean = cdfEnabled(tableProperties(root))
+
+  private[store] def cdfEnabled(props: Seq[(String, String)]): Boolean =
+    props.exists(p => p._1 == EnableChangeDataFeedKey &&
+      p._2.equalsIgnoreCase("true"))
 
   // ================= schema DDL (metadata-only column mapping) =====
   //
@@ -1639,8 +1641,34 @@ object Versioned {
     v
   }
 
-  /** Which of `parentFiles` contain at least one row `matches` selects,
-    * discovered by scanning the snapshot WITH file provenance
+  /** The parent every rewrite commit plans against: the latest
+    * [[Snapshot]] (one root listing, one manifest open). Its version
+    * is the commit's `expectedParent`; its entries, tombstones,
+    * properties and schema-DDL state are everything the commit plans
+    * from. The DDL state is the one in force AT the parent, the rule
+    * every read uses: it differs from the newest published state only
+    * while a DDL op's boundary manifest has not landed yet, and a
+    * rewrite racing that boundary commit fails its parent check. */
+  private def rewriteParent(root: String): Snapshot = {
+    val s = snapshotOf(root, 0L)
+    require(s.nonEmpty, s"no committed version at $root")
+    s.get
+  }
+
+  /** A physical-space frame of `s`'s data files projected to `s`'s
+    * logical schema, carrying `extra` internal columns through. */
+  private def toLogical(s: Snapshot, df: DataFrame,
+                        extra: Seq[String] = Nil): DataFrame =
+    s.ddl.fold(df)(toLogicalFrame(df, _, extra))
+
+  /** Scan of `s`'s data `files` in LOGICAL space — the frame every
+    * rewrite commit matches, rewrites and stages from. */
+  private def logical(spark: SparkSession, s: Snapshot,
+                      files: Seq[String]): DataFrame =
+    toLogical(s, dataScan(spark, s.rootPath, files, s.ddl))
+
+  /** Which of `s`'s data `files` contain at least one row `matches`
+    * selects, discovered by scanning them WITH file provenance
     * (`_metadata.file_path`) — the copy-on-write planning step shared
     * by merge and delete. The scan is column-pruned to whatever
     * `matches` references (keys or predicate columns), and parquet
@@ -1648,30 +1676,47 @@ object Versioned {
     * the distinct FILE list returns to the driver, so driver memory is
     * manifest-sized regardless of match count. Returns (touched,
     * untouched) as root-relative manifest entries. */
-  private def touchedFiles(spark: SparkSession, fs: FileSystem,
-                           rootPath: Path, parentFiles: Seq[String],
-                           matches: DataFrame => DataFrame,
-                           ddl: Option[SchemaDdl] = None)
+  private def touchedFiles(spark: SparkSession, s: Snapshot,
+                           files: Seq[String],
+                           matches: DataFrame => DataFrame)
       : (Seq[String], Seq[String]) = {
     // keyed scheme-less so `_metadata.file_path`'s URI spelling
     // (file:///x vs file:/x) can never miss a manifest entry
-    val byPath = parentFiles.map { f =>
-      fs.makeQualified(resolve(rootPath, f)).toUri.getPath -> f
+    val byPath = files.map { f =>
+      s.fs.makeQualified(s.path(f)).toUri.getPath -> f
     }.toMap
-    val snap = dataScan(spark, rootPath, parentFiles, ddl)
     import org.apache.spark.sql.functions.col
     // capture the metadata column BEFORE any logical projection (it
     // only resolves on the scan relation itself), then let `matches`
     // evaluate user predicates over logical names
-    val keyed = snap.withColumn("__fp", col("_metadata.file_path"))
-    val logical = ddl.map(toLogicalFrame(keyed, _, extra = Seq("__fp")))
-      .getOrElse(keyed)
-    val touched = matches(logical)
+    val keyed = dataScan(spark, s.rootPath, files, s.ddl)
+      .withColumn("__fp", col("_metadata.file_path"))
+    val touched = matches(toLogical(s, keyed, extra = Seq("__fp")))
       .select("__fp").distinct().collect()
       .map(r => byPath(new Path(r.getString(0)).toUri.getPath))
       .toSeq.sorted
     val t = touched.toSet
-    (touched, parentFiles.filterNot(t))
+    (touched, files.filterNot(t))
+  }
+
+  /** Split `s`'s data files into (candidates, provably unmatched) by
+    * the literal conjuncts of `predicate` ([[predicateKeyStats]] over
+    * a logical probe of the first file — planning only, no job): files
+    * whose stats/bloom sidecars or partition path fail a necessary
+    * comparison never enter the match scan. The predicate speaks
+    * LOGICAL names; [[admit]] translates the probe keys to the
+    * sidecars' physical space. */
+  private def prunePredicate(spark: SparkSession, s: Snapshot,
+                             predicate: org.apache.spark.sql.Column)
+      : (Seq[String], Seq[String]) = {
+    if (s.dataFiles.isEmpty) return (Nil, Nil)
+    val (bounds, eqs, hashEqs) = predicateKeyStats(
+      logical(spark, s, s.dataFiles.take(1)), predicate)
+    val candidates =
+      if (bounds.isEmpty && eqs.isEmpty && hashEqs.isEmpty) s.dataFiles
+      else admit(s, bounds, eqs, hashEqs)
+    val c = candidates.toSet
+    (candidates, s.dataFiles.filterNot(c))
   }
 
   /** How many distinct per-column key values a merge will collect for
@@ -1681,8 +1726,9 @@ object Versioned {
   private val MergeBloomProbeMax = 1024
 
   /** Pre-prune a rewrite's match-scan list with the sidecars the table
-    * already maintains: split `parentFiles` into (candidates, provably
-    * unmatched) using per-key min/max derived from `updates` (one
+    * already maintains: split the data files of parent snapshot `s`
+    * into (candidates, provably unmatched) using per-key min/max
+    * derived from `updates` (one
     * driver-sized agg) plus, for key columns carrying a bloom sidecar
     * with ≤ [[MergeBloomProbeMax]] distinct update values, a per-file
     * bloom probe of those values. Without this, the copy-on-write
@@ -1693,18 +1739,15 @@ object Versioned {
     * Files the sidecars can't vouch for (missing entries, non-integral
     * keys) stay candidates — pruning is an optimization, never a
     * correctness gate. */
-  private[graft] def pruneMergeScan(updates: DataFrame, root: String,
-                                    parent: Long, parentFiles: Seq[String],
+  private[graft] def pruneMergeScan(updates: DataFrame, s: Snapshot,
                                     keys: Seq[String])
       : (Seq[String], Seq[String]) = {
-    val (fs, rootPath) = fsRoot(root)
+    val parentFiles = s.dataFiles
     // update keys are logical; the sidecars (and partition paths)
     // key physical — translate the probe-map keys once
-    val ddl = schemaDdl(root, parent)
-    def phys(m: Map[String, (Long, Long)]) = physProbeKeys(ddl, m)
-    def physS(m: Map[String, Seq[Long]]) = physProbeKeys(ddl, m)
+    def physS(m: Map[String, Seq[Long]]) = physProbeKeys(s.ddl, m)
     def physOf(k: String): String =
-      ddl.flatMap(_.physicalName(k)).getOrElse(k)
+      s.ddl.flatMap(_.physicalName(k)).getOrElse(k)
     // pruning can't pay for its own planning jobs on a handful of
     // files — scan them all (at 100 TB file counts this branch never
     // takes; at spec/test scale it keeps merge latency flat)
@@ -1738,13 +1781,13 @@ object Versioned {
       else Some(k -> (row.getLong(2 * i), row.getLong(2 * i + 1)))
     }.toMap
     // stage 1: bounds alone (stats sidecar, no extra jobs)
-    val byBounds = admittedFiles(fs, rootPath, parent, parentFiles,
-      phys(bounds), Map.empty)
+    val byBounds = admit(s, bounds, Map.empty, Map.empty)
     // stage 2: the per-column bloom probe pays one distinct-collect
     // job per key column — only worth it while many candidates remain
     val bloomCols =
       if (byBounds.size < 8) Nil
-      else readBloomMeta(fs, rootPath, parent).map(_.cols).getOrElse(Nil)
+      else readBloomMeta(s.fs, s.rootPath, s.version).map(_.cols)
+        .getOrElse(Nil)
     def distinctProbe(k: String,
         keyExpr: org.apache.spark.sql.Column): Option[Seq[Long]] = {
       val vals = updates.select(keyExpr.as("__probe"))
@@ -1762,7 +1805,7 @@ object Versioned {
       .toMap
     val candidates =
       if (equalitySets.isEmpty && hashEqualitySets.isEmpty) byBounds
-      else admittedFiles(fs, rootPath, parent, byBounds, Map.empty,
+      else admittedFiles(s.fs, s.rootPath, s.version, byBounds, Map.empty,
         physS(equalitySets), physS(hashEqualitySets))
     val c = candidates.toSet
     (candidates, parentFiles.filterNot(c))
@@ -1960,15 +2003,18 @@ object Versioned {
     * files rewrites 0.1% of the table — never a full overwrite.
     * Concurrency: rewrites conflict-detect rather than blind-retry — a
     * commit landing mid-rewrite raises ConcurrentModificationException
-    * instead of silently dropping it. */
+    * instead of silently dropping it. Like every rewrite commit, it
+    * plans from its parent's [[Snapshot]] ([[rewriteParent]]),
+    * schema-DDL state included. */
   def commitMerge(updates: DataFrame, root: String,
                   keys: Seq[String], cdc: Boolean = false): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
     val spark = updates.sparkSession
     val (fs, rootPath) = fsRoot(root)
-    val ddl = schemaDdl(root)
+    val parent = snapshotOf(root, 0L)
+    val ddl = parent.flatMap(_.ddl)
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || cdfEnabled(root)
+    val cdcOn = cdc || parent.fold(cdfEnabled(root))(_.cdfEnabled)
     import org.apache.spark.sql.functions.{col, lit}
     // cdc=true (Delta's delta.enableChangeDataFeed role): stage the
     // commit's EXACT row changes as a cdc/<uuid>/ sidecar — matched
@@ -1985,44 +2031,39 @@ object Versioned {
           .map(_.withColumn("_change_type", lit("delete"))
             .unionByName(ins)).getOrElse(ins), ddl)
       }
-    val parent = latestVersion(root)
-    if (parent == 0L)
+    if (parent.isEmpty)
       // merging into an empty table is a plain insert — but STILL a
       // rewrite commit composed against a specific snapshot (the empty
       // one), so it conflict-detects like every other merge: a racing
-      // first append landing between latestVersion() and publish raises
+      // first append landing between the snapshot and publish raises
       // instead of being silently overwritten by this manifest
       return commitFiles(root,
         stage(updates, root) ++ cdcOf(None), appendBase = false,
         expectedParent = Some(0L), op = "merge")
+    val s = parent.get
     val updKeys = updates.select(keys.map(col): _*).distinct()
-    val (parentFiles, dvParent) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "MERGE")
+    requireNoDv(s.dvFiles, root, "MERGE")
     // sidecar pre-pruning: only files whose stats/bloom metadata admits
     // the update keys enter the match scan — the rest provably hold no
     // matched row and ride into the new manifest verbatim, unscanned
-    val (candidates, skipped) =
-      pruneMergeScan(updates, root, parent, parentFiles, keys)
+    val (candidates, skipped) = pruneMergeScan(updates, s, keys)
     val (touched, unmatchedScanned) =
       if (candidates.isEmpty) (Nil, Nil)
-      else touchedFiles(spark, fs, rootPath, candidates,
-        _.join(updKeys, keys, "left_semi"), ddl)
+      else touchedFiles(spark, s, candidates,
+        _.join(updKeys, keys, "left_semi"))
     val untouched = skipped ++ unmatchedScanned
-    val layout = detectPartitionBy(parentFiles)
+    val layout = detectPartitionBy(s.dataFiles)
     val (staged, cdcStaged) =
       if (touched.isEmpty)
         (stage(updates, root, layout), cdcOf(None)) // pure insert
       else {
-        val physScan = dataScan(spark, rootPath, touched, ddl)
-        val touchedScan = ddl.map(toLogicalFrame(physScan, _))
-          .getOrElse(physScan)
+        val touchedScan = logical(spark, s, touched)
         val survivors = touchedScan.join(updKeys, keys, "left_anti")
         (stage(survivors.unionByName(updates), root, layout),
           cdcOf(Some(touchedScan.join(updKeys, keys, "left_semi"))))
       }
     val v = commitFiles(root, untouched ++ staged ++ cdcStaged,
-      appendBase = false, expectedParent = Some(parent), op = "merge")
+      appendBase = false, expectedParent = Some(s.version), op = "merge")
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
   }
@@ -2062,7 +2103,8 @@ object Versioned {
     * The reference's keep-newest URL upsert
     * (linkgraph/store/cdb/cdb.go:16-22) is exactly a conditional
     * matched action in this grammar: WHEN MATCHED AND s.retrieved_at >
-    * t.retrieved_at THEN UPDATE. */
+    * t.retrieved_at THEN UPDATE. Plans from the parent snapshot
+    * ([[rewriteParent]]; schema-DDL state as of the parent). */
   def commitMergeConditional(source: DataFrame, root: String,
       keys: Seq[String],
       matched: Seq[MergeClause],
@@ -2083,20 +2125,17 @@ object Versioned {
       notMatchedBySource.nonEmpty, "merge needs at least one clause")
     val spark = source.sparkSession
     val (fs, rootPath) = fsRoot(root)
-    val ddl = schemaDdl(root)
+    val snap = snapshotOf(root, 0L)
+    val parent = snap.fold(0L)(_.version)
+    val ddl = snap.flatMap(_.ddl)
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || cdfEnabled(root)
-    val parent = latestVersion(root)
-    val (parentFiles, dvParent) =
-      if (parent == 0L) (Nil, Nil)
-      else splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "MERGE")
+    val cdcOn = cdc || snap.fold(cdfEnabled(root))(_.cdfEnabled)
+    val parentFiles = snap.fold(Seq.empty[String])(_.dataFiles)
+    requireNoDv(snap.fold(Seq.empty[String])(_.dvFiles), root, "MERGE")
 
     val fields: Seq[org.apache.spark.sql.types.StructField] =
       ddl.map(_.schema.fields.toSeq).getOrElse {
-        if (parentFiles.nonEmpty)
-          FastScan.footerSchema(spark, fs,
-            resolve(rootPath, parentFiles.head)).fields.toSeq
+        if (parentFiles.nonEmpty) snap.get.schema(spark).fields.toSeq
         else tableSchema(root).map(_.fields.toSeq).getOrElse(
           // table birth by merge: the insert clauses define the shape
           source.schema.fields.toSeq)
@@ -2155,16 +2194,16 @@ object Versioned {
     // is potentially affected (unmatched rows live in files the key
     // probes would skip), so the rewrite is necessarily full-table;
     // otherwise prune exactly like the canonical upsert
+    val s = snap.get // data files exist, so a parent does
     val updKeys = source.select(keys.map(col): _*).distinct()
     val (touched, untouched) =
       if (notMatchedBySource.nonEmpty) (parentFiles, Seq.empty[String])
       else {
-        val (candidates, skipped) =
-          pruneMergeScan(source, root, parent, parentFiles, keys)
+        val (candidates, skipped) = pruneMergeScan(source, s, keys)
         val (t, unmatchedScanned) =
           if (candidates.isEmpty) (Nil, Nil)
-          else touchedFiles(spark, fs, rootPath, candidates,
-            _.join(updKeys, keys, "left_semi"), ddl)
+          else touchedFiles(spark, s, candidates,
+            _.join(updKeys, keys, "left_semi"))
         (t, skipped ++ unmatchedScanned)
       }
 
@@ -2172,11 +2211,7 @@ object Versioned {
     if (touched.isEmpty && notMatched.isEmpty) return parent
 
     val touchedScan =
-      if (touched.isEmpty) None
-      else {
-        val phys = dataScan(spark, rootPath, touched, ddl)
-        Some(ddl.map(toLogicalFrame(phys, _)).getOrElse(phys))
-      }
+      if (touched.isEmpty) None else Some(logical(spark, s, touched))
 
     // multi-match ambiguity: duplicate source keys hitting ONE target
     // row would apply two updates to it — refuse, like Delta. The
@@ -2277,67 +2312,41 @@ object Versioned {
     * retention semantics regulators expect a lakehouse to document.
     * A predicate matching nothing is a metadata no-op (returns the
     * current version, no new commit). Same conflict detection as
-    * [[commitMerge]]. */
+    * [[commitMerge]]; plans from the parent snapshot
+    * ([[rewriteParent]]; schema-DDL state as of the parent). */
   def commitDelete(spark: SparkSession, root: String,
                    predicate: org.apache.spark.sql.Column,
                    cdc: Boolean = false): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val (parentFiles, dvParent) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "copy-on-write DELETE")
-    if (parentFiles.isEmpty) return parent // already empty: no-op
-    val ddl = schemaDdl(root)
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    val s = rewriteParent(root)
+    requireNoDv(s.dvFiles, root, "copy-on-write DELETE")
+    if (s.dataFiles.isEmpty) return s.version // already empty: no-op
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || cdfEnabled(root)
-    // sidecar pre-pruning from the predicate's own literal conjuncts:
-    // files whose stats/bloom metadata provably fails a necessary
-    // comparison never enter the match scan. The probe frame must
-    // speak LOGICAL names (the predicate's language); the resulting
-    // keys translate to the sidecars' physical space.
-    val headScan = dataScan(spark, rootPath, Seq(parentFiles.head), ddl)
-    val (predBounds, predEqs, predHashEqs) = predicateKeyStats(
-      ddl.map(toLogicalFrame(headScan, _)).getOrElse(headScan),
-      predicate)
-    val candidates =
-      if (predBounds.isEmpty && predEqs.isEmpty && predHashEqs.isEmpty)
-        parentFiles
-      else admittedFiles(fs, rootPath, parent, parentFiles,
-        physProbeKeys(ddl, predBounds), physProbeKeys(ddl, predEqs),
-        physProbeKeys(ddl, predHashEqs))
-    val skipped = { val c = candidates.toSet
-      parentFiles.filterNot(c) }
-    if (candidates.isEmpty) return parent
-    val (touched, unmatchedScanned) = touchedFiles(spark, fs, rootPath,
-      candidates, _.filter(predicate), ddl)
+    val cdcOn = cdc || s.cdfEnabled
+    val (candidates, skipped) = prunePredicate(spark, s, predicate)
+    if (candidates.isEmpty) return s.version
+    val (touched, unmatchedScanned) =
+      touchedFiles(spark, s, candidates, _.filter(predicate))
     val untouched = skipped ++ unmatchedScanned
-    if (touched.isEmpty) return parent
+    if (touched.isEmpty) return s.version
     // SQL DELETE semantics: remove rows where the predicate is TRUE;
     // a null-evaluating predicate keeps its row (bare !predicate would
     // drop those too)
-    val keep = org.apache.spark.sql.functions
-      .not(org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    val physTouched = dataScan(spark, rootPath, touched, ddl)
-    val touchedScan = ddl.map(toLogicalFrame(physTouched, _))
-      .getOrElse(physTouched)
-    val survivors = touchedScan.filter(keep)
+    val matched = coalesce(predicate, lit(false))
+    val touchedScan = logical(spark, s, touched)
     // cdc=true: the deleted rows become this commit's change record
     // (one extra pass over the touched files), keeping the feed
     // derivable across the rewrite
     val cdcStaged =
       if (!cdcOn) Nil
-      else stageCdc(fs, rootPath, touchedScan
-        .filter(org.apache.spark.sql.functions.coalesce(predicate,
-          org.apache.spark.sql.functions.lit(false)))
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("delete")), ddl)
+      else stageCdc(s.fs, s.rootPath, touchedScan.filter(matched)
+        .withColumn("_change_type", lit("delete")), s.ddl)
     val v = commitFiles(root,
       untouched ++
-        stage(survivors, root, detectPartitionBy(parentFiles)) ++
+        stage(touchedScan.filter(not(matched)), root,
+          detectPartitionBy(s.dataFiles)) ++
         cdcStaged,
-      appendBase = false, expectedParent = Some(parent),
+      appendBase = false, expectedParent = Some(s.version),
       op = "delete", emptyOk = true)
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
@@ -2353,26 +2362,22 @@ object Versioned {
     * touching one partition's rows rewrites only that partition's
     * files. cdc = true stages the matched rows' old values as
     * `delete` and new values as `insert` (CDC's canonical update
-    * encoding). A condition matching nothing is a metadata no-op. */
+    * encoding). A condition matching nothing is a metadata no-op.
+    * Plans from the parent snapshot ([[rewriteParent]]; schema-DDL
+    * state as of the parent). */
   def commitUpdate(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       cdc: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val (parentFiles, dvParent) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "copy-on-write UPDATE")
-    if (parentFiles.isEmpty) return parent // no rows to update: no-op
-    val ddl = schemaDdl(root)
+    val s = rewriteParent(root)
+    requireNoDv(s.dvFiles, root, "copy-on-write UPDATE")
+    if (s.dataFiles.isEmpty) return s.version // no rows to update: no-op
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || cdfEnabled(root)
-    val headScan = dataScan(spark, rootPath, Seq(parentFiles.head), ddl)
-    val probe = ddl.map(toLogicalFrame(headScan, _)).getOrElse(headScan)
-    val schema = probe.schema
+    val cdcOn = cdc || s.cdfEnabled
+    // the logical schema the assignments and the rewrite speak
+    val schema = s.ddl.map(_.schema).getOrElse(s.schema(spark))
     assignments.foreach { case (c, _) =>
       require(schema.fieldNames.contains(c),
         s"UPDATE assigns unknown column $c (table has " +
@@ -2380,26 +2385,15 @@ object Versioned {
     val flag = "__graft_update_matched"
     require(!schema.fieldNames.contains(flag),
       s"column name $flag is reserved by UPDATE")
-    val (predBounds, predEqs, predHashEqs) =
-      predicateKeyStats(probe, condition)
-    val candidates =
-      if (predBounds.isEmpty && predEqs.isEmpty && predHashEqs.isEmpty)
-        parentFiles
-      else admittedFiles(fs, rootPath, parent, parentFiles,
-        physProbeKeys(ddl, predBounds), physProbeKeys(ddl, predEqs),
-        physProbeKeys(ddl, predHashEqs))
-    val skipped = { val c = candidates.toSet
-      parentFiles.filterNot(c) }
-    if (candidates.isEmpty) return parent
-    val (touched, unmatchedScanned) = touchedFiles(spark, fs, rootPath,
-      candidates, _.filter(condition), ddl)
-    if (touched.isEmpty) return parent
+    val (candidates, skipped) = prunePredicate(spark, s, condition)
+    if (candidates.isEmpty) return s.version
+    val (touched, unmatchedScanned) =
+      touchedFiles(spark, s, candidates, _.filter(condition))
+    if (touched.isEmpty) return s.version
     val untouched = skipped ++ unmatchedScanned
     // the matched flag is computed ONCE over the original values —
     // assignments may change the very columns the condition reads
-    val physTouched = dataScan(spark, rootPath, touched, ddl)
-    val flagged = ddl.map(toLogicalFrame(physTouched, _))
-      .getOrElse(physTouched)
+    val flagged = logical(spark, s, touched)
       .withColumn(flag, coalesce(condition, lit(false)))
     val assignMap = assignments.toMap
     val rewritten = flagged.select(
@@ -2411,16 +2405,17 @@ object Versioned {
       } :+ col(flag)): _*)
     val cdcStaged =
       if (!cdcOn) Nil
-      else stageCdc(fs, rootPath,
+      else stageCdc(s.fs, s.rootPath,
         flagged.filter(col(flag)).drop(flag)
           .withColumn("_change_type", lit("delete"))
           .unionByName(rewritten.filter(col(flag)).drop(flag)
-            .withColumn("_change_type", lit("insert"))), ddl)
+            .withColumn("_change_type", lit("insert"))), s.ddl)
     val v = commitFiles(root,
       untouched ++
         stage(rewritten.drop(flag), root,
-          detectPartitionBy(parentFiles)) ++ cdcStaged,
-      appendBase = false, expectedParent = Some(parent), op = "update")
+          detectPartitionBy(s.dataFiles)) ++ cdcStaged,
+      appendBase = false, expectedParent = Some(s.version),
+      op = "update")
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
   }
@@ -2438,7 +2433,9 @@ object Versioned {
     * manifest publish. An empty match region degrades to a plain
     * append of `df` (backfill into new territory). cdc = true stages
     * the removed rows as `delete` and the new rows as `insert` change
-    * records so the feed stays derivable across the rewrite. */
+    * records so the feed stays derivable across the rewrite. Plans
+    * from the parent snapshot ([[rewriteParent]]; schema-DDL state as
+    * of the parent). */
   def commitReplaceWhere(df: DataFrame, root: String,
       predicate: org.apache.spark.sql.Column,
       cdc: Boolean = false,
@@ -2447,33 +2444,27 @@ object Versioned {
       bloomCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val spark = df.sparkSession
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val (parentFiles, dvParent) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "replaceWhere")
+    val s = rewriteParent(root)
+    requireNoDv(s.dvFiles, root, "replaceWhere")
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || cdfEnabled(root)
+    val cdcOn = cdc || s.cdfEnabled
     // the table's own layout wins when the caller didn't name one, so
     // a region replacement never flattens a partitioned table
     val layout =
       if (partitionBy.nonEmpty) partitionBy
-      else detectPartitionBy(parentFiles)
+      else detectPartitionBy(s.dataFiles)
     // stage the replacement FIRST, then validate on the bytes as
     // written — the frame is computed exactly once, so the rows
     // checked against the region predicate (and the CHECK
     // constraints, inside stage) are the rows being committed even
     // for a non-deterministic input
-    val ddl = schemaDdl(root)
-    def logicalOf(d: DataFrame): DataFrame =
-      ddl.map(toLogicalFrame(d, _)).getOrElse(d)
     val newStaged = stage(df, root, layout)
-    val newScan = stagedScan(spark, rootPath, newStaged).map(logicalOf)
+    val newScan = stagedScan(spark, s.rootPath, newStaged)
+      .map(toLogical(s, _))
     newScan.map(_.filter(not(coalesce(predicate, lit(false)))).count())
       .filter(_ > 0L).foreach { strays =>
         newStaged.map(_.split('/').take(2).mkString("/")).distinct
-          .foreach(d => try fs.delete(resolve(rootPath, d), true)
+          .foreach(d => try s.fs.delete(s.path(d), true)
             catch { case scala.util.control.NonFatal(_) => () })
         throw new IllegalArgumentException(
           s"replaceWhere frame carries $strays rows OUTSIDE the " +
@@ -2481,49 +2472,31 @@ object Versioned {
             "(silently keeping them would turn a region replacement " +
             "into a blind overwrite)")
       }
-    val (predBounds, predEqs, predHashEqs) =
-      if (parentFiles.isEmpty) (Map.empty[String, (Long, Long)],
-        Map.empty[String, Seq[Long]], Map.empty[String, Seq[Long]])
-      else predicateKeyStats(
-        logicalOf(dataScan(spark, rootPath, Seq(parentFiles.head), ddl)),
-        predicate)
-    val candidates =
-      if (predBounds.isEmpty && predEqs.isEmpty && predHashEqs.isEmpty)
-        parentFiles
-      else admittedFiles(fs, rootPath, parent, parentFiles,
-        physProbeKeys(ddl, predBounds), physProbeKeys(ddl, predEqs),
-        physProbeKeys(ddl, predHashEqs))
-    val skipped = { val c = candidates.toSet
-      parentFiles.filterNot(c) }
+    val (candidates, skipped) = prunePredicate(spark, s, predicate)
     val (touched, unmatchedScanned) =
       if (candidates.isEmpty) (Nil, Nil)
-      else touchedFiles(spark, fs, rootPath, candidates,
-        _.filter(predicate), ddl)
+      else touchedFiles(spark, s, candidates, _.filter(predicate))
     val untouched = skipped ++ unmatchedScanned
-    val keep = not(coalesce(predicate, lit(false)))
+    val matched = coalesce(predicate, lit(false))
     val touchedScan =
-      if (touched.isEmpty) None
-      else Some(logicalOf(dataScan(spark, rootPath, touched, ddl)))
+      if (touched.isEmpty) None else Some(logical(spark, s, touched))
     val survivorsStaged = touchedScan
-      .map(t => stage(t.filter(keep), root, layout)).getOrElse(Nil)
+      .map(t => stage(t.filter(not(matched)), root, layout)).getOrElse(Nil)
     val cdcStaged =
       if (!cdcOn) Nil
       else {
-        val deletes = touchedScan.map(t =>
-          stageCdc(fs, rootPath, t
-            .filter(coalesce(predicate, lit(false)))
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("delete")), ddl))
+        val deletes = touchedScan.map(t => stageCdc(s.fs, s.rootPath,
+            t.filter(matched).withColumn("_change_type", lit("delete")),
+            s.ddl))
           .getOrElse(Nil)
         // insert records from the staged bytes, not a re-evaluation
-        deletes ++ newScan.map(n => stageCdc(fs, rootPath,
-          n.withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("insert")), ddl))
+        deletes ++ newScan.map(n => stageCdc(s.fs, s.rootPath,
+          n.withColumn("_change_type", lit("insert")), s.ddl))
           .getOrElse(Nil)
       }
     val v = commitFiles(root,
       untouched ++ survivorsStaged ++ newStaged ++ cdcStaged,
-      appendBase = false, expectedParent = Some(parent),
+      appendBase = false, expectedParent = Some(s.version),
       op = "replace-where", emptyOk = true)
     maintainSidecars(spark, root, v, statsCols, bloomCols, 65536)
     v
@@ -3033,7 +3006,9 @@ object Versioned {
     * their ~100 ms fixed per-job costs were strictly serial before —
     * every commit on a stats+bloom table paid both in sequence. Off
     * lineages return instantly, so the future is free where sidecars
-    * are not maintained. */
+    * are not maintained. Version v is resolved ONCE, as one
+    * [[Snapshot]] both passes share, and only when a lineage needs its
+    * entries. */
   private def maintainSidecars(spark: SparkSession, root: String,
                                v: Long, statsCols: Seq[String],
                                bloomCols: Seq[String],
@@ -3041,14 +3016,15 @@ object Versioned {
     import scala.concurrent.{Await, Future, blocking}
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
+    lazy val s = snapshot(root, v)
     // `blocking` marks the Spark-job wait for the fork-join pool so
     // concurrent commits can't starve the shared global executor.
-    val stats = Future(blocking(maintainStats(spark, root, v, statsCols)))
+    val stats = Future(blocking(maintainStats(spark, root, v, s, statsCols)))
     // The stats future must ALWAYS be awaited — abandoning it on a
     // bloom failure would swallow its exception and leave it racing a
     // caller that believes version v's sidecar maintenance is over.
-    val blooms =
-      scala.util.Try(maintainBlooms(spark, root, v, bloomCols, bloomBits))
+    val blooms = scala.util.Try(
+      maintainBlooms(spark, root, v, s, bloomCols, bloomBits))
     val statsRes = scala.util.Try(
       Await.result(stats, scala.concurrent.duration.Duration.Inf))
     blooms.get
@@ -3056,12 +3032,14 @@ object Versioned {
   }
 
   private def maintainBlooms(spark: SparkSession, root: String, v: Long,
-                             bloomCols0: Seq[String],
+                             snap: => Snapshot, bloomCols0: Seq[String],
                              bloomBits: Int): Unit = {
     val (fs, rootPath) = fsRoot(root)
+    lazy val s = snap
     // sidecars key PHYSICAL names (the space staged files scan in);
     // callers name columns logically
-    val bloomCols = physCols(schemaDdl(root, v), bloomCols0)
+    val bloomCols =
+      if (bloomCols0.isEmpty) Nil else physCols(s.ddl, bloomCols0)
     val parentMeta = {
       val pv = newestSidecarVersion(fs, v - 1, bloomPath(rootPath, _))
       if (pv > 0) readBloomMeta(fs, rootPath, pv) else None
@@ -3077,7 +3055,7 @@ object Versioned {
     require(mBits % 64 == 0 && mBits > 0,
       s"bloomBits must be a positive multiple of 64, got $mBits")
     // tombstone files carry no table columns: data entries only
-    val manifestFiles = splitEntries(readManifest(fs, rootPath, v)._2)._1
+    val manifestFiles = s.dataFiles
     val sameLineage = parentMeta.isDefined && cols == parentCols
     val live = manifestFiles.toSet
     def liveKey(k: String): Boolean =
@@ -3175,10 +3153,13 @@ object Versioned {
     * columns (stats enabled once at the first commit stay maintained
     * by every later commit on the lineage). */
   private def maintainStats(spark: SparkSession, root: String, v: Long,
+                            snap: => Snapshot,
                             statsCols0: Seq[String]): Unit = {
     val (fs, rootPath) = fsRoot(root)
+    lazy val s = snap
     // sidecars key PHYSICAL names; callers name columns logically
-    val statsCols = physCols(schemaDdl(root, v), statsCols0)
+    val statsCols =
+      if (statsCols0.isEmpty) Nil else physCols(s.ddl, statsCols0)
     val parentMeta = {
       val pv = newestSidecarVersion(fs, v - 1, statsPath(rootPath, _))
       if (pv > 0) readStatsMeta(fs, rootPath, pv) else None
@@ -3187,7 +3168,7 @@ object Versioned {
     val cols = if (statsCols.nonEmpty) statsCols else parentCols
     if (cols.isEmpty) return
     // tombstone files carry no table columns: data entries only
-    val manifestFiles = splitEntries(readManifest(fs, rootPath, v)._2)._1
+    val manifestFiles = s.dataFiles
     val sameLineage = parentMeta.isDefined && cols == parentCols
     val live = manifestFiles.toSet
     // carry parent shards BY REFERENCE, dropping fully-dead ones (the
@@ -3405,13 +3386,12 @@ object Versioned {
                     statsCols: Seq[String] = Nil,
                     bloomCols: Seq[String] = Nil,
                     bloomBits: Int = 65536): Unit = {
-    val v = latestVersion(root)
-    require(v > 0, s"no committed version at $root")
+    val s = rewriteParent(root)
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       "indexSkipping needs statsCols and/or bloomCols")
-    if (statsCols.nonEmpty) maintainStats(spark, root, v, statsCols)
+    if (statsCols.nonEmpty) maintainStats(spark, root, s.version, s, statsCols)
     if (bloomCols.nonEmpty)
-      maintainBlooms(spark, root, v, bloomCols, bloomBits)
+      maintainBlooms(spark, root, s.version, s, bloomCols, bloomBits)
   }
 
   /** Time-based retention vacuum (Delta's `VACUUM ... RETAIN n HOURS`
@@ -3488,38 +3468,43 @@ object Versioned {
       try r.getRecordCount finally r.close()
     }.sum
 
+  /** (version, publication time) of every RETAINED manifest,
+    * ascending, from ONE root listing: publication time is the manifest
+    * file's own modification time (the atomic visibility event IS the
+    * timestamp). Versions a vacuum retired are simply absent. */
+  private def manifestTimes(root: String): Seq[(Long, Long)] = {
+    val (fs, rootPath) = fsRoot(root)
+    val statuses =
+      try fs.listStatus(rootPath).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    statuses.flatMap { st =>
+      versionsOf(Seq(st.getPath.getName), "manifest")
+        .map(_ -> st.getModificationTime)
+    }.sortBy(_._1)
+  }
+
   /** Highest version whose manifest was PUBLISHED at or before
     * `tsMillis` (epoch millis) — timestamp time travel (Delta's
-    * `timestampAsOf`). Publication time is the manifest file's own
-    * modification time: the atomic visibility event IS the timestamp.
-    * Fails loudly when the store's first commit is after `tsMillis`. */
+    * `timestampAsOf`). Fails loudly when the earliest retained commit
+    * is after `tsMillis` (before the first commit, or in history a
+    * vacuum retired). */
   def versionAt(root: String, tsMillis: Long): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val latest = latestVersion(root)
-    require(latest > 0, s"no committed version at $root")
-    val v = (latest to 1L by -1L).find { v =>
-      fs.getFileStatus(manifestPath(rootPath, v))
-        .getModificationTime <= tsMillis
-    }
-    v.getOrElse(throw new IllegalArgumentException(
-      s"no version of $root existed at $tsMillis (first commit is newer)"))
+    val times = manifestTimes(root)
+    require(times.nonEmpty, s"no committed version at $root")
+    times.reverseIterator.collectFirst { case (v, t) if t <= tsMillis => v }
+      .getOrElse(throw new IllegalArgumentException(
+        s"no retained version of $root existed at $tsMillis (the " +
+          s"earliest retained commit, v${times.head._1}, is newer)"))
   }
 
   /** Earliest version whose manifest was published AT or after
     * `tsMillis`, or None when every commit predates the instant —
     * Delta's `startingTimestamp` boundary (at-or-after, so a commit
-    * published exactly at the instant is INCLUDED). Walks versions
-    * ascending, skipping vacuumed manifests; manifest mtimes are
-    * nondecreasing in version by the publish protocol, so the first
-    * surviving hit is the answer. */
-  def versionAtOrAfter(root: String, tsMillis: Long): Option[Long] = {
-    val (fs, rootPath) = fsRoot(root)
-    (1L to latestVersion(root)).find { v =>
-      try fs.getFileStatus(manifestPath(rootPath, v))
-        .getModificationTime >= tsMillis
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-  }
+    * published exactly at the instant is INCLUDED). Vacuumed versions
+    * are absent; manifest mtimes are nondecreasing in version by the
+    * publish protocol, so the first hit is the answer. */
+  def versionAtOrAfter(root: String, tsMillis: Long): Option[Long] =
+    manifestTimes(root).collectFirst { case (v, t) if t >= tsMillis => v }
 
   /** Read the snapshot as of a wall-clock instant. */
   def readAsOf(spark: SparkSession, root: String,
@@ -3620,46 +3605,19 @@ object Versioned {
     * conjuncts, so the tombstone SCAN tracks the selection too.
     * Already-tombstoned rows never re-tombstone (the matching scan
     * reads the live view). A predicate matching nothing is a metadata
-    * no-op. Same optimistic conflict detection as every rewrite;
+    * no-op. Same optimistic conflict detection and parent snapshot
+    * ([[rewriteParent]]) as every rewrite;
     * tombstones accumulate until [[commitPurgeDeleteVectors]] folds
     * them into rewritten files (required before copy-on-write ops). */
   def commitDeleteVectors(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val entries = readManifest(fs, rootPath, parent)._2
-    val (dataFiles, dvFiles) = splitEntries(entries)
-    if (dataFiles.isEmpty) return parent // already empty: no-op
-    val ddl = schemaDdl(root)
-    def logicalOf(d: DataFrame, extra: Seq[String] = Nil): DataFrame =
-      ddl.map(toLogicalFrame(d, _, extra)).getOrElse(d)
+    val s = rewriteParent(root)
+    if (s.dataFiles.isEmpty) return s.version // already empty: no-op
     // prune the tombstone scan exactly like copy-on-write DELETE
-    val (predBounds, predEqs, predHashEqs) = predicateKeyStats(
-      logicalOf(dataScan(spark, rootPath, Seq(dataFiles.head), ddl)),
-      predicate)
-    val candidates =
-      if (predBounds.isEmpty && predEqs.isEmpty && predHashEqs.isEmpty)
-        dataFiles
-      else admittedFiles(fs, rootPath, parent, dataFiles,
-        physProbeKeys(ddl, predBounds), physProbeKeys(ddl, predEqs),
-        physProbeKeys(ddl, predHashEqs))
-    if (candidates.isEmpty) return parent
-    // key the scan FIRST (the _metadata column only exists on the scan
-    // relation itself), then subtract the existing tombstones so
-    // already-deleted rows never re-tombstone
-    val rawScan = dataScan(spark, rootPath, candidates, ddl)
-    requireNoDvKeyColumns(rawScan.schema, root, "DV delete")
-    val keyed = withDvKey(rawScan)
-    val live =
-      if (dvFiles.isEmpty) keyed
-      else keyed.join(
-        org.apache.spark.sql.functions.broadcast(
-          dataScan(spark, rootPath, dvFiles, None)),
-        Seq("__dv_file", "__dv_idx"), "left_anti")
-    val tombstones =
-      logicalOf(live, extra = Seq("__dv_file", "__dv_idx"))
+    val (candidates, _) = prunePredicate(spark, s, predicate)
+    if (candidates.isEmpty) return s.version
+    val tombstones = liveKeyed(spark, s, candidates, "DV delete")
       .filter(coalesce(predicate, lit(false)))
       .select(col("__dv_file"), col("__dv_idx"))
     // stage under dv/<uuid>/ — invisible until the manifest publishes.
@@ -3670,14 +3628,33 @@ object Versioned {
     // commit rates file count IS manifest + footer-open cost. A delete
     // too large for one writer task belongs in copy-on-write
     // commitDelete anyway — its economics beat tombstones there.
-    val staged = stageRows(fs, rootPath, "dv", tombstones.repartition(1))
+    val staged = stageRows(s.fs, s.rootPath, "dv", tombstones.repartition(1))
     // nothing matched: metadata no-op
-    if (staged.isEmpty) return parent
-    val v = commitFiles(root, entries ++ staged, appendBase = false,
-      expectedParent = Some(parent), op = "dv-delete")
+    if (staged.isEmpty) return s.version
+    val v = commitFiles(root, s.entries ++ staged, appendBase = false,
+      expectedParent = Some(s.version), op = "dv-delete")
     // data files unchanged: sidecar entries carry fully, O(1) jobs
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
+  }
+
+  /** Scan of `s`'s data `files` keyed by tombstone key
+    * (`__dv_file`, `__dv_idx`) and projected LOGICAL with the keys
+    * carried through, minus the rows `s` already tombstoned — the live
+    * rows a deletion-vector commit may tombstone, so a row is never
+    * tombstoned twice. The key is taken on the scan relation itself,
+    * the only place `_metadata` resolves. */
+  private def liveKeyed(spark: SparkSession, s: Snapshot,
+                        files: Seq[String], op: String): DataFrame = {
+    val scan = dataScan(spark, s.rootPath, files, s.ddl)
+    requireNoDvKeyColumns(scan.schema, s.root, op)
+    val keyed = withDvKey(scan)
+    val live =
+      if (s.dvFiles.isEmpty) keyed
+      else keyed.join(org.apache.spark.sql.functions.broadcast(
+          dataScan(spark, s.rootPath, s.dvFiles, None)),
+        Seq("__dv_file", "__dv_idx"), "left_anti")
+    toLogical(s, live, extra = Seq("__dv_file", "__dv_idx"))
   }
 
   /** CHANGE DATA FEED (Delta's table_changes / CDF): every row-level
@@ -4001,45 +3978,35 @@ object Versioned {
     * composes with the change feed (the commit reads as exact
     * delete+insert pairs — CDC's canonical update encoding), and
     * pre-prunes its match scan with the same sidecar machinery as
-    * copy-on-write merge. Same optimistic conflict detection. */
+    * copy-on-write merge. Same optimistic conflict detection and
+    * parent snapshot ([[rewriteParent]]) as every rewrite. */
   def commitMergeOnRead(updates: DataFrame, root: String,
                         keys: Seq[String]): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
     requireNoDvKeyColumns(updates.schema, root, "merge-on-read MERGE")
     val spark = updates.sparkSession
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    if (parent == 0L)
+    val parent = snapshotOf(root, 0L)
+    if (parent.isEmpty)
       return commitFiles(root, stage(updates, root), appendBase = false,
         expectedParent = Some(0L), op = "mor-merge")
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val entries = readManifest(fs, rootPath, parent)._2
-    val (dataFiles, dvFiles) = splitEntries(entries)
-    val (candidates, _) =
-      pruneMergeScan(updates, root, parent, dataFiles, keys)
+    val s = parent.get
+    import org.apache.spark.sql.functions.col
+    val (candidates, _) = pruneMergeScan(updates, s, keys)
     val updKeys = updates.select(keys.map(col): _*).distinct()
-    val morDdl = schemaDdl(root)
     val stagedDv =
       if (candidates.isEmpty) Nil
       else {
-        val keyed = withDvKey(dataScan(spark, rootPath, candidates,
-          morDdl))
-        val live =
-          if (dvFiles.isEmpty) keyed
-          else keyed.join(
-            broadcast(dataScan(spark, rootPath, dvFiles, None)),
-            Seq("__dv_file", "__dv_idx"), "left_anti")
         // match keys in LOGICAL space (updKeys speaks logical names)
-        val liveLogical = morDdl.map(toLogicalFrame(live, _,
-          extra = Seq("__dv_file", "__dv_idx"))).getOrElse(live)
-        val tombstones = liveLogical.join(updKeys, keys, "left_semi")
-          .select(col("__dv_file"), col("__dv_idx"))
+        val tombstones =
+          liveKeyed(spark, s, candidates, "merge-on-read MERGE")
+            .join(updKeys, keys, "left_semi")
+            .select(col("__dv_file"), col("__dv_idx"))
         // one tombstone file per commit (see commitDeleteVectors)
-        stageRows(fs, rootPath, "dv", tombstones.repartition(1))
+        stageRows(s.fs, s.rootPath, "dv", tombstones.repartition(1))
       }
-    val stagedData = stage(updates, root, detectPartitionBy(dataFiles))
-    val v = commitFiles(root, entries ++ stagedDv ++ stagedData,
-      appendBase = false, expectedParent = Some(parent),
+    val stagedData = stage(updates, root, detectPartitionBy(s.dataFiles))
+    val v = commitFiles(root, s.entries ++ stagedDv ++ stagedData,
+      appendBase = false, expectedParent = Some(s.version),
       op = "mor-merge")
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
@@ -4051,31 +4018,27 @@ object Versioned {
     * untouched files ride verbatim. The table becomes copy-on-write
     * clean again (merge/delete/compact/readChanges all legal), history
     * keeps the tombstoned versions until [[vacuum]]. No-op when the
-    * table has no tombstones. */
+    * table has no tombstones. Plans from the parent snapshot
+    * ([[rewriteParent]]; schema-DDL state as of the parent). */
   def commitPurgeDeleteVectors(spark: SparkSession,
                                root: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val (dataFiles, dvFiles) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    if (dvFiles.isEmpty) return parent
-    val dv = dataScan(spark, rootPath, dvFiles, None)
-    val touchedKeys = dv.select("__dv_file").distinct()
+    val s = rewriteParent(root)
+    if (s.dvFiles.isEmpty) return s.version
+    val touchedKeys = dataScan(spark, s.rootPath, s.dvFiles, None)
+      .select("__dv_file").distinct()
       .collect().map(_.getString(0)).toSet
-    val (touched, untouched) = dataFiles.partition(f =>
-      touchedKeys(new Path(resolve(rootPath, f).toUri.getPath)
+    val (touched, untouched) = s.dataFiles.partition(f =>
+      touchedKeys(new Path(s.path(f).toUri.getPath)
         .toString.split('/').takeRight(3).mkString("/")))
-    // stage() takes LOGICAL frames (and maps back to physical): a
-    // raw physical scan must project first or a rename could corrupt
-    val purgeDdl = schemaDdl(root)
-    val survivors = applyDv(spark, fs, rootPath,
-      dataScan(spark, rootPath, touched, purgeDdl), dvFiles)
-    val staged = stage(purgeDdl.map(toLogicalFrame(survivors, _))
-      .getOrElse(survivors), root, detectPartitionBy(dataFiles))
+    // stage() takes LOGICAL frames (and maps back to physical): the
+    // tombstones apply on the raw physical scan (where `_metadata`
+    // resolves), then the survivors project logical
+    val survivors = applyDeleteVectors(spark, s,
+      dataScan(spark, s.rootPath, touched, s.ddl))
+    val staged = stage(toLogical(s, survivors), root,
+      detectPartitionBy(s.dataFiles))
     val v = commitFiles(root, untouched ++ staged, appendBase = false,
-      expectedParent = Some(parent), op = "dv-purge")
+      expectedParent = Some(s.version), op = "dv-purge")
     maintainSidecars(spark, root, v, Nil, Nil, 0)
     v
   }
@@ -4098,42 +4061,35 @@ object Versioned {
     * files qualify (nothing to pack). Conflicts RESOLVE rather than
     * fail where that is provably safe: a concurrent blind append is
     * compatible with a rewrite that changes no row, so the commit
-    * recomposes on the new snapshot and retries; a concurrent commit
+    * recomposes on a fresh snapshot and retries; a concurrent commit
     * that removed one of the files being packed (merge/delete/another
     * compaction) still raises ConcurrentModificationException.
-    * `beforePublish` is the test seam for exactly that window. */
+    * `beforePublish` is the test seam for exactly that window. Plans
+    * from the parent snapshot ([[rewriteParent]]; schema-DDL state as
+    * of the parent), file sizes included. */
   def commitCompact(spark: SparkSession, root: String,
                     smallBytes: Long = 64L << 20,
                     beforePublish: Long => Unit = _ => (),
                     zorderBy: Seq[String] = Nil,
                     zorderFiles: Int = 0,
                     partitionBy: Seq[String] = Nil): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val parent = latestVersion(root)
-    require(parent > 0, s"no committed version at $root")
-    val (parentFiles, dvParent) =
-      splitEntries(readManifest(fs, rootPath, parent)._2)
-    requireNoDv(dvParent, root, "COMPACT")
-    val sized = parentFiles.map { f =>
-      f -> fs.getFileStatus(resolve(rootPath, f)).getLen
-    }
+    val s = rewriteParent(root)
+    requireNoDv(s.dvFiles, root, "COMPACT")
+    // sizes from one listStatus per commit directory
+    val sized = s.dataFiles.zip(s.statuses.map(_.getLen))
     // plain compaction packs only the sub-threshold files; OPTIMIZE
     // ZORDER BY re-clusters EVERY file (Delta's semantics — clustering
     // quality is the goal, `smallBytes` is just the target file size)
     val (small, big) =
       if (zorderBy.nonEmpty) (sized, Seq.empty[(String, Long)])
       else sized.partition(_._2 < smallBytes)
-    if (small.size < 2) return parent
+    if (small.size < 2) return s.version
     val totalSmall = small.map(_._2).sum
     val nOut = math.max(1L, (totalSmall + smallBytes - 1) / smallBytes)
       .toInt
     // LOGICAL space throughout (zorderBy names, stage contract); a
     // schema-DDL state projects the physical scan up front
-    val compactDdl = schemaDdl(root)
-    val physSmall = dataScan(spark, rootPath, small.map(_._1),
-      compactDdl)
-    val smallScan = compactDdl.map(toLogicalFrame(physSmall, _))
-      .getOrElse(physSmall)
+    val smallScan = logical(spark, s, small.map(_._1))
     // OPTIMIZE ZORDER BY (Delta's clustering compaction): instead of a
     // bit-identical coalesce, re-cluster the packed rows on the z-curve
     // of the named columns — same rows, tighter per-file stats
@@ -4188,7 +4144,7 @@ object Versioned {
     // compaction touched the same files) re-raises: retrying would
     // resurrect superseded rows.
     val smallSet = small.map(_._1).toSet
-    var base = parent
+    var base = s.version
     var untouched = big.map(_._1)
     // bounded, matching commitFiles' own retry budget: under SUSTAINED
     // concurrent append traffic an unbounded recompose loop would
@@ -4209,14 +4165,13 @@ object Versioned {
         case e: java.util.ConcurrentModificationException =>
           attempts += 1
           if (attempts >= 20) throw e
-          val newParent = latestVersion(root)
-          val newFiles = readManifest(fs, rootPath, newParent)._2
-          if (!smallSet.subsetOf(newFiles.toSet)) throw e
+          val fresh = rewriteParent(root)
+          if (!smallSet.subsetOf(fresh.entries.toSet)) throw e
           // a racing DELETION-VECTOR commit may tombstone rows inside
           // the files being packed — recomposing would resurrect them
-          if (newFiles.exists(isDvEntry)) throw e
-          base = newParent
-          untouched = newFiles.filterNot(smallSet)
+          if (fresh.dvFiles.nonEmpty) throw e
+          base = fresh.version
+          untouched = fresh.entries.filterNot(smallSet)
       }
     }
     -1L // unreachable: the loop returns or throws

@@ -779,9 +779,8 @@ object ScaleCanary {
         .as("payload"))
       .groupBy("x", "y").agg(max(col("payload")).as("payload"))
     val (mCand, mSkip) = time("merge pre-prune plan (5M)") {
-      graft.store.Versioned.pruneMergeScan(updates, zroot,
-        graft.store.Versioned.latestVersion(zroot), zParentFiles,
-        Seq("x", "y"))
+      graft.store.Versioned.pruneMergeScan(updates,
+        graft.store.Versioned.snapshot(zroot), Seq("x", "y"))
     }
     require(mCand.size <= 8 && mCand.size + mSkip.size == 64,
       s"merge pre-prune admitted ${mCand.size}/64 files for a 1/64 box")
@@ -822,8 +821,7 @@ object ScaleCanary {
         .select((col("id") % 64L).as("x"), (col("id") + 5000L).as("y"),
           lit(7L).as("payload")))           // new keys: insert fires
     val (cCand, cSkip) = graft.store.Versioned.pruneMergeScan(
-      cSrc, zroot, graft.store.Versioned.latestVersion(zroot),
-      cParent, Seq("x", "y"))
+      cSrc, graft.store.Versioned.snapshot(zroot), Seq("x", "y"))
     require(cCand.size <= 16 && cCand.size + cSkip.size == cParent.size,
       s"conditional-merge pre-prune admitted ${cCand.size}/" +
         s"${cParent.size} files for an x-band source")

@@ -687,4 +687,106 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("SortAggregate"), p)
     }
   }
+
+  /** Run `body` with AQE and broadcast joins off — the planned shape a
+    * cluster-scale input gets, where nothing is small enough to
+    * broadcast (the stored-admission case above does the same). */
+  private def clusterShape[T](body: => T): T = {
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body
+    finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+      spark.conf.set("spark.sql.adaptive.enabled", prevA)
+    }
+  }
+
+  private val graphEdges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+    (4L, 5L), (5L, 1L), (2L, 5L))
+
+  test("a HITS iteration exchanges only the V-sized score frames: one " +
+      "exchange per step, none over either cached edge layout") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // each step's score frame is a lazy localCheckpoint, so its plan
+    // is only visible to the session's execution listeners
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val iters = 2
+    clusterShape {
+      spark.listenerManager.register(listener)
+      try {
+        graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect()
+        val sc = spark.sparkContext
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethods
+          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+          .get.invoke(bus)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }
+    // a step: an inner join of a cached edge layout with the previous
+    // score frame, summed by the other endpoint
+    val steps = plans.asScala.toSeq.filter(
+      _.collect { case j: SortMergeJoinExec => j }.exists(_.joinType ==
+        org.apache.spark.sql.catalyst.plans.Inner))
+    assert(steps.size == 2 * iters,
+      s"expected ${2 * iters} auth/hub steps among ${plans.size} plans")
+    steps.foreach { p =>
+      // the join reads both sides in place: the edge layout and the
+      // score frame are already partitioned and sorted by the join key
+      val joins = p.collect { case j: SortMergeJoinExec => j }
+      assert(joins.forall(exchanges(_).isEmpty), p.toString)
+      // the one exchange moves partially summed scores (V-sized)
+      val ex = exchanges(p)
+      assert(ex.size == 1, p.toString)
+      val below = ex.head.child match {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.child
+        case other => other
+      }
+      assert(below.isInstanceOf[org.apache.spark.sql.execution
+        .aggregate.HashAggregateExec], p.toString)
+    }
+  }
+
+  test("a Louvain move round exchanges its candidate stream three times") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // Louvain's rounds run under Ckpt.lean, which never reports to the
+    // execution listeners, so the round is read from moveRound's own
+    // plan, as the argmax case above does
+    val labels = (1L to 5L).map(i => (i, i)).toDF("id", "lab")
+    val p = clusterShape {
+      graft.graph.Louvain.moveRound(graphEdges.toDF("src", "dst"), labels,
+        allowUp = false).queryExecution.executedPlan
+    }
+    // the candidate stream starts at the neighbor-label join (on dst)
+    def neighborJoin(q: SparkPlan) = q.collect {
+      case j: SortMergeJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "dst")) => j
+    }
+    assert(neighborJoin(p).size == 1, p.toString)
+    // by id (the folded candidate aggregation), by community (the
+    // totals join), by id (the argmax): three, the r15 shape
+    val stream = p.collect {
+      case e: ShuffleExchangeExec if neighborJoin(e).nonEmpty => e
+    }
+    assert(stream.size == 3, s"${stream.size} exchanges of the candidate " +
+      s"stream:\n$p")
+  }
 }

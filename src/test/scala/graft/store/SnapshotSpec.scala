@@ -60,6 +60,37 @@ class SnapshotSpec extends SparkSpec {
       s"root listings $lists, manifest opens $manifests")
   }
 
+  test("a merge and a delete each resolve their parent once: 5 root " +
+      "listings and 4 manifest opens per commit") {
+    val root = countingRoot()
+    (0 until 4).foreach { b =>
+      Versioned.commitAppend((0 until 10).map(i => (b * 10L + i,
+        s"https://host/${b * 10 + i}")).toDF("id", "url"), root,
+        statsCols = Seq("id"))
+    }
+    val rootDir = new org.apache.hadoop.fs.Path(root).toUri.getPath
+      .stripSuffix("/")
+    def counted(commit: => Long): (Int, Int) = {
+      CountingLocalFileSystem.reset()
+      commit
+      (CountingLocalFileSystem.lists.asScala.count(_ == rootDir),
+        CountingLocalFileSystem.opens.asScala
+          .count(_.split('/').last.startsWith("manifest-v")))
+    }
+    val merge = counted(Versioned.commitMerge(
+      Seq((12L, "https://host/12-new")).toDF("id", "url"), root, Seq("id")))
+    val delete = counted(
+      Versioned.commitDelete(spark, root, col("id") === 33L))
+    // per commit: the parent snapshot, stage's schema-DDL and
+    // constraint lookups, commitFiles' CAS and the sidecar pass's
+    // snapshot of the new version list the root; the parent snapshot,
+    // the CAS's parent manifest, the publish check and the sidecar
+    // snapshot open a manifest
+    assert(merge == (5, 4), "merge (root listings, manifest opens)")
+    assert(delete == (5, 4), "delete (root listings, manifest opens)")
+    assert(Versioned.read(spark, root).count() == 39L)
+  }
+
   test("a pruned read returns the full read's columns") {
     val root = freshRoot()
     Versioned.commitAppend((0L until 5L).map(i => (i, s"n$i")).toDF("id",

@@ -257,6 +257,29 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.latestTxnBatch(root, "sinkB").contains(5L))
   }
 
+  test("timestamp travel into vacuumed history fails loudly instead of " +
+      "crashing on a reclaimed manifest") {
+    val root = freshRoot()
+    (1L to 3L).foreach(i =>
+      Versioned.commitAppend(Seq((i, s"r$i")).toDF("k", "s"), root))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def setT(v: Long, t: Long) = fs.setTimes(
+      new org.apache.hadoop.fs.Path(root, s"manifest-v$v.json"), t, -1)
+    setT(1, 1000000L); setT(2, 2000000L); setT(3, 3000000L)
+    Versioned.vacuum(root, keepFrom = 3L)
+    // v1 was the table at this instant, but its manifest is gone
+    intercept[IllegalArgumentException] {
+      Versioned.versionAt(root, 1500000L)
+    }
+    intercept[IllegalArgumentException] {
+      Versioned.readAsOf(spark, root, 2500000L)
+    }
+    assert(Versioned.versionAt(root, 3000000L) == 3L)
+    assert(Versioned.versionAtOrAfter(root, 1500000L).contains(3L))
+    assert(Versioned.versionAtOrAfter(root, 3000001L).isEmpty)
+  }
+
   test("a rewrite composed against the EMPTY table conflict-detects a " +
       "racing first commit (the empty-merge branch's expectedParent)") {
     val root = freshRoot()
@@ -415,7 +438,7 @@ class VersionedSpec extends SparkSpec {
     // bounds pruning: updates keyed inside ONE file's range
     val upd = Seq((150L, -1L), (151L, -2L)).toDF("k", "v")
     val (cands, skipped) =
-      Versioned.pruneMergeScan(upd, root, parent, parentRels, Seq("k"))
+      Versioned.pruneMergeScan(upd, Versioned.snapshot(root, parent), Seq("k"))
     assert(cands.size == 1 && skipped.size == 7,
       s"bounds pruned to ${cands.size} candidates of ${parentRels.size}")
 
@@ -423,8 +446,8 @@ class VersionedSpec extends SparkSpec {
     // domain (bounds admit all 8), only the blooms know the middle
     // files hold neither
     val updSpan = Seq((5L, -3L), (795L, -4L)).toDF("k", "v")
-    val (cands2, _) = Versioned.pruneMergeScan(updSpan, root, parent,
-      parentRels, Seq("k"))
+    val (cands2, _) = Versioned.pruneMergeScan(updSpan,
+      Versioned.snapshot(root, parent), Seq("k"))
     assert(cands2.size == 2,
       s"bloom should exclude the middle files, kept ${cands2.size}")
 
@@ -432,8 +455,8 @@ class VersionedSpec extends SparkSpec {
     val tiny = freshRoot()
     Versioned.commitAppend(Seq((1L, 1L)).toDF("k", "v"), tiny,
       statsCols = Seq("k"))
-    assert(Versioned.pruneMergeScan(upd, tiny, 1L,
-      rels(parent).take(1), Seq("k"))._2.isEmpty)
+    assert(Versioned.pruneMergeScan(upd, Versioned.snapshot(tiny, 1L),
+      Seq("k"))._2.isEmpty)
 
     // end-to-end merge: the two skipped files' entries ride VERBATIM
     // into the new manifest, contents match a full-scan merge
@@ -1017,7 +1040,7 @@ class VersionedSpec extends SparkSpec {
       .map(p => p.substring(p.indexOf("data/")))
     val upd = Seq(("5", "new-5"), ("abc", "new-abc")).toDF("k", "v")
     val (cands, skipped) =
-      Versioned.pruneMergeScan(upd, root, parent, rels, Seq("k"))
+      Versioned.pruneMergeScan(upd, Versioned.snapshot(root, parent), Seq("k"))
     assert(cands.size == 1 && skipped.size == 4,
       s"prefix-key bounds should admit exactly the abc file, " +
         s"got ${cands.size} candidates")
@@ -1105,7 +1128,8 @@ class VersionedSpec extends SparkSpec {
     val upd = Seq(("https://site2.example/page5", "new"),
       ("https://site6.example/page1", "new")).toDF("url", "v")
     val (cands, skipped) =
-      Versioned.pruneMergeScan(upd, root, parent, rels, Seq("url"))
+      Versioned.pruneMergeScan(upd, Versioned.snapshot(root, parent),
+        Seq("url"))
     assert(cands.size < rels.size && skipped.nonEmpty,
       s"URL merge should pre-prune, scanned ${cands.size}/8")
     val vm = Versioned.commitMerge(upd, root, Seq("url"))

@@ -1,11 +1,14 @@
 #!/bin/sh
-# Alternate a solo-query bench between two class trees N times each and
-# print per-run (seconds, calib floor) pairs. Usage:
-#   tools/ab.sh <query[,query...]> <runs> [baseline_classes]
+# Alternate a solo-query bench between two class trees N rounds and
+# print per-run (seconds, calib floor) pairs. Each round runs both
+# sides; odd rounds run A then B, even rounds B then A, so drift within
+# a round does not always land on the same side. Usage:
+#   tools/ab.sh <query[,query...]> <rounds> [baseline_classes]
 # A = baseline classes (default /tmp/classes_base), B = current target.
 Q="$1"; N="${2:-3}"; BASE="${3:-/tmp/classes_base}"
 for i in $(seq 1 "$N"); do
-  for side in A B; do
+  if [ $((i % 2)) -eq 1 ]; then ORDER="A B"; else ORDER="B A"; fi
+  for side in $ORDER; do
     if [ "$side" = A ]; then CP="$BASE"; else CP=/root/repo/target/scala-2.13/classes; fi
     SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
     SPARK_GRAFT_BENCH_ONLY="$Q" \
