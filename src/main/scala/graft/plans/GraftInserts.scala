@@ -230,11 +230,12 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
           else lit(null).cast(f.dataType).as(f.name)
         }: _*)
       }
-    val layout = Versioned.currentLayout(root)
+    // an append defaults to the table's layout itself; an overwrite
+    // names it, or it would land flat
     if (overwrite)
-      Versioned.commitOverwrite(aligned, root, partitionBy = layout)
-    else
-      Versioned.commitAppend(aligned, root, partitionBy = layout)
+      Versioned.commitOverwrite(aligned, root,
+        partitionBy = Versioned.latest(root).layout)
+    else Versioned.commitAppend(aligned, root)
     Nil
   }
 }

@@ -291,13 +291,10 @@ case class GraftDescribeDetailCommand(table: TableRef)
     GraftSqlOut.attr("num_constraints", LongType))
   override def run(session: SparkSession): Seq[Row] = {
     val root = table.root(session)
-    val snap = Versioned.snapshotOf(root, 0L)
-    val statuses = snap.toSeq.flatMap(_.statuses)
-    Seq(Row(root, snap.fold(0L)(_.version), statuses.size.toLong,
-      statuses.map(_.getLen).sum,
-      Versioned.currentLayout(root).mkString(","),
-      snap.fold(0L)(_.dvFiles.size.toLong),
-      Versioned.checkConstraints(root).size.toLong))
+    val s = Versioned.latest(root)
+    Seq(Row(root, s.version, s.statuses.size.toLong,
+      s.statuses.map(_.getLen).sum, s.layout.mkString(","),
+      s.dvFiles.size.toLong, s.constraints.size.toLong))
   }
 }
 

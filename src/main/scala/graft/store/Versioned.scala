@@ -335,9 +335,9 @@ object Versioned {
     versionsOf(names, prefix).foldLeft(0L)(math.max)
 
   /** The snapshot at `version` (latest when 0): ONE listing of the
-    * root yields the highest manifest, schema-DDL state and properties
-    * state, then ONE manifest open. Every read and every rewrite
-    * commit resolves "latest" here and nowhere else. */
+    * root yields the highest manifest and every state and sidecar
+    * version, then ONE manifest open. Every read resolves "latest"
+    * here, every commit through [[latest]], and nowhere else. */
   private[graft] def snapshot(root: String, version: Long = 0L,
                               prior: Option[Snapshot] = None): Snapshot = {
     val s = snapshotOf(root, version, prior)
@@ -355,21 +355,40 @@ object Versioned {
                                 prior: Option[Snapshot] = None)
       : Option[Snapshot] = {
     if (version != 0L && prior.exists(_.version == version)) return prior
+    Some(resolveSnapshot(root, version, prior)).filter(_.version > 0L)
+  }
+
+  /** The latest snapshot, or the empty one (version 0, no entries) of
+    * a table nothing was committed to yet: the parent every commit
+    * resolves once, stages under and publishes on top of. */
+  private[graft] def latest(root: String): Snapshot =
+    resolveSnapshot(root, 0L, None)
+
+  private def resolveSnapshot(root: String, version: Long,
+                              prior: Option[Snapshot]): Snapshot = {
     val (fs, rootPath) = fsRoot(root)
     val names = rootNames(fs, rootPath)
     val v = if (version == 0L) highest(names, "manifest") else version
-    if (version == 0L && v == 0L) None
-    else prior.filter(_.version == v).orElse {
-      require(v > 0 && names.contains(manifestPath(rootPath, v).getName),
+    prior.filter(_.version == v).getOrElse {
+      require(v == 0L || names.contains(manifestPath(rootPath, v).getName),
         s"no committed version $v at $root")
-      Some(Snapshot(root, fs, rootPath, v, readManifest(fs, rootPath, v)._2,
-        schemaDdlAsOf(fs, rootPath, highest(names, SchemaDdlPrefix), v),
-        highest(names, "properties")))
+      val (header, entries) =
+        if (v == 0L) ("", Nil) else readManifest(fs, rootPath, v)
+      def newestUpTo(prefix: String): Long =
+        versionsOf(names, prefix).filter(_ <= v).foldLeft(0L)(math.max)
+      Snapshot(root, fs, rootPath, v, header, entries,
+        ddlVersion = highest(names, SchemaDdlPrefix),
+        propertiesVersion = highest(names, "properties"),
+        constraintsVersion = highest(names, "constraints"),
+        statsVersion = newestUpTo("stats"),
+        bloomVersion = newestUpTo("bloom"))
     }
   }
 
-  /** (writer token, root-relative file list) of manifest v. Pre-r9
-    * manifests carried absolute paths; [[resolve]] accepts both. */
+  /** (header line, root-relative file list) of manifest v. The header
+    * carries the writer token and the txn and op stamps
+    * ([[headerField]]). Pre-r9 manifests carried absolute paths;
+    * [[resolve]] accepts both. */
   private def readManifest(fs: FileSystem, rootPath: Path, v: Long)
       : (String, Seq[String]) = {
     val in = fs.open(manifestPath(rootPath, v))
@@ -378,15 +397,31 @@ object Versioned {
       org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
       new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     } finally in.close()
-    val writer = "\"writer\":\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+    val lines = text.linesIterator.map(_.trim).toList
     // one quoted file path per line between header and footer — no
     // JSON parser dependency needed for a list-of-strings manifest
-    val files = text.linesIterator.map(_.trim).filter(_.startsWith("\""))
+    val files = lines.filter(_.startsWith("\""))
       .filterNot(_.startsWith("\"writer\""))
-      .map(_.stripPrefix("\"").stripSuffix(",").stripSuffix("\"")).toList
-    (writer, files)
+      .map(_.stripPrefix("\"").stripSuffix(",").stripSuffix("\""))
+    (lines.headOption.getOrElse(""), files)
   }
+
+  /** The first line of manifest v, or "" when it was vacuumed. */
+  private def manifestHeader(fs: FileSystem, rootPath: Path,
+                             v: Long): String =
+    try {
+      val in = fs.open(manifestPath(rootPath, v))
+      try String.valueOf(new java.io.BufferedReader(
+        new java.io.InputStreamReader(in,
+          java.nio.charset.StandardCharsets.UTF_8)).readLine())
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => "" }
+
+  /** A quoted field of a manifest header line: "writer", "txn" (the
+    * `appId:batchId` stamp) or "op" (the audit stamp). */
+  private def headerField(header: String, key: String): Option[String] =
+    ("\"" + key + "\":\\s*\"([^\"]+)\"").r.findFirstMatchIn(header)
+      .map(_.group(1))
 
   private[store] def resolve(rootPath: Path, f: String): Path =
     if (f.contains("://") || f.startsWith("/")) new Path(f)
@@ -545,11 +580,9 @@ object Versioned {
                                writer: String, rootPath: Path,
                                v: Long): Boolean =
     exclusiveCreate(fs, tmp, target) &&
-      readManifest(fs, rootPath, v)._1 == writer
+      headerField(manifestHeader(fs, rootPath, v), "writer")
+        .contains(writer)
 
-  /** Stage `df`'s parquet files into a fresh `data/<uuid>/` directory;
-    * returns their root-relative paths. Nothing is visible until
-    * [[commitFiles]] publishes a manifest listing them. */
   // ------------------------------------------------------------------
   // CHECK CONSTRAINTS (Delta's table constraints): named SQL
   // predicates every staged write batch must satisfy before its
@@ -584,10 +617,6 @@ object Versioned {
 
   private def constraintsVersionPath(rootPath: Path, n: Long): Path =
     kvVersionPath(rootPath, "constraints", n)
-
-  private def latestConstraintsVersion(fs: FileSystem,
-                                       rootPath: Path): Long =
-    latestKvVersion(fs, rootPath, "constraints")
 
   /** Table schema of record (`schema.json`, maintained by [[stage]] at
     * every data write): what makes a ZERO-data-file version — a legal
@@ -667,12 +696,12 @@ object Versioned {
   def checkConstraints(root: String): Seq[(String, String)] = {
     val (fs, rootPath) = fsRoot(root)
     constraintsStateAt(fs, rootPath,
-      latestConstraintsVersion(fs, rootPath))
+      latestKvVersion(fs, rootPath, "constraints"))
   }
 
   /** Constraint state as of constraints-version `n` (0 = the legacy
     * unversioned file, or nothing). */
-  private def constraintsStateAt(fs: FileSystem, rootPath: Path,
+  private[store] def constraintsStateAt(fs: FileSystem, rootPath: Path,
                                  n: Long): Seq[(String, String)] =
     kvFileState(fs,
       if (n > 0L) constraintsVersionPath(rootPath, n)
@@ -698,10 +727,11 @@ object Versioned {
   /** Publish a new key→value state through the manifest's exclusive-
     * create primitive: `transform` is re-applied to the FRESHLY-READ
     * state on every collision retry, so concurrent ALTERs compose
-    * instead of losing one entry to a read-modify-write race. */
+    * instead of losing one entry to a read-modify-write race. Returns
+    * the n of the published `<prefix>-v<n>.json`. */
   private def publishKv(root: String, prefix: String,
       readAt: (FileSystem, Path, Long) => Seq[(String, String)],
-      transform: Seq[(String, String)] => Seq[(String, String)]): Unit = {
+      transform: Seq[(String, String)] => Seq[(String, String)]): Long = {
     val (fs, rootPath) = fsRoot(root)
     fs.mkdirs(rootPath)
     var attempt = 0
@@ -721,7 +751,7 @@ object Versioned {
       val tmp = new Path(rootPath,
         s".$prefix-v${n0 + 1L}-${java.util.UUID.randomUUID()}.tmp")
       writeFile(fs, tmp, body)
-      if (exclusiveCreate(fs, tmp, target)) return
+      if (exclusiveCreate(fs, tmp, target)) return n0 + 1L
       // lost the race: re-read the racer's state and re-apply
     }
     throw new IllegalStateException(
@@ -921,8 +951,9 @@ object Versioned {
 
   /** The newest of states 1..`latest` whose `asOf` manifest `v` has
     * reached. */
-  private def schemaDdlAsOf(fs: FileSystem, rootPath: Path, latest: Long,
-                            v: Long): Option[SchemaDdl] =
+  private[store] def schemaDdlAsOf(fs: FileSystem, rootPath: Path,
+                                   latest: Long, v: Long)
+      : Option[SchemaDdl] =
     (latest to 1L by -1L).iterator.map(schemaDdlAtN(fs, rootPath, _))
       .collectFirst { case Some(s) if s.asOf <= v => s }
 
@@ -1009,19 +1040,14 @@ object Versioned {
     * else a baseline derived from the data (merged footers — DDL is
     * rare, the one-time sweep is the price of adopting mapping on an
     * evolved table), else the declared schema of record. */
-  private def ddlBaseline(spark: SparkSession, root: String)
+  private def ddlBaseline(spark: SparkSession, s: Snapshot)
       : org.apache.spark.sql.types.StructType =
-    schemaDdl(root).map(_.schema).getOrElse {
-      val (fs, rootPath) = fsRoot(root)
-      val v = latestVersion(root)
-      val files =
-        if (v == 0L) Nil
-        else splitEntries(readManifest(fs, rootPath, v)._2)._1
-      if (files.nonEmpty)
+    s.writeDdl.map(_.schema).getOrElse {
+      if (s.dataFiles.nonEmpty)
         spark.read.option("mergeSchema", "true")
-          .parquet(files.map(resolve(rootPath, _).toString): _*).schema
-      else tableSchema(root).getOrElse(throw new IllegalStateException(
-        s"$root holds no data and no schema of record - nothing to " +
+          .parquet(s.dataFiles.map(s.path(_).toString): _*).schema
+      else tableSchema(s.root).getOrElse(throw new IllegalStateException(
+        s"${s.root} holds no data and no schema of record - nothing to " +
           "ALTER"))
     }
 
@@ -1033,16 +1059,15 @@ object Versioned {
 
   /** Guards shared by rename/drop: partition columns live in paths
     * and constraint predicates are stored text — both would go stale. */
-  private def requireDdlSafe(spark: SparkSession, root: String,
+  private def requireDdlSafe(spark: SparkSession, s: Snapshot,
                              col: String, op: String): Unit = {
-    val layout = currentLayout(root)
-    require(!layout.contains(col),
-      s"cannot $op partition column $col of $root: its values are " +
+    require(!s.layout.contains(col),
+      s"cannot $op partition column $col of ${s.root}: its values are " +
         "encoded in the table's directory layout - rewrite through " +
         "commitOverwrite with a new partitionBy instead")
-    checkConstraints(root).foreach { case (name, pred) =>
+    s.constraints.foreach { case (name, pred) =>
       require(!referencedColumns(spark, pred).contains(col),
-        s"cannot $op column $col of $root: CHECK constraint $name " +
+        s"cannot $op column $col of ${s.root}: CHECK constraint $name " +
           s"references it ($pred) - drop the constraint first")
     }
   }
@@ -1075,33 +1100,34 @@ object Versioned {
         .withMetadata(f.metadata)
         .putString(PhysicalNameKey, phys).build())
 
+  /** The key→value form of a schema-DDL state, applying from the
+    * version after parent `s`. */
+  private def ddlStateKv(next: SchemaDdl, s: Snapshot)
+      : Seq[(String, String)] =
+    Seq("schema" -> next.schema.json,
+      "asOfManifest" -> (s.version + 1L).toString,
+      "dropped" -> next.dropped.mkString(","))
+
   /** Publish a schema-DDL state via the same CAS the constraints use
     * (concurrent ALTERs compose or fail loudly inside `transform`),
-    * then stamp an EMPTY commit so the change is visible in DESCRIBE
-    * HISTORY, paces streams, and gives time travel a crisp boundary.
-    * `transform` maps the FRESHLY-READ state (None = first DDL) to
-    * the new one. */
-  private def publishSchemaDdl(spark: SparkSession, root: String,
+    * then stamp an EMPTY commit on top of parent `s` so the change is
+    * visible in DESCRIBE HISTORY, paces streams, and gives time travel
+    * a crisp boundary. `transform` maps the FRESHLY-READ state (None =
+    * first DDL) to the new one. */
+  private def publishSchemaDdl(spark: SparkSession, s: Snapshot,
       op: String,
       transform: SchemaDdl => SchemaDdl): Long = {
-    publishKv(root, SchemaDdlPrefix, schemaDdlStateAt, kv => {
-      val prev = parseSchemaDdl(kv).getOrElse(
-        SchemaDdl(ddlBaseline(spark, root), 0L, Nil))
-      val next = transform(prev).copy(asOf = latestVersion(root) + 1L)
+    publishKv(s.root, SchemaDdlPrefix, schemaDdlStateAt, kv => {
+      val next = transform(parseSchemaDdl(kv).getOrElse(
+        SchemaDdl(ddlBaseline(spark, s), 0L, Nil)))
       require(next.schema.fields.nonEmpty,
-        s"schema DDL would leave $root with zero columns")
-      Seq("schema" -> next.schema.json,
-        "asOfManifest" -> next.asOf.toString,
-        "dropped" -> next.dropped.mkString(","))
+        s"schema DDL would leave ${s.root} with zero columns")
+      ddlStateKv(next, s)
     })
-    // the state parses freshly on every read; visible boundary commit
-    val v = commitFiles(root, Nil, appendBase = true, op = op,
-      emptyOk = true)
     // files unchanged: sidecar entries carry by reference (O(1) jobs)
-    // — without this the DDL version would break the stats/bloom
+    // — without them the DDL version would break the stats/bloom
     // lineage and every later probe would admit everything
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s, Nil, op)
   }
 
   /** ALTER TABLE ADD COLUMNS: metadata-only — no file rewrites, old
@@ -1111,7 +1137,7 @@ object Versioned {
                  cols: org.apache.spark.sql.types.StructType): Long = {
     require(cols.fields.nonEmpty, "ADD COLUMNS needs at least one")
     cols.fieldNames.foreach(requireDdlColumnName)
-    publishSchemaDdl(spark, root,
+    publishSchemaDdl(spark, latest(root),
       s"add-columns ${cols.fieldNames.mkString(",")}", prev => {
         val fresh = cols.fields.foldLeft(prev) { (s, f) =>
           require(!s.schema.fieldNames.contains(f.name),
@@ -1131,8 +1157,9 @@ object Versioned {
   def renameColumn(spark: SparkSession, root: String,
                    from: String, to: String): Long = {
     requireDdlColumnName(to)
-    requireDdlSafe(spark, root, from, "rename")
-    publishSchemaDdl(spark, root, s"rename-column $from->$to", prev => {
+    val s = latest(root)
+    requireDdlSafe(spark, s, from, "rename")
+    publishSchemaDdl(spark, s, s"rename-column $from->$to", prev => {
       val i = prev.schema.fieldNames.indexOf(from)
       require(i >= 0, s"no column $from in $root")
       require(!prev.schema.fieldNames.contains(to),
@@ -1160,8 +1187,9 @@ object Versioned {
     * never resurrect. */
   def dropColumn(spark: SparkSession, root: String,
                  name: String): Long = {
-    requireDdlSafe(spark, root, name, "drop")
-    publishSchemaDdl(spark, root, s"drop-column $name", prev => {
+    val s = latest(root)
+    requireDdlSafe(spark, s, name, "drop")
+    publishSchemaDdl(spark, s, s"drop-column $name", prev => {
       val i = prev.schema.fieldNames.indexOf(name)
       require(i >= 0, s"no column $name in $root")
       require(prev.schema.fields.length > 1,
@@ -1207,36 +1235,37 @@ object Versioned {
     if (staged.isEmpty) None
     else Some(dataScan(spark, rootPath, staged, None))
 
-  /** Extend a live schema-DDL state with columns this write
-    * introduces (schema evolution under mapping): each new logical
-    * name gets a collision-free physical name, applying from the
-    * version this write is about to commit. Returns the state the
-    * write stages under (None = table has no DDL state — the legacy
-    * path, untranslated). */
-  private def ddlForWrite(root: String,
-      dfSchema: org.apache.spark.sql.types.StructType)
-      : Option[SchemaDdl] = {
-    val s0 = schemaDdl(root)
-    val newCols = s0.toSeq.flatMap(s => dfSchema.fields
-      .filterNot(f => s.schema.fieldNames.contains(f.name)))
-    if (s0.isEmpty || newCols.isEmpty) return s0
+  /** Parent `s` as a write of `dfSchema` stages under it: `s` itself,
+    * or — when the write introduces columns a live schema-DDL state
+    * lacks (schema evolution under mapping) — `s` with the state that
+    * extends it, published here: each new logical name gets a
+    * collision-free physical name, applying from the version this
+    * write is about to commit. Tables with no DDL state take the
+    * legacy path, untranslated. */
+  private def forWrite(s: Snapshot,
+      dfSchema: org.apache.spark.sql.types.StructType): Snapshot = {
+    val newCols = s.writeDdl.toSeq.flatMap(st => dfSchema.fields
+      .filterNot(f => st.schema.fieldNames.contains(f.name)))
+    if (newCols.isEmpty) return s
     newCols.foreach(f => requireDdlColumnName(f.name))
-    publishKv(root, SchemaDdlPrefix, schemaDdlStateAt, kv => {
-      val prev = parseSchemaDdl(kv).getOrElse(s0.get)
-      val next = newCols.foldLeft(prev) { (st, f) =>
+    val n = publishKv(s.root, SchemaDdlPrefix, schemaDdlStateAt, kv => {
+      val prev = parseSchemaDdl(kv).getOrElse(s.writeDdl.get)
+      ddlStateKv(newCols.foldLeft(prev) { (st, f) =>
         if (st.schema.fieldNames.contains(f.name)) st
         else st.copy(schema = org.apache.spark.sql.types.StructType(
           st.schema.fields :+ withPhysical(f.copy(nullable = true),
             freshPhysical(f.name, st))))
-      }.copy(asOf = latestVersion(root) + 1L)
-      Seq("schema" -> next.schema.json,
-        "asOfManifest" -> next.asOf.toString,
-        "dropped" -> next.dropped.mkString(","))
+      }, s)
     })
-    schemaDdl(root)
+    s.copy(ddlVersion = n)
   }
 
-  private[store] def stage(df: DataFrame, root: String,
+  /** Stage `df`'s parquet files into a fresh `data/<uuid>/` directory
+    * under the `parent` snapshot's newest schema-DDL state
+    * ([[forWrite]]) and CHECK constraints; returns their root-relative
+    * paths. Nothing is visible until [[publish]] publishes a manifest
+    * listing them. */
+  private[store] def stage(df: DataFrame, parent: Snapshot,
                            partitionBy: Seq[String] = Nil,
                            maxRecordsPerFile: Long = 0L)
       : Seq[String] = {
@@ -1244,9 +1273,10 @@ object Versioned {
     // agree with every file written before the renames); partition
     // columns are refused from rename/drop, so `partitionBy` spells
     // the same in both spaces
-    val ddl = ddlForWrite(root, df.schema)
+    val ddl = forWrite(parent, df.schema).writeDdl
     val physDf = ddl.map(toPhysicalFrame(df, _)).getOrElse(df)
-    val staged = stageUnchecked(physDf, root, partitionBy,
+    val (fs, rootPath) = (parent.fs, parent.rootPath)
+    val staged = stageUnchecked(physDf, fs, rootPath, partitionBy,
       maxRecordsPerFile)
     // validate constraints on the bytes as written; a violating batch
     // deletes its own staging dir so nothing leaks (the table never
@@ -1255,8 +1285,7 @@ object Versioned {
     // BUILDING the staged relation: spark.read.parquet here costs a
     // footer read + file-index listing per commit for an aggregate
     // that would validate zero rules.
-    val (fs, rootPath) = fsRoot(root)
-    val cons = checkConstraints(root)
+    val cons = parent.constraints
     if (cons.nonEmpty) {
       stagedScan(df.sparkSession, rootPath, staged).foreach { scan =>
         val logicalScan = ddl.map(toLogicalFrame(scan, _)).getOrElse(scan)
@@ -1281,11 +1310,10 @@ object Versioned {
     staged
   }
 
-  private def stageUnchecked(df: DataFrame, root: String,
-                             partitionBy: Seq[String],
-                             maxRecordsPerFile: Long = 0L)
+  private def stageUnchecked(df: DataFrame, fs: FileSystem,
+                             rootPath: Path, partitionBy: Seq[String],
+                             maxRecordsPerFile: Long)
       : Seq[String] = {
-    val (fs, rootPath) = fsRoot(root)
     fs.mkdirs(rootPath)
     // target-file-size ergonomics: Spark's own per-write splitter —
     // the writer keeps files bounded so OPTIMIZE is maintenance, not
@@ -1404,95 +1432,83 @@ object Versioned {
     * partition-probe into a full-manifest admit. Mixed or absent
     * layouts detect as Nil (plain staging, exactly the old
     * behavior). */
-  private def detectPartitionBy(files: Seq[String]): Seq[String] = {
+  private[store] def detectPartitionBy(files: Seq[String]): Seq[String] = {
     if (files.isEmpty) return Nil
     val sets = files.map(f => partitionKv(f).map(_._1))
     if (sets.head.nonEmpty && sets.forall(_ == sets.head)) sets.head
     else Nil
   }
 
-  /** [[detectPartitionBy]] over the LATEST version's data files — the
-    * layout an append that cannot name one (SQL INSERT INTO) should
-    * land under. Nil on an empty table or a mixed layout. */
-  private[graft] def currentLayout(root: String): Seq[String] =
-    snapshotOf(root, 0L).map(s => detectPartitionBy(s.dataFiles))
-      .getOrElse(Nil)
-
   /** Latest transaction batch id committed at `root` by `appId`, or
     * None. Scans manifest headers newest-first — driver-side and
     * manifest-sized like every metadata op here. */
-  def latestTxnBatch(root: String, appId: String): Option[Long] = {
-    val (fs, rootPath) = fsRoot(root)
-    val re = ("\"txn\":\\s*\"" + java.util.regex.Pattern.quote(appId) +
-      ":(\\d+)\"").r
-    (latestVersion(root) to 1L by -1L).iterator.flatMap { v =>
+  def latestTxnBatch(root: String, appId: String): Option[Long] =
+    snapshotOf(root, 0L).flatMap(txnBatch(_, appId))
+
+  /** [[latestTxnBatch]] at or below snapshot `s`'s version: its own
+    * header first, then older headers newest-first. */
+  private def txnBatch(s: Snapshot, appId: String): Option[Long] =
+    (s.version to 1L by -1L).iterator.flatMap { v =>
       // vacuum removes retired manifests below keepFrom: a version gap
       // means "no surviving stamp there", not an error — skip it so a
       // txn lookup over vacuumed history terminates with None instead
       // of crashing on the first reclaimed manifest
-      val header = try {
-        val in = fs.open(manifestPath(rootPath, v))
-        try new java.io.BufferedReader(
-          new java.io.InputStreamReader(in,
-            java.nio.charset.StandardCharsets.UTF_8)).readLine()
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => null }
-      re.findFirstMatchIn(String.valueOf(header)).map(_.group(1).toLong)
+      val header =
+        if (v == s.version) s.header else manifestHeader(s.fs, s.rootPath, v)
+      headerField(header, "txn").flatMap { t =>
+        val i = t.lastIndexOf(':')
+        if (i > 0 && t.substring(0, i) == appId) t.substring(i + 1).toLongOption
+        else None
+      }
     }.nextOption()
-  }
 
-  /** Metadata-only commit step: publish `added` (root-relative paths)
-    * as the next version, retrying on version collisions. `beforePublish`
-    * is a test seam fired between manifest composition and publication —
-    * the window a racing writer exploits. `txn` stamps the manifest
-    * with an (appId, batchId) transaction for idempotent sinks.
-    * `expectedParent` turns collision-retry into CONFLICT DETECTION for
-    * rewrite commits (merge/delete): their file list was composed
-    * against a specific snapshot, so retrying on top of a different
-    * parent would silently drop the concurrent commit's rows — fail
-    * loudly instead and let the caller re-run against the new snapshot
-    * (Delta/Iceberg raise the same ConcurrentModification for
-    * conflicting rewrites; blind appends stay freely retryable). */
-  private[store] def commitFiles(root: String, added: Seq[String],
-                                 appendBase: Boolean,
-                                 beforePublish: Long => Unit = _ => (),
-                                 txn: Option[(String, Long)] = None,
-                                 expectedParent: Option[Long] = None,
-                                 txnDedupe: Boolean = true,
-                                 op: String = "",
-                                 emptyOk: Boolean = false)
-      : Long = {
-    // rewrite commits (emptyOk) may legitimately compose ZERO files —
-    // a delete that removes every row — and the schema of record keeps
-    // that version readable; blind appends of nothing stay refused
-    require(added.nonEmpty || emptyOk,
-      s"refusing to commit an empty batch to $root: the staged write " +
-        "produced no parquet files and a version listing no files is " +
-        "unreadable (filter empty micro-batches out before committing)")
-    val (fs, rootPath) = fsRoot(root)
+  /** How a commit's manifest composes with its parent snapshot. */
+  private[store] sealed trait Compose
+  /** The parent's entries plus the commit's. A lost publish race
+    * recomposes on top of the racer (blind appends never conflict);
+    * a `txn` stamp makes the commit exactly-once per (appId, batch). */
+  private[store] case object Append extends Compose
+  /** Exactly the commit's entries, republished on top of a racer: a
+    * blind overwrite. A `txn` stamp is recorded, never deduplicated. */
+  private[store] case object Replace extends Compose
+  /** Exactly the commit's entries, planned against this parent: a
+    * racer raises ConcurrentModificationException (Delta/Iceberg raise
+    * the same for conflicting rewrites), since retrying on top of it
+    * would silently drop its rows. May list no file at all — a delete
+    * that removes every row; the schema of record keeps that version
+    * readable. */
+  private[store] case object Rewrite extends Compose
+
+  /** Has `txn`'s (appId, batch) already landed at or below `s`? */
+  private def txnDone(s: Snapshot, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, batch) => txnBatch(s, appId).exists(_ >= batch) }
+
+  /** The one publish step every commit ends in: compose the manifest
+    * of `added` (root-relative or absolute entries) on top of `parent`
+    * as `compose` says, publish it as the next version through the
+    * create-exclusive CAS, then maintain the stats/bloom sidecars of
+    * the new version from the entries just composed (`statsCols` /
+    * `bloomCols` start or switch a lineage, empty continues the
+    * parent's). A lost CAS resolves a fresh parent — the commit's only
+    * second listing — and retries up to 20 times (a [[Rewrite]]
+    * raises instead). An [[Append]]'s txn dedupe re-runs on every
+    * fresh parent (the caller checked its own): a racing twin (a
+    * restarted sink re-delivering the batch) may have committed it
+    * meanwhile. `beforePublish` is a test seam fired between
+    * composition and publication, the window a racing writer exploits.
+    * Returns the published version, or the fresh parent's when the txn
+    * had landed there. */
+  private[store] def publish(spark: => SparkSession, parent: Snapshot,
+      added: Seq[String], op: String, compose: Compose = Append,
+      txn: Option[(String, Long)] = None,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomBits: Int = 65536,
+      beforePublish: Long => Unit = _ => ()): Long = {
     val writer = java.util.UUID.randomUUID().toString
+    var p = parent
     var attempt = 0
     while (attempt < 20) {
       attempt += 1
-      // a racing twin (a restarted sink re-delivering this batch) may
-      // have committed our transaction while we retried — re-check
-      // every attempt, not just at the API entry
-      val alreadyCommitted = txnDedupe && txn.exists {
-        case (appId, batchId) =>
-          latestTxnBatch(root, appId).exists(_ >= batchId) }
-      if (alreadyCommitted) return latestVersion(root)
-      val parent = latestVersion(root)
-      expectedParent.filter(_ != parent).foreach { p =>
-        throw new java.util.ConcurrentModificationException(
-          s"rewrite commit to $root was composed against version $p " +
-            s"but the table is now at $parent: a concurrent commit " +
-            "landed during the copy-on-write rewrite - re-run the " +
-            "merge/delete against the new snapshot")
-      }
-      val parentEntries =
-        if (parent == 0L) Nil
-        else readManifest(fs, rootPath, parent)._2
-      val base = if (appendBase) parentEntries else Nil
       // CDC sidecars belong to exactly ONE version — the commit that
       // wrote them (the feed derives a version's changes from its
       // NEWLY-ADDED cdc entries). Drop any parent-carried cdc entry
@@ -1500,10 +1516,10 @@ object Versioned {
       // change files; freshly staged cdc entries (absent from the
       // parent) ride through. Retired cdc files become vacuumable the
       // moment their version does.
-      val parentCdc = parentEntries.filter(isCdcEntry).toSet
-      val composed = (base ++ added)
+      val parentCdc = p.entries.filter(isCdcEntry).toSet
+      val composed = ((if (compose == Append) p.entries else Nil) ++ added)
         .filterNot(e => isCdcEntry(e) && parentCdc(e))
-      val v = parent + 1
+      val v = p.version + 1
       val txnField = txn
         .map { case (a, b) => s""" "txn": "$a:$b",""" }.getOrElse("") +
         // audit stamp, read back by [[history]] (DESCRIBE HISTORY):
@@ -1513,18 +1529,37 @@ object Versioned {
         s""""files": [""" ::
         composed.map("\"" + _ + "\"" + ",").toList).mkString("\n")
           .stripSuffix(",") + "\n]}"
-      val tmp = new Path(rootPath, s".manifest-v$v-$writer.tmp")
-      writeFile(fs, tmp, body)
+      val tmp = new Path(p.rootPath, s".manifest-v$v-$writer.tmp")
+      writeFile(p.fs, tmp, body)
       beforePublish(v)
-      if (publishExclusive(fs, tmp, manifestPath(rootPath, v), writer,
-          rootPath, v))
+      if (publishExclusive(p.fs, tmp, manifestPath(p.rootPath, v), writer,
+          p.rootPath, v)) {
+        maintainSidecars(spark, p, v, splitEntries(composed)._1,
+          statsCols, bloomCols, bloomBits)
         return v
+      }
+      if (compose == Rewrite)
+        throw new java.util.ConcurrentModificationException(
+          s"rewrite commit to ${p.root} was composed against version " +
+            s"${p.version} but a concurrent commit published version $v " +
+            "first - re-run the merge/delete against the new snapshot")
       // lost the race: another writer published this version first —
       // recompose on top of THEIR manifest and try the next number
+      p = latest(p.root)
+      if (compose == Append && txnDone(p, txn)) return p.version
     }
     throw new IllegalStateException(
-      s"gave up committing to $root after 20 version-collision retries")
+      s"gave up committing to ${parent.root} after 20 version-collision " +
+        "retries")
   }
+
+  /** Refuse a data write that staged no parquet file: a blind append
+    * or overwrite of nothing is a caller bug, not a commit. */
+  private def requireFiles(root: String, added: Seq[String]): Unit =
+    require(added.nonEmpty,
+      s"refusing to commit an empty batch to $root: the staged write " +
+        "produced no parquet files and a version listing no files is " +
+        "unreadable (filter empty micro-batches out before committing)")
 
   /** Adopt an EXISTING plain-parquet directory as a graft table
     * (Delta's CONVERT TO DELTA role): version 1's manifest lists the
@@ -1539,8 +1574,9 @@ object Versioned {
     * would silently drop those columns. Re-land such data through a
     * partitioned [[commitAppend]] instead. */
   def convertParquet(spark: SparkSession, root: String): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    require(latestVersion(root) == 0L,
+    val s = latest(root)
+    val (fs, rootPath) = (s.fs, s.rootPath)
+    require(s.version == 0L,
       s"$root is already a graft table (convert adopts plain parquet)")
     require(fs.exists(rootPath), s"$root does not exist")
     val rootUri = fs.makeQualified(rootPath).toString
@@ -1563,8 +1599,29 @@ object Versioned {
     try writeTableSchema(fs, rootPath,
       FastScan.footerSchema(spark, fs, resolve(rootPath, entries.head)))
     catch { case scala.util.control.NonFatal(_) => () }
-    commitFiles(root, entries, appendBase = false,
-      expectedParent = Some(0L), op = "convert")
+    publish(spark, s, entries, "convert", Rewrite)
+  }
+
+  /** The one body of append, txn-append and overwrite: resolve the
+    * parent once, stage `df` under it and publish. An append that
+    * names no layout lands under the table's own: partition columns
+    * behave as table metadata (Delta's semantics), so a plain append
+    * can never silently flatten a partitioned table and cost every
+    * later prober its path-level skip. */
+  private def write(df: DataFrame, root: String, compose: Compose,
+      op: String, partitionBy: Seq[String], maxRecordsPerFile: Long,
+      txn: Option[(String, Long)], statsCols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Int): Long = {
+    val parent = latest(root)
+    // known duplicate: skip even the data write
+    if (compose == Append && txnDone(parent, txn)) return parent.version
+    val s = forWrite(parent, df.schema)
+    val layout =
+      if (partitionBy.isEmpty && compose == Append) s.layout else partitionBy
+    val staged = stage(df, s, layout, maxRecordsPerFile)
+    requireFiles(root, staged)
+    publish(df.sparkSession, s, staged, op, compose, txn, statsCols,
+      bloomCols, bloomBits)
   }
 
   /** Append-commit `df` as the next version; returns the new version
@@ -1576,19 +1633,9 @@ object Versioned {
                    bloomCols: Seq[String] = Nil,
                    bloomBits: Int = 65536,
                    partitionBy: Seq[String] = Nil,
-                   maxRecordsPerFile: Long = 0L): Long = {
-    // an append that names no layout lands under the table's own:
-    // partition columns behave as table metadata (Delta's semantics),
-    // so a plain append can never silently flatten a partitioned
-    // table and cost every later prober its path-level skip
-    val layout =
-      if (partitionBy.nonEmpty) partitionBy else currentLayout(root)
-    val v = commitFiles(root,
-      stage(df, root, layout, maxRecordsPerFile),
-      appendBase = true, op = "append")
-    maintainSidecars(df.sparkSession, root, v, statsCols, bloomCols, bloomBits)
-    v
-  }
+                   maxRecordsPerFile: Long = 0L): Long =
+    write(df, root, Append, "append", partitionBy, maxRecordsPerFile,
+      None, statsCols, bloomCols, bloomBits)
 
   /** Idempotent append for EXACTLY-ONCE streaming sinks: the manifest
     * records the (appId, batchId) transaction, and a commit whose
@@ -1604,20 +1651,9 @@ object Versioned {
     * re-deliveries of the same batch commit it exactly once too. */
   def commitAppendTxn(df: DataFrame, root: String, appId: String,
                       batchId: Long, statsCols: Seq[String] = Nil,
-                      partitionBy: Seq[String] = Nil): Long = {
-    if (latestTxnBatch(root, appId).exists(_ >= batchId))
-      latestVersion(root) // known duplicate: skip even the data write
-    else {
-      // same layout-as-table-metadata default as [[commitAppend]]
-      val layout =
-        if (partitionBy.nonEmpty) partitionBy else currentLayout(root)
-      val v = commitFiles(root, stage(df, root, layout),
-        appendBase = true,
-        txn = Some((appId, batchId)), op = "txn-append")
-      maintainSidecars(df.sparkSession, root, v, statsCols, Nil, 0)
-      v
-    }
-  }
+                      partitionBy: Seq[String] = Nil): Long =
+    write(df, root, Append, "txn-append", partitionBy, 0L,
+      Some((appId, batchId)), statsCols, Nil, 65536)
 
   /** Overwrite-commit: the new version's manifest lists ONLY this
     * batch's files — the compaction / full-rewrite commit. Older
@@ -1633,26 +1669,23 @@ object Versioned {
                       bloomCols: Seq[String] = Nil,
                       bloomBits: Int = 65536,
                       partitionBy: Seq[String] = Nil,
-                      maxRecordsPerFile: Long = 0L): Long = {
-    val v = commitFiles(root,
-      stage(df, root, partitionBy, maxRecordsPerFile),
-      appendBase = false, txn = txn, txnDedupe = false, op = "overwrite")
-    maintainSidecars(df.sparkSession, root, v, statsCols, bloomCols, bloomBits)
-    v
-  }
+                      maxRecordsPerFile: Long = 0L): Long =
+    write(df, root, Replace, "overwrite", partitionBy, maxRecordsPerFile,
+      txn, statsCols, bloomCols, bloomBits)
 
-  /** The parent every rewrite commit plans against: the latest
-    * [[Snapshot]] (one root listing, one manifest open). Its version
-    * is the commit's `expectedParent`; its entries, tombstones,
-    * properties and schema-DDL state are everything the commit plans
-    * from. The DDL state is the one in force AT the parent, the rule
-    * every read uses: it differs from the newest published state only
-    * while a DDL op's boundary manifest has not landed yet, and a
-    * rewrite racing that boundary commit fails its parent check. */
+  /** The parent every rewrite commit of a committed table plans
+    * against and publishes on as a [[Rewrite]]: the [[latest]]
+    * snapshot (one root listing, one manifest open). Its entries,
+    * tombstones, properties and schema-DDL state are everything the
+    * commit plans from. Planning reads the DDL state in force AT the
+    * parent, the rule every read uses; staging writes under the newest
+    * published one ([[stage]]). The two differ only while a DDL op's
+    * boundary manifest has not landed yet, and a rewrite racing that
+    * boundary commit loses its publish race. */
   private def rewriteParent(root: String): Snapshot = {
-    val s = snapshotOf(root, 0L)
-    require(s.nonEmpty, s"no committed version at $root")
-    s.get
+    val s = latest(root)
+    require(s.version > 0L, s"no committed version at $root")
+    s
   }
 
   /** A physical-space frame of `s`'s data files projected to `s`'s
@@ -2010,11 +2043,9 @@ object Versioned {
                   keys: Seq[String], cdc: Boolean = false): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
     val spark = updates.sparkSession
-    val (fs, rootPath) = fsRoot(root)
-    val parent = snapshotOf(root, 0L)
-    val ddl = parent.flatMap(_.ddl)
+    val s = latest(root)
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || parent.fold(cdfEnabled(root))(_.cdfEnabled)
+    val cdcOn = cdc || s.cdfEnabled
     import org.apache.spark.sql.functions.{col, lit}
     // cdc=true (Delta's delta.enableChangeDataFeed role): stage the
     // commit's EXACT row changes as a cdc/<uuid>/ sidecar — matched
@@ -2027,20 +2058,18 @@ object Versioned {
       if (!cdcOn) Nil
       else {
         val ins = updates.withColumn("_change_type", lit("insert"))
-        stageCdc(fs, rootPath, deletes
+        stageCdc(s.fs, s.rootPath, deletes
           .map(_.withColumn("_change_type", lit("delete"))
-            .unionByName(ins)).getOrElse(ins), ddl)
+            .unionByName(ins)).getOrElse(ins), s.ddl)
       }
-    if (parent.isEmpty)
+    if (s.version == 0L)
       // merging into an empty table is a plain insert — but STILL a
       // rewrite commit composed against a specific snapshot (the empty
       // one), so it conflict-detects like every other merge: a racing
       // first append landing between the snapshot and publish raises
       // instead of being silently overwritten by this manifest
-      return commitFiles(root,
-        stage(updates, root) ++ cdcOf(None), appendBase = false,
-        expectedParent = Some(0L), op = "merge")
-    val s = parent.get
+      return publish(spark, s, stage(updates, s) ++ cdcOf(None), "merge",
+        Rewrite)
     val updKeys = updates.select(keys.map(col): _*).distinct()
     requireNoDv(s.dvFiles, root, "MERGE")
     // sidecar pre-pruning: only files whose stats/bloom metadata admits
@@ -2052,20 +2081,16 @@ object Versioned {
       else touchedFiles(spark, s, candidates,
         _.join(updKeys, keys, "left_semi"))
     val untouched = skipped ++ unmatchedScanned
-    val layout = detectPartitionBy(s.dataFiles)
     val (staged, cdcStaged) =
       if (touched.isEmpty)
-        (stage(updates, root, layout), cdcOf(None)) // pure insert
+        (stage(updates, s, s.layout), cdcOf(None)) // pure insert
       else {
         val touchedScan = logical(spark, s, touched)
         val survivors = touchedScan.join(updKeys, keys, "left_anti")
-        (stage(survivors.unionByName(updates), root, layout),
+        (stage(survivors.unionByName(updates), s, s.layout),
           cdcOf(Some(touchedScan.join(updKeys, keys, "left_semi"))))
       }
-    val v = commitFiles(root, untouched ++ staged ++ cdcStaged,
-      appendBase = false, expectedParent = Some(s.version), op = "merge")
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s, untouched ++ staged ++ cdcStaged, "merge", Rewrite)
   }
 
   /** One WHEN clause of a general [[commitMergeConditional]] MERGE.
@@ -2124,18 +2149,15 @@ object Versioned {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "merge needs at least one clause")
     val spark = source.sparkSession
-    val (fs, rootPath) = fsRoot(root)
-    val snap = snapshotOf(root, 0L)
-    val parent = snap.fold(0L)(_.version)
-    val ddl = snap.flatMap(_.ddl)
+    val s = latest(root)
     // the table-level CDF property turns cdc on for every rewrite
-    val cdcOn = cdc || snap.fold(cdfEnabled(root))(_.cdfEnabled)
-    val parentFiles = snap.fold(Seq.empty[String])(_.dataFiles)
-    requireNoDv(snap.fold(Seq.empty[String])(_.dvFiles), root, "MERGE")
+    val cdcOn = cdc || s.cdfEnabled
+    val parentFiles = s.dataFiles
+    requireNoDv(s.dvFiles, root, "MERGE")
 
     val fields: Seq[org.apache.spark.sql.types.StructField] =
-      ddl.map(_.schema.fields.toSeq).getOrElse {
-        if (parentFiles.nonEmpty) snap.get.schema(spark).fields.toSeq
+      s.ddl.map(_.schema.fields.toSeq).getOrElse {
+        if (parentFiles.nonEmpty) s.schema(spark).fields.toSeq
         else tableSchema(root).map(_.fields.toSeq).getOrElse(
           // table birth by merge: the insert clauses define the shape
           source.schema.fields.toSeq)
@@ -2184,17 +2206,15 @@ object Versioned {
       val out = sPref.filter(keep).select(fields.map(f =>
         valueOf(notMatched, f, lit(null).cast(f.dataType))
           .as(f.name)): _*)
-      val staged = stage(out, root)
-      if (staged.isEmpty) return parent
-      return commitFiles(root, staged, appendBase = true,
-        expectedParent = Some(parent), op = "merge")
+      val staged = stage(out, s)
+      if (staged.isEmpty) return s.version
+      return publish(spark, s, staged, "merge", Rewrite)
     }
 
     // candidate selection: with NOT MATCHED BY SOURCE every target row
     // is potentially affected (unmatched rows live in files the key
     // probes would skip), so the rewrite is necessarily full-table;
     // otherwise prune exactly like the canonical upsert
-    val s = snap.get // data files exist, so a parent does
     val updKeys = source.select(keys.map(col): _*).distinct()
     val (touched, untouched) =
       if (notMatchedBySource.nonEmpty) (parentFiles, Seq.empty[String])
@@ -2208,7 +2228,7 @@ object Versioned {
       }
 
     // nothing matched and nothing to insert: metadata no-op
-    if (touched.isEmpty && notMatched.isEmpty) return parent
+    if (touched.isEmpty && notMatched.isEmpty) return s.version
 
     val touchedScan =
       if (touched.isEmpty) None else Some(logical(spark, s, touched))
@@ -2289,18 +2309,14 @@ object Versioned {
               .withColumn("_change_type", lit("delete"))
             val ins = changed.filter(keep).select(outCols: _*)
               .withColumn("_change_type", lit("insert"))
-            stageCdc(fs, rootPath, dels.unionByName(ins), ddl)
+            stageCdc(s.fs, s.rootPath, dels.unionByName(ins), s.ddl)
           }
         (joined.filter(keep).select(outCols: _*), cdcFiles)
     }
 
-    val v = commitFiles(root,
-      untouched ++ stage(result, root, detectPartitionBy(parentFiles))
-        ++ cdcStaged,
-      appendBase = false, expectedParent = Some(parent), op = "merge",
-      emptyOk = true)
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s,
+      untouched ++ stage(result, s, s.layout) ++ cdcStaged, "merge",
+      Rewrite)
   }
 
   /** Row-level DELETE as a copy-on-write commit: rows matching
@@ -2341,15 +2357,9 @@ object Versioned {
       if (!cdcOn) Nil
       else stageCdc(s.fs, s.rootPath, touchedScan.filter(matched)
         .withColumn("_change_type", lit("delete")), s.ddl)
-    val v = commitFiles(root,
-      untouched ++
-        stage(touchedScan.filter(not(matched)), root,
-          detectPartitionBy(s.dataFiles)) ++
-        cdcStaged,
-      appendBase = false, expectedParent = Some(s.version),
-      op = "delete", emptyOk = true)
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s,
+      untouched ++ stage(touchedScan.filter(not(matched)), s, s.layout) ++
+        cdcStaged, "delete", Rewrite)
   }
 
   /** Copy-on-write UPDATE (SQL `UPDATE t SET c = e WHERE p`): rewrite
@@ -2410,14 +2420,9 @@ object Versioned {
           .withColumn("_change_type", lit("delete"))
           .unionByName(rewritten.filter(col(flag)).drop(flag)
             .withColumn("_change_type", lit("insert"))), s.ddl)
-    val v = commitFiles(root,
-      untouched ++
-        stage(rewritten.drop(flag), root,
-          detectPartitionBy(s.dataFiles)) ++ cdcStaged,
-      appendBase = false, expectedParent = Some(s.version),
-      op = "update")
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s,
+      untouched ++ stage(rewritten.drop(flag), s, s.layout) ++ cdcStaged,
+      "update", Rewrite)
   }
 
   /** Atomic predicate replacement (Delta's `replaceWhere` — THE
@@ -2444,21 +2449,19 @@ object Versioned {
       bloomCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val spark = df.sparkSession
-    val s = rewriteParent(root)
+    val s = forWrite(rewriteParent(root), df.schema)
     requireNoDv(s.dvFiles, root, "replaceWhere")
     // the table-level CDF property turns cdc on for every rewrite
     val cdcOn = cdc || s.cdfEnabled
     // the table's own layout wins when the caller didn't name one, so
     // a region replacement never flattens a partitioned table
-    val layout =
-      if (partitionBy.nonEmpty) partitionBy
-      else detectPartitionBy(s.dataFiles)
+    val layout = if (partitionBy.nonEmpty) partitionBy else s.layout
     // stage the replacement FIRST, then validate on the bytes as
     // written — the frame is computed exactly once, so the rows
     // checked against the region predicate (and the CHECK
     // constraints, inside stage) are the rows being committed even
     // for a non-deterministic input
-    val newStaged = stage(df, root, layout)
+    val newStaged = stage(df, s, layout)
     val newScan = stagedScan(spark, s.rootPath, newStaged)
       .map(toLogical(s, _))
     newScan.map(_.filter(not(coalesce(predicate, lit(false)))).count())
@@ -2481,7 +2484,7 @@ object Versioned {
     val touchedScan =
       if (touched.isEmpty) None else Some(logical(spark, s, touched))
     val survivorsStaged = touchedScan
-      .map(t => stage(t.filter(not(matched)), root, layout)).getOrElse(Nil)
+      .map(t => stage(t.filter(not(matched)), s, layout)).getOrElse(Nil)
     val cdcStaged =
       if (!cdcOn) Nil
       else {
@@ -2494,12 +2497,10 @@ object Versioned {
           n.withColumn("_change_type", lit("insert")), s.ddl))
           .getOrElse(Nil)
       }
-    val v = commitFiles(root,
+    publish(spark, s,
       untouched ++ survivorsStaged ++ newStaged ++ cdcStaged,
-      appendBase = false, expectedParent = Some(s.version),
-      op = "replace-where", emptyOk = true)
-    maintainSidecars(spark, root, v, statsCols, bloomCols, 65536)
-    v
+      "replace-where", Rewrite, statsCols = statsCols,
+      bloomCols = bloomCols)
   }
 
   /** Absolute data-file paths of the snapshot at `version` (latest
@@ -2537,8 +2538,9 @@ object Versioned {
     * version (unlike [[commitAppendTxn]]'s exactly-once skip). */
   def commitStagedDir(root: String, stageDir: String,
                       txn: Option[(String, Long)] = None): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val prefix = rootPath.toString + "/"
+    val s = latest(root)
+    val fs = s.fs
+    val prefix = s.rootPath.toString + "/"
     def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap { st =>
       if (st.isDirectory) walk(st.getPath)
       else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
@@ -2546,8 +2548,8 @@ object Versioned {
     }
     val rel = walk(fs.makeQualified(new Path(stageDir)))
       .map(p => fs.makeQualified(p).toString.stripPrefix(prefix)).sorted
-    commitFiles(root, rel, appendBase = false, txn = txn,
-      txnDedupe = false, op = "staged-overwrite")
+    requireFiles(root, rel)
+    publish(SparkSession.active, s, rel, "staged-overwrite", Replace, txn)
   }
 
   /** Read the snapshot at `version` (latest when 0) — exactly the
@@ -2733,21 +2735,20 @@ object Versioned {
   private def statsPath(rootPath: Path, v: Long): Path =
     new Path(rootPath, s"stats-v$v.json")
 
-  /** Newest version ≤ `from` whose sidecar (per `pathOf`) exists, or 0.
-    * Sidecars are optional metadata written AFTER the manifest publish,
-    * so a crash (or a concurrent writer's late sidecar) can leave one
-    * version without one; continuing the lineage from the newest
-    * EXISTING sidecar means that gap degrades pruning for that one
-    * version's files only — not for every version after it. The
-    * lookback is BOUNDED (each crash window loses at most one version,
-    * so a handful covers any realistic pile-up): an unbounded scan
-    * would cost O(versions) exists() calls per commit on stores that
-    * never enabled the sidecar — quadratic FS metadata traffic over a
-    * streaming sink's lifetime for nothing. */
-  private def newestSidecarVersion(fs: FileSystem, from: Long,
-                                   pathOf: Long => Path): Long =
-    (from to math.max(1L, from - 7L) by -1L)
-      .find(x => fs.exists(pathOf(x))).getOrElse(0L)
+  /** The sidecar version a commit on top of parent `p` continues its
+    * lineage from: `newest` (the newest sidecar at or below `p`'s
+    * version that `p`'s listing saw) when it is one of the last 8
+    * versions, else 0. Sidecars are optional metadata written AFTER
+    * the manifest publish, so a crash (or a concurrent writer's late
+    * sidecar) can leave one version without one; continuing the
+    * lineage from the newest EXISTING sidecar means that gap degrades
+    * pruning for that one version's files only — not for every
+    * version after it. The lookback is BOUNDED (each crash window
+    * loses at most one version, so a handful covers any realistic
+    * pile-up): a lineage abandoned long ago stays abandoned instead of
+    * being revived by an unrelated later commit. */
+  private def sidecarParent(p: Snapshot, newest: Long): Long =
+    if (newest > 0L && newest >= p.version - 7L) newest else 0L
 
   /** Parsed sidecar metadata of one version, either format: column
     * list, shard references + entry word width (v2), inline entries
@@ -2993,57 +2994,59 @@ object Versioned {
     }
   }
 
-  /** Maintain the bloom sidecar for version `v` — the stats carry/
-    * compute pattern, one scan per bloom column over only the files the
-    * parent doesn't cover. Writes at most ONE new shard (the delta's
-    * entries, plus a one-time migration of a v1 parent's live inline
-    * entries) and a small index referencing it alongside the parent's
-    * carried shards. */
-  /** Run the two sidecar-maintenance passes CONCURRENTLY (guide §2.6:
-    * overlap independent jobs). Each is an independent column-pruned
-    * scan job + sidecar publish with no shared state (stats-v<n> vs
-    * bloom-v<n>, distinct shard files), and on a multi-commit lineage
-    * their ~100 ms fixed per-job costs were strictly serial before —
-    * every commit on a stats+bloom table paid both in sequence. Off
-    * lineages return instantly, so the future is free where sidecars
-    * are not maintained. Version v is resolved ONCE, as one
-    * [[Snapshot]] both passes share, and only when a lineage needs its
-    * entries. */
-  private def maintainSidecars(spark: SparkSession, root: String,
-                               v: Long, statsCols: Seq[String],
+  /** Run the two sidecar-maintenance passes for version `v`, just
+    * published on top of parent `p` with data files `files` (tombstone
+    * files carry no table columns),
+    * CONCURRENTLY (guide §2.6: overlap independent jobs). Each is an
+    * independent column-pruned scan job + sidecar publish with no
+    * shared state (stats-v<n> vs bloom-v<n>, distinct shard files),
+    * and on a multi-commit lineage their ~100 ms fixed per-job costs
+    * were strictly serial before — every commit on a stats+bloom table
+    * paid both in sequence. Off lineages return instantly, so the
+    * future is free where sidecars are not maintained. Both passes
+    * read the parent lineage `p`'s listing saw and translate the
+    * callers' logical column names through the schema-DDL state the
+    * commit staged under; neither reads version v back. */
+  private def maintainSidecars(spark: => SparkSession, p: Snapshot,
+                               v: Long, files: Seq[String],
+                               statsCols: Seq[String],
                                bloomCols: Seq[String],
                                bloomBits: Int): Unit = {
     import scala.concurrent.{Await, Future, blocking}
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    lazy val s = snapshot(root, v)
     // `blocking` marks the Spark-job wait for the fork-join pool so
     // concurrent commits can't starve the shared global executor.
-    val stats = Future(blocking(maintainStats(spark, root, v, s, statsCols)))
+    val stats = Future(blocking(
+      maintainStats(spark, p, v, files, statsCols)))
     // The stats future must ALWAYS be awaited — abandoning it on a
     // bloom failure would swallow its exception and leave it racing a
     // caller that believes version v's sidecar maintenance is over.
     val blooms = scala.util.Try(
-      maintainBlooms(spark, root, v, s, bloomCols, bloomBits))
+      maintainBlooms(spark, p, v, files, bloomCols, bloomBits))
     val statsRes = scala.util.Try(
       Await.result(stats, scala.concurrent.duration.Duration.Inf))
     blooms.get
     statsRes.get
   }
 
-  private def maintainBlooms(spark: SparkSession, root: String, v: Long,
-                             snap: => Snapshot, bloomCols0: Seq[String],
+  /** Maintain the bloom sidecar for version `v` — the stats carry/
+    * compute pattern, one scan per bloom column over only the files the
+    * parent doesn't cover. Writes at most ONE new shard (the delta's
+    * entries, plus a one-time migration of a v1 parent's live inline
+    * entries) and a small index referencing it alongside the parent's
+    * carried shards. */
+  private def maintainBlooms(spark: => SparkSession, p: Snapshot, v: Long,
+                             manifestFiles: Seq[String],
+                             bloomCols0: Seq[String],
                              bloomBits: Int): Unit = {
-    val (fs, rootPath) = fsRoot(root)
-    lazy val s = snap
+    val (fs, rootPath) = (p.fs, p.rootPath)
     // sidecars key PHYSICAL names (the space staged files scan in);
     // callers name columns logically
     val bloomCols =
-      if (bloomCols0.isEmpty) Nil else physCols(s.ddl, bloomCols0)
-    val parentMeta = {
-      val pv = newestSidecarVersion(fs, v - 1, bloomPath(rootPath, _))
-      if (pv > 0) readBloomMeta(fs, rootPath, pv) else None
-    }
+      if (bloomCols0.isEmpty) Nil else physCols(p.writeDdl, bloomCols0)
+    val parentMeta = Some(sidecarParent(p, p.bloomVersion)).filter(_ > 0L)
+      .flatMap(readBloomMeta(fs, rootPath, _))
     val parentCols = parentMeta.map(_.cols).getOrElse(Nil)
     val cols = if (bloomCols.nonEmpty) bloomCols else parentCols
     if (cols.isEmpty) return
@@ -3054,8 +3057,6 @@ object Versioned {
       else parentMeta.map(_.words * 64).filter(_ > 0).getOrElse(return)
     require(mBits % 64 == 0 && mBits > 0,
       s"bloomBits must be a positive multiple of 64, got $mBits")
-    // tombstone files carry no table columns: data entries only
-    val manifestFiles = s.dataFiles
     val sameLineage = parentMeta.isDefined && cols == parentCols
     val live = manifestFiles.toSet
     def liveKey(k: String): Boolean =
@@ -3152,23 +3153,18 @@ object Versioned {
     * of just those files. `statsCols` empty = continue the parent's
     * columns (stats enabled once at the first commit stay maintained
     * by every later commit on the lineage). */
-  private def maintainStats(spark: SparkSession, root: String, v: Long,
-                            snap: => Snapshot,
+  private def maintainStats(spark: => SparkSession, p: Snapshot, v: Long,
+                            manifestFiles: Seq[String],
                             statsCols0: Seq[String]): Unit = {
-    val (fs, rootPath) = fsRoot(root)
-    lazy val s = snap
+    val (fs, rootPath) = (p.fs, p.rootPath)
     // sidecars key PHYSICAL names; callers name columns logically
     val statsCols =
-      if (statsCols0.isEmpty) Nil else physCols(s.ddl, statsCols0)
-    val parentMeta = {
-      val pv = newestSidecarVersion(fs, v - 1, statsPath(rootPath, _))
-      if (pv > 0) readStatsMeta(fs, rootPath, pv) else None
-    }
+      if (statsCols0.isEmpty) Nil else physCols(p.writeDdl, statsCols0)
+    val parentMeta = Some(sidecarParent(p, p.statsVersion)).filter(_ > 0L)
+      .flatMap(readStatsMeta(fs, rootPath, _))
     val parentCols = parentMeta.map(_.cols).getOrElse(Nil)
     val cols = if (statsCols.nonEmpty) statsCols else parentCols
     if (cols.isEmpty) return
-    // tombstone files carry no table columns: data entries only
-    val manifestFiles = s.dataFiles
     val sameLineage = parentMeta.isDefined && cols == parentCols
     val live = manifestFiles.toSet
     // carry parent shards BY REFERENCE, dropping fully-dead ones (the
@@ -3389,9 +3385,10 @@ object Versioned {
     val s = rewriteParent(root)
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       "indexSkipping needs statsCols and/or bloomCols")
-    if (statsCols.nonEmpty) maintainStats(spark, root, s.version, s, statsCols)
+    if (statsCols.nonEmpty)
+      maintainStats(spark, s, s.version, s.dataFiles, statsCols)
     if (bloomCols.nonEmpty)
-      maintainBlooms(spark, root, s.version, s, bloomCols, bloomBits)
+      maintainBlooms(spark, s, s.version, s.dataFiles, bloomCols, bloomBits)
   }
 
   /** Time-based retention vacuum (Delta's `VACUUM ... RETAIN n HOURS`
@@ -3631,11 +3628,8 @@ object Versioned {
     val staged = stageRows(s.fs, s.rootPath, "dv", tombstones.repartition(1))
     // nothing matched: metadata no-op
     if (staged.isEmpty) return s.version
-    val v = commitFiles(root, s.entries ++ staged, appendBase = false,
-      expectedParent = Some(s.version), op = "dv-delete")
     // data files unchanged: sidecar entries carry fully, O(1) jobs
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    publish(spark, s, s.entries ++ staged, "dv-delete", Rewrite)
   }
 
   /** Scan of `s`'s data `files` keyed by tombstone key
@@ -3696,16 +3690,7 @@ object Versioned {
       val p = manifestPath(rootPath, v)
       try {
         val mtime = fs.getFileStatus(p).getModificationTime
-        val in = fs.open(p)
-        val header = try new java.io.BufferedReader(
-          new java.io.InputStreamReader(in,
-            java.nio.charset.StandardCharsets.UTF_8)).readLine()
-        finally in.close()
-        val h = String.valueOf(header)
-        def field(k: String): Option[String] =
-          ("\"" + k + "\":\\s*\"([^\"]+)\"").r
-            .findFirstMatchIn(h).map(_.group(1))
-        val entries = readManifest(fs, rootPath, v)._2
+        val (header, entries) = readManifest(fs, rootPath, v)
         val (data, dv) = splitEntries(entries)
         // dv_bytes = accumulated tombstone parquet bytes at this
         // version — the purge-pressure gauge: once it crosses the
@@ -3716,9 +3701,9 @@ object Versioned {
         val dvb =
           try dvFileBytes(fs, rootPath, dv)
           catch { case _: java.io.FileNotFoundException => -1L }
-        Some((v, mtime, field("op").getOrElse("unknown"),
+        Some((v, mtime, headerField(header, "op").getOrElse("unknown"),
           entries.size.toLong, data.size.toLong, dv.size.toLong,
-          dvb, field("txn").getOrElse(null: String)))
+          dvb, headerField(header, "txn").getOrElse(null: String)))
       } catch { case _: java.io.FileNotFoundException => None }
     }
     rows.toDF("version", "published_at", "operation", "n_entries",
@@ -3754,21 +3739,6 @@ object Versioned {
             "retained snapshot and continue from there")
       }
     at(a) == at(b)
-  }
-
-  /** The audit op stamp of a manifest's header ("append", "merge",
-    * "compact", …; "unknown" for pre-r12 manifests). One header line
-    * read, driver-side. */
-  private def manifestOp(fs: FileSystem, rootPath: Path,
-                         v: Long): String = {
-    val in = fs.open(manifestPath(rootPath, v))
-    val header = try new java.io.BufferedReader(
-      new java.io.InputStreamReader(in,
-        java.nio.charset.StandardCharsets.UTF_8)).readLine()
-    finally in.close()
-    "\"op\":\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(String.valueOf(header)).map(_.group(1))
-      .getOrElse("unknown")
   }
 
   /** Rewrite ops that change the table's FILE LIST but provably no
@@ -3856,7 +3826,8 @@ object Versioned {
           // rewrites that provably change no live row (compaction,
           // z-order, dv purge) cross the feed as zero changes; every
           // other rewrite without a CDC sidecar stays a loud failure
-          val op = manifestOp(fs, rootPath, v)
+          val op = headerField(manifestHeader(fs, rootPath, v), "op")
+            .getOrElse("unknown")
           if (RowNeutralOps(op)) None
           else throw new IllegalArgumentException(
             s"version $v of $root removed ${removed.size} file(s) " +
@@ -3985,11 +3956,9 @@ object Versioned {
     require(keys.nonEmpty, "merge needs at least one key column")
     requireNoDvKeyColumns(updates.schema, root, "merge-on-read MERGE")
     val spark = updates.sparkSession
-    val parent = snapshotOf(root, 0L)
-    if (parent.isEmpty)
-      return commitFiles(root, stage(updates, root), appendBase = false,
-        expectedParent = Some(0L), op = "mor-merge")
-    val s = parent.get
+    val s = latest(root)
+    if (s.version == 0L)
+      return publish(spark, s, stage(updates, s), "mor-merge", Rewrite)
     import org.apache.spark.sql.functions.col
     val (candidates, _) = pruneMergeScan(updates, s, keys)
     val updKeys = updates.select(keys.map(col): _*).distinct()
@@ -4004,12 +3973,9 @@ object Versioned {
         // one tombstone file per commit (see commitDeleteVectors)
         stageRows(s.fs, s.rootPath, "dv", tombstones.repartition(1))
       }
-    val stagedData = stage(updates, root, detectPartitionBy(s.dataFiles))
-    val v = commitFiles(root, s.entries ++ stagedDv ++ stagedData,
-      appendBase = false, expectedParent = Some(s.version),
-      op = "mor-merge")
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    val stagedData = stage(updates, s, s.layout)
+    publish(spark, s, s.entries ++ stagedDv ++ stagedData, "mor-merge",
+      Rewrite)
   }
 
   /** Materialize deletion vectors (Delta's REWRITE/purge): rewrite
@@ -4035,12 +4001,8 @@ object Versioned {
     // resolves), then the survivors project logical
     val survivors = applyDeleteVectors(spark, s,
       dataScan(spark, s.rootPath, touched, s.ddl))
-    val staged = stage(toLogical(s, survivors), root,
-      detectPartitionBy(s.dataFiles))
-    val v = commitFiles(root, untouched ++ staged, appendBase = false,
-      expectedParent = Some(s.version), op = "dv-purge")
-    maintainSidecars(spark, root, v, Nil, Nil, 0)
-    v
+    val staged = stage(toLogical(s, survivors), s, s.layout)
+    publish(spark, s, untouched ++ staged, "dv-purge", Rewrite)
   }
 
   /** Bin-pack COMPACTION as a copy-on-write commit: every data file of
@@ -4133,7 +4095,7 @@ object Versioned {
         // explicit file-count override: the z-curve only prunes when
         // it's cut into enough pieces for a box to exclude some
         if (zorderFiles > 0) zorderFiles else nOut)
-    val packedRels = stage(packed, root, layout)
+    val packedRels = stage(packed, s, layout)
     // Compaction-specific conflict RESOLUTION (Delta's "blind appends
     // don't conflict with OPTIMIZE"): the rewrite changes no row, so a
     // concurrent commit that merely ADDED files is compatible — on a
@@ -4144,9 +4106,9 @@ object Versioned {
     // compaction touched the same files) re-raises: retrying would
     // resurrect superseded rows.
     val smallSet = small.map(_._1).toSet
-    var base = s.version
+    var base = s
     var untouched = big.map(_._1)
-    // bounded, matching commitFiles' own retry budget: under SUSTAINED
+    // bounded, matching publish's own retry budget: under SUSTAINED
     // concurrent append traffic an unbounded recompose loop would
     // livelock the compactor (re-read manifest, lose the race, repeat
     // forever); after the cap the last conflict is re-raised and the
@@ -4155,12 +4117,9 @@ object Versioned {
     var attempts = 0
     while (true) {
       try {
-        val v = commitFiles(root, untouched ++ packedRels,
-          appendBase = false, beforePublish = beforePublish,
-          expectedParent = Some(base),
-          op = if (zorderBy.isEmpty) "compact" else "zorder-compact")
-        maintainSidecars(spark, root, v, Nil, Nil, 0)
-        return v
+        return publish(spark, base, untouched ++ packedRels,
+          if (zorderBy.isEmpty) "compact" else "zorder-compact", Rewrite,
+          beforePublish = beforePublish)
       } catch {
         case e: java.util.ConcurrentModificationException =>
           attempts += 1
@@ -4170,7 +4129,7 @@ object Versioned {
           // a racing DELETION-VECTOR commit may tombstone rows inside
           // the files being packed — recomposing would resurrect them
           if (fresh.dvFiles.nonEmpty) throw e
-          base = fresh.version
+          base = fresh
           untouched = fresh.entries.filterNot(smallSet)
       }
     }
@@ -4187,24 +4146,18 @@ object Versioned {
     * files usually carry from the restored version's own sidecar
     * lineage). Restoring to the current version is a no-op. */
   def commitRestore(root: String, toVersion: Long): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val latest = latestVersion(root)
-    require(toVersion >= 1 && toVersion <= latest &&
-      fs.exists(manifestPath(rootPath, toVersion)),
-      s"no committed version $toVersion at $root to restore to")
-    if (toVersion == latest) return latest
+    val s = latest(root)
+    val missing = s"no committed version $toVersion at $root to restore to"
+    require(toVersion >= 1 && toVersion <= s.version, missing)
+    if (toVersion == s.version) return s.version
     // a restore re-publishes the old FILE LIST, not the old commit's
     // change record: carrying its cdc sidecar would make the feed
     // replay those changes at the restore version
-    val files = readManifest(fs, rootPath, toVersion)._2
-      .filterNot(isCdcEntry)
-    val v = commitFiles(root, files, appendBase = false,
-      expectedParent = Some(latest), op = "restore")
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach { spark =>
-        maintainSidecars(spark, root, v, Nil, Nil, 0)
-      }
-    v
+    val files =
+      try readManifest(s.fs, s.rootPath, toVersion)._2.filterNot(isCdcEntry)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(missing) }
+    publish(SparkSession.active, s, files, "restore", Rewrite)
   }
 
   /** SHALLOW CLONE (zero-copy fork): commit a new table at
@@ -4224,7 +4177,8 @@ object Versioned {
                    version: Long = 0L): Long = {
     val s = snapshot(root, version)
     val (fs, rootPath, v) = (s.fs, s.rootPath, s.version)
-    require(latestVersion(targetRoot) == 0L,
+    val target = latest(targetRoot)
+    require(target.version == 0L,
       s"clone target $targetRoot already has commits")
     // deletion vectors clone along: the tombstone key is the file's
     // last-three-components spelling, which absolute borrowed paths
@@ -4234,10 +4188,10 @@ object Versioned {
     // source commit's change record
     val absolute = s.entries.filterNot(isCdcEntry)
       .map(f => fs.makeQualified(s.path(f)).toString)
-    val (tfs, tRootPath) = fsRoot(targetRoot)
+    val (tfs, tRootPath) = (target.fs, target.rootPath)
     tfs.mkdirs(tRootPath)
-    val cv = commitFiles(targetRoot, absolute, appendBase = false,
-      expectedParent = Some(0L), op = "clone")
+    requireFiles(targetRoot, absolute)
+    val cv = publish(SparkSession.active, target, absolute, "clone", Rewrite)
     // register the borrow on the SOURCE: clones/<uuid>.json records
     // which table borrowed this snapshot's files, so a source-side
     // vacuum can WARN before retiring versions a clone still reads

@@ -183,4 +183,33 @@ class MergeFullSpec extends SparkSpec {
       .count() == 10L)
     assert(Versioned.read(spark, root).count() == 400L)
   }
+
+  test("a conditional merge into an emptied table and a staged-dir " +
+      "overwrite keep the stats lineage: each new version prunes") {
+    val root = scratch("graft_mf_sidecar")
+    // partitioned, so deleting every row leaves NO data file and the
+    // merge below takes its insert-only branch
+    Versioned.commitAppend(spark.range(0, 10).toDF("k")
+      .withColumn("p", col("k") % 2L).withColumn("v", col("k")), root,
+      statsCols = Seq("k"), partitionBy = Seq("p"))
+    Versioned.commitDelete(spark, root, lit(true))
+    assert(Versioned.files(root).isEmpty)
+    def statsSidecar(v: Long) = new java.io.File(root, s"stats-v$v.json")
+    def prunesAll(v: Long): Boolean =
+      Versioned.prunedFiles(root, Map("k" -> (100L, 200L)), v)._1.isEmpty
+    val insert = Versioned.MergeClause(None, "insert",
+      Seq("k", "p", "v").map(c => c -> col("__s_" + c)))
+    val vm = Versioned.commitMergeConditional(spark.range(1, 4, 1, 1).toDF("k")
+      .withColumn("p", lit(0L)).withColumn("v", col("k")), root, Seq("k"),
+      matched = Nil, notMatched = Seq(insert), notMatchedBySource = Nil)
+    assert(Versioned.read(spark, root).count() == 3L)
+    assert(statsSidecar(vm).exists(), s"no stats sidecar at v$vm")
+    assert(prunesAll(vm), "a bound outside the inserted keys must prune")
+    val stage = Versioned.newStageDir(root)
+    spark.range(50, 53, 1, 1).toDF("k").withColumn("p", lit(1L))
+      .withColumn("v", col("k")).write.parquet(stage + "/part")
+    val vs = Versioned.commitStagedDir(root, stage)
+    assert(Versioned.read(spark, root).count() == 3L)
+    assert(prunesAll(vs), "the staged-dir version must prune too")
+  }
 }

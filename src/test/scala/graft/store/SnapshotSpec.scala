@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
 /** Every read is a projection of ONE store snapshot: "latest", the
   * manifest, the schema-DDL state and the tombstones are resolved once
   * per read, so a commit landing mid-read cannot tear it and a read's
-  * metadata cost does not multiply with its entry points. */
+  * metadata cost does not multiply with its entry points. Every commit
+  * stages, publishes and maintains its sidecars from the ONE snapshot
+  * of its parent. */
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,35 +62,96 @@ class SnapshotSpec extends SparkSpec {
       s"root listings $lists, manifest opens $manifests")
   }
 
-  test("a merge and a delete each resolve their parent once: 5 root " +
-      "listings and 4 manifest opens per commit") {
-    val root = countingRoot()
-    (0 until 4).foreach { b =>
-      Versioned.commitAppend((0 until 10).map(i => (b * 10L + i,
-        s"https://host/${b * 10 + i}")).toDF("id", "url"), root,
-        statsCols = Seq("id"))
-    }
+  /** (root listings, manifest opens) of `root` while `commit` runs. */
+  private def counted(root: String)(commit: => Long): (Int, Int) = {
     val rootDir = new org.apache.hadoop.fs.Path(root).toUri.getPath
       .stripSuffix("/")
-    def counted(commit: => Long): (Int, Int) = {
-      CountingLocalFileSystem.reset()
-      commit
-      (CountingLocalFileSystem.lists.asScala.count(_ == rootDir),
-        CountingLocalFileSystem.opens.asScala
-          .count(_.split('/').last.startsWith("manifest-v")))
-    }
-    val merge = counted(Versioned.commitMerge(
+    CountingLocalFileSystem.reset()
+    commit
+    (CountingLocalFileSystem.lists.asScala.count(_ == rootDir),
+      CountingLocalFileSystem.opens.asScala
+        .count(_.startsWith(rootDir + "/manifest-v")))
+  }
+
+  private def urls(from: Int, n: Int) =
+    (from until from + n).map(i => (i.toLong, s"https://host/$i"))
+      .toDF("id", "url")
+
+  // per commit: the parent snapshot lists the root and opens its
+  // manifest; the publish check re-reads the published manifest's
+  // writer token. Nothing else resolves "latest" again.
+  test("a merge and a delete each resolve their parent once: 1 root " +
+      "listing and 2 manifest opens per commit") {
+    val root = countingRoot()
+    (0 until 4).foreach(b =>
+      Versioned.commitAppend(urls(b * 10, 10), root, statsCols = Seq("id")))
+    val merge = counted(root)(Versioned.commitMerge(
       Seq((12L, "https://host/12-new")).toDF("id", "url"), root, Seq("id")))
-    val delete = counted(
+    val delete = counted(root)(
       Versioned.commitDelete(spark, root, col("id") === 33L))
-    // per commit: the parent snapshot, stage's schema-DDL and
-    // constraint lookups, commitFiles' CAS and the sidecar pass's
-    // snapshot of the new version list the root; the parent snapshot,
-    // the CAS's parent manifest, the publish check and the sidecar
-    // snapshot open a manifest
-    assert(merge == (5, 4), "merge (root listings, manifest opens)")
-    assert(delete == (5, 4), "delete (root listings, manifest opens)")
+    assert(merge == (1, 2), "merge (root listings, manifest opens)")
+    assert(delete == (1, 2), "delete (root listings, manifest opens)")
     assert(Versioned.read(spark, root).count() == 39L)
+  }
+
+  test("an append, an overwrite and a txn-append each resolve their " +
+      "parent once: 1 root listing and 2 manifest opens per commit") {
+    val stats = countingRoot()
+    val plain = countingRoot()
+    val sink = countingRoot()
+    (0 until 2).foreach { b =>
+      Versioned.commitAppend(urls(b * 10, 10), stats, statsCols = Seq("id"))
+      Versioned.commitAppend(urls(b * 10, 10), plain)
+      Versioned.commitAppendTxn(urls(b * 10, 10), sink, "sink", b.toLong)
+    }
+    val statsAppend = counted(stats)(
+      Versioned.commitAppend(urls(20, 10), stats))
+    val plainAppend = counted(plain)(
+      Versioned.commitAppend(urls(20, 10), plain))
+    val txnAppend = counted(sink)(
+      Versioned.commitAppendTxn(urls(20, 10), sink, "sink", 2L))
+    val overwrite = counted(plain)(
+      Versioned.commitOverwrite(urls(100, 5), plain))
+    assert(statsAppend == (1, 2),
+      "append on a stats lineage (root listings, manifest opens)")
+    assert(plainAppend == (1, 2), "append (root listings, manifest opens)")
+    assert(txnAppend == (1, 2), "txn-append (root listings, manifest opens)")
+    assert(overwrite == (1, 2), "overwrite (root listings, manifest opens)")
+    // the stats lineage continued through the counted append
+    val (admitted, total) = Versioned.prunedFiles(stats,
+      Map("id" -> (25L, 25L)))
+    assert(total > 1 && admitted.size == 1)
+    assert(Versioned.read(spark, sink).count() == 30L)
+    assert(Versioned.read(spark, plain).count() == 5L)
+  }
+
+  test("a commit landing right after a write's parent listing is " +
+      "composed on under an append and refused under a merge") {
+    val root = countingRoot()
+    Versioned.commitAppend(urls(0, 3), root)
+    // the next manifest open is the parent snapshot of the write below:
+    // a racing append publishes v2 right then
+    CountingLocalFileSystem.onManifestOpen.set(() =>
+      Versioned.commitAppend(urls(10, 3), root))
+    assert(Versioned.commitAppend(urls(20, 3), root) == 3L)
+    assert(CountingLocalFileSystem.onManifestOpen.get == null,
+      "the hook never ran")
+    def ids(v: Long) = Versioned.read(spark, root, v)
+      .as[(Long, String)].collect().map(_._1).sorted.toSeq
+    assert(ids(2L) == Seq(0L, 1L, 2L, 10L, 11L, 12L))
+    assert(ids(3L) == Seq(0L, 1L, 2L, 10L, 11L, 12L, 20L, 21L, 22L))
+    // under a rewrite the same race is a conflict: the merge planned
+    // against v3 must not publish on top of the racer's v4
+    CountingLocalFileSystem.onManifestOpen.set(() =>
+      Versioned.commitAppend(urls(30, 3), root))
+    intercept[java.util.ConcurrentModificationException] {
+      Versioned.commitMerge(Seq((1L, "https://host/1-new")).toDF("id",
+        "url"), root, Seq("id"))
+    }
+    assert(Versioned.latestVersion(root) == 4L)
+    assert(ids(4L) == ids(3L) ++ Seq(30L, 31L, 32L))
+    assert(Versioned.read(spark, root).filter(col("id") === 1L)
+      .as[(Long, String)].collect().toSeq == Seq((1L, "https://host/1")))
   }
 
   test("a pruned read returns the full read's columns") {

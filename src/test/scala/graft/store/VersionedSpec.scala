@@ -103,18 +103,20 @@ class VersionedSpec extends SparkSpec {
   test("racing commits: loser detects the collision and retries on the " +
       "new parent; both batches survive, versions stay linear") {
     val root = freshRoot()
-    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"), root)
-    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"), root)
+    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"),
+      Versioned.latest(root))
+    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"),
+      Versioned.latest(root))
     // Writer A composes manifest-v1, and in the window between
     // composition and publication writer B commits v1 first — the
     // exact interleave a naive replace-rename silently loses.
     var fired = false
-    val vA = Versioned.commitFiles(root, filesA, appendBase = true,
-      beforePublish = _ => {
+    val vA = Versioned.publish(spark, Versioned.latest(root), filesA,
+      "append", beforePublish = _ => {
         if (!fired) {
           fired = true
-          assert(Versioned.commitFiles(root, filesB,
-            appendBase = true) == 1L)
+          assert(Versioned.publish(spark, Versioned.latest(root), filesB,
+            "append") == 1L)
         }
       })
     assert(vA == 2L) // A lost v1, retried on top of B's commit
@@ -148,10 +150,11 @@ class VersionedSpec extends SparkSpec {
     val empty = Seq((1L, "a")).toDF("k", "s").filter("k < 0")
     val v1 = Versioned.commitAppend(empty, root)
     assert(Versioned.read(spark, root, v1).count() == 0)
-    // a write that produced NO parquet files (e.g. only _SUCCESS) would
-    // brick the version with an uninferable schema — rejected at commit
+    // a write that produced NO parquet files (a partitioned write of
+    // an empty frame stages none) would brick the version with an
+    // uninferable schema — rejected at commit
     val e = intercept[IllegalArgumentException] {
-      Versioned.commitFiles(root, Nil, appendBase = true)
+      Versioned.commitAppend(empty, root, partitionBy = Seq("s"))
     }
     assert(e.getMessage.contains("empty batch"))
     assert(Versioned.latestVersion(root) == v1)
@@ -287,16 +290,16 @@ class VersionedSpec extends SparkSpec {
     // race lands through the beforePublish seam
     var raced = false
     val ex = intercept[java.util.ConcurrentModificationException] {
-      Versioned.commitFiles(root,
-        Versioned.stage(Seq((1L, "a")).toDF("k", "s"), root),
-        appendBase = false,
+      val empty = Versioned.latest(root)
+      Versioned.publish(spark, empty,
+        Versioned.stage(Seq((1L, "a")).toDF("k", "s"), empty), "merge",
+        Versioned.Rewrite,
         beforePublish = { _ =>
           if (!raced) {
             raced = true
             Versioned.commitAppend(Seq((9L, "z")).toDF("k", "s"), root)
           }
-        },
-        expectedParent = Some(0L))
+        })
     }
     assert(ex.getMessage.contains("concurrent commit"))
     // the racing first commit is intact, not overwritten
@@ -493,18 +496,18 @@ class VersionedSpec extends SparkSpec {
       "instead of silently dropping it") {
     val root = freshRoot()
     Versioned.commitAppend(Seq((1L, "a")).toDF("k", "s"), root)
-    val staged = Versioned.stage(Seq((9L, "z")).toDF("k", "s"), root)
+    val parent = Versioned.latest(root)
+    val staged = Versioned.stage(Seq((9L, "z")).toDF("k", "s"), parent)
     var fired = false
     intercept[java.util.ConcurrentModificationException] {
-      Versioned.commitFiles(root, staged, appendBase = false,
+      Versioned.publish(spark, parent, staged, "merge", Versioned.Rewrite,
         beforePublish = _ => {
           if (!fired) {
             fired = true
             // concurrent append between rewrite composition and publish
             Versioned.commitAppend(Seq((2L, "b")).toDF("k", "s"), root)
           }
-        },
-        expectedParent = Some(1L))
+        })
     }
     // the concurrent append survived untouched
     assert(Versioned.read(spark, root).as[(Long, String)]
@@ -520,17 +523,19 @@ class VersionedSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.set("fs.mockhdfs.impl",
       classOf[MockHdfsFileSystem].getName)
     val root = "mockhdfs://" + freshRoot()
-    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"), root)
-    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"), root)
+    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"),
+      Versioned.latest(root))
+    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"),
+      Versioned.latest(root))
     var fired = false
-    val vA = Versioned.commitFiles(root, filesA, appendBase = true,
-      beforePublish = _ => {
+    val vA = Versioned.publish(spark, Versioned.latest(root), filesA,
+      "append", beforePublish = _ => {
         if (!fired) {
           fired = true
           // B publishes v1 inside A's compose→publish window: A's
           // rename must FAIL (dest exists), never replace B's manifest
-          assert(Versioned.commitFiles(root, filesB,
-            appendBase = true) == 1L)
+          assert(Versioned.publish(spark, Versioned.latest(root), filesB,
+            "append") == 1L)
         }
       })
     assert(vA == 2L, "A must lose v1 to B and land v2 on retry")
@@ -554,18 +559,20 @@ class VersionedSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.set("fs.mocks3.impl",
       classOf[MockS3FileSystem].getName)
     val root = "mocks3://" + freshRoot()
-    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"), root)
-    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"), root)
+    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"),
+      Versioned.latest(root))
+    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"),
+      Versioned.latest(root))
     var fired = false
-    val vA = Versioned.commitFiles(root, filesA, appendBase = true,
-      beforePublish = _ => {
+    val vA = Versioned.publish(spark, Versioned.latest(root), filesA,
+      "append", beforePublish = _ => {
         if (!fired) {
           fired = true
           // B publishes v1 inside A's compose→publish window: A's
           // conditional put must FAIL (object exists) — this scheme's
           // rename would have silently replaced B's manifest
-          assert(Versioned.commitFiles(root, filesB,
-            appendBase = true) == 1L)
+          assert(Versioned.publish(spark, Versioned.latest(root), filesB,
+            "append") == 1L)
         }
       })
     assert(vA == 2L, "A must lose v1 to B and land v2 on retry")
@@ -1156,15 +1163,17 @@ class VersionedSpec extends SparkSpec {
     hc.set("fs.mocks3c.impl", classOf[MockS3CondPutFileSystem].getName)
     hc.set("graft.versioned.condput.schemes", "mocks3c,mocks3n")
     val root = "mocks3c://" + freshRoot()
-    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"), root)
-    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"), root)
+    val filesA = Versioned.stage(Seq((1L, "a")).toDF("k", "s"),
+      Versioned.latest(root))
+    val filesB = Versioned.stage(Seq((2L, "b")).toDF("k", "s"),
+      Versioned.latest(root))
     var fired = false
-    val vA = Versioned.commitFiles(root, filesA, appendBase = true,
-      beforePublish = _ => {
+    val vA = Versioned.publish(spark, Versioned.latest(root), filesA,
+      "append", beforePublish = _ => {
         if (!fired) {
           fired = true
-          assert(Versioned.commitFiles(root, filesB,
-            appendBase = true) == 1L)
+          assert(Versioned.publish(spark, Versioned.latest(root), filesB,
+            "append") == 1L)
         }
       })
     assert(vA == 2L, "A must lose v1 to B's 412 and land v2 on retry")
