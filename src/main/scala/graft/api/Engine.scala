@@ -43,7 +43,11 @@ object Engine {
     * pass's scores as `warmStart` to resume the iteration instead of
     * restarting from 1/N — the steady-state crawl cycle converges in a
     * couple of iterations per pass that way (q201: the warm trajectory
-    * is EXACTLY the cold one, not an approximation). */
+    * is EXACTLY the cold one, not an approximation). The vertex count
+    * is part of the plan and the SAD action runs only where it can
+    * stop the loop (`Result.sad` is otherwise computed when first
+    * read), so a pass of at most two iterations runs only the stages
+    * of its generations' plans: no count and no SAD action. */
   def pageRankPass(vertices: DataFrame, edges: DataFrame,
                    damping: Double = 0.85, maxIter: Int = 20,
                    stopTol: Option[Double] = Some(1e-3),

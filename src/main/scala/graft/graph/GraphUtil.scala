@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{col, lit, max, pmod}
 
 /** Shared sizing rules for the iterative graph operators. */
@@ -15,8 +16,21 @@ object GraphUtil {
     * for dozens of near-empty tasks, and at 100 TB it grows to the
     * cluster. */
   def partitionLaw(edges: Long, spark: SparkSession): Int =
-    math.max(4, math.min(spark.sparkContext.defaultParallelism,
-      (edges / 128000L).toInt + 1))
+    math.max(4, math.min(spark.sparkContext.defaultParallelism.toLong,
+      edges / 128000L + 1).toInt)
+
+  /** `df`'s row count as its optimized plan estimates it, with no job:
+    * the plan's row count where its statistics carry one, else its size
+    * estimate over its row width (exact for a local relation; for a
+    * file source it follows the file bytes). An unknown size reads as
+    * very large, so [[partitionLaw]] over it gives the cluster's
+    * width. */
+  def estimatedRows(df: DataFrame): Long = {
+    val plan = df.queryExecution.optimizedPlan
+    val st = plan.stats
+    st.rowCount.getOrElse(st.sizeInBytes / EstimationUtils.getSizePerRow(
+      plan.output)).min(BigInt(Long.MaxValue)).toLong
+  }
 
   /** Per `key` group, the LONG `label` of the row with the highest
     * integral `score`, ties to the smaller label — the

@@ -15,19 +15,24 @@ import org.apache.spark.storage.StorageLevel
   * dead-end mass nor normalizes to Σ=1.
   *
   * Pure-DataFrame loop, designed distributed-first:
-  *  - edges + out-degrees are computed once and persisted;
+  *  - edges + out-degrees are computed once and persisted; when more
+  *    than one superstep reads them, their join is laid out by `src`
+  *    over `GraphUtil.partitionLaw` of the plan's edge-count estimate
+  *    (no counting job) and persisted too;
   *  - each superstep is one shuffle: contributions grouped by dst
   *    (map-side partial aggregation applies);
   *  - the dangling-mass scalar is a 1-row aggregate folded into the
-  *    superstep's own plan via a broadcast cross join — with
-  *    `stopTol = None` the whole run is ONE lazy plan with zero
+  *    superstep's own plan via a broadcast cross join, and so are the
+  *    vertex count and the seed-set size in the init plan: no count
+  *    runs as an action of its own, and none is inlined into generated
+  *    code as a literal;
+  *  - the only driver-side value is the SAD scalar (one action), taken
+  *    only where it can stop the loop: with a tolerance, after
+  *    iterations 1 to maxIter − 2. With `stopTol = None` there are zero
   *    per-iteration driver actions;
-  *  - with a tolerance, the only driver-side value per step is the SAD
-  *    scalar (one action), and generations are cached so each step
-  *    reads the previous step's materialized scores;
-  *  - every generation is a lazy `localCheckpoint`, so the plan never
-  *    nests earlier generations and long runs don't blow the plan
-  *    stack.
+  *  - every generation is a lazy `localCheckpoint`, so each step reads
+  *    the previous step's materialized scores, the plan never nests
+  *    earlier generations and long runs don't blow the plan stack.
   *
   * `gridSnap = Some(g)` snaps every score to the 1/g grid each iteration
   * (`floor(x·g + 0.5)/g`) making results bit-reproducible across engines
@@ -35,7 +40,16 @@ import org.apache.spark.storage.StorageLevel
   */
 object PageRank {
 
-  final case class Result(scores: DataFrame, iterations: Int, sad: Double)
+  /** `sad`: Σ|score − prev| of the last generation, the value the stop
+    * rule compares with `stopTol` (`Double.MaxValue` without a
+    * tolerance or iteration). A run that stopped early computed it to
+    * decide; otherwise it is computed from the final generation the
+    * first time it is read (one action), so a caller that never reads
+    * it pays nothing. */
+  final class Result(val scores: DataFrame, val iterations: Int,
+                     sadOf: => Double) {
+    lazy val sad: Double = sadOf
+  }
 
   /** `seeds`: personalized/topic-sensitive PageRank (Haveliwala 2002,
     * "Topic-Sensitive PageRank"): the (1−d) teleport AND the dangling
@@ -88,31 +102,33 @@ object PageRank {
     // ordering of the cached plan) lets each superstep shuffle + sort
     // only the V-sized score frame — the E-sized edge table is never
     // re-shuffled NOR re-sorted by the per-superstep sort-merge join.
-    // Partition-count law: ~128k edges per partition, floored at 4 and
-    // capped at the cluster's parallelism. Superstep stages inherit this
-    // count (the cached layout fixes it for the co-partitioned join), so
-    // at small scale the loop doesn't pay scheduler + codegen-init
-    // overhead for dozens of near-empty tasks, and at scale it grows to
-    // the cluster width.
-    val p = GraphUtil.partitionLaw(e0.count(), e0.sparkSession)
-    val e = e0.join(outDeg, Seq("src"))
-      .repartition(p, col("src"))
+    // Partition-count law (GraphUtil.partitionLaw): ~128k edges per
+    // partition, floored at 4 and capped at the cluster's parallelism,
+    // over the edge count the plan estimates (no counting job).
+    // Superstep stages inherit this count (the cached layout fixes it
+    // for the co-partitioned join), so at small scale the loop doesn't
+    // pay scheduler + codegen-init overhead for dozens of near-empty
+    // tasks, and at scale it grows to the cluster width. A run of one
+    // superstep (the crawl cycle's warm re-rank) has no later superstep
+    // to re-read the layout, so it joins the edges where they are
+    // instead of paying for a cache build.
+    val withDeg = e0.join(outDeg, Seq("src"))
+    val e = if (maxIter <= 1) withDeg else withDeg
+      .repartition(GraphUtil.partitionLaw(GraphUtil.estimatedRows(e0),
+        e0.sparkSession), col("src"))
       .sortWithinPartitions("src")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val n = v.count().toDouble
-    val tracking = stopTol.isDefined
-
     // Personalized reset: resolve the seed set once; the per-vertex
     // reset weight rides the generations (like the dangling flag) so
-    // no per-superstep join is added. None → the uniform-reset plan is
-    // byte-identical to before (no rw column, same literals).
-    val seedInfo = seeds.map { sd =>
-      val s = sd.select(col("id")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (s, s.count().toDouble)
-    }
-    val carry = if (seedInfo.isDefined) Seq("dang", "rw") else Seq("dang")
+    // no per-superstep join is added. The uniform run carries the
+    // vertex count `n` instead: both come from a one-row aggregate
+    // cross-joined into the init plan, never from a driver action, so
+    // no count is inlined as a literal (the generated classes stay the
+    // same as the graph grows).
+    val seedSet = seeds.map(_.select(col("id")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val carry = if (seedSet.isDefined) Seq("dang", "rw") else Seq("dang", "n")
 
     // The dangling-vertex SET is static (it depends only on graph
     // shape), so resolve it once at init and carry it as a boolean
@@ -134,28 +150,31 @@ object PageRank {
         is.select(col("id"), col("score").as("__s0")), Seq("id"), "left")
       case None => init00.withColumn("__s0", lit(null).cast("double"))
     }
-    var scores = (seedInfo match {
-      case Some((s, cnt)) =>
+    var scores = (seedSet match {
+      case Some(s) =>
         init0.join(s.select(col("id"), lit(true).as("isSeed")),
             Seq("id"), "left")
+          .crossJoin(s.agg(count(lit(1)).cast("double").as("__ns")))
           .withColumn("rw",
-            when(col("isSeed"), lit(1.0 / cnt)).otherwise(lit(0.0)))
+            when(col("isSeed"), lit(1.0) / col("__ns")).otherwise(lit(0.0)))
           .select(col("id"),
             snap(coalesce(col("__s0"), col("rw"))).as("score"),
             col("hasOut").isNull.as("dang"), col("rw"))
       case None =>
-        init0.select(col("id"),
-          snap(coalesce(col("__s0"), lit(1.0) / lit(n))).as("score"),
-          col("hasOut").isNull.as("dang"))
+        init0.crossJoin(v.agg(count(lit(1)).cast("double").as("n")))
+          .select(col("id"),
+            snap(coalesce(col("__s0"), lit(1.0) / col("n"))).as("score"),
+            col("hasOut").isNull.as("dang"), col("n"))
     }).localCheckpoint(false)
     var iter = 0
     var sad = Double.MaxValue
     var done = false
+    var last: Option[DataFrame] = None
 
     while (iter < maxIter && !done) {
       // Σ over in-edges of score(src)/outdeg(src) — one shuffle keyed by
-      // dst. Project down to (src, score) first: the dang flag has no
-      // business traveling through the E-sized join.
+      // dst. Project down to (src, score) first: the carried columns
+      // have no business traveling through the E-sized join.
       val contribs = e
         .join(scores.select(col("id").as("src"), col("score")), Seq("src"))
         .groupBy(col("dst").as("id"))
@@ -178,14 +197,14 @@ object PageRank {
         .join(contribs, Seq("id"), "left")
         .crossJoin(dangling)
         .withColumn("score", snap(
-          if (seedInfo.isDefined)
+          if (seedSet.isDefined)
             lit(1.0 - damping) * col("rw") +
               lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
                 col("dm") * col("rw"))
           else
-            lit((1.0 - damping) / n) +
+            lit(1.0 - damping) / col("n") +
               lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-                col("dm") / lit(n))))
+                col("dm") / col("n"))))
         .select(col("id") +: col("prev") +: col("score") +: carry.map(col): _*)
 
       // Lazy localCheckpoint: truncates the logical plan (which would
@@ -194,14 +213,25 @@ object PageRank {
       // generation materializes at its first action and is stored.
       val next = next0.localCheckpoint(false)
 
-      if (tracking) {
-        sad = next.agg(sum(abs(col("score") - col("prev"))))
-          .first().getDouble(0)
-        if (iter > 0 && sad < stopTol.get) done = true
+      // The SAD action runs only where it can stop the loop: iteration
+      // 0 never stops it, and after the last one the loop ends anyway.
+      if (stopTol.isDefined && iter > 0 && iter < maxIter - 1) {
+        sad = sadOf(next)
+        done = sad < stopTol.get
       }
+      last = Some(next)
       scores = next.select(col("id") +: col("score") +: carry.map(col): _*)
       iter += 1
     }
-    Result(scores.select("id", "score"), iter, sad)
+    val stopped = if (done) Some(sad) else None
+    val gen = last.filter(_ => stopTol.isDefined)
+    new Result(scores.select("id", "score"), iter,
+      stopped.orElse(gen.map(sadOf)).getOrElse(Double.MaxValue))
   }
+
+  /** Σ|score − prev| of a generation (0 for an empty graph): one
+    * action. */
+  private def sadOf(gen: DataFrame): Double =
+    gen.agg(coalesce(sum(abs(col("score") - col("prev"))), lit(0.0)))
+      .first().getDouble(0)
 }

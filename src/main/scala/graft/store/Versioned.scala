@@ -1326,9 +1326,24 @@ object Versioned {
     val dir = new Path(new Path(rootPath, "data"), uuid)
     if (partitionBy.isEmpty) {
       writer(df).parquet(dir.toString)
-      fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.endsWith(".parquet") => s"data/$uuid/$n" }
-        .sorted
+      val written = fs.listStatus(dir).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(st => s"data/$uuid/${st.getPath.getName}" -> st.getLen)
+        .sortBy(_._1)
+      // Spark writes a 0-row part file for an empty input partition 0
+      // (and for no other empty partition); it would get no stats
+      // entry, so every bound would admit it and every scan open its
+      // footer. Drop it unless it is the whole batch: then it is what
+      // keeps the version readable as a typed empty frame. A 0-row file
+      // is footer-only, the smallest of its write, so at most one
+      // footer is read (its row count, no job).
+      val empty = written.collectFirst {
+        case (f, len) if f.startsWith(s"data/$uuid/part-00000-") &&
+          written.size > 1 && len == written.map(_._2).min &&
+          footerRowCount(fs, rootPath, Seq(f)) == 0L => f
+      }
+      empty.foreach(f => fs.delete(resolve(rootPath, f), false))
+      written.map(_._1).filterNot(empty.contains)
     } else {
       // Hive-style partition layout UNDER the commit directory, with
       // the partition values duplicated into type-tagged SHADOW
@@ -1761,10 +1776,12 @@ object Versioned {
   /** Pre-prune a rewrite's match-scan list with the sidecars the table
     * already maintains: split the data files of parent snapshot `s`
     * into (candidates, provably unmatched) using per-key min/max
-    * derived from `updates` (one
-    * driver-sized agg) plus, for key columns carrying a bloom sidecar
-    * with ≤ [[MergeBloomProbeMax]] distinct update values, a per-file
-    * bloom probe of those values. Without this, the copy-on-write
+    * derived from `updates` plus, for key columns carrying a bloom
+    * sidecar with ≤ [[MergeBloomProbeMax]] distinct update values, a
+    * per-file bloom probe of those values. A table without blooms pays
+    * one driver-sized agg for the bounds; a bloom-indexed one takes the
+    * bounds and the probe values from one bounded distinct-collect of
+    * the update key tuples. Without this, the copy-on-write
     * planning scan reads EVERY parent file's key columns — the probe is
     * a semi join with no literal predicate, so neither file skipping
     * nor parquet row-group pruning applies on its own; with it, a merge
@@ -1795,7 +1812,7 @@ object Versioned {
     // pruning — merge keys are conjunctive equalities, so pruning on
     // the prunable subset alone is safe (mirrors predicateKeyStats'
     // guard).
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.{col, max, min, when}
     val keyTypes = keys.flatMap(k => updates.schema.fields
       .find(_.name == k).map(f => k -> f.dataType)).toMap
     val intKeys = keys.filter(k => keyTypes.get(k).exists(integralType))
@@ -1805,37 +1822,67 @@ object Versioned {
     def statsKey(k: String): org.apache.spark.sql.Column =
       if (intKeys.contains(k)) col(k).cast("long")
       else prefixKeyCol(col(k))
-    // stats-space bounds of the update keys: ONE driver-sized agg
-    val aggs = prunable.flatMap(k =>
-      Seq(min(statsKey(k)), max(statsKey(k))))
-    val row = updates.agg(aggs.head, aggs.tail: _*).collect().head
-    val bounds = prunable.zipWithIndex.flatMap { case (k, i) =>
-      if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-      else Some(k -> (row.getLong(2 * i), row.getLong(2 * i + 1)))
-    }.toMap
-    // stage 1: bounds alone (stats sidecar, no extra jobs)
-    val byBounds = admit(s, bounds, Map.empty, Map.empty)
-    // stage 2: the per-column bloom probe pays one distinct-collect
-    // job per key column — only worth it while many candidates remain
-    val bloomCols =
-      if (byBounds.size < 8) Nil
-      else readBloomMeta(s.fs, s.rootPath, s.version).map(_.cols)
-        .getOrElse(Nil)
-    def distinctProbe(k: String,
-        keyExpr: org.apache.spark.sql.Column): Option[Seq[Long]] = {
-      val vals = updates.select(keyExpr.as("__probe"))
-        .filter(col(k).isNotNull).distinct()
-        .limit(MergeBloomProbeMax + 1).collect().map(_.getLong(0)).toSeq
-      if (vals.size > MergeBloomProbeMax) None else Some(vals)
-    }
-    val equalitySets = intKeys.filter(k => bloomCols.contains(physOf(k)))
-      .flatMap(k => distinctProbe(k, col(k).cast("long")).map(k -> _))
-      .toMap
     // string keys probe the bloom with their full-value hash — the
     // discrimination an 8-byte prefix can't give a URL-keyed table
-    val hashEqualitySets = strKeys.filter(k => bloomCols.contains(physOf(k)))
-      .flatMap(k => distinctProbe(k, hashKeyCol(col(k))).map(k -> _))
-      .toMap
+    def bloomKey(k: String): org.apache.spark.sql.Column =
+      if (intKeys.contains(k)) col(k).cast("long") else hashKeyCol(col(k))
+    // the key columns the version's bloom sidecar covers; the probe
+    // only pays on a table of at least 8 files, and a snapshot whose
+    // listing saw no bloom-v<version> reads nothing
+    val bloomKeys =
+      if (parentFiles.size < 8 || s.bloomVersion != s.version) Nil
+      else readBloomMeta(s.fs, s.rootPath, s.version).map(m =>
+        prunable.filter(k => m.cols.contains(physOf(k)))).getOrElse(Nil)
+    val bloomStr = bloomKeys.filter(strKeys.contains)
+    // A bloom probe needs every distinct update value of its column, so
+    // a bloom-indexed merge takes the bounds AND those values from ONE
+    // bounded distinct-collect of the update key tuples: each key's
+    // stats key, then each bloomed string key's hash. Past
+    // MergeBloomProbeMax tuples (and on a table without blooms) the
+    // bounds come from ONE driver-sized agg instead.
+    val tuples = if (bloomKeys.isEmpty) None else {
+      val probes = prunable.map(statsKey) ++
+        bloomStr.map(k => when(col(k).isNotNull, bloomKey(k)))
+      Some(updates.filter(prunable.map(col(_).isNotNull).reduce(_ || _))
+        .select(probes.zipWithIndex.map { case (p, i) => p.as(s"__p$i") }: _*)
+        .distinct().limit(MergeBloomProbeMax + 1).collect().toSeq)
+        .filter(_.size <= MergeBloomProbeMax)
+    }
+    def values(i: Int): Seq[Long] = tuples.get
+      .filterNot(_.isNullAt(i)).map(_.getLong(i)).distinct
+    val bounds = if (tuples.isDefined) prunable.indices.flatMap { i =>
+      val vs = values(i)
+      if (vs.isEmpty) None else Some(prunable(i) -> (vs.min, vs.max))
+    }.toMap else {
+      val aggs = prunable.flatMap(k =>
+        Seq(min(statsKey(k)), max(statsKey(k))))
+      val row = updates.agg(aggs.head, aggs.tail: _*).collect().head
+      prunable.zipWithIndex.flatMap { case (k, i) =>
+        if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
+        else Some(k -> (row.getLong(2 * i), row.getLong(2 * i + 1)))
+      }.toMap
+    }
+    // stage 1: bounds alone (stats sidecar, no extra jobs)
+    val byBounds = admit(s, bounds, Map.empty, Map.empty)
+    // stage 2: the per-column bloom probe — only worth its sidecar
+    // reads while many candidates remain. Its values come off the
+    // tuples; past the cap, one distinct-collect per column, which a
+    // single key can skip: its tuples are its distinct values.
+    def probe(k: String): Option[Seq[Long]] =
+      if (tuples.isDefined) Some(values(
+        if (intKeys.contains(k)) prunable.indexOf(k)
+        else prunable.size + bloomStr.indexOf(k)))
+      else if (prunable.size == 1) None
+      else {
+        val vals = updates.select(bloomKey(k).as("__probe"))
+          .filter(col(k).isNotNull).distinct()
+          .limit(MergeBloomProbeMax + 1).collect().map(_.getLong(0)).toSeq
+        if (vals.size > MergeBloomProbeMax) None else Some(vals)
+      }
+    val probed = if (byBounds.size < 8) Nil
+      else bloomKeys.flatMap(k => probe(k).map(k -> _))
+    val equalitySets = probed.filter(p => intKeys.contains(p._1)).toMap
+    val hashEqualitySets = probed.filter(p => strKeys.contains(p._1)).toMap
     val candidates =
       if (equalitySets.isEmpty && hashEqualitySets.isEmpty) byBounds
       else admittedFiles(s.fs, s.rootPath, s.version, byBounds, Map.empty,

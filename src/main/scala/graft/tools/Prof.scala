@@ -1,10 +1,12 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Stage-level profiler over the engine Bench times (`graft.Session`):
   * runs each named SparkEntry query against SPARK_GRAFT_SF_DIR twice,
@@ -12,8 +14,8 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * (pushdown, pruning, join strategy, codegen spans) and a per-stage
   * table of task counts, wall/run/cpu/gc time, fetch wait and shuffle
   * volume, then the classes the attempt compiled and their compile
-  * time: the feedback loop for judging whether a plan is overhead-bound
-  * or work-bound.
+  * time, and the Spark jobs and SQL executions it ran: the feedback
+  * loop for judging whether a plan is overhead-bound or work-bound.
   *
   * Usage: `tools/run.sh graft.tools.Prof q11_pagerank [query ...]`. */
 object Prof {
@@ -58,7 +60,8 @@ object Prof {
       println(profiled.explainString(FormattedMode))
       printStages(recorder.stages)
       println(s"-- codegen: ${compiled1 - compiled0} classes compiled, " +
-        s"${(compileNs1 - compileNs0) / 1000000} ms")
+        s"${(compileNs1 - compileNs0) / 1000000} ms; " +
+        s"${recorder.jobs} jobs, ${recorder.executions} SQL executions")
     }
     spark.stop()
   }
@@ -107,7 +110,8 @@ final case class StageRow(id: Int, tasks: Int, wallMs: Long,
     runMs: Long, cpuMs: Long, gcMs: Long, fetchWaitMs: Long,
     shuffleWriteBytes: Long, shuffleReadRecords: Long)
 
-/** Records completed stages from [[start]] on. Stage events arrive on
+/** Records completed stages, and counts the jobs and SQL executions
+  * started, from [[start]] on. Stage events arrive on
   * the async listener bus, so a warm-up attempt's late completions can
   * land after `start`; a stage submitted before the mark is dropped.
   * A stage with no submission time cannot be placed before the mark,
@@ -115,10 +119,26 @@ final case class StageRow(id: Int, tasks: Int, wallMs: Long,
 final class StageRecorder extends SparkListener {
   @volatile private var fromMs = Long.MaxValue
   @volatile private var recorded = List.empty[StageRow]
+  @volatile private var jobCount = 0
+  @volatile private var executionCount = 0
 
   def start(): Unit = synchronized {
     recorded = Nil
+    jobCount = 0
+    executionCount = 0
     fromMs = System.currentTimeMillis()
+  }
+
+  def jobs: Int = jobCount
+  def executions: Int = executionCount
+
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    if (js.time >= fromMs) synchronized { jobCount += 1 }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart if x.time >= fromMs =>
+      synchronized { executionCount += 1 }
+    case _ =>
   }
 
   def stages: Seq[StageRow] = recorded.sortBy(_.id)

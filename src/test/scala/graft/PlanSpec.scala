@@ -654,30 +654,14 @@ class PlanSpec extends SparkSpec {
     val labels = (1L to 5L).map(i => (i, i)).toDF("id", "lab")
     // LPA's rounds run inside Iterate's lazy checkpoints, so its argmax
     // plan is only visible to the session's execution listeners
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      graft.graph.Communities.labelPropagation(edges, 1).collect()
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
+    val plans = BuildJobs.plans(spark) {
+      graft.graph.Communities.labelPropagation(edges, 1).collect(); ()
+    }.map(_.toString)
     // the argmax aggregate: a max over a score packed by 2^64
     def argmaxLines(p: String) = p.linesIterator
       .filter(l => l.contains("max(") && l.contains("18446744073709551616"))
       .toSeq
-    val lpa = plans.asScala.filter(argmaxLines(_).nonEmpty).toSeq
+    val lpa = plans.filter(argmaxLines(_).nonEmpty)
     val louvain = graft.graph.Louvain.moveRound(edges, labels,
       allowUp = false).queryExecution.executedPlan.toString
     assert(lpa.nonEmpty, s"no LPA argmax plan among ${plans.size}")
@@ -714,32 +698,14 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     // each step's score frame is a lazy localCheckpoint, so its plan
     // is only visible to the session's execution listeners
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
     val iters = 2
-    clusterShape {
-      spark.listenerManager.register(listener)
-      try {
-        graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect()
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .get.invoke(bus)
-      } finally spark.listenerManager.unregister(listener)
-    }
-    import scala.jdk.CollectionConverters._
+    val plans = clusterShape(BuildJobs.plans(spark) {
+      graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect(); ()
+    })
     def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }
     // a step: an inner join of a cached edge layout with the previous
     // score frame, summed by the other endpoint
-    val steps = plans.asScala.toSeq.filter(
+    val steps = plans.filter(
       _.collect { case j: SortMergeJoinExec => j }.exists(_.joinType ==
         org.apache.spark.sql.catalyst.plans.Inner))
     assert(steps.size == 2 * iters,
@@ -759,6 +725,47 @@ class PlanSpec extends SparkSpec {
       }
       assert(below.isInstanceOf[org.apache.spark.sql.execution
         .aggregate.HashAggregateExec], p.toString)
+    }
+  }
+
+  test("a PageRank superstep under AQE never exchanges the cached edge " +
+      "layout") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // each generation is a lazy localCheckpoint, so its plan is only
+    // visible to the session's execution listeners
+    val iters = 3
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val plans = try BuildJobs.plans(spark) {
+      graft.graph.PageRank.run(
+        (1L to 5L).toDF("id"), graphEdges.toDF("src", "dst"),
+        maxIter = iters, stopTol = None).scores.collect(); ()
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+    // walks the final adaptive plan, query stages included
+    object H extends AdaptiveSparkPlanHelper
+    def isEdges(s: InMemoryTableScanExec) =
+      Set("dst", "od").subsetOf(s.output.map(_.name).toSet)
+    def edgeSide(p: SparkPlan) =
+      H.collect(p) { case s: InMemoryTableScanExec if isEdges(s) => s }.nonEmpty
+    // a superstep: the sort-merge join (on src) of the cached edge
+    // layout with the previous generation's scores
+    val joins = plans.flatMap(p => H.collect(p) {
+      case j: SortMergeJoinExec if edgeSide(j) &&
+          j.leftKeys.exists(_.references.exists(_.name == "src")) => j
+    })
+    assert(joins.size == iters, s"${joins.size} superstep joins among " +
+      s"${plans.size} plans")
+    joins.foreach { j =>
+      val side = Seq(j.left, j.right).filter(edgeSide)
+      assert(side.size == 1, j.toString)
+      assert(H.collect(side.head) { case x: ShuffleExchangeExec => x }.isEmpty,
+        s"the edge side is exchanged:\n$j")
     }
   }
 

@@ -212,4 +212,35 @@ class MergeFullSpec extends SparkSpec {
     assert(Versioned.read(spark, root).count() == 3L)
     assert(prunesAll(vs), "the staged-dir version must prune too")
   }
+
+  test("0-row part files are not staged: a 3-row insert from 4 slices " +
+      "leaves no file a bound outside its keys admits") {
+    def prunesAll(root: String, v: Long): Boolean =
+      Versioned.prunedFiles(root, Map("k" -> (100L, 200L)), v)._1.isEmpty
+    // one of the 4 slices is empty: Spark writes a 0-row part-00000
+    // for it, which has no stats entry
+    def threeRows(from: Long) = spark.range(from, from + 3, 1, 4).toDF("k")
+    assert(threeRows(1L).rdd.getNumPartitions == 4)
+    val root = scratch("graft_mf_empty_part")
+    // partitioned, so deleting every row leaves no data file and the
+    // merge below takes its insert-only branch
+    Versioned.commitAppend(spark.range(0, 10).toDF("k")
+      .withColumn("p", col("k") % 2L).withColumn("v", col("k")), root,
+      statsCols = Seq("k"), partitionBy = Seq("p"))
+    Versioned.commitDelete(spark, root, lit(true))
+    val insert = Versioned.MergeClause(None, "insert",
+      Seq("k", "p", "v").map(c => c -> col("__s_" + c)))
+    val vm = Versioned.commitMergeConditional(threeRows(1L)
+        .withColumn("p", lit(0L)).withColumn("v", col("k")), root, Seq("k"),
+      matched = Nil, notMatched = Seq(insert), notMatchedBySource = Nil)
+    assert(Versioned.read(spark, root).count() == 3L)
+    assert(prunesAll(root, vm), Versioned.files(root, vm).mkString("\n"))
+    // a flat append stages the same way
+    val flat = scratch("graft_mf_empty_part_flat")
+    val va = Versioned.commitAppend(threeRows(20L), flat,
+      statsCols = Seq("k"))
+    assert(Versioned.files(flat, va).size == 3)
+    assert(Versioned.read(spark, flat).count() == 3L)
+    assert(prunesAll(flat, va))
+  }
 }

@@ -421,6 +421,62 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.latestVersion(root) == v2)
   }
 
+  test("a bloom-table merge of 3 keys prunes with 1 SQL execution: the " +
+      "bounds and the bloom keys come from one distinct-collect") {
+    val root = freshRoot()
+    // 20 files of 50 consecutive keys: bounds spanning the domain admit
+    // them all, so the bloom probe engages
+    Versioned.commitAppend(spark.range(0, 1000, 1, 4).select(
+        col("id").as("k"), concat(lit("http://h/"), col("id")).as("url")),
+      root, statsCols = Seq("k", "url"), bloomCols = Seq("k", "url"),
+      maxRecordsPerFile = 50L)
+    val s = Versioned.latest(root)
+    assert(s.dataFiles.size == 20)
+    val keys = Seq(5L, 500L, 995L)
+    def pruned(upd: org.apache.spark.sql.DataFrame, key: String) = {
+      var cands = Seq.empty[String]
+      val execs = graft.BuildJobs.during(spark, "graft.versioned.prune") {
+        cands = Versioned.pruneMergeScan(upd, s, Seq(key))._1
+      }.distinct
+      assert(execs.size == 1, s"$key merge: pruning ran executions $execs")
+      cands
+    }
+    // the candidates are exactly what the sidecars admit for those keys
+    val byK = pruned(keys.map(k => (k, -k)).toDF("k", "v"), "k")
+    assert(byK == Versioned.admit(s, Map("k" -> (5L, 995L)),
+      Map("k" -> keys), Map.empty))
+    assert(byK.size < 20)
+    val urls = keys.map(k => s"http://h/$k")
+    val byUrl = pruned(urls.map(u => (u, 0L)).toDF("url", "v"), "url")
+    val pks = urls.map(Versioned.prefixKeyOf)
+    assert(byUrl == Versioned.admit(s, Map("url" -> (pks.min, pks.max)),
+      Map.empty, Map("url" -> urls.map(Versioned.hashKeyOf))))
+    assert(byUrl.size < 20)
+    // past 1,024 key tuples the bounds come from the agg and each bloom
+    // column is probed alone, as long as it has at most 1,024 values
+    val wide = (0 until 1100).map(i => (i % 10 * 100 + 5L, s"http://h/x$i"))
+    val byBoth = Versioned.pruneMergeScan(wide.toDF("k", "url"), s,
+      Seq("k", "url"))._1
+    val pk = Versioned.prefixKeyOf("http://h/x0")
+    assert(byBoth == Versioned.admit(s,
+      Map("k" -> (5L, 905L), "url" -> (pk, pk)),
+      Map("k" -> (0 until 10).map(_ * 100 + 5L)), Map.empty))
+    assert(byBoth.size <= 10)
+    // a table without blooms takes its bounds from one agg
+    val plain = freshRoot()
+    Versioned.commitAppend(spark.range(0, 1000, 1, 4).toDF("k"), plain,
+      statsCols = Seq("k"), maxRecordsPerFile = 50L)
+    val ps = Versioned.latest(plain)
+    var cands = Seq.empty[String]
+    val execs = graft.BuildJobs.during(spark, "graft.versioned.prune") {
+      cands = Versioned.pruneMergeScan(Seq(5L, 10L).toDF("k"), ps,
+        Seq("k"))._1
+    }.distinct
+    assert(execs.size == 1, s"pruning ran executions $execs")
+    assert(cands == Versioned.admit(ps, Map("k" -> (5L, 10L)), Map.empty,
+      Map.empty) && cands.size == 1)
+  }
+
   test("merge/delete pre-prune the match scan with the sidecars they " +
       "maintain: a one-file merge scans one file, skipped files ride " +
       "verbatim, delete predicates prune too") {
