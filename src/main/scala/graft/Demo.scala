@@ -282,7 +282,7 @@ object Demo {
           .select(col("id"), coalesce(col("depth"), col("cand")).as("depth"),
             (col("depth").isNull && col("cand").isNotNull).as("changed")),
         maxRounds = 10)
-      .groupBy("depth").count().orderBy("depth").show(5, false)
+      .state.groupBy("depth").count().orderBy("depth").show(5, false)
 
     println("== feature passes: z-score / quartile bins / MAD outliers")
     val demoDocs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *    self-vote damping, which also kills the classic bipartite
   *    oscillation), each neighbor votes once;
   *  - new label = the most-voted label, ties to the SMALLEST label.
-  * Fixed `rounds` supersteps, so the whole run is ONE lazy plan that a
-  * SQL oracle can unroll round for round (zero driver actions).
+  * Fixed `rounds` supersteps with no probe action, so a SQL oracle can
+  * unroll the run round for round (building each checkpointed
+  * generation still runs its shuffle stages under AQE).
   *
   * Superstep shape — identical scaling posture to PageRank's: one join
   * of the label table against the staticly-partitioned edge table
@@ -39,9 +40,8 @@ object Communities {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // Lazy checkpoint: the symmetric edge table materializes once at
-    // action time and every superstep generation reuses its blocks —
-    // the KCore pattern, keeping the whole run a single lazy plan.
+    // Checkpoint: the symmetric edge table materializes once and every
+    // superstep generation reuses its blocks (the KCore pattern).
     // Partitioned AND sorted by the join key BEFORE the checkpoint
     // (LogicalRDD carries both through): each round's sort-merge join
     // then re-shuffles/re-sorts only the V-row label side — without
@@ -59,8 +59,8 @@ object Communities {
       .select(col("id"), col("id").as("lab"))
       .localCheckpoint(false)
 
-    // Delegated to the generic BSP facade with fixed rounds (earlyStop
-    // off → zero driver actions, one lazy plan): every vertex stays
+    // Delegated to the superstep kernel with fixed rounds (earlyStop
+    // off → no probe action): every vertex stays
     // active every round (`changed` = true — LPA is dense by nature),
     // so the facade's frontier filter folds away to the full table.
     Iterate.run(
@@ -76,7 +76,7 @@ object Communities {
       vprog = (_, newLab) => newLab.withColumn("changed", lit(true)),
       maxRounds = rounds,
       earlyStop = false)
-      .select(col("id"), col("lab").as("community"))
+      .state.select(col("id"), col("lab").as("community"))
   }
 
   /** Newman modularity of a vertex→community assignment over an

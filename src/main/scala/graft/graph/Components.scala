@@ -20,10 +20,11 @@ import org.apache.spark.storage.StorageLevel
   *  - the input pair pipeline (often an expensive minhash near-dup job)
   *    is persisted and materialized ONCE before the forward+reverse
   *    union references it twice.
-  *  - lazy `localCheckpoint` per generation keeps the logical plan
-  *    constant-size; with `earlyStop = false` the fixed round count
-  *    builds one lazy plan with zero extra driver actions (the shape
-  *    the unrolled SQL oracle checks).
+  *  - the [[Iterate]] kernel's `localCheckpoint` per generation keeps
+  *    the logical plan constant-size; with `earlyStop = false` the
+  *    fixed round count takes no probe action (the shape the unrolled
+  *    SQL oracle checks; under AQE building each generation still runs
+  *    its shuffle stages).
   */
 object Components {
 
@@ -108,7 +109,7 @@ object Components {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** The shared propagation loop on the BSP facade: one join + one
+  /** The shared propagation loop on the superstep kernel: one join + one
     * checkpoint per round; `changed` marks the next frontier so it is a
     * free projection of the same generation, and only frontier labels
     * travel over edges (min per receiver). */
@@ -128,5 +129,5 @@ object Components {
           coalesce(col("cand") < col("component"), lit(false)).as("changed")),
       maxRounds = maxRounds,
       earlyStop = earlyStop,
-      initActive = initActive)
+      initActive = initActive).state
 }

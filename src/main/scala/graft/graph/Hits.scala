@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: identical to one PageRank superstep — two keyed
   * shuffles per iteration (messages grouped by dst, then by src), edge
-  * table persisted once, score frames kept plan-constant via lazy
-  * localCheckpoint generations.
+  * table persisted once, score frames kept plan-constant via
+  * localCheckpoint generations (under AQE, building each one runs its
+  * shuffle stages).
   */
 object Hits {
 
@@ -92,8 +93,8 @@ object Hits {
         .localCheckpoint(false)
       hub = eByDst.join(auth.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
-      // Keep the loop's logical plan constant-size; lazy so a single
-      // job materializes the generation when first referenced.
+      // Keep the loop's logical plan constant-size (under AQE building
+      // the checkpoint runs the generation's shuffle stages).
       hub = hub.localCheckpoint(false)
     }
     verts

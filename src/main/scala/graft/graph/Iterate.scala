@@ -3,32 +3,39 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** User-programmable BSP facade — reference G1's generic compute surface
-  * (`bsp/graph.go:238-320`, `bsp/executor.go:98-124`: users plug an
-  * arbitrary per-vertex compute function into the superstep executor).
-  * The concrete algorithms (PageRank, SSSP, LPA, coloring, …) each ship
-  * tuned loops; this is the entry point for the algorithm the library
-  * did NOT ship, wrapping the shared skeleton they all follow:
+/** The superstep kernel every frontier-driven graph loop runs on — the
+  * reference's one executor that algorithms plug into
+  * (`bsp/graph.go:238-320`, `bsp/executor.go:98-124`). A caller supplies
+  * the message, combine and vertex programs; the kernel owns the loop
+  * discipline:
   *
-  *  - **lazy `localCheckpoint` generations**: each superstep's state is
-  *    lineage-truncated so the logical plan stays constant-size over
+  *  - **one `localCheckpoint` per generation**: each superstep's state
+  *    is lineage-truncated so the logical plan stays constant-size over
   *    hundreds of rounds (an unchecked loop doubles the plan per round);
   *  - **sparse activation**: `vprog` marks per-vertex change with a
   *    boolean `changed` column; only changed vertices stay in the active
   *    frontier that feeds the next round's `sendMsg`, so message volume
   *    tracks the shrinking boundary instead of staying O(V)/round;
   *  - **vote-to-halt**: with `earlyStop` the loop probes frontier
-  *    emptiness with a `limit(1)` count (one cheap driver action per
-  *    round); without it the whole run builds ONE lazy plan with zero
-  *    driver actions — the shape unrolled SQL oracles can check.
+  *    emptiness with a `limit(1)` count, one driver action per round.
+  *    Without it the loop takes no probe action, but it is not job-free:
+  *    under AQE (the session default) building each `localCheckpoint`
+  *    generation runs that generation's shuffle stages.
   *
-  * [[Components.run]] and [[Communities.labelPropagation]] delegate here
-  * (bit-identical results to their round-5 standalone loops); their
+  * Callers: [[Components]] (cold and warm), [[Communities.labelPropagation]],
+  * [[TemporalReach]], [[Scc]] (forward colouring and backward
+  * containment), [[ShortestPath.state]] and [[Landmarks.bfs]]. Their
   * edge-table preparation (persist + partition law + sort) stays with
   * the algorithm, because co-location strategy is per-algorithm while
   * the loop discipline is not.
   */
 object Iterate {
+
+  /** What a run ended with: the final `state` (without the `changed`
+    * column), the supersteps it ran, and whether it `converged` — the
+    * frontier came up empty. Always false with `earlyStop = false`,
+    * which never probes. */
+  final case class Result(state: DataFrame, rounds: Int, converged: Boolean)
 
   /** Run a synchronous superstep loop.
     *
@@ -47,8 +54,8 @@ object Iterate {
     *                 round's state.
     * @param maxRounds superstep bound.
     * @param earlyStop stop when no vertex changed (costs one `limit(1)`
-    *                 probe per round); `false` = fixed-round single
-    *                 lazy plan.
+    *                 probe per round); `false` = a fixed round count
+    *                 with no probe action.
     * @param initActive round-0 frontier override (keyed `id`, joined
     *                 against `init` to pick up state columns). Default =
     *                 every vertex. A warm start resuming from a
@@ -57,7 +64,6 @@ object Iterate {
     *                 delta-sized instead of V-sized — sound only when
     *                 the rest of `init` is a fixpoint (no other vertex
     *                 has unsent news by definition).
-    * @return final state (without the `changed` column).
     */
   def run(init: DataFrame,
           sendMsg: DataFrame => DataFrame,
@@ -65,15 +71,15 @@ object Iterate {
           vprog: (DataFrame, DataFrame) => DataFrame,
           maxRounds: Int,
           earlyStop: Boolean = true,
-          initActive: Option[DataFrame] = None): DataFrame = {
+          initActive: Option[DataFrame] = None): Result = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
     var state = init
     var active = initActive
       .map(f => init.join(f.select("id"), Seq("id")))
       .getOrElse(init)
     var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
+    var converged = false
+    while (round < maxRounds && !converged) {
       val msgs = mergeMsg(sendMsg(active))
       val next = vprog(state, msgs)
       require(next.columns.contains("changed"),
@@ -81,11 +87,9 @@ object Iterate {
       val gen = next.localCheckpoint(false)
       state = gen.drop("changed")
       active = gen.filter(col("changed")).drop("changed")
-      if (earlyStop) {
-        if (active.limit(1).count() == 0) done = true
-      }
+      converged = earlyStop && active.limit(1).count() == 0
       round += 1
     }
-    state
+    Result(state, round, converged)
   }
 }

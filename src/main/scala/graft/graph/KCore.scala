@@ -14,10 +14,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Shape per round: one degree aggregation (map-side combinable) + two
   * semi-joins restricting the edge table to surviving endpoints — all
-  * keyed shuffles, no driver data. With `earlyStop = false` the whole
-  * run is ONE lazy plan (localCheckpoint generations cut the lineage,
-  * zero per-round driver actions) so a SQL oracle can unroll it round
-  * for round; with `earlyStop = true` the only driver value per round
+  * keyed shuffles, no driver data. With `earlyStop = false` the run
+  * takes no count action (localCheckpoint generations cut the lineage;
+  * under AQE building each one still runs its shuffle stages) so a SQL
+  * oracle can unroll it round for round; with `earlyStop = true` the
+  * only driver value per round
   * is the surviving-edge count (one action), stopping when a round
   * removes nothing — the peel is monotone, so an unchanged edge count
   * IS the fixpoint. Rounds needed = the graph's "peeling complexity"

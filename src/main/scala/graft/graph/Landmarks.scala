@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
   * once, carrying (vertex, seed, dist) state — k landmarks cost one
   * propagation, not k runs.
   *
-  * Per round (all keyed shuffles, zero driver actions at fixed
-  * rounds, so a SQL oracle can unroll it):
-  *  - frontier ⋈ edges → candidate (dst, seed) pairs (distinct);
+  * Per round, on the [[Iterate]] kernel at a fixed round count (no
+  * probe action, so a SQL oracle can unroll it):
+  *  - frontier ⋈ edges → candidate (dst, seed) pairs at the frontier's
+  *    dist + 1 (distinct);
   *  - anti-join against the known table keeps only NEWLY reached
-  *    pairs — they get dist = round;
+  *    pairs;
   *  - known ∪= fresh; fresh is the next frontier. Work per round
   *    tracks the expanding wave only (delta-frontier, the Components
   *    trick), never the full known state.
@@ -31,7 +32,7 @@ object Landmarks {
     * `seeds` is a single-column ("id") vertex set. */
   def bfs(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // Partitioned + sorted by the join key before the lazy checkpoint
+    // Partitioned + sorted by the join key before the checkpoint
     // (LogicalRDD carries both through): each round's frontier join
     // re-shuffles only the frontier, not the 2E-row edge table — the
     // same layout law as Components/Communities.
@@ -42,23 +43,20 @@ object Landmarks {
       .sortWithinPartitions("src")
       .localCheckpoint(false)
 
-    var known = seeds.select(col("id"), col("id").as("seed"),
-      lit(0).as("dist")).localCheckpoint(false)
-    var frontier = known
-
-    for (r <- 1 to rounds) {
-      val cand = frontier
+    Iterate.run(
+      seeds.select(col("id"), col("id").as("seed"), lit(0).as("dist"))
+        .localCheckpoint(false),
+      sendMsg = frontier => frontier
         .join(und.withColumnRenamed("src", "id"), Seq("id"))
-        .select(col("dst").as("id"), col("seed"))
-        .distinct()
-      val fresh = cand.join(known.select("id", "seed"), Seq("id", "seed"),
-          "left_anti")
-        .select(col("id"), col("seed"), lit(r).as("dist"))
-        .localCheckpoint(false)
-      known = known.unionByName(fresh).localCheckpoint(false)
-      frontier = fresh
-    }
-    known
+        .select(col("dst").as("id"), col("seed"),
+          (col("dist") + 1).as("dist")),
+      mergeMsg = _.groupBy("id", "seed").agg(min("dist").as("dist")),
+      vprog = (known, cand) => known.withColumn("changed", lit(false))
+        .unionByName(cand
+          .join(known.select("id", "seed"), Seq("id", "seed"), "left_anti")
+          .withColumn("changed", lit(true))),
+      maxRounds = rounds,
+      earlyStop = false).state
   }
 
   /** Harmonic closeness w.r.t. the landmark set: per vertex, the

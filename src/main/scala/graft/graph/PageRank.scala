@@ -28,9 +28,11 @@ import org.apache.spark.storage.StorageLevel
   *    code as a literal;
   *  - the only driver-side value is the SAD scalar (one action), taken
   *    only where it can stop the loop: with a tolerance, after
-  *    iterations 1 to maxIter − 2. With `stopTol = None` there are zero
-  *    per-iteration driver actions;
-  *  - every generation is a lazy `localCheckpoint`, so each step reads
+  *    iterations 1 to maxIter − 2. With `stopTol = None` there is no
+  *    per-iteration SAD action;
+  *  - every generation is a `localCheckpoint` (under AQE, building one
+  *    runs its shuffle stages, so a run is not job-free while it is
+  *    built), so each step reads
   *    the previous step's materialized scores, the plan never nests
   *    earlier generations and long runs don't blow the plan stack.
   *

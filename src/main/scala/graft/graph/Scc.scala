@@ -29,13 +29,14 @@ import org.apache.spark.sql.functions._
   * random id-to-topology mixes converge in O(log V) outer rounds (each
   * round removes every current prefix-maximum simultaneously).
   *
-  * Scale shape: each propagation round is ONE keyed shuffle over the
-  * LIVE subgraph (edges of extracted SCCs are physically removed per
-  * outer round, so late rounds touch only the shrinking residue); score
-  * frames stay plan-constant via lazy localCheckpoint generations. The
-  * driver sees only per-round empty-frontier probes (bounded counts,
-  * never data). Labels are exact BIGINTs end-to-end — the DuckDB oracle
-  * is a transitive-closure pair test, no floats anywhere.
+  * Scale shape: steps 1 and 3 are fixpoints on the [[Iterate]] kernel
+  * (one checkpointed generation and one empty-frontier probe per
+  * round); each round is ONE keyed shuffle over the LIVE subgraph
+  * (edges of extracted SCCs are physically removed per outer round, so
+  * late rounds touch only the shrinking residue). The driver sees only
+  * empty-frontier probes (bounded counts, never data). Labels are
+  * exact BIGINTs end-to-end — the DuckDB oracle is a transitive-closure
+  * pair test, no floats anywhere.
   */
 object Scc {
 
@@ -75,60 +76,48 @@ object Scc {
 
     var result: DataFrame = null
     var outer = 0
-    while (outer < maxOuterRounds && verts.limit(1).count() > 0) {
+    while (verts.limit(1).count() > 0) {
+      require(outer < maxOuterRounds,
+        s"SCC did not finish in $maxOuterRounds outer rounds")
       // -- 1. forward max-color fixpoint (delta frontier) --------------
-      var colors = verts.withColumn("color", col("id"))
-        .localCheckpoint(false)
-      var frontier = colors
-      var inner = 0
-      var converged = false
-      while (!converged && inner < maxInnerRounds) {
-        val msgs = frontier
+      val fw = Iterate.run(
+        verts.withColumn("color", col("id")).localCheckpoint(false),
+        sendMsg = frontier => frontier
           .join(eSrc.withColumnRenamed("src", "id"), Seq("id"))
-          .select(col("dst").as("id"), col("color").as("cand"))
-          .groupBy("id").agg(max("cand").as("cand"))
-        val next = colors.join(msgs, Seq("id"), "left")
+          .select(col("dst").as("id"), col("color").as("cand")),
+        mergeMsg = _.groupBy("id").agg(max("cand").as("cand")),
+        vprog = (colors, msgs) => colors.join(msgs, Seq("id"), "left")
           .select(col("id"),
             greatest(col("color"), coalesce(col("cand"), col("color")))
               .as("color"),
-            coalesce(col("cand") > col("color"), lit(false)).as("changed"))
-          .localCheckpoint(false)
-        colors = next.select("id", "color")
-        frontier = next.filter(col("changed")).select("id", "color")
-        converged = frontier.limit(1).count() == 0
-        inner += 1
-      }
-      require(converged,
+            coalesce(col("cand") > col("color"), lit(false)).as("changed")),
+        maxRounds = maxInnerRounds)
+      require(fw.converged,
         s"SCC forward coloring did not converge in $maxInnerRounds rounds")
+      val colors = fw.state
 
       // -- 2+3. backward containment walk from the roots ---------------
-      // reached rows are (id, scc); a root's scc is itself.
-      var reached = colors.filter(col("color") === col("id"))
-        .select(col("id"), col("id").as("scc"))
-        .localCheckpoint(false)
-      frontier = reached
-      inner = 0
-      var bwDone = false
-      while (!bwDone && inner < maxInnerRounds) {
-        val cand = frontier
+      // reached rows are (id, scc); a root's scc is itself. Each round
+      // keeps the reached set and adds the newly reached tails.
+      val bw = Iterate.run(
+        colors.filter(col("color") === col("id"))
+          .select(col("id"), col("id").as("scc"))
+          .localCheckpoint(false),
+        sendMsg = frontier => frontier
           .join(eDst.withColumnRenamed("dst", "id"), Seq("id"))
           .select(col("src").as("id"), col("scc"))
-          .distinct()
           // only tails INSIDE the root's color class belong to the SCC
           .join(colors, Seq("id"))
           .filter(col("color") === col("scc"))
-          .select("id", "scc")
-        val fresh = cand.join(reached.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(false)
-        if (fresh.limit(1).count() == 0) bwDone = true
-        else {
-          reached = reached.union(fresh).localCheckpoint(false)
-          frontier = fresh
-        }
-        inner += 1
-      }
-      require(bwDone,
+          .select("id", "scc"),
+        mergeMsg = _.distinct(),
+        vprog = (reached, cand) => reached.withColumn("changed", lit(false))
+          .union(cand.join(reached.select("id"), Seq("id"), "left_anti")
+            .withColumn("changed", lit(true))),
+        maxRounds = maxInnerRounds)
+      require(bw.converged,
         s"SCC backward walk did not converge in $maxInnerRounds rounds")
+      val reached = bw.state
 
       result = if (result == null) reached else result.union(reached)
       // -- 4. peel the extracted SCCs out of the residue ---------------
@@ -142,8 +131,6 @@ object Scc {
       eDst = if (useLayout) layout(eSrc, "dst") else eSrc
       outer += 1
     }
-    require(verts.limit(1).count() == 0,
-      s"SCC did not finish in $maxOuterRounds outer rounds")
     result
   }
 

@@ -11,17 +11,18 @@ import org.apache.spark.storage.StorageLevel
   * per-vertex predecessor pointers, `path.go:115-141`).
   *
   * Distances are LongType so results are exact (and cross-engine
-  * comparable). Each round is one shuffle (`groupBy(id).min(struct)`):
-  * the frontier of known distances joins the edge table, candidate
-  * `(dist, hops, prev)` tuples union the previous state, and the
-  * lexicographic minimum wins — ties on distance break to the FEWEST
-  * HOPS first, then the smallest predecessor id. The hop tie-break is
-  * what makes the predecessor tree well-founded under zero-weight
-  * edges: every chosen prev has strictly fewer hops, so back-walks
-  * strictly descend and can never cycle (prev-only tie-breaking can be
-  * tricked into a 2-cycle by a zero-weight loop whose ids sort below
-  * the true predecessor). Vertices never reached are absent from the
-  * result (infinite distance).
+  * comparable). The relaxation runs on the [[Iterate]] kernel: only the
+  * frontier — vertices that are new or whose `(dist, hops)` improved
+  * last round — joins the edge table, its candidate `(dist, hops,
+  * prev)` tuples meet the previous state in one `groupBy(id)` per
+  * round, and the lexicographic minimum wins — ties on distance break
+  * to the FEWEST HOPS first, then the smallest predecessor id. The hop
+  * tie-break is what makes the predecessor tree well-founded under
+  * zero-weight edges: every chosen prev has strictly fewer hops, so
+  * back-walks strictly descend and can never cycle (prev-only
+  * tie-breaking can be tricked into a 2-cycle by a zero-weight loop
+  * whose ids sort below the true predecessor). Vertices never reached
+  * are absent from the result (infinite distance).
   */
 object ShortestPath {
 
@@ -32,8 +33,12 @@ object ShortestPath {
     * edges: (src, dst, w: long ≥ 0) — negative weights rejected up
     * front (one bounded scan) unless `validateWeights = false`. Runs
     * `maxHops` relaxation rounds (Bellman-Ford converges in ≤ |V|-1;
-    * callers bound it). With `earlyStop = false` the loop builds ONE
-    * lazy plan — zero driver actions beyond the weight guard. */
+    * callers bound it); `earlyStop` ends it once no vertex improved.
+    * Every round's state equals the dense relaxation of every known
+    * vertex, because `prev` never enters a message. With `earlyStop =
+    * false` the loop takes no probe action beyond the weight guard
+    * (building each generation still runs its shuffle stages under
+    * AQE). */
   def state(edges: DataFrame, sourceId: Any, maxHops: Int,
             earlyStop: Boolean = true,
             validateWeights: Boolean = true,
@@ -68,41 +73,34 @@ object ShortestPath {
     // `lit` keeps the caller's id type — string names or
     // dictionary-encoded longs both work; `noPrev` is the source's
     // predecessor sentinel in that same type.
-    var st = spark.range(1).select(lit(sourceId).as("id"),
+    val source = spark.range(1).select(lit(sourceId).as("id"),
         lit(0L).as("dist"), lit(0).as("hops"), lit(noPrev).as("prev"))
       .localCheckpoint(false)
-    var hop = 0
-    var done = false
-    while (hop < maxHops && !done) {
-      val relaxed = st
+    val sp = struct(col("dist"), col("hops"), col("prev")).as("sp")
+    Iterate.run(
+      source,
+      sendMsg = frontier => frontier
         .join(e.withColumnRenamed("src", "id"), Seq("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"),
-          (col("hops") + 1).as("hops"), col("id").as("prev"))
-      // Lazy localCheckpoint: constant-size plan per round (the union
-      // references `st` twice — unchecked, the plan doubles per hop).
-      val next = st.select(col("id"),
-          struct(col("dist"), col("hops"), col("prev")).as("sp"))
-        .union(relaxed.select(col("id"),
-          struct(col("dist"), col("hops"), col("prev")).as("sp")))
-        .groupBy("id").agg(min("sp").as("sp"))
+          (col("hops") + 1).as("hops"), col("id").as("prev")),
+      // candidates meet the state in vprog's one aggregation
+      mergeMsg = identity,
+      // The lexicographic min over the old state and the candidates. A
+      // vertex is news when it is new or its (dist, hops) improved (a
+      // shorter equal-cost route may still be propagating under
+      // zero-weight edges); a smaller prev alone is not, since prev
+      // never enters a message.
+      vprog = (st, cand) => st
+        .select(col("id"), sp, struct(col("dist"), col("hops")).as("was"))
+        .unionByName(cand.select(col("id"), sp), allowMissingColumns = true)
+        .groupBy("id").agg(min("sp").as("sp"), min("was").as("was"))
         .select(col("id"), col("sp.dist").as("dist"),
-          col("sp.hops").as("hops"), col("sp.prev").as("prev"))
-        .localCheckpoint(false)
-      if (earlyStop) {
-        // Converged when no (dist, hops) improved and no vertex
-        // appeared (hops included: a shorter equal-cost route may
-        // still be propagating under zero-weight edges).
-        val changed = next.join(st.select(col("id"),
-            col("dist").as("pd"), col("hops").as("ph")), Seq("id"), "left")
-          .filter(col("pd").isNull || col("dist") < col("pd") ||
-            (col("dist") === col("pd") && col("hops") < col("ph")))
-          .limit(1).count()
-        if (changed == 0) done = true
-      }
-      st = next
-      hop += 1
-    }
-    st
+          col("sp.hops").as("hops"), col("sp.prev").as("prev"),
+          coalesce(col("was").isNull || col("sp.dist") < col("was.dist") ||
+            (col("sp.dist") === col("was.dist") &&
+              col("sp.hops") < col("was.hops")), lit(false)).as("changed")),
+      maxRounds = maxHops,
+      earlyStop = earlyStop).state
   }
 
   /** Distances only — (id, dist), the reference's scalar answer. */

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * radius). A plain BFS over the same edges OVERSTATES reachability:
   * an edge that fired before the walker arrived cannot be taken.
   *
-  * Expressed through the generic [[Iterate]] BSP facade: state is the
+  * Expressed through the [[Iterate]] superstep kernel: state is the
   * SPARSE set of reached vertices with their earliest arrival (µs),
   * messages relax `arrival(dst) ← min(edge.ts : edge.ts ≥ arrival(src))`
   * — a monotone min-combine, so resending from unchanged vertices is
@@ -25,7 +25,7 @@ object TemporalReach {
   /** @param edges (src, dst, ts) temporal edge table; multi-edges with
     *              distinct timestamps are meaningful and kept.
     * @param seeds (id, arr) start vertices with start times (µs).
-    * @param rounds fixed hop bound (one lazy plan, oracle-unrollable).
+    * @param rounds fixed hop bound (no probe action, oracle-unrollable).
     */
   def earliestArrival(edges: DataFrame, seeds: DataFrame,
                       rounds: Int): DataFrame = {
@@ -55,6 +55,6 @@ object TemporalReach {
             (col("marr").isNotNull && col("marr") < col("arr")))
             .as("changed")),
       maxRounds = rounds,
-      earlyStop = false)
+      earlyStop = false).state
   }
 }

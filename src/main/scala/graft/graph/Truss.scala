@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * two-join pattern [[Triangles]] uses — explode each into its three
   * edges, count support per edge (one hash-agg, map-side combinable),
   * drop edges below k−2, repeat. Like [[KCore]], `earlyStop = false`
-  * keeps the whole run one lazy plan (localCheckpoint generations,
-  * zero driver actions) so a SQL oracle can unroll the rounds; with
+  * takes no count action (localCheckpoint generations; under AQE
+  * building each one still runs its shuffle stages) so a SQL oracle
+  * can unroll the rounds; with
   * `earlyStop = true` the only per-round driver value is the surviving
   * edge count, and an unchanged count is the fixpoint (peeling is
   * monotone).

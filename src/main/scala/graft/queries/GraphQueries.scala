@@ -565,7 +565,7 @@ object GraphQueries {
 
     // k-core decomposition (Matula & Beck 1983) on the bidirectional
     // order↔part graph: peel vertices with remaining degree < 4, four
-    // rounds, fully lazy (earlyStop=false → zero driver actions; the
+    // rounds, no count action (earlyStop=false; the
     // oracle unrolls the identical rounds). Orders with few distinct
     // parts die first; parts then cascade as their orders disappear.
     QuerySpec("q68_kcore",
@@ -666,7 +666,7 @@ object GraphQueries {
     // Label-propagation communities (Raghavan et al. 2007) on the
     // bidirectional order↔part graph: 3 synchronous supersteps with
     // self-vote damping and the deterministic most-votes/min-label
-    // rule. Fully lazy (zero driver actions); the oracle unrolls the
+    // rule. No probe action (fixed rounds); the oracle unrolls the
     // identical rounds on the numeric vertex encoding (the tie rule
     // orders LABELS, so the oracle must compare the same longs the
     // engine does — decode to 'o…'/'p…' only at the end).
@@ -1275,7 +1275,7 @@ object GraphQueries {
     // (shipment, at l_shipdate) is traversable only at or after the
     // walker's current arrival — supply-chain contagion, not plain
     // reachability (which a timestamp-blind BFS overstates). Monotone
-    // min-relaxation through the Iterate BSP facade; the oracle unrolls
+    // min-relaxation on the Iterate superstep kernel; the oracle unrolls
     // the 3 dense rounds (idempotent under min, so dense ≡ the engine's
     // sparse-frontier run). Exact integer µs throughout.
     QuerySpec("q192_temporal_reach",

@@ -1264,10 +1264,13 @@ object Versioned {
     * under the `parent` snapshot's newest schema-DDL state
     * ([[forWrite]]) and CHECK constraints; returns their root-relative
     * paths. Nothing is visible until [[publish]] publishes a manifest
-    * listing them. */
+    * listing them. A batch that comes out as one 0-row file stages no
+    * file unless `keepEmptyBatch` (an append or overwrite, which must
+    * list a file); a rewrite may publish none. */
   private[store] def stage(df: DataFrame, parent: Snapshot,
                            partitionBy: Seq[String] = Nil,
-                           maxRecordsPerFile: Long = 0L)
+                           maxRecordsPerFile: Long = 0L,
+                           keepEmptyBatch: Boolean = false)
       : Seq[String] = {
     // schema-DDL tables stage in PHYSICAL column space (files must
     // agree with every file written before the renames); partition
@@ -1277,7 +1280,7 @@ object Versioned {
     val physDf = ddl.map(toPhysicalFrame(df, _)).getOrElse(df)
     val (fs, rootPath) = (parent.fs, parent.rootPath)
     val staged = stageUnchecked(physDf, fs, rootPath, partitionBy,
-      maxRecordsPerFile)
+      maxRecordsPerFile, keepEmptyBatch)
     // validate constraints on the bytes as written; a violating batch
     // deletes its own staging dir so nothing leaks (the table never
     // referenced it). Constraint predicates speak LOGICAL names.
@@ -1312,7 +1315,8 @@ object Versioned {
 
   private def stageUnchecked(df: DataFrame, fs: FileSystem,
                              rootPath: Path, partitionBy: Seq[String],
-                             maxRecordsPerFile: Long)
+                             maxRecordsPerFile: Long,
+                             keepEmptyBatch: Boolean)
       : Seq[String] = {
     fs.mkdirs(rootPath)
     // target-file-size ergonomics: Spark's own per-write splitter —
@@ -1333,17 +1337,20 @@ object Versioned {
       // Spark writes a 0-row part file for an empty input partition 0
       // (and for no other empty partition); it would get no stats
       // entry, so every bound would admit it and every scan open its
-      // footer. Drop it unless it is the whole batch: then it is what
-      // keeps the version readable as a typed empty frame. A 0-row file
-      // is footer-only, the smallest of its write, so at most one
+      // footer. Drop it, unless it is the whole batch and
+      // `keepEmptyBatch`: an append's version must list a file. A 0-row
+      // file is footer-only, the smallest of its write, so at most one
       // footer is read (its row count, no job).
       val empty = written.collectFirst {
         case (f, len) if f.startsWith(s"data/$uuid/part-00000-") &&
-          written.size > 1 && len == written.map(_._2).min &&
+          (written.size > 1 || !keepEmptyBatch) &&
+          len == written.map(_._2).min &&
           footerRowCount(fs, rootPath, Seq(f)) == 0L => f
       }
       empty.foreach(f => fs.delete(resolve(rootPath, f), false))
-      written.map(_._1).filterNot(empty.contains)
+      val kept = written.map(_._1).filterNot(empty.contains)
+      if (kept.isEmpty) fs.delete(dir, true)
+      kept
     } else {
       // Hive-style partition layout UNDER the commit directory, with
       // the partition values duplicated into type-tagged SHADOW
@@ -1633,7 +1640,8 @@ object Versioned {
     val s = forWrite(parent, df.schema)
     val layout =
       if (partitionBy.isEmpty && compose == Append) s.layout else partitionBy
-    val staged = stage(df, s, layout, maxRecordsPerFile)
+    val staged = stage(df, s, layout, maxRecordsPerFile,
+      keepEmptyBatch = true)
     requireFiles(root, staged)
     publish(df.sparkSession, s, staged, op, compose, txn, statsCols,
       bloomCols, bloomBits)

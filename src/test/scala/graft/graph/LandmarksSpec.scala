@@ -51,4 +51,29 @@ class LandmarksSpec extends SparkSpec {
     assert(h(2L) == ((2L, 1333333L)))
     assert(h.get(8L).isEmpty)
   }
+
+  test("every round count matches a plain-Scala multi-source BFS") {
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(24)((rnd.nextInt(16).toLong, rnd.nextInt(16).toLong))
+    val seeds = Seq(0L, 5L, 9L)
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2).distinct }
+    def oracle(rounds: Int): Seq[(Long, Long, Int)] = {
+      var known = seeds.map(s => (s, s) -> 0).toMap
+      var frontier = seeds.map(s => (s, s))
+      for (r <- 1 to rounds) {
+        val fresh = frontier
+          .flatMap { case (v, s) => adj.getOrElse(v, Nil).map(_ -> s) }
+          .distinct.filterNot(known.contains)
+        known ++= fresh.map(_ -> r)
+        frontier = fresh
+      }
+      known.toSeq.map { case ((id, seed), d) => (id, seed, d) }.sorted
+    }
+    for (rounds <- 0 to 4) {
+      val got = Landmarks.bfs(edges.toDF("src", "dst"), seeds.toDF("id"),
+        rounds).as[(Long, Long, Int)].collect().toSeq.sorted
+      assert(got == oracle(rounds), s"rounds = $rounds")
+    }
+  }
 }

@@ -21,6 +21,16 @@ class SccSpec extends SparkSpec {
       8L -> 8L, 9L -> 9L))
   }
 
+  test("an inner fixpoint cut off by maxInnerRounds fails loudly") {
+    // label 4 needs 3 forward rounds to go round the cycle to vertex 3
+    val fourCycle = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
+      .toDF("src", "dst")
+    val e = intercept[IllegalArgumentException] {
+      Scc.run(fourCycle, maxInnerRounds = 1)
+    }
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+  }
+
   test("a DAG is all singletons regardless of id order") {
     val m = scc(Seq((4L, 3L), (3L, 2L), (2L, 1L), (4L, 1L), (1L, 5L)))
     assert(m == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L))

@@ -59,4 +59,54 @@ class ShortestPathSpec extends SparkSpec {
       ShortestPath.state(e, "a", maxHops = 3)
     }
   }
+
+  /** Plain-Scala transcription of the dense relaxation: every round,
+    * each vertex keeps the lexicographic min of `(dist, hops, prev)`
+    * over its own state and the candidates relaxed from EVERY known
+    * vertex; `earlyStop` ends the loop once no vertex is new and no
+    * `(dist, hops)` improved. */
+  private def denseOracle(edges: Seq[(Long, Long, Long)], source: Long,
+                          maxHops: Int, earlyStop: Boolean)
+      : Map[Long, (Long, Int, Long)] = {
+    val ord = Ordering.Tuple3[Long, Int, Long]
+    var st = Map(source -> ((0L, 0, -1L)))
+    var hop = 0
+    var done = false
+    while (hop < maxHops && !done) {
+      val relaxed = for {
+        (u, v, w) <- edges
+        (d, h, _) <- st.get(u).toSeq
+      } yield v -> ((d + w, h + 1, u))
+      val next = (st.toSeq ++ relaxed).groupBy(_._1)
+        .map { case (id, xs) => id -> xs.map(_._2).min(ord) }
+      if (earlyStop)
+        done = next.forall { case (id, (d, h, _)) =>
+          st.get(id).exists { case (pd, ph, _) =>
+            !(d < pd || (d == pd && h < ph)) } }
+      st = next
+      hop += 1
+    }
+    st
+  }
+
+  test("every round's state equals the dense relaxation, zero weights " +
+      "and equal-cost ties included") {
+    val rnd = new scala.util.Random(11)
+    val n = 14
+    // weights 0-3: zero-weight edges (and cycles) plus many ties
+    val edges = Seq.fill(40)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong,
+      rnd.nextInt(4).toLong)).distinct
+    assert(edges.exists(_._3 == 0L))
+    val df = edges.toDF("src", "dst", "w")
+    def state(maxHops: Int, earlyStop: Boolean) =
+      ShortestPath.state(df, 0L, maxHops, earlyStop, noPrev = -1L)
+        .as[(Long, Long, Int, Long)].collect().toSeq.sorted
+    def oracle(maxHops: Int, earlyStop: Boolean) =
+      denseOracle(edges, 0L, maxHops, earlyStop).toSeq
+        .map { case (id, (d, h, p)) => (id, d, h, p) }.sorted
+    for (hops <- 0 to 6)
+      assert(state(hops, earlyStop = false) == oracle(hops, false),
+        s"maxHops = $hops")
+    assert(state(40, earlyStop = true) == oracle(40, true))
+  }
 }

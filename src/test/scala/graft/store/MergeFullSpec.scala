@@ -243,4 +243,29 @@ class MergeFullSpec extends SparkSpec {
     assert(Versioned.read(spark, flat).count() == 3L)
     assert(prunesAll(flat, va))
   }
+
+  test("an all-row DELETE of a flat table publishes no data file: the " +
+      "emptied version reads as a typed empty frame and admits nothing") {
+    val root = scratch("graft_mf_delete_all")
+    val v1 = Versioned.commitAppend(spark.range(0, 10).toDF("k")
+      .withColumn("v", col("k")), root, statsCols = Seq("k"))
+    val vd = Versioned.commitDelete(spark, root, lit(true))
+    assert(vd == v1 + 1)
+    assert(Versioned.files(root, vd).isEmpty,
+      Versioned.files(root, vd).mkString("\n"))
+    val emptied = Versioned.read(spark, root, vd)
+    assert(emptied.count() == 0L)
+    assert(emptied.schema == Versioned.read(spark, root, v1).schema)
+    // the emptied table takes the merge's insert-only branch, whose
+    // staged files all carry stats
+    val insert = Versioned.MergeClause(None, "insert",
+      Seq("k", "v").map(c => c -> col("__s_" + c)))
+    val vm = Versioned.commitMergeConditional(
+      spark.range(1, 4, 1, 4).toDF("k").withColumn("v", col("k")), root,
+      Seq("k"), matched = Nil, notMatched = Seq(insert),
+      notMatchedBySource = Nil)
+    assert(Versioned.read(spark, root, vm).count() == 3L)
+    assert(Versioned.prunedFiles(root, Map("k" -> (100L, 200L)), vm)._1
+      .isEmpty, Versioned.files(root, vm).mkString("\n"))
+  }
 }
