@@ -439,11 +439,7 @@ private[sources] final class GraftCdfRelation(
     if (fromVersion >= to)
       // changeless range: the feed's exact shape, zero rows (the
       // readChangeFeedSince tolerance, not an error)
-      Versioned.read(spark, root).limit(0)
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("none"))
-        .withColumn("_commit_version",
-          org.apache.spark.sql.functions.lit(0L))
+      Versioned.emptyFeedFrame(spark, Versioned.snapshot(root))
     else Versioned.readChangeFeed(spark, root, fromVersion, to,
       emptyOk = true)
   }

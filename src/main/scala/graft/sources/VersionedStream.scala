@@ -421,6 +421,18 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
     else Versioned.readChangeFeed(spark, root, fromV, endV,
       emptyOk = true)
 
+  /** The rows appended over (fromV, endV]: ONE resolution of the
+    * range ([[Versioned.appendedRange]]: `endV`'s snapshot and `fromV`'s
+    * manifest) and one scan of its files. None when the range is
+    * append-consistent but added no file — a RESTORE back to exactly
+    * what the stream consumed heals it with an empty batch. A range
+    * that is not an append lineage fails the query loudly. */
+  private def appended(spark: org.apache.spark.sql.SparkSession,
+                       fromV: Long, endV: Long): Option[DataFrame] = {
+    val (s, added) = Versioned.appendedRange(root, fromV, endV)
+    if (added.isEmpty) None else Some(Versioned.appendedScan(spark, s, added))
+  }
+
   /** A slice [from, until) of the snapshot cut at `v`, with the
     * version's live deletion vectors applied (tombstone keys are
     * per-file, so applying them to a file subset is exact). */
@@ -466,11 +478,7 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
           // plus the deltas (s.v, endV] — the delta side carries the
           // same non-append/DV guards as every plain delta batch
           val (cut, cutDv) = cutSlice(spark, s.v, s.file, n)
-          if (Versioned.changedFileCount(root, s.v, endV) == 0L)
-            (cut, cutDv)
-          else
-            (cut.unionByName(Versioned.readChanges(spark, root, s.v,
-              endV)), cutDv)
+          (appended(spark, s.v, endV).fold(cut)(cut.unionByName(_)), cutDv)
         }
       case Some(s) if s.v >= endV =>
         // replanned empty range (e.g. restart edge): zero-row batch
@@ -484,9 +492,7 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
         // if the stream drained past it) still fail loudly with the
         // non-append-lineage error.
         if (cdf) (cdfBatch(spark, s.v, endV), true)
-        else if (Versioned.changedFileCount(root, s.v, endV) == 0L)
-          (emptyBatch(spark), false)
-        else (Versioned.readChanges(spark, root, s.v, endV), false)
+        else (appended(spark, s.v, endV).getOrElse(emptyBatch(spark)), false)
       case _ if startingVersion == 1L =>
         // the initial snapshot applies live deletion vectors (Delta's
         // semantics: the snapshot is the LIVE rows) — an anti-join, so
@@ -504,12 +510,8 @@ private class VersionedSource(sqlContext: SQLContext, root: String,
         // (and by the same empty-delta healing: a table restored to
         // exactly the cut's contents starts with an empty batch)
         if (cdf) (cdfBatch(spark, startingVersion - 1, endV), true)
-        else if (Versioned.changedFileCount(root, startingVersion - 1,
-            endV) == 0L)
-          (emptyBatch(spark), false)
-        else
-          (Versioned.readChanges(spark, root, startingVersion - 1, endV),
-            false)
+        else (appended(spark, startingVersion - 1, endV)
+          .getOrElse(emptyBatch(spark)), false)
     }
   }
 

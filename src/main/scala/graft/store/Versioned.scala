@@ -417,6 +417,25 @@ object Versioned {
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => "" }
 
+  /** Manifest `v` (header, entries) read inside the version range
+    * (`from`, `to`] of `root`; none at 0 (table birth). Vacuum retires
+    * history from the bottom, so a manifest missing below a committed
+    * `to` was vacuumed: the range is no longer derivable, and the
+    * reader gets the re-seed error, not a raw FileNotFoundException.
+    * (A `to` above the latest version is "not committed", refused by
+    * the [[snapshot]] that resolves it.) */
+  private def rangeManifest(fs: FileSystem, rootPath: Path, root: String,
+                            from: Long, to: Long)(v: Long)
+      : (String, Seq[String]) =
+    if (v == 0L) ("", Nil)
+    else try readManifest(fs, rootPath, v)
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalArgumentException(
+        s"version $v of $root was vacuumed: the range ($from, $to] is " +
+          "no longer derivable - re-seed from a retained snapshot and " +
+          "continue from there")
+    }
+
   /** A quoted field of a manifest header line: "writer", "txn" (the
     * `appId:batchId` stamp) or "op" (the audit stamp). */
   private def headerField(header: String, key: String): Option[String] =
@@ -2629,138 +2648,91 @@ object Versioned {
     else scanAdmitted(spark, s, s.dataFiles)
   }
 
-  /** Incremental consumption (the CDC-read of every lakehouse log):
-    * the rows ADDED between `fromVersion` (exclusive) and `toVersion`
-    * (inclusive) of an append lineage are exactly the files in
-    * manifest(to) − manifest(from) — a METADATA set difference, so a
-    * downstream consumer (index refresh, stats maintenance, training-
-    * shard top-up) reads only the delta files and its cost tracks the
-    * delta, never the table. Data files are immutable, so this is
-    * exact, not approximate. Overwrite commits rewrite history (their
-    * files can carry rows that already existed), so a non-append
-    * lineage — any `from` file missing at `to` — fails loudly instead
-    * of returning changes that silently double-count. */
-  /** Number of files added between two committed versions of an
-    * append lineage — the metadata-only pre-check of [[readChanges]]
-    * (0 means "append-consistent but nothing new", e.g. a RESTORE back
-    * to exactly `fromVersion`'s contents; readChanges itself refuses
-    * an empty delta because an empty parquet scan has no schema).
-    * Throws the same non-append-lineage error on rewritten ranges. */
-  def changedFileCount(root: String, fromVersion: Long,
-                       toVersion: Long): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    require(fromVersion >= 1 && toVersion > fromVersion &&
-      fs.exists(manifestPath(rootPath, fromVersion)) &&
-      fs.exists(manifestPath(rootPath, toVersion)),
-      s"need committed versions $fromVersion < $toVersion at $root")
-    // CDC sidecars are per-version change records, not table data:
-    // they appear and retire outside the append algebra and must not
-    // read as rewrites (their retirement) or as appended rows (their
-    // addition)
-    val fromFiles = readManifest(fs, rootPath, fromVersion)._2
-      .filterNot(isCdcEntry).toSet
-    val toFiles = readManifest(fs, rootPath, toVersion)._2
-      .filterNot(isCdcEntry)
-    val missing = fromFiles -- toFiles.toSet
+  /** ONE resolution of the version range (`from`, `to`] of an append
+    * lineage: `to`'s snapshot (0 = latest) and the data entries it
+    * lists that `from` did not, in `to`'s manifest order. `to`
+    * resolves through [[snapshot]] (one listing, one open), so the
+    * schema-DDL state in force at `to` comes with it; `from` = 0 is
+    * table birth and opens nothing, above it `from`'s manifest opens
+    * once. Data files are immutable, so the set difference is exact —
+    * but only over appends. A range in which one of `from`'s entries is
+    * gone at `to` (overwrite, copy-on-write rewrite, DV purge, restore
+    * past it) or that adds a deletion vector would replay recopied rows
+    * as new and keep deleted ones, so it is refused: the append-lineage
+    * guard of every incremental read. CDC sidecars are per-version
+    * change records, not table data, and count as neither. An
+    * append-consistent range can add nothing (a RESTORE back to
+    * exactly `from`'s files). */
+  private[graft] def appendedRange(root: String, from: Long, to: Long)
+      : (Snapshot, Seq[String]) = {
+    val s = snapshot(root, to)
+    require(from >= 0L && s.version > from,
+      s"need committed versions $from < ${s.version} at $root")
+    val base = rangeManifest(s.fs, s.rootPath, root, from, s.version)(from)
+      ._2.filterNot(isCdcEntry).toSet
+    val missing = base -- s.entries
     require(missing.isEmpty,
-      s"versions $fromVersion..$toVersion of $root are not an append " +
-        s"lineage (an overwrite commit rewrote ${missing.size} files); " +
-        "incremental reads are only exact over appends - re-read the " +
-        "full snapshot instead")
-    val added = toFiles.filterNot(fromFiles)
-    require(!added.exists(isDvEntry),
-      s"versions $fromVersion..$toVersion of $root include a " +
-        "deletion-vector commit: rows were logically REMOVED, so the " +
-        "range is not an append lineage - re-read the full snapshot")
-    added.size.toLong
+      s"versions $from..${s.version} of $root are not an append lineage " +
+        s"(a rewrite commit removed ${missing.size} files); incremental " +
+        "reads are only exact over appends - re-read the full snapshot " +
+        "instead")
+    require(from == 0L || s.dvFiles.forall(base),
+      s"versions $from..${s.version} of $root include a deletion-vector " +
+        "commit: rows were logically REMOVED, so the range is not an " +
+        "append lineage - re-read the full snapshot")
+    (s, s.dataFiles.filterNot(base))
+  }
+
+  /** The rows of [[appendedRange]]'s files, scanned under `s`'s
+    * schema-DDL state. The scan reads the delta's own footers, not the
+    * snapshot's first file, so a schema-evolution append surfaces its
+    * new columns (the stream's drift guard relies on that); new files
+    * carry no tombstones, so no anti-join applies. */
+  private[graft] def appendedScan(spark: SparkSession, s: Snapshot,
+                                  added: Seq[String]): DataFrame = {
+    val df = dataScan(spark, s.rootPath, added, s.ddl)
+    s.ddl.fold(df)(toLogicalFrame(df, _))
   }
 
   /** The DATA files of an initial-snapshot cut, in DETERMINISTIC
-    * (sorted) order, as absolute paths: manifest(version) minus
-    * manifest(baseVersion) (base 0 = table birth). The streaming
+    * (sorted) order, as absolute paths: [[appendedRange]] over
+    * (`baseVersion`, `version`] (base 0 = table birth). The streaming
     * source paces its first batch by slicing this list — the order
     * must be reconstructible from manifests alone so a restarted
     * query resumes at the exact file its checkpoint recorded.
     * Deletion-vector entries are excluded (the snapshot APPLIES them;
-    * they are not scannable data). A vacuumed manifest inside the cut
-    * surfaces the crisp re-seed error, not a raw FileNotFound. */
+    * they are not scannable data). A cut anchored above table birth
+    * carries the append-lineage guard of every incremental read, and a
+    * vacuumed manifest inside it is the re-seed error. */
   def snapshotCutFiles(root: String, baseVersion: Long,
                        version: Long): Seq[String] = {
-    val (fs, rootPath) = fsRoot(root)
-    def entriesOf(v: Long): (Seq[String], Seq[String]) =
-      if (v == 0L) (Nil, Nil)
-      else try splitEntries(readManifest(fs, rootPath, v)._2)
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"version $v of $root was vacuumed: the snapshot cut over " +
-            s"($baseVersion, $version] is no longer derivable - " +
-            "re-seed the stream from a retained snapshot")
-      }
-    val (baseData, baseDv) = entriesOf(baseVersion)
-    val (curData, curDv) = entriesOf(version)
-    // a cut anchored ABOVE table birth is an incremental read: it
-    // carries the same lineage guards as readChanges — a raw set-diff
-    // over a rewrite would stream recopied rows as fresh data and
-    // silently drop deleted ones (the unpaced path fails loudly on
-    // exactly these; pacing must not convert that into wrong results)
-    if (baseVersion > 0L) {
-      val missing = baseData.toSet -- curData.toSet
-      require(missing.isEmpty,
-        s"versions $baseVersion..$version of $root are not an append " +
-          s"lineage (a rewrite commit removed ${missing.size} files); " +
-          "the paced snapshot cut is only exact over appends - " +
-          "re-seed from the full snapshot instead")
-      require((curDv.toSet -- baseDv.toSet).isEmpty,
-        s"versions $baseVersion..$version of $root include a " +
-          "deletion-vector commit: rows were logically REMOVED, so " +
-          "the paced cut is not an append lineage - re-seed from the " +
-          "full snapshot")
-    }
-    val base = baseData.toSet
-    curData.filterNot(base).sorted
-      .map(resolve(rootPath, _).toString)
+    val (s, added) = appendedRange(root, baseVersion, version)
+    added.sorted.map(s.path(_).toString)
   }
 
   /** Smallest version whose manifest survives (vacuum retires history
     * from the bottom), or 0 on an empty table. */
-  def earliestVersion(root: String): Long = {
-    val (fs, rootPath) = fsRoot(root)
-    val vs = versionsOf(rootNames(fs, rootPath), "manifest")
-    if (vs.isEmpty) 0L else vs.min
-  }
+  def earliestVersion(root: String): Long =
+    manifestTimes(root).headOption.fold(0L)(_._1)
 
+  /** Incremental consumption (the CDC-read of every lakehouse log):
+    * the rows ADDED between `fromVersion` (exclusive) and `toVersion`
+    * (inclusive) of an append lineage — [[appendedRange]]'s files, a
+    * METADATA set difference, scanned under `toVersion`'s schema-DDL
+    * state ([[appendedScan]]). A downstream consumer (index refresh,
+    * stats maintenance, training-shard top-up) reads only the delta
+    * files, so its cost tracks the delta, never the table. A range
+    * that is not an append lineage fails loudly instead of returning
+    * changes that silently double-count, and so does one that added
+    * no file (an empty parquet scan has no schema). */
   def readChanges(spark: SparkSession, root: String, fromVersion: Long,
                   toVersion: Long): DataFrame = {
-    val (fs, rootPath) = fsRoot(root)
-    require(fromVersion >= 1 && toVersion > fromVersion &&
-      fs.exists(manifestPath(rootPath, fromVersion)) &&
-      fs.exists(manifestPath(rootPath, toVersion)),
+    require(fromVersion >= 1 && toVersion > fromVersion,
       s"need committed versions $fromVersion < $toVersion at $root")
-    // cdc sidecars sit outside the append algebra (see
-    // changedFileCount)
-    val fromFiles = readManifest(fs, rootPath, fromVersion)._2
-      .filterNot(isCdcEntry).toSet
-    val toFiles = readManifest(fs, rootPath, toVersion)._2
-      .filterNot(isCdcEntry)
-    val missing = fromFiles -- toFiles.toSet
-    require(missing.isEmpty,
-      s"versions $fromVersion..$toVersion of $root are not an append " +
-        s"lineage (an overwrite commit rewrote ${missing.size} files); " +
-        "incremental reads are only exact over appends - re-read the " +
-        "full snapshot instead")
-    val delta = toFiles.filterNot(fromFiles)
-    require(!delta.exists(isDvEntry),
-      s"versions $fromVersion..$toVersion of $root include a " +
-        "deletion-vector commit: rows were logically REMOVED, so the " +
-        "range is not an append lineage - re-read the full snapshot")
-    require(delta.nonEmpty,
+    val (s, added) = appendedRange(root, fromVersion, toVersion)
+    require(added.nonEmpty,
       s"no files added between $fromVersion and $toVersion at $root")
-    schemaDdl(root, toVersion) match {
-      case Some(s) =>
-        toLogicalFrame(dataScan(spark, rootPath, delta, Some(s)), s)
-      case None =>
-        dataScan(spark, rootPath, delta, None)
-    }
+    appendedScan(spark, s, added)
   }
 
   // ------------------------------------------------------------------
@@ -3474,17 +3446,17 @@ object Versioned {
       catch { case _: IllegalArgumentException => 0L }
     // an anchor at or after the last commit is the steady-state "any
     // changes since my last poll?" — an EMPTY feed, not an error
-    if (from >= latestVersion(root)) emptyFeedFrame(spark, root, 0L)
+    if (from >= latestVersion(root)) emptyFeedFrame(spark, snapshot(root))
     else readChangeFeed(spark, root, from)
   }
 
-  /** A zero-row frame with the change feed's exact shape (table
+  /** A zero-row frame with the change feed's exact shape (`s`'s table
     * columns + `_change_type` + `_commit_version`) — what a feed over
     * a changeless range returns when the caller asked for tolerance. */
-  private def emptyFeedFrame(spark: SparkSession, root: String,
-                             version: Long): DataFrame = {
+  private[graft] def emptyFeedFrame(spark: SparkSession,
+                                    s: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    read(spark, root, version).limit(0)
+    scanAdmitted(spark, s, s.dataFiles).limit(0)
       .withColumn("_change_type", lit("none"))
       .withColumn("_commit_version", lit(0L))
   }
@@ -3706,30 +3678,6 @@ object Versioned {
     toLogical(s, live, extra = Seq("__dv_file", "__dv_idx"))
   }
 
-  /** CHANGE DATA FEED (Delta's table_changes / CDF): every row-level
-    * change between `fromVersion` (exclusive; 0 = since table birth)
-    * and `toVersion` (inclusive; 0 = latest), stamped with
-    * `_change_type` ('insert' | 'delete') and `_commit_version`.
-    * Derivation, per version:
-    *   - a commit that staged a `cdc/` sidecar ([[commitMerge]]/
-    *     [[commitDelete]] with cdc=true) IS its own change record —
-    *     its exact stamped rows are read back and its file delta is
-    *     ignored (rewritten files carry both changed and
-    *     merely-recopied rows);
-    *   - otherwise, added DATA files are that commit's inserts (files
-    *     are immutable, so each row's insert version is exact), and
-    *     added DELETION-VECTOR files are its deletes — the tombstones
-    *     join back to ONLY the data files they reference
-    *     (deleted-rows-sized scan), materializing the deleted rows
-    *     with full schema;
-    *   - provably row-neutral rewrites (compact / zorder-compact /
-    *     dv-purge) cross the feed as zero changes;
-    *   - any OTHER commit that removed files (overwrite, cdc-less
-    *     merge/delete, restore) fails loudly: its file delta cannot
-    *     distinguish rewritten-identical rows from changed ones, so a
-    *     feed over it would fabricate changes.
-    * A downstream incremental consumer gets exactly-once row changes
-    * whose cost tracks the delta, never the table. */
   /** DESCRIBE HISTORY: one row per retained commit, newest first —
     * (version, published_at epoch-millis, operation, n_entries,
     * n_data_files, n_dv_files, txn). `operation` reads the audit stamp
@@ -3741,10 +3689,8 @@ object Versioned {
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val (fs, rootPath) = fsRoot(root)
-    val rows = (latestVersion(root) to 1L by -1L).flatMap { v =>
-      val p = manifestPath(rootPath, v)
+    val rows = manifestTimes(root).reverse.flatMap { case (v, mtime) =>
       try {
-        val mtime = fs.getFileStatus(p).getModificationTime
         val (header, entries) = readManifest(fs, rootPath, v)
         val (data, dv) = splitEntries(entries)
         // dv_bytes = accumulated tombstone parquet bytes at this
@@ -3759,7 +3705,9 @@ object Versioned {
         Some((v, mtime, headerField(header, "op").getOrElse("unknown"),
           entries.size.toLong, data.size.toLong, dv.size.toLong,
           dvb, headerField(header, "txn").getOrElse(null: String)))
-      } catch { case _: java.io.FileNotFoundException => None }
+      } catch { // vacuumed after the listing saw it
+        case _: java.io.FileNotFoundException => None
+      }
     }
     rows.toDF("version", "published_at", "operation", "n_entries",
       "n_data_files", "n_dv_files", "dv_bytes", "txn")
@@ -3779,20 +3727,12 @@ object Versioned {
     val (fs, rootPath) = fsRoot(root)
     // cdc sidecars are per-version CHANGE RECORDS, not table state:
     // two versions with identical data+dv files are the same snapshot
-    // even if one carried a cdc record the other dropped
+    // even if one carried a cdc record the other dropped. The
+    // streaming CDF path passes its consumed offset as `a`: a vacuumed
+    // manifest is the range reader's re-seed error.
     def at(v: Long): Set[String] =
-      if (v == 0L) Set.empty
-      else try readManifest(fs, rootPath, v)._2
+      rangeManifest(fs, rootPath, root, a, b)(v)._2
         .filterNot(isCdcEntry).toSet
-      catch { case _: java.io.FileNotFoundException =>
-        // the streaming CDF path calls this with its consumed offset as
-        // `a` — a vacuumed manifest must surface the same crisp re-seed
-        // signal readChangeFeed raises, not a raw FileNotFoundException
-        throw new IllegalArgumentException(
-          s"version $v of $root was vacuumed: the change feed over " +
-            s"($a, $b] is no longer derivable - re-seed from a " +
-            "retained snapshot and continue from there")
-      }
     at(a) == at(b)
   }
 
@@ -3834,69 +3774,91 @@ object Versioned {
     else { fs.delete(dir, true); Nil }
   }
 
+  /** CHANGE DATA FEED (Delta's table_changes / CDF): every row-level
+    * change between `fromVersion` (exclusive; 0 = since table birth)
+    * and `toVersion` (inclusive; 0 = latest), stamped with
+    * `_change_type` ('insert' | 'delete') and `_commit_version`.
+    * Derivation, per version:
+    *   - a commit that staged a `cdc/` sidecar ([[commitMerge]]/
+    *     [[commitDelete]] with cdc=true) IS its own change record —
+    *     its exact stamped rows are read back and its file delta is
+    *     ignored (rewritten files carry both changed and
+    *     merely-recopied rows);
+    *   - otherwise, added DATA files are that commit's inserts (files
+    *     are immutable, so each row's insert version is exact), and
+    *     added DELETION-VECTOR files are its deletes — the tombstones
+    *     join back to ONLY the data files they reference
+    *     (deleted-rows-sized scan), materializing the deleted rows
+    *     with full schema;
+    *   - provably row-neutral rewrites (compact / zorder-compact /
+    *     dv-purge) cross the feed as zero changes;
+    *   - any OTHER commit that removed files (overwrite, cdc-less
+    *     merge/delete, restore) fails loudly: its file delta cannot
+    *     distinguish rewritten-identical rows from changed ones, so a
+    *     feed over it would fabricate changes.
+    * A downstream incremental consumer gets exactly-once row changes
+    * whose cost tracks the delta, never the table. The metadata cost
+    * is one walk: ONE root listing (`toVersion`'s [[snapshot]], which
+    * also fixes the schema-DDL state every feed scan reads with) and
+    * ONE open per manifest of the range — `fromVersion`'s (none at 0)
+    * through `toVersion`'s, each step carrying the previous version's
+    * entries. A vacuumed manifest inside the range is the re-seed
+    * error. */
   def readChangeFeed(spark: SparkSession, root: String,
                      fromVersion: Long, toVersion: Long = 0L,
                      emptyOk: Boolean = false)
       : DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val (fs, rootPath) = fsRoot(root)
-    val to = if (toVersion == 0L) latestVersion(root) else toVersion
-    require(fromVersion >= 0 && to > fromVersion &&
-      fs.exists(manifestPath(rootPath, to)) &&
-      (fromVersion == 0L ||
-        fs.exists(manifestPath(rootPath, fromVersion))),
+    // ONE resolution: `to`'s snapshot (one listing, one open) carries
+    // its manifest and the schema-DDL state every feed scan reads with
+    val snap = snapshot(root, toVersion)
+    val (fs, rootPath, to) = (snap.fs, snap.rootPath, snap.version)
+    require(fromVersion >= 0 && to > fromVersion,
       s"need committed versions $fromVersion < $to at $root " +
         "(fromVersion 0 = since table birth)")
-    def entriesAt(v: Long): Seq[String] =
-      if (v == 0L) Nil
-      else try readManifest(fs, rootPath, v)._2
-      catch { case _: java.io.FileNotFoundException =>
-        // a vacuumed manifest inside the range: the feed is no longer
-        // derivable — tell the consumer to re-seed, don't NPE
-        throw new IllegalArgumentException(
-          s"version $v of $root was vacuumed: the change feed over " +
-            s"($fromVersion, $to] is no longer derivable - re-seed " +
-            "from a retained snapshot and continue from there")
-      }
+    val manifestAt = rangeManifest(fs, rootPath, root, fromVersion, to) _
     // ---- metadata walk (driver, manifest-sized): classify every
     // version and collect its contributing files. Validation (vacuumed
-    // gaps, cdc-less rewrites) happens HERE, per version, exactly as
-    // before; only the frame construction below is collapsed.
+    // gaps, cdc-less rewrites) happens HERE, per version; only the
+    // frame construction below is collapsed. Each step carries the
+    // previous version's entries, so every manifest opens once.
     case class Delta(v: Long, addedData: Seq[String],
                      addedDv: Seq[String], addedCdc: Seq[String],
                      curData: Seq[String])
-    val deltas = (fromVersion + 1 to to).flatMap { v =>
-      val prev = entriesAt(v - 1).toSet
-      val cur = entriesAt(v)
-      val added = cur.filterNot(prev)
-      val addedCdc = added.filter(isCdcEntry)
-      // a commit that staged a CDC sidecar IS its own change record:
-      // its exact stamped rows are read back and its file delta is
-      // ignored — the rewritten data files carry both changed and
-      // merely-recopied rows
-      if (addedCdc.nonEmpty) Some(Delta(v, Nil, Nil, addedCdc, Nil))
-      else {
-        val removed = (prev -- cur.toSet).filterNot(isCdcEntry)
-        if (removed.nonEmpty) {
-          // rewrites that provably change no live row (compaction,
-          // z-order, dv purge) cross the feed as zero changes; every
-          // other rewrite without a CDC sidecar stays a loud failure
-          val op = headerField(manifestHeader(fs, rootPath, v), "op")
-            .getOrElse("unknown")
-          if (RowNeutralOps(op)) None
-          else throw new IllegalArgumentException(
-            s"version $v of $root removed ${removed.size} file(s) " +
-              s"(op '$op': overwrite/merge/copy-on-write delete/" +
-              "restore): its file delta cannot yield exact row " +
-              "changes - commit rewrites with cdc=true (commitMerge/" +
-              "commitDelete) to keep the feed derivable, or re-read " +
-              "the snapshot")
-        } else {
-          val (addedData, addedDv) = splitEntries(added)
-          Some(Delta(v, addedData, addedDv, Nil, splitEntries(cur)._1))
-        }
-      }
+    val manifests = (fromVersion to to).iterator.map { v =>
+      v -> (if (v == to) (snap.header, snap.entries) else manifestAt(v))
     }
+    val deltas = manifests.sliding(2).flatMap {
+      case Seq((_, (_, before)), (v, (header, cur))) =>
+        val prev = before.toSet
+        val added = cur.filterNot(prev)
+        val addedCdc = added.filter(isCdcEntry)
+        // a commit that staged a CDC sidecar IS its own change record:
+        // its exact stamped rows are read back and its file delta is
+        // ignored — the rewritten data files carry both changed and
+        // merely-recopied rows
+        if (addedCdc.nonEmpty) Some(Delta(v, Nil, Nil, addedCdc, Nil))
+        else {
+          val removed = (prev -- cur).filterNot(isCdcEntry)
+          if (removed.nonEmpty) {
+            // rewrites that provably change no live row (compaction,
+            // z-order, dv purge) cross the feed as zero changes; every
+            // other rewrite without a CDC sidecar stays a loud failure
+            val op = headerField(header, "op").getOrElse("unknown")
+            if (RowNeutralOps(op)) None
+            else throw new IllegalArgumentException(
+              s"version $v of $root removed ${removed.size} file(s) " +
+                s"(op '$op': overwrite/merge/copy-on-write delete/" +
+                "restore): its file delta cannot yield exact row " +
+                "changes - commit rewrites with cdc=true (commitMerge/" +
+                "commitDelete) to keep the feed derivable, or re-read " +
+                "the snapshot")
+          } else {
+            val (addedData, addedDv) = splitEntries(added)
+            Some(Delta(v, addedData, addedDv, Nil, splitEntries(cur)._1))
+          }
+        }
+    }.toVector
     // ---- frame construction: O(1) scans regardless of version count.
     // A month of appends is ONE parquet scan stamped by a broadcast
     // (file → version) map join, not a 10,000-way union whose analysis
@@ -3920,7 +3882,7 @@ object Versioned {
     // schema-DDL tables read every feed scan with ONE explicit
     // physical schema (uniform frames across inserts/deletes/cdc even
     // when files span an add-column boundary), then project logical
-    val feedDdl = schemaDdl(root, to)
+    val feedDdl = snap.ddl
     def scanOf(files: Seq[(String, Long)]): DataFrame = feedDdl match {
       case Some(s) => FastScan.parquetPaths(spark, fs, rootPath,
         files.map(f => resolve(rootPath, f._1).toString),
@@ -3978,7 +3940,7 @@ object Versioned {
       // a range holding only row-neutral rewrites carries no changes;
       // a tolerant caller (the streaming source) gets a typed empty
       // frame instead of an error it would crash-loop on
-      return emptyFeedFrame(spark, root, to)
+      return emptyFeedFrame(spark, snap)
     require(frames.nonEmpty,
       s"no changes between $fromVersion and $to at $root")
     val out = frames.reduce(_.unionByName(_))

@@ -62,12 +62,12 @@ class SnapshotSpec extends SparkSpec {
       s"root listings $lists, manifest opens $manifests")
   }
 
-  /** (root listings, manifest opens) of `root` while `commit` runs. */
-  private def counted(root: String)(commit: => Long): (Int, Int) = {
+  /** (root listings, manifest opens) of `root` while `body` runs. */
+  private def counted(root: String)(body: => Any): (Int, Int) = {
     val rootDir = new org.apache.hadoop.fs.Path(root).toUri.getPath
       .stripSuffix("/")
     CountingLocalFileSystem.reset()
-    commit
+    body
     (CountingLocalFileSystem.lists.asScala.count(_ == rootDir),
       CountingLocalFileSystem.opens.asScala
         .count(_.startsWith(rootDir + "/manifest-v")))
@@ -152,6 +152,43 @@ class SnapshotSpec extends SparkSpec {
     assert(ids(4L) == ids(3L) ++ Seq(30L, 31L, 32L))
     assert(Versioned.read(spark, root).filter(col("id") === 1L)
       .as[(Long, String)].collect().toSeq == Seq((1L, "https://host/1")))
+  }
+
+  // a version range resolves once: the snapshot of its upper end (one
+  // listing, one open) plus one open per other manifest it needs
+  test("a non-CDF stream's delta batch over one appended version opens " +
+      "2 manifests: the range resolves once") {
+    val root = countingRoot()
+    Versioned.commitAppend(urls(0, 10), root)
+    Versioned.commitAppend(urls(10, 10), root)
+    val schema = Versioned.read(spark, root).schema
+    val ids = scala.collection.mutable.ArrayBuffer[Long]()
+    // startingVersion 2: the query's one batch is the delta (1, 2]; the
+    // explicit schema keeps the source from reading a snapshot for it
+    val (_, manifests) = counted(root) {
+      val q = spark.readStream.format("graft.sources.VersionedStream")
+        .schema(schema).option("root", root).option("startingVersion", "2")
+        .load().writeStream.option("checkpointLocation", freshRoot())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          ids.synchronized { ids ++= b.select("id").as[Long].collect() }; ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(ids.sorted.toSeq == (10L until 20L))
+    assert(manifests == 2, s"manifest opens $manifests")
+  }
+
+  test("a change feed over 3 appended versions lists the root once and " +
+      "opens each manifest once") {
+    val root = countingRoot()
+    (0 until 3).foreach(b => Versioned.commitAppend(urls(b * 10, 10), root))
+    var feed: org.apache.spark.sql.DataFrame = null
+    val cost = counted(root) {
+      feed = Versioned.readChangeFeed(spark, root, 0L)
+    }
+    assert(cost == (1, 3), "(root listings, manifest opens)")
+    assert(feed.select("id", "_commit_version").as[(Long, Long)].collect()
+      .toSet == (0 until 30).map(i => (i.toLong, i / 10 + 1L)).toSet)
   }
 
   test("a pruned read returns the full read's columns") {

@@ -216,6 +216,57 @@ class VersionedSpec extends SparkSpec {
     assert(e.getMessage.contains("append lineage"))
   }
 
+  test("one append-lineage guard: readChanges, a snapshot cut above " +
+      "table birth and a non-CDF stream agree on every range") {
+    // the failure and every cause's message, as one string
+    def outcome[T](body: => T): Either[String, T] =
+      try Right(body)
+      catch { case e: Exception =>
+        Left(Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString(" | "))
+      }
+    // the row count of every batch a stream started at v2 delivers
+    def streamBatches(root: String): Seq[Long] = {
+      val counts = scala.collection.mutable.ArrayBuffer[Long]()
+      val q = spark.readStream.format("graft.sources.VersionedStream")
+        .option("root", root).option("startingVersion", "2").load()
+        .writeStream.option("checkpointLocation", freshRoot())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          counts.synchronized { counts += b.count() }; ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+      counts.toSeq
+    }
+    def lineage(msg: String): Boolean =
+      msg.contains("append lineage") ||
+        msg.contains("deletion-vector commit")
+    // every range is (1, 3]: two appends, then the commit under test
+    val ranges = Seq[(String, String => Long, Boolean)](
+      ("copy-on-write delete",
+        r => Versioned.commitDelete(spark, r, col("k") === 1L), true),
+      ("deletion-vector delete",
+        r => Versioned.commitDeleteVectors(spark, r, col("k") === 1L), true),
+      ("restore back to from's files",
+        r => Versioned.commitRestore(r, 1L), false))
+    ranges.foreach { case (name, commit, refused) =>
+      val root = freshRoot()
+      Versioned.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), root)
+      Versioned.commitAppend(Seq((3L, "c")).toDF("k", "s"), root)
+      assert(commit(root) == 3L, name)
+      val read = outcome(Versioned.readChanges(spark, root, 1L, 3L).count())
+      val cut = outcome(Versioned.snapshotCutFiles(root, 1L, 3L))
+      val stream = outcome(streamBatches(root))
+      if (refused) Seq(read, cut, stream).foreach { o =>
+        assert(o.fold(lineage, _ => false), s"$name: $o")
+      } else {
+        assert(read.fold(_.contains("no files added"), _ => false),
+          s"$name: $read")
+        assert(cut == Right(Nil), s"$name: $cut")
+        assert(stream == Right(Seq(0L)), s"$name: $stream")
+      }
+    }
+  }
+
   test("txn commits are idempotent per (appId, batchId); apps are " +
       "independent; stale redeliveries skip even after later batches") {
     val root = freshRoot()
