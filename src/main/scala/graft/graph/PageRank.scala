@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -30,11 +31,13 @@ import org.apache.spark.storage.StorageLevel
   *    only where it can stop the loop: with a tolerance, after
   *    iterations 1 to maxIter − 2. With `stopTol = None` there is no
   *    per-iteration SAD action;
-  *  - every generation is a `localCheckpoint` (under AQE, building one
+  *  - every generation is a `Ckpt.Generation` (under AQE, building one
   *    runs its shuffle stages, so a run is not job-free while it is
-  *    built), so each step reads
-  *    the previous step's materialized scores, the plan never nests
-  *    earlier generations and long runs don't blow the plan stack.
+  *    built), so each step reads the previous step's stored scores, the
+  *    plan never nests earlier generations and long runs don't blow the
+  *    plan stack. A generation's lineage is cut once the next one is
+  *    built, on the caller's thread: a lazy `localCheckpoint` could be
+  *    cut by a broadcast job's thread and deadlock the DAG scheduler.
   *
   * `gridSnap = Some(g)` snaps every score to the 1/g grid each iteration
   * (`floor(x·g + 0.5)/g`) making results bit-reproducible across engines
@@ -152,7 +155,7 @@ object PageRank {
         is.select(col("id"), col("score").as("__s0")), Seq("id"), "left")
       case None => init00.withColumn("__s0", lit(null).cast("double"))
     }
-    var scores = (seedSet match {
+    var stored = Ckpt.generation(seedSet match {
       case Some(s) =>
         init0.join(s.select(col("id"), lit(true).as("isSeed")),
             Seq("id"), "left")
@@ -167,7 +170,8 @@ object PageRank {
           .select(col("id"),
             snap(coalesce(col("__s0"), lit(1.0) / col("n"))).as("score"),
             col("hasOut").isNull.as("dang"), col("n"))
-    }).localCheckpoint(false)
+    })
+    var scores = stored.frame
     var iter = 0
     var sad = Double.MaxValue
     var done = false
@@ -209,20 +213,24 @@ object PageRank {
                 col("dm") / col("n"))))
         .select(col("id") +: col("prev") +: col("score") +: carry.map(col): _*)
 
-      // Lazy localCheckpoint: truncates the logical plan (which would
-      // otherwise nest the previous generation 2x per step and grow
-      // exponentially) to an RDD leaf without forcing execution; the
-      // generation materializes at its first action and is stored.
-      val next = next0.localCheckpoint(false)
+      // An RDD leaf over the stored generation: truncates the logical
+      // plan (which would otherwise nest the previous generation 2x per
+      // step and grow exponentially) without forcing the last stage.
+      // Building it ran the stages that read the previous generation,
+      // so that one is fully stored and its lineage is cut here.
+      val next = Ckpt.generation(next0)
+      stored.truncate()
+      stored = next
 
       // The SAD action runs only where it can stop the loop: iteration
       // 0 never stops it, and after the last one the loop ends anyway.
       if (stopTol.isDefined && iter > 0 && iter < maxIter - 1) {
-        sad = sadOf(next)
+        sad = sadOf(next.frame)
         done = sad < stopTol.get
       }
-      last = Some(next)
-      scores = next.select(col("id") +: col("score") +: carry.map(col): _*)
+      last = Some(next.frame)
+      scores = next.frame
+        .select(col("id") +: col("score") +: carry.map(col): _*)
       iter += 1
     }
     val stopped = if (done) Some(sad) else None

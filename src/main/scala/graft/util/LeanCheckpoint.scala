@@ -1,11 +1,14 @@
 // Hosted in a subpackage of org.apache.spark.sql because the seams this
 // needs (classic.Dataset.ofRows, execution.LogicalRDD) are private[sql]
-// — the same out-of-tree pattern as graftvec. Engine-facing API:
-// graft.util.Ckpt.
+// and RDD.checkpointData is private[spark] — the same out-of-tree
+// pattern as graftvec. Engine-facing API: graft.util.Ckpt.
 package org.apache.spark.sql.graftckpt
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
 /** `localCheckpoint` WITHOUT origin-statistics propagation.
   *
@@ -62,5 +65,34 @@ object LeanCheckpointBridge {
       LogicalRDD(qe.analyzed.output, internalRdd, partitioning,
         qe.executedPlan.outputOrdering, isStreaming = false, None)(
         session, None, None))
+  }
+}
+
+/** `localCheckpoint(false)` split in two, so that no job can race the
+  * checkpoint ([[graft.util.Ckpt.Generation]]). */
+object GenerationBridge {
+  /** `df` as an RDD leaf over rows stored (MEMORY_AND_DISK, the local
+    * checkpoint's level) by the first job that computes them, built
+    * like the stock local checkpoint: one "checkpoint" SQL execution
+    * (under AQE it runs the plan's stages; listeners see its plan), and
+    * a `LogicalRDD` keeping the origin's statistics and physical
+    * layout. The RDD is NOT marked for checkpointing. */
+  def store(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val qe = df.queryExecution
+    val rdd = SQLExecution.withNewExecutionId(qe, Some("checkpoint"))(
+      qe.executedPlan.execute()).map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (Dataset.ofRows(df.sparkSession,
+      LogicalRDD.fromDataset(rdd, df, isStreaming = false)), rdd)
+  }
+
+  /** Mark `rdd` for a local checkpoint and checkpoint it now, on the
+    * caller's thread: partitions not yet stored are computed by one
+    * job, then the lineage is cut. `RDD.doCheckpoint` is a no-op once
+    * any finished job's lineage walk has reached the RDD, so the
+    * checkpoint data is driven directly. */
+  def truncate(rdd: RDD[_]): Unit = {
+    rdd.localCheckpoint()
+    rdd.checkpointData.foreach(_.checkpoint())
   }
 }

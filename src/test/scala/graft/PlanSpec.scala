@@ -736,8 +736,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // each generation is a lazy localCheckpoint, so its plan is only
-    // visible to the session's execution listeners
+    // each generation is a stored RDD leaf built in its own SQL
+    // execution, so its plan is only visible to the session's execution
+    // listeners
     val iters = 3
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
