@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 import graft.text.Analyzer
+import graft.util.Ckpt
 
 /** Full-text search over a documents table (reference R1–R5,
   * `textindexer/index/indexer.go:14-17`, ES DSL `textindexer/store/es/es.go:184-226`).
@@ -16,8 +17,10 @@ import graft.text.Analyzer
   * It counts each query term per document row straight off the token
   * array, so the corpus scan is shuffle-free; only the rows that hold a
   * query term are grouped by document id (one shuffle of hits, not of
-  * the corpus). One small driver action per request fetches N, every
-  * term's df and the hit total; idf reaches the page plan as a literal.
+  * the corpus). The hit groups, left-joined with the priors, are stored
+  * by one counting pass per request, which also folds N, every term's
+  * df and the hit total; the page reads the stored rows and never scans
+  * the corpus again. idf reaches the page plan as a per-query literal.
   * The batch scorers ([[matchScores]], [[bm25Scores]]) keep the postings
   * shape: one explode + hash aggregations by (term) or (doc), with the
   * vocabulary-sized df table broadcast.
@@ -179,9 +182,13 @@ object Search {
     * final = relevance + prior. `priorCol` plays PageRank's role. */
   def blend(scored: DataFrame, prior: DataFrame, idCol: String,
             priorCol: String): DataFrame =
-    scored.join(prior, Seq(idCol), "left")
-      .withColumn("blended",
-        col("score") + coalesce(col(priorCol).cast("double"), lit(0d)))
+    withBlended(scored.join(prior, Seq(idCol), "left"), priorCol)
+
+  /** `joined`, scores left-joined with their priors, plus [[blend]]'s
+    * `blended` column. */
+  private def withBlended(joined: DataFrame, priorCol: String): DataFrame =
+    joined.withColumn("blended",
+      col("score") + coalesce(col(priorCol).cast("double"), lit(0d)))
 
   /** Offset/limit pagination with a deterministic total order (reference R4:
     * ES from/size, `es.go:211-212`). The `limit(offset+size)` runs first so
@@ -202,9 +209,10 @@ object Search {
     * `indexer.go:40-41` — the gRPC stream's first frame). `total` is a
     * Long fetched when the page is built; `rows` stays a lazy
     * top-(offset+size) plan. [[searchPage]] counts by evaluating
-    * `scored` once more, so it suits cheap inputs such as a phrase
-    * filter; the match path of [[search]] gets its total from the one
-    * small action that also fetches N and df. */
+    * `scored` once more. [[search]] instead stores its blended rows (or,
+    * for a match query, the rows they are scored from) in the one pass
+    * that counts the total, and `rows` pages over the stored rows; they
+    * are freed once the page is dropped (`Ckpt.storeFolded`). */
   final case class Page(rows: DataFrame, total: Long)
 
   def searchPage(scored: DataFrame,
@@ -349,7 +357,10 @@ object Search {
       case PhraseQuery(p) =>
         val scored = phraseMatch(docs, p, textCol)
           .select(col(idCol), lit(1.0).as("score"))
-        searchPage(blend(scored, priors, idCol, "prior"), order, offset, size)
+        // the blended rows, stored by the pass that counts them
+        val (stored, counts) = Ckpt.storeFolded(
+          blend(scored, priors, idCol, "prior"))(_.size.toLong)
+        Page(paginate(stored, order, offset, size), counts.sum)
       case MatchQuery(m) =>
         val terms = m.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)
         matchPage(docs, priors, terms.distinct, order, offset, size, idCol,
@@ -359,7 +370,7 @@ object Search {
 
   /** The match branch of [[search]]: the same page and total as
     * `searchPage(blend(matchScores(docs, terms), priors), ...)`, from one
-    * scan of `docs` per action and no postings.
+    * scan of `docs` and no postings.
     *
     *  - Each row gets one `size(filter(tokens, _ === t))` count per
     *    distinct query term; rows holding none of the terms are dropped
@@ -370,11 +381,15 @@ object Search {
     *    that scores but never counts towards df. Non-hit rows group
     *    under one (false, null) key, which partial aggregation folds to
     *    a row per task: that is how N rides along in the same scan.
-    *  - One small action returns N (all document rows), every term's df
-    *    (distinct non-null ids) and the total: the blended row count,
-    *    i.e. hit groups times their matching prior rows, at least one.
-    *  - The page plan scores hit groups with idf = ln(N/df) folded to a
-    *    literal — no df or N join — then blends and paginates.
+    *  - The groups, left-joined with the priors, are stored by one
+    *    counting pass: one row per blended row. The pass folds N (all
+    *    document rows), every term's df (distinct non-null ids) and the
+    *    total: the stored hit rows, i.e. hit groups times their
+    *    matching prior rows, at least one.
+    *  - The page plan reads the stored rows: it scores the hit rows with
+    *    idf = ln(N/df) folded to a literal (no df or N join), adds the
+    *    blended column and paginates. The idf literal still makes each
+    *    query's page plan, and so its generated code, new.
     */
   private def matchPage(docs: DataFrame, priors: DataFrame, terms: Seq[String],
                         order: Seq[Column], offset: Int, size: Int,
@@ -390,32 +405,46 @@ object Search {
       .groupBy(hit.as("__hit"), when(hit, col(idCol)).as(idCol))
       .agg(count(lit(1)).as("__rows"), tfs.map(c => sum(c).as(c)): _*)
 
-    // the blended row count needs the prior multiplicity of each hit
-    // group: a left join keeps the groups' (__hit, id) partitioning, so
-    // folding the join back to one row per group takes no shuffle
-    val perGroup = groups
-      .join(priors.select(idCol), Seq(idCol), "left")
-      .groupBy("__hit", idCol)
-      .agg(max("__rows").as("__rows"), count(lit(1)).as("__blended") +:
-        tfs.map(c => max(c).as(c)): _*)
-    // each task folds its groups to (N, total, df...) and the driver adds
-    // the task sums: a global aggregate would cost one more shuffle stage
-    val counted = col("__hit") && col(idCol).isNotNull
+    // a group is one row of the join's left side, so every stored row of
+    // a group comes from the task that joined it: each task folds its
+    // rows to (N, total, df...) counting each (__hit, id) group once, and
+    // the driver adds the task sums
+    val joined = groups.join(priors, Seq(idCol), "left")
+    val schema = joined.schema
+    val Seq(hitAt, idAt, rowsAt) =
+      Seq("__hit", idCol, "__rows").map(schema.fieldIndex)
+    val tfAt = tfs.map(schema.fieldIndex).toArray
+    val idType = schema(idAt).dataType
     val width = 2 + tfs.size
-    def add(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < width) { a(i) += b(i); i += 1 }
-      a
+    val (stored, partials) = Ckpt.storeFolded(joined) { rows =>
+      val acc = new Array[Long](width)
+      val groupsSeen = new java.util.HashSet[(Any, Any)]()
+      rows.foreach { r =>
+        // __hit is null where the text is null (ANSI: size(null) is null)
+        val hitState = if (r.isNullAt(hitAt)) null else r.getBoolean(hitAt)
+        val id = if (r.isNullAt(idAt)) null else r.get(idAt, idType)
+        val isHit = hitState == true
+        if (isHit) acc(1) += 1
+        if (groupsSeen.add((hitState, id))) {
+          acc(0) += r.getLong(rowsAt)
+          if (isHit && id != null) {
+            var i = 0
+            while (i < tfAt.length) {
+              if (!r.isNullAt(tfAt(i)) && r.getLong(tfAt(i)) > 0)
+                acc(2 + i) += 1
+              i += 1
+            }
+          }
+        }
+      }
+      acc
     }
-    import docs.sparkSession.implicits._
-    val Array(n, total, dfs @ _*) = perGroup
-      .select(array(col("__rows") +:
-        when(col("__hit"), col("__blended")).otherwise(0L) +:
-        tfs.map(c => when(counted && col(c) > 0, 1L).otherwise(0L)): _*))
-      .as[Array[Long]]
-      .mapPartitions(it => Iterator(it.foldLeft(new Array[Long](width))(add)))
-      .collect()
-      .foldLeft(new Array[Long](width))(add): @unchecked
+    val Array(n, total, dfs @ _*) =
+      partials.foldLeft(new Array[Long](width)) { (a, b) =>
+        var i = 0
+        while (i < width) { a(i) += b(i); i += 1 }
+        a
+      }: @unchecked
 
     // a term weighs in only where it occurs. A weight is null (or, under
     // ANSI, raises) only where df = 0, i.e. only null ids hold the term;
@@ -426,9 +455,9 @@ object Search {
       if (ws.isEmpty) lit(null).cast("double")
       else when(ws.map(_.isNotNull).reduce(_ || _),
         ws.map(coalesce(_, lit(0d))).reduce(_ + _))
-    val scored = groups.filter(col("__hit"))
-      .select(col(idCol), score.as("score"))
-    Page(paginate(blend(scored, priors, idCol, "prior"), order, offset, size),
-      total)
+    val priorCols = joined.columns.drop(groups.columns.length).map(col)
+    val scored = stored.filter(col("__hit"))
+      .select(col(idCol) +: score.as("score") +: priorCols.toSeq: _*)
+    Page(paginate(withBlended(scored, "prior"), order, offset, size), total)
   }
 }

@@ -433,15 +433,15 @@ private[sources] final class GraftCdfRelation(
   // ONE derivation serving both schema and buildScan (the frame is
   // metadata-derived; computing it twice was pure waste)
   private lazy val feed: DataFrame = {
+    // ONE listing: the open end resolves through the feed's own
+    // snapshot. A changeless range (an explicit end at or below the
+    // start, or an open end at the start) is the feed's exact shape with
+    // zero rows: the readChangeFeedSince tolerance, not an error
     val spark = sqlContext.sparkSession
-    val to =
-      if (toVersion == 0L) Versioned.latestVersion(root) else toVersion
-    if (fromVersion >= to)
-      // changeless range: the feed's exact shape, zero rows (the
-      // readChangeFeedSince tolerance, not an error)
-      Versioned.emptyFeedFrame(spark, Versioned.snapshot(root))
-    else Versioned.readChangeFeed(spark, root, fromVersion, to,
-      emptyOk = true)
+    val changeless = toVersion != 0L && fromVersion >= toVersion
+    val snap = Versioned.snapshot(root, if (changeless) 0L else toVersion)
+    if (changeless) Versioned.emptyFeedFrame(spark, snap)
+    else Versioned.changeFeedOf(spark, snap, fromVersion, emptyOk = true)
   }
 
   override val schema: StructType = feed.schema

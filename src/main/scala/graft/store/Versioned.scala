@@ -321,7 +321,12 @@ object Versioned {
 
   /** Entry names of the table root; empty when it doesn't exist. */
   private def rootNames(fs: FileSystem, rootPath: Path): Seq[String] =
-    try fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
+    rootListing(fs, rootPath).map(_.getPath.getName)
+
+  /** One listing of the table root; empty when it doesn't exist. */
+  private def rootListing(fs: FileSystem, rootPath: Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(rootPath).toSeq
     catch { case _: java.io.FileNotFoundException => Nil }
 
   /** The n of every `<prefix>-v<n>.json` among root entry `names`. */
@@ -367,7 +372,13 @@ object Versioned {
   private def resolveSnapshot(root: String, version: Long,
                               prior: Option[Snapshot]): Snapshot = {
     val (fs, rootPath) = fsRoot(root)
-    val names = rootNames(fs, rootPath)
+    snapshotIn(root, fs, rootPath, rootNames(fs, rootPath), version, prior)
+  }
+
+  /** [[resolveSnapshot]] from root entry `names` the caller listed. */
+  private def snapshotIn(root: String, fs: FileSystem, rootPath: Path,
+                         names: Seq[String], version: Long,
+                         prior: Option[Snapshot]): Snapshot = {
     val v = if (version == 0L) highest(names, "manifest") else version
     prior.filter(_.version == v).getOrElse {
       require(v == 0L || names.contains(manifestPath(rootPath, v).getName),
@@ -3441,14 +3452,28 @@ object Versioned {
     * rather than version numbers. */
   def readChangeFeedSince(spark: SparkSession, root: String,
                           tsMillis: Long): DataFrame = {
+    // ONE listing: the anchor's publication times and the latest
+    // snapshot both come from it
+    val (fs, rootPath) = fsRoot(root)
+    val listing = rootListing(fs, rootPath)
     val from =
-      try versionAt(root, tsMillis)
+      try versionIn(timesOf(listing), root, tsMillis)
       catch { case _: IllegalArgumentException => 0L }
-    // an anchor at or after the last commit is the steady-state "any
-    // changes since my last poll?" — an EMPTY feed, not an error
-    if (from >= latestVersion(root)) emptyFeedFrame(spark, snapshot(root))
-    else readChangeFeed(spark, root, from)
+    val snap = snapshotIn(root, fs, rootPath,
+      listing.map(_.getPath.getName), 0L, None)
+    require(snap.version > 0L, s"no committed version 0 at $root")
+    changeFeedOf(spark, snap, from, emptyOk = false)
   }
+
+  /** The change feed over (`fromVersion`, `snap.version`] from `snap`,
+    * resolved by the caller. An anchor at or after `snap` is the
+    * steady-state "any changes since my last poll?": an EMPTY feed, not
+    * an error. */
+  private[graft] def changeFeedOf(spark: SparkSession, snap: Snapshot,
+                                  fromVersion: Long,
+                                  emptyOk: Boolean): DataFrame =
+    if (fromVersion >= snap.version) emptyFeedFrame(spark, snap)
+    else changeFeed(spark, snap, fromVersion, emptyOk)
 
   /** A zero-row frame with the change feed's exact shape (`s`'s table
     * columns + `_change_type` + `_commit_version`) — what a feed over
@@ -3498,22 +3523,28 @@ object Versioned {
     * timestamp). Versions a vacuum retired are simply absent. */
   private def manifestTimes(root: String): Seq[(Long, Long)] = {
     val (fs, rootPath) = fsRoot(root)
-    val statuses =
-      try fs.listStatus(rootPath).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    statuses.flatMap { st =>
+    timesOf(rootListing(fs, rootPath))
+  }
+
+  /** [[manifestTimes]] of one root `listing`. */
+  private def timesOf(listing: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[(Long, Long)] =
+    listing.flatMap { st =>
       versionsOf(Seq(st.getPath.getName), "manifest")
         .map(_ -> st.getModificationTime)
     }.sortBy(_._1)
-  }
 
   /** Highest version whose manifest was PUBLISHED at or before
     * `tsMillis` (epoch millis) — timestamp time travel (Delta's
     * `timestampAsOf`). Fails loudly when the earliest retained commit
     * is after `tsMillis` (before the first commit, or in history a
     * vacuum retired). */
-  def versionAt(root: String, tsMillis: Long): Long = {
-    val times = manifestTimes(root)
+  def versionAt(root: String, tsMillis: Long): Long =
+    versionIn(manifestTimes(root), root, tsMillis)
+
+  /** [[versionAt]] over the (version, publication time) `times`. */
+  private def versionIn(times: Seq[(Long, Long)], root: String,
+                        tsMillis: Long): Long = {
     require(times.nonEmpty, s"no committed version at $root")
     times.reverseIterator.collectFirst { case (v, t) if t <= tsMillis => v }
       .getOrElse(throw new IllegalArgumentException(
@@ -3807,12 +3838,17 @@ object Versioned {
   def readChangeFeed(spark: SparkSession, root: String,
                      fromVersion: Long, toVersion: Long = 0L,
                      emptyOk: Boolean = false)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+      : DataFrame =
     // ONE resolution: `to`'s snapshot (one listing, one open) carries
     // its manifest and the schema-DDL state every feed scan reads with
-    val snap = snapshot(root, toVersion)
-    val (fs, rootPath, to) = (snap.fs, snap.rootPath, snap.version)
+    changeFeed(spark, snapshot(root, toVersion), fromVersion, emptyOk)
+
+  /** [[readChangeFeed]] up to the resolved `snap`. */
+  private def changeFeed(spark: SparkSession, snap: Snapshot,
+                         fromVersion: Long, emptyOk: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val (root, fs, rootPath, to) =
+      (snap.root, snap.fs, snap.rootPath, snap.version)
     require(fromVersion >= 0 && to > fromVersion,
       s"need committed versions $fromVersion < $to at $root " +
         "(fromVersion 0 = since table birth)")

@@ -2,9 +2,11 @@ package graft.util
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftckpt.GenerationBridge
 
-/** Checkpoint utilities for iterative operators. */
+/** Checkpoint and store utilities: the generations of iterative
+  * operators, and frames computed once and read from stored rows. */
 object Ckpt {
   /** One generation of an iterative loop, checkpointed in two steps.
     * `frame` is an RDD leaf, like `localCheckpoint(false)`'s: its rows
@@ -35,6 +37,26 @@ object Ckpt {
       df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
     new Generation(frame, rdd)
   }
+
+  /** `df` computed once: its rows are stored (MEMORY_AND_DISK) and
+    * folded by `f`, one value per partition, in one job of one
+    * "checkpoint" SQL execution (under AQE, after `df`'s earlier
+    * stages). The frame is an RDD leaf over the stored rows that keeps
+    * `df`'s statistics and layout, so plans over it re-run nothing
+    * upstream of the store.
+    *
+    * The rows are never marked for checkpointing. Nothing reads them
+    * across loop rounds, so there is no lineage to cut, and a lazy mark
+    * would be cut by the first job over them, on that job's thread
+    * (the race [[Generation]] avoids). Nor do they go through
+    * `Dataset.persist`, whose CacheManager keeps them until an explicit
+    * unpersist. `persist` registers the RDD with the ContextCleaner,
+    * which frees the stored blocks once the frame and every plan built
+    * on it are unreachable: the caller releases them by dropping them. */
+  def storeFolded[A: scala.reflect.ClassTag](df: DataFrame)(
+      f: Iterator[InternalRow] => A): (DataFrame, Array[A]) =
+    GenerationBridge.storeFolded(
+      df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])(f)
 
   /** Lazy local checkpoint WITHOUT origin-statistics propagation — use
     * this instead of `df.localCheckpoint(false)` inside iterative

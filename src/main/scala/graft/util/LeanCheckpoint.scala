@@ -7,8 +7,11 @@ package org.apache.spark.sql.graftckpt
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution,
+  SQLExecution}
 import org.apache.spark.storage.StorageLevel
+
+import scala.reflect.ClassTag
 
 /** `localCheckpoint` WITHOUT origin-statistics propagation.
   *
@@ -80,11 +83,31 @@ object GenerationBridge {
   def store(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
     val qe = df.queryExecution
     val rdd = SQLExecution.withNewExecutionId(qe, Some("checkpoint"))(
-      qe.executedPlan.execute()).map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (Dataset.ofRows(df.sparkSession,
-      LogicalRDD.fromDataset(rdd, df, isStreaming = false)), rdd)
+      stored(qe))
+    (leaf(df, rdd), rdd)
   }
+
+  /** [[store]] plus one job, inside the same "checkpoint" execution,
+    * that computes and stores every partition and folds its rows with
+    * `f`: one value per partition, in partition order. */
+  def storeFolded[A: ClassTag](df: DataFrame)(
+      f: Iterator[InternalRow] => A): (DataFrame, Array[A]) = {
+    val qe = df.queryExecution
+    val (rdd, folded) =
+      SQLExecution.withNewExecutionId(qe, Some("checkpoint")) {
+        val rdd = stored(qe)
+        (rdd, df.sparkSession.sparkContext.runJob(rdd, f))
+      }
+    (leaf(df, rdd), folded)
+  }
+
+  private def stored(qe: QueryExecution): RDD[InternalRow] =
+    qe.executedPlan.execute().map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  private def leaf(df: DataFrame, rdd: RDD[InternalRow]): DataFrame =
+    Dataset.ofRows(df.sparkSession,
+      LogicalRDD.fromDataset(rdd, df, isStreaming = false))
 
   /** Mark `rdd` for a local checkpoint and checkpoint it now, on the
     * caller's thread: partitions not yet stored are computed by one

@@ -60,6 +60,20 @@ class PlanSpec extends SparkSpec {
     assert(ids.size <= 3, s"jobs before the page: $ids")
   }
 
+  test("a served match page runs one job over the stored rows, never " +
+      "re-scanning the documents") {
+    val (docs, priors) = servedSearchInputs
+    val page = graft.search.Search.search(docs, priors, "spark join window",
+      offset = 10)
+    val ids = BuildJobs.during(spark, "graft.planspec.page") {
+      page.rows.collect(); ()
+    }
+    assert(ids.size == 1, s"page jobs: $ids")
+    val p = page.rows.queryExecution.executedPlan.toString
+    assert(!p.contains("Scan parquet"), p)
+    assert(p.contains("Scan ExistingRDD"), p)
+  }
+
   test("top-k queries plan TakeOrderedAndProject, not a global sort") {
     assert(planOf("q18_cosine_topk").contains("TakeOrderedAndProject"))
     assert(planOf("q08_match_search").contains("TakeOrderedAndProject"))

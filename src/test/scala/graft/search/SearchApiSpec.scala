@@ -43,4 +43,11 @@ class SearchApiSpec extends SparkSpec {
     assert(page.total == 2)
     assert(page.rows.count() == 0)
   }
+
+  test("a search's stored counting pass is freed once its page is dropped") {
+    val (code, out) = graft.ChildJvm.run("graft.search.SearchReleaseCheck",
+      Nil)
+    assert(code == 0 && out.linesIterator.contains("released"),
+      s"exit $code: $out")
+  }
 }

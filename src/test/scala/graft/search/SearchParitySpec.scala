@@ -5,10 +5,12 @@ import graft.util.Exact
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Differential check of the served match path: `Search.search` must
-  * return the same total and the same (doc_id, blended) page as the
-  * postings composition matchScores → blend → searchPage, on the inputs
-  * where a per-row scorer could drift from a per-posting one. */
+/** Differential check of the served search paths: `Search.search` must
+  * return the same total, the same (doc_id, blended) page and the same
+  * columns as the plain compositions, matchScores → blend → searchPage
+  * for a match query and phraseMatch → blend → searchPage for a phrase,
+  * on the inputs where a per-row scorer could drift from a per-posting
+  * one or a stored pass could drift from the plan it stores. */
 class SearchParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,6 +46,14 @@ class SearchParitySpec extends SparkSpec {
       order, offset, 10)
   }
 
+  private def phraseReference(d: DataFrame, p: DataFrame, raw: String,
+                              offset: Int): Search.Page = {
+    val Search.PhraseQuery(phrase) = Search.parseQuery(raw): @unchecked
+    Search.searchPage(Search.blend(Search.phraseMatch(d, phrase)
+      .select(col("doc_id"), lit(1.0).as("score")), p, "doc_id", "prior"),
+      order, offset, 10)
+  }
+
   private def rows(p: Search.Page): Seq[Seq[Any]] =
     p.rows.select(col("doc_id"), Exact.micros(col("blended")))
       .collect().map(_.toSeq).toSeq
@@ -51,9 +61,13 @@ class SearchParitySpec extends SparkSpec {
   private def assertParity(raw: String, offsets: Seq[Int],
                            d: DataFrame = docs,
                            p: DataFrame = priors): Long = {
-    val total = reference(d, p, raw, 0).total
+    val ref = Search.parseQuery(raw) match {
+      case _: Search.PhraseQuery => phraseReference _
+      case _: Search.MatchQuery => reference _
+    }
+    val total = ref(d, p, raw, 0).total
     (offsets :+ (total.toInt + 5)).foreach { off =>
-      val want = reference(d, p, raw, off)
+      val want = ref(d, p, raw, off)
       val got = Search.search(d, p, raw, offset = off)
       assert(got.total == want.total, s"'$raw' @$off total")
       assert(rows(got) == rows(want), s"'$raw' @$off page")
@@ -109,5 +123,35 @@ class SearchParitySpec extends SparkSpec {
       assert(outcome(Search.search(d, priors, q)) ==
         outcome(reference(d, priors, q, 0)), q)
     }
+  }
+
+  test("phrase page and total equal the phraseMatch composition") {
+    val total = assertParity("\"alpha beta\"", Seq(0, 10))
+    assert(total > 10, "the phrase must fill more than one page")
+    assertParity("\"Alpha ALPHA\"", Seq(0, 10))
+    // the null-id row "alpha gamma" holds this phrase
+    assertParity("\"alpha gamma\"", Seq(0, 10))
+    assertParity("\"zeta omega\"", Seq(0))
+  }
+
+  test("phrase parity over duplicate ids, null and blank text, " +
+      "duplicate prior ids") {
+    // every row of id 10 holds the phrase: each is its own blended row
+    val dupDocs = docs.unionByName(docs.filter(col("doc_id") === 10L))
+      .unionByName(Seq((Option(12L), Option("x alpha beta"))).toDF(
+        "doc_id", "text"))
+    val dupPriors = priors.unionByName(
+      Seq((1L, 0.5), (10L, 0.25)).toDF("doc_id", "prior"))
+    val base = assertParity("\"alpha beta\"", Seq(0))
+    assert(assertParity("\"alpha beta\"", Seq(0, 10), d = dupDocs) ==
+      base + 2)
+    assert(assertParity("\"alpha beta\"", Seq(0, 10), p = dupPriors) ==
+      base + 2)
+    assert(assertParity("\"alpha beta\"", Seq(0, 10), d = dupDocs,
+      p = dupPriors) == base + 5)
+    // a blank phrase hits exactly the empty and whitespace-only texts;
+    // null text never matches
+    assert(assertParity("\"\"", Seq(0, 10)) == 2)
+    assert(assertParity("\"  \"", Seq(0)) == 2)
   }
 }

@@ -191,6 +191,30 @@ class SnapshotSpec extends SparkSpec {
       .toSet == (0 until 30).map(i => (i.toLong, i / 10 + 1L)).toSet)
   }
 
+  test("a format(\"graft\") change feed read lists the root once") {
+    val root = countingRoot()
+    (0 until 3).foreach(b => Versioned.commitAppend(urls(b * 10, 10), root))
+    var rows = 0L
+    val (lists, _) = counted(root) {
+      rows = spark.read.format("graft").option("readChangeFeed", "true")
+        .option("startingVersion", "1").load(root).count()
+    }
+    assert(lists == 1, "root listings")
+    assert(rows == 20L)
+  }
+
+  test("readChangeFeedSince lists the root once") {
+    val root = countingRoot()
+    (0 until 3).foreach(b => Versioned.commitAppend(urls(b * 10, 10), root))
+    var feed: org.apache.spark.sql.DataFrame = null
+    // an instant before the first commit feeds from table birth
+    val (lists, _) = counted(root) {
+      feed = Versioned.readChangeFeedSince(spark, root, 0L)
+    }
+    assert(lists == 1, "root listings")
+    assert(feed.count() == 30L)
+  }
+
   test("a pruned read returns the full read's columns") {
     val root = freshRoot()
     Versioned.commitAppend((0L until 5L).map(i => (i, s"n$i")).toDF("id",
