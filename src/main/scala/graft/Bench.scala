@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * earlier ones left behind:
   *  - `clearCache` drops SQL-cached relations an operator persisted;
   *  - every block-manager-resident RDD is unpersisted explicitly —
-  *    `localCheckpoint` blocks live OUTSIDE the SQL cache and otherwise
-  *    linger until the JVM happens to GC the RDD reference, which is
+  *    `graft.util.Ckpt`'s stored blocks live OUTSIDE the SQL cache and
+  *    otherwise linger until the JVM happens to GC the RDD reference, which is
   *    exactly the kind of cross-query memory pressure that made
   *    identical code swing ±25% between bench runs;
   *  - per-query GC time is reported (GRAFT_BENCH_DEBUG=1) so a slow

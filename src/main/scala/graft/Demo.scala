@@ -265,13 +265,13 @@ object Demo {
     println("== user-programmable BSP: BFS hop-depth via graph.Iterate")
     val bfsEdges = wEdges.select("src", "dst")
       .unionAll(wEdges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     val bfsSrc = bfsEdges.agg(min("src")).head().getLong(0)
     val bfsInit = bfsEdges.select(col("src").as("id"))
       .unionAll(bfsEdges.select(col("dst"))).distinct()
       .withColumn("depth",
         when(col("id") === bfsSrc, 0L).otherwise(lit(null)))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     graft.graph.Iterate.run(
         bfsInit,
         sendMsg = f => f.filter(col("depth").isNotNull)

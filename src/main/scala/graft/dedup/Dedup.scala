@@ -571,14 +571,14 @@ object Dedup {
         .filter(col("jaccard") >= threshold)
         .select(col("a"), col("b"), col("jaccard"))
     }
-    // Lazy localCheckpoint, NOT persist: cand feeds two consumers (the
-    // verify join and the touched-ids semi-join), but caching would
+    // A stored leaf (Ckpt.store), NOT persist: cand feeds two consumers
+    // (the verify join and the touched-ids semi-join), but caching would
     // compile the candidate subplan WITHOUT AQE — measured 62.6 s vs
     // 0.8 s for the identical 500k-doc candidate stage at the canary
     // (the prefix self-join + window need the adaptive plan). The
-    // checkpoint dedupes the two reads and keeps AQE.
+    // stored leaf dedupes the two reads and keeps AQE.
     val cand = prefixCandidates(docs, shingleN, threshold, idCol, textCol)
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     // Verify arrays are built ONLY for candidate-touching docs: the
     // broadcast semi-join restricts the corpus in its scan stage, so
     // the shingle-array build + its two join exchanges are candidate-

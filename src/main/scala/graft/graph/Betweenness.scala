@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,8 +46,8 @@ object Betweenness {
   def landmark(edges: DataFrame, seeds: DataFrame, rounds: Int,
                k: Int = 100): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // Partitioned + sorted by each pass's join key before the lazy
-    // checkpoint (the Components/Communities layout law, dual-direction
+    // Partitioned + sorted by each pass's join key before the store
+    // (the Components/Communities layout law, dual-direction
     // like Scc's eSrc/eDst): the forward wave joins on src, the
     // backward dependency pass joins on dst, so each keeps its own
     // stored layout — otherwise every per-round SMJ re-shuffles +
@@ -56,27 +57,26 @@ object Betweenness {
       .distinct()
       .repartition(col("src"))
       .sortWithinPartitions("src")
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val undByDst = und
       .repartition(col("dst"))
       .sortWithinPartitions("dst")
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
 
     // Forward: levels(r) = (id, seed, sigma) for vertices first reached
     // at depth r. The frontier IS the level — delta state only.
-    var levels = Vector(
-      seeds.select(col("id"), col("id").as("seed"), lit(1L).as("sigma"))
-        .localCheckpoint(false))
-    var known = levels.head.select("id", "seed").localCheckpoint(false)
+    val levelGens, knownGens, deltaGens = new Ckpt.Generations // one each
+    var levels = Vector(levelGens.next(
+      seeds.select(col("id"), col("id").as("seed"), lit(1L).as("sigma"))))
+    var known = knownGens.next(levels.head.select("id", "seed"))
     for (_ <- 1 to rounds) {
       val cand = levels.last
         .join(und.withColumnRenamed("src", "id"), Seq("id"))
         .groupBy(col("dst").as("id"), col("seed"))
         .agg(sum(col("sigma")).as("sigma"))
-      val fresh = cand.join(known, Seq("id", "seed"), "left_anti")
-        .localCheckpoint(false)
-      known = known.unionByName(fresh.select("id", "seed"))
-        .localCheckpoint(false)
+      val fresh = levelGens.next(
+        cand.join(known, Seq("id", "seed"), "left_anti"))
+      known = knownGens.next(known.unionByName(fresh.select("id", "seed")))
       levels = levels :+ fresh
     }
 
@@ -108,7 +108,7 @@ object Betweenness {
         .join(sums, Seq("id", "seed"), "left")
         .select(col("id"), col("seed"),
           coalesce(col("dm"), lit(0L)).as("dm"))
-        .localCheckpoint(false)
+        .transform(deltaGens.next)
       acc = acc :+ deltaBelow
     }
 

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -18,8 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *  - the undirected edge table is cached once; per-round frames are
   *    derived from it by semi-joins against the shrinking uncolored set
   *    (no per-round edge materialization);
-  *  - one driver action per round; generations are truncated with lazy
-  *    `localCheckpoint` so the logical plan stays constant-size;
+  *  - one driver action per round; every generation is a stored leaf
+  *    ([[graft.util.Ckpt]]), truncated once the next is built, so the
+  *    logical plan stays constant-size;
   *  - tail cutoff: Luby-style rounds shed a constant fraction per round,
   *    so after O(log V) rounds a tiny residual subgraph pays full
   *    cluster-job latency per round — once it fits comfortably on the
@@ -117,6 +119,7 @@ object Coloring {
         (acc, c) => when(c === acc, acc + 1).otherwise(acc))
 
     val emptyInts = array().cast("array<int>")
+    val uncoloredGens, activeGens = new Ckpt.Generations // one each
     val preColored = init.filter(col("color").isNotNull)
       .select("id", "color")
 
@@ -133,7 +136,7 @@ object Coloring {
           coalesce(col("forbidden"), emptyInts).as("forbidden"))
     else
       init.select(col("id"), col("token"), emptyInts.as("forbidden")))
-      .localCheckpoint(false)
+      .transform(uncoloredGens.next)
 
     // Active edges: both endpoints uncolored, annotated with the dst's
     // token — shrinks monotonically by anti-join against each round's
@@ -147,7 +150,7 @@ object Coloring {
         .join(preColored.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(preColored.select(col("id").as("dst")), Seq("dst"), "left_anti")
     else withTok)
-      .localCheckpoint(false)
+      .transform(activeGens.next)
 
     // Both residual bounds come from ONE job per round: a constant-key
     // union-count over two frames the round must materialize anyway
@@ -197,7 +200,7 @@ object Coloring {
           .filter(col("max_nbr").isNull ||
             struct(col("token"), col("id")) > col("max_nbr"))
           .select(col("id"), mex(col("forbidden")).as("color"))
-      }).localCheckpoint(false)
+      }).transform(Ckpt.store(_))
 
       // Colors won this round flow into still-uncolored neighbours.
       val msgs = active
@@ -212,11 +215,11 @@ object Coloring {
         .select(col("id"), col("token"),
           sort_array(array_union(col("forbidden"),
             coalesce(col("new_forbidden"), emptyInts))).as("forbidden"))
-        .localCheckpoint(false)
+        .transform(uncoloredGens.next)
       active = active
         .join(winners.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(winners.select(col("id").as("dst")), Seq("dst"), "left_anti")
-        .localCheckpoint(false)
+        .transform(activeGens.next)
 
       // The round's single driver action: materializes the winners and
       // next-active checkpoints and returns both residual bounds.
@@ -225,8 +228,8 @@ object Coloring {
 
       doneParts ::= winners
       if (doneParts.length >= foldEvery)
-        doneParts = List(doneParts.reduce(_ unionByName _)
-          .localCheckpoint(false))
+        doneParts = List(
+          Ckpt.generation(doneParts.reduce(_ unionByName _)).truncate())
       remaining -= nWon
       round += 1
       }

@@ -18,16 +18,17 @@ import org.apache.spark.sql.functions._
   *    oscillation), each neighbor votes once;
   *  - new label = the most-voted label, ties to the SMALLEST label.
   * Fixed `rounds` supersteps with no probe action, so a SQL oracle can
-  * unroll the run round for round (building each checkpointed
-  * generation still runs its shuffle stages under AQE).
+  * unroll the run round for round (building each stored generation
+  * still runs its shuffle stages under AQE).
   *
   * Superstep shape — identical scaling posture to PageRank's: one join
   * of the label table against the staticly-partitioned edge table
   * (shuffle ∝ labels, edges never move after the one-time layout), one
   * (id, lab)-keyed count (map-side combinable), one id-keyed argmax via
   * `max(struct(cnt, -lab))` — an ordinary hash-agg, NOT a window, so no
-  * per-group sort anywhere. Lazy `localCheckpoint` generations bound
-  * the plan depth exactly as in PageRank/Components.
+  * per-group sort anywhere. [[Iterate]]'s stored generations
+  * ([[graft.util.Ckpt]]) bound the plan depth exactly as in
+  * PageRank/Components.
   */
 object Communities {
 
@@ -40,10 +41,10 @@ object Communities {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // Checkpoint: the symmetric edge table materializes once and every
+    // Stored: the symmetric edge table materializes once and every
     // superstep generation reuses its blocks (the KCore pattern).
-    // Partitioned AND sorted by the join key BEFORE the checkpoint
-    // (LogicalRDD carries both through): each round's sort-merge join
+    // Partitioned AND sorted by the join key BEFORE the store (the
+    // stored leaf carries both through): each round's sort-merge join
     // then re-shuffles/re-sorts only the V-row label side — without
     // this, distinct's (src, dst) partitioning forced a full 2E-row
     // edge exchange + sort EVERY round (measured 5.5 → 3.5 s on q82's
@@ -53,11 +54,11 @@ object Communities {
       .distinct()
       .repartition(col("src"))
       .sortWithinPartitions("src")
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
 
     val init = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
 
     // Delegated to the superstep kernel with fixed rounds (earlyStop
     // off → no probe action): every vertex stays

@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   *  - the input pair pipeline (often an expensive minhash near-dup job)
   *    is persisted and materialized ONCE before the forward+reverse
   *    union references it twice.
-  *  - the [[Iterate]] kernel's `localCheckpoint` per generation keeps
+  *  - the [[Iterate]] kernel's stored generation per superstep keeps
   *    the logical plan constant-size; with `earlyStop = false` the
   *    fixed round count takes no probe action (the shape the unrolled
   *    SQL oracle checks; under AQE building each generation still runs
@@ -42,7 +42,7 @@ object Components {
     val init = und.select(col("src").as("id"))
       .distinct()
       .withColumn("component", col("id"))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     // Round 0 frontier = every vertex — its own label is "news".
     propagate(und, init, None, maxRounds, earlyStop)
   }
@@ -81,7 +81,7 @@ object Components {
       .join(snapshot.select(col("id"), col("component").as("snap")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("snap"), col("id")).as("component"))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     val frontier = delta.select(col("a").as("id"))
       .union(delta.select(col("b").as("id")))
       .distinct()

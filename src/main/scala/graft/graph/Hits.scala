@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,9 +32,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: identical to one PageRank superstep — two keyed
   * shuffles per iteration (messages grouped by dst, then by src), edge
-  * table persisted once, score frames kept plan-constant via
-  * localCheckpoint generations (under AQE, building each one runs its
-  * shuffle stages).
+  * table stored once, score frames kept plan-constant as stored
+  * generations ([[graft.util.Ckpt]]; under AQE, building each one runs
+  * its shuffle stages), each truncated once the next is built.
   */
 object Hits {
 
@@ -44,7 +45,7 @@ object Hits {
     val spark = edges.sparkSession
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val nEdges = e.count()
     val nPart = GraphUtil.partitionLaw(nEdges, spark)
     // TWO cached edge layouts, one per join key of the mutual
@@ -52,14 +53,14 @@ object Hits {
     // on dst. With only the src layout, every hub step re-shuffled and
     // re-sorted the E-sized edge table to the dst key — per iteration.
     // With both layouts cached (partitioned AND sorted by their key,
-    // which localCheckpoint preserves), each step's sort-merge join
+    // which their stored leaves keep), each step's sort-merge join
     // exchanges only the V-sized score frame; the edge table never
     // moves again. Costs one extra E-sized shuffle at init — repaid by
     // the first iteration.
     val eCached = e.repartition(nPart, col("src"))
-      .sortWithinPartitions("src").localCheckpoint(false)
+      .sortWithinPartitions("src").transform(Ckpt.store(_))
     val eByDst = e.repartition(nPart, col("dst"))
-      .sortWithinPartitions("dst").localCheckpoint(false)
+      .sortWithinPartitions("dst").transform(Ckpt.store(_))
 
     // Overflow guard: exact worst-case growth bound from the real
     // degree profile — two tiny independent aggs, computed in ONE
@@ -81,21 +82,18 @@ object Hits {
       .union(eCached.select(col("dst").as("id")))
       .distinct()
       .repartition(nPart, col("id"))
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
 
     var hub: DataFrame = verts.withColumn("hub", lit(1L))
     var auth: DataFrame = null
+    val auths, hubs = new Ckpt.Generations // one instance each
     for (k <- 1 to iters) {
       // auth_k = Σ hub_{k-1} over in-edges; vertices with no in-edges
       // simply don't appear (score 0, restored by the final left join).
-      auth = eCached.join(hub.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))
-        .localCheckpoint(false)
-      hub = eByDst.join(auth.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
-      // Keep the loop's logical plan constant-size (under AQE building
-      // the checkpoint runs the generation's shuffle stages).
-      hub = hub.localCheckpoint(false)
+      auth = auths.next(eCached.join(hub.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id")).agg(sum("hub").as("auth")))
+      hub = hubs.next(eByDst.join(auth.withColumnRenamed("id", "dst"), "dst")
+        .groupBy(col("src").as("id")).agg(sum("auth").as("hub")))
     }
     verts
       .join(hub, Seq("id"), "left")

@@ -37,24 +37,24 @@ object HyperBall {
     * integer micros before the exact BIGINT sum. */
   def run(edges: DataFrame, p: Int = 5, hops: Int = 2): DataFrame = {
     require(hops >= 1, s"hops must be >= 1, got $hops")
-    // Partitioned + sorted by the per-hop join key before the lazy
-    // checkpoint, so each hop's SMJ re-shuffles only the register
-    // table, never the edge table (the Components/Communities layout
-    // law).
+    // Partitioned + sorted by the per-hop join key before the store,
+    // so each hop's SMJ re-shuffles only the register table, never the
+    // edge table (the Components/Communities layout law).
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
       .repartition(col("dst"))
       .sortWithinPartitions("dst")
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
     // B_0(v) = sketch of {v}: exactly one (idx, rho) observation.
+    val gens = new graft.util.Ckpt.Generations
     var b = Sketches.hllObservationsKeyed(
         verts, Seq(col("id")), col("id").cast("string"), p)
       .withColumnRenamed("rho", "m_rho")
-      .localCheckpoint(false)
+      .transform(gens.next)
 
     def hopTotal(regs: DataFrame, hop: Int): DataFrame =
       Sketches.hllEstimateGrouped(regs, Seq("id"), p)
@@ -69,7 +69,7 @@ object HyperBall {
         .select(col("src").as("id"), col("idx"), col("m_rho"))
       b = b.unionByName(msgs)
         .groupBy("id", "idx").agg(max("m_rho").as("m_rho"))
-        .localCheckpoint(false)
+        .transform(gens.next)
       out = out.unionByName(hopTotal(b, t))
     }
     out.orderBy("hop")

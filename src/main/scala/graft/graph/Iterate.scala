@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * the message, combine and vertex programs; the kernel owns the loop
   * discipline:
   *
-  *  - **one `localCheckpoint` per generation**: each superstep's state
-  *    is lineage-truncated so the logical plan stays constant-size over
-  *    hundreds of rounds (an unchecked loop doubles the plan per round);
+  *  - **one [[graft.util.Ckpt.Generation]] per superstep**: each
+  *    superstep's state is a stored leaf, so the logical plan stays
+  *    constant-size over hundreds of rounds (an unchecked loop doubles
+  *    the plan per round), and the previous generation's lineage is cut
+  *    once the next is built;
   *  - **sparse activation**: `vprog` marks per-vertex change with a
   *    boolean `changed` column; only changed vertices stay in the active
   *    frontier that feeds the next round's `sendMsg`, so message volume
@@ -19,8 +21,8 @@ import org.apache.spark.sql.functions._
   *  - **vote-to-halt**: with `earlyStop` the loop probes frontier
   *    emptiness with a `limit(1)` count, one driver action per round.
   *    Without it the loop takes no probe action, but it is not job-free:
-  *    under AQE (the session default) building each `localCheckpoint`
-  *    generation runs that generation's shuffle stages.
+  *    under AQE (the session default) building each generation runs
+  *    its shuffle stages.
   *
   * Callers: [[Components]] (cold and warm), [[Communities.labelPropagation]],
   * [[TemporalReach]], [[Scc]] (forward colouring and backward
@@ -79,12 +81,13 @@ object Iterate {
       .getOrElse(init)
     var round = 0
     var converged = false
+    val gens = new graft.util.Ckpt.Generations
     while (round < maxRounds && !converged) {
       val msgs = mergeMsg(sendMsg(active))
       val next = vprog(state, msgs)
       require(next.columns.contains("changed"),
         "vprog must emit a boolean `changed` column (sparse activation)")
-      val gen = next.localCheckpoint(false)
+      val gen = gens.next(next)
       state = gen.drop("changed")
       active = gen.filter(col("changed")).drop("changed")
       converged = earlyStop && active.limit(1).count() == 0

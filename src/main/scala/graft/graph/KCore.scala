@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * Shape per round: one degree aggregation (map-side combinable) + two
   * semi-joins restricting the edge table to surviving endpoints — all
   * keyed shuffles, no driver data. With `earlyStop = false` the run
-  * takes no count action (localCheckpoint generations cut the lineage;
-  * under AQE building each one still runs its shuffle stages) so a SQL
+  * takes no count action (stored generations, each truncated once the
+  * next is built; under AQE building each one still runs its shuffle
+  * stages) so a SQL
   * oracle can unroll it round for round; with `earlyStop = true` the
   * only driver value per round
   * is the surviving-edge count (one action), stopping when a round
@@ -30,8 +31,8 @@ object KCore {
   /** One peel round: drop every edge with an endpoint of degree < k in
     * `e` (the symmetric edge table). Degree = one map-side-combinable
     * agg; survivor restriction = two semi-joins — the per-round plan
-    * shape PlanSpec pins (the `run` loop truncates each generation with
-    * localCheckpoint, so the final plan alone can't show it). */
+    * shape PlanSpec pins (the `run` loop stores each generation as an
+    * RDD leaf, so the final plan alone can't show it). */
   private[graft] def peelOnce(e: DataFrame, k: Int): DataFrame = {
     val keep = e.groupBy("src")
       .agg(count(lit(1)).as("c"))
@@ -51,15 +52,15 @@ object KCore {
     val und = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
 
     var e = und
     var prev = -1L
     var done = false
     var r = 0
+    val gens = new graft.util.Ckpt.Generations
     while (r < rounds && !done) {
-      val next = peelOnce(e, k)
-        .localCheckpoint(false)
+      val next = gens.next(peelOnce(e, k))
       if (earlyStop) {
         val n = next.count()
         if (n == prev) done = true

@@ -32,8 +32,8 @@ object Landmarks {
     * `seeds` is a single-column ("id") vertex set. */
   def bfs(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // Partitioned + sorted by the join key before the checkpoint
-    // (LogicalRDD carries both through): each round's frontier join
+    // Partitioned + sorted by the join key before the store (the stored
+    // leaf carries both through): each round's frontier join
     // re-shuffles only the frontier, not the 2E-row edge table — the
     // same layout law as Components/Communities.
     val und = edges.select(col("src"), col("dst"))
@@ -41,11 +41,11 @@ object Landmarks {
       .distinct()
       .repartition(col("src"))
       .sortWithinPartitions("src")
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
 
     Iterate.run(
-      seeds.select(col("id"), col("id").as("seed"), lit(0).as("dist"))
-        .localCheckpoint(false),
+      graft.util.Ckpt.store(
+        seeds.select(col("id"), col("id").as("seed"), lit(0).as("dist"))),
       sendMsg = frontier => frontier
         .join(und.withColumnRenamed("src", "id"), Seq("id"))
         .select(col("dst").as("id"), col("seed"),

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -68,6 +69,19 @@ object Louvain {
     val deg = degrees(wedges)
     core(e2, deg, deg.agg(sum("k").as("m2")), labels, allowUp)
   }
+
+  /** Louvain's frames are stored with the default leaf estimate
+    * (`originStats = false`, see [[Ckpt.generation]]): a round reads
+    * the previous labels four times, so carried estimates compound. */
+  private def lean(df: DataFrame): DataFrame =
+    Ckpt.store(df, originStats = false)
+
+  /** [[bothWays]] stored hash-partitioned by `dst`, the key of every
+    * round's neighbor-label join, so no round exchanges the edge union.
+    * `rows`: the caller's estimate of `wedges`' row count. */
+  private def storedBothWays(we: DataFrame, rows: Long): DataFrame =
+    lean(bothWays(we).repartition(
+      GraphUtil.partitionLaw(rows, we.sparkSession), col("dst")))
 
   /** Both-orientation non-self edges (src, dst, w). */
   private def bothWays(wedges: DataFrame): DataFrame = {
@@ -203,24 +217,24 @@ object Louvain {
     * Returns (labels, rounds run, vertices moved, final qnum). The
     * convergence test costs one label-join aggregation + ONE driver
     * scalar per round — the same cardinality discipline as PageRank's
-    * convergence driver (G5); labels are per-round localCheckpoints
+    * convergence driver (G5); labels are per-round stored generations
     * for the same 4×-reference lineage reason as [[run]]. */
   def moveUntilConverged(wedges: DataFrame, roundCap: Int)
       : (DataFrame, Int, Long, java.math.BigDecimal) = {
     require(roundCap >= 2, s"need >= 2 rounds for a down+up pair")
-    val we = wedges.transform(graft.util.Ckpt.lean)
-    val e2 = bothWays(we).transform(graft.util.Ckpt.lean)
-    val deg = degrees(we).transform(graft.util.Ckpt.lean)
+    val we = lean(wedges)
+    val e2 = storedBothWays(we, GraphUtil.estimatedRows(wedges))
+    val deg = lean(degrees(we))
     val m2 = deg.agg(sum("k").as("m2"))
     var lab = deg.select(col("id"), col("id").as("lab"))
     var q = qNum(we, e2, deg, lab)
     var r = 0
     var stableStreak = 0
     var totalMoved = 0L
+    val gens = new Ckpt.Generations(originStats = false)
     while (r < roundCap && stableStreak < 2) {
       r += 1
-      val next = core(e2, deg, m2, lab, allowUp = r % 2 == 0)
-        .transform(graft.util.Ckpt.lean)
+      val next = gens.next(core(e2, deg, m2, lab, allowUp = r % 2 == 0))
       // ONE driver action per round (was two): moved-count and the
       // exact modularity numerator are independent aggregates over the
       // same checkpointed label generation, so crossJoining their
@@ -262,8 +276,10 @@ object Louvain {
     * lifted through every level plus the per-level trace. */
   def runConverged(edges: DataFrame, levels: Int, roundCap: Int = 10)
       : (DataFrame, Seq[LevelTrace]) = {
-    var wedges = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .transform(graft.util.Ckpt.lean)
+    // one instance each: the levels' edges and the lifted labels
+    val levelGens, liftGens = new Ckpt.Generations(originStats = false)
+    var wedges = levelGens.next(
+      edges.select(col("src"), col("dst"), lit(1L).as("w")))
     val m2 = bothWays(wedges).agg(sum("w")).first().getLong(0)
     def micros(q: java.math.BigDecimal): Long =
       math.floor(q.doubleValue() / (m2.toDouble * m2.toDouble) * 1e6
@@ -280,42 +296,41 @@ object Louvain {
         lab.select("lab").distinct().count(), micros(q))
       lifted =
         if (lifted == null) lab
-        else lifted.select(col("id"), col("lab").as("mid"))
+        else liftGens.next(lifted.select(col("id"), col("lab").as("mid"))
           .join(lab.select(col("id").as("mid"), col("lab")), "mid")
-          .drop("mid").transform(graft.util.Ckpt.lean)
+          .drop("mid"))
       fixpoint = moved == 0L ||
         (prevQ != null && q.compareTo(prevQ) == 0)
       prevQ = q
       if (lv < levels && !fixpoint)
-        wedges = coarsenWeighted(wedges, lab).transform(graft.util.Ckpt.lean)
+        wedges = levelGens.next(coarsenWeighted(wedges, lab))
     }
     (lifted, trace.toSeq)
   }
 
   /** `rounds` synchronized move rounds from singleton communities,
     * alternating down/up (odd rounds move down). Each generation is a
-    * lazy localCheckpoint: a round references the previous labels four
-    * times (totals, neighbor counts, candidates, current), so an un-cut
+    * stored leaf ([[Ckpt.Generations]]): a round references the previous
+    * labels four times (totals, neighbor counts, candidates, current),
+    * so an un-cut
     * lineage re-executes every earlier round 4× per reference —
     * exponential in round count (the q228 A/B: 19.0 s lazy-chained vs
     * 4.1 s checkpointed at sf0.1 for two rounds). Round-invariants
-    * (e2, degrees, 2W) are computed once against the checkpointed e2,
-    * never the caller's edge expression. */
+    * (e2, degrees, 2W) are computed once against the stored e2, never
+    * the caller's edge expression. */
   def run(edges: DataFrame, rounds: Int): DataFrame = {
-    // checkpoint the source once: bothWays references its input twice
+    // store the source once: bothWays references its input twice
     // (the two union branches), which would re-run an expensive caller
     // edge derivation per branch
-    val we = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .transform(graft.util.Ckpt.lean)
-    val e2 = bothWays(we).transform(graft.util.Ckpt.lean)
-    val deg = e2.select(col("src").as("id"), col("w"))
-      .groupBy("id").agg(sum("w").as("k"))
-      .transform(graft.util.Ckpt.lean)
+    val we = lean(edges.select(col("src"), col("dst"), lit(1L).as("w")))
+    val e2 = storedBothWays(we, GraphUtil.estimatedRows(edges))
+    val deg = lean(e2.select(col("src").as("id"), col("w"))
+      .groupBy("id").agg(sum("w").as("k")))
     val m2 = deg.agg(sum("k").as("m2"))
     var lab = deg.select(col("id"), col("id").as("lab"))
+    val gens = new Ckpt.Generations(originStats = false)
     for (r <- 1 to rounds)
-      lab = core(e2, deg, m2, lab, allowUp = r % 2 == 0)
-        .transform(graft.util.Ckpt.lean)
+      lab = gens.next(core(e2, deg, m2, lab, allowUp = r % 2 == 0))
     lab
   }
 }

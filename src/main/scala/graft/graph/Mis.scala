@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,12 +47,12 @@ object Mis {
     // no distinct: duplicate edges are harmless (min/semi-join logic is
     // multiset-tolerant), and dropping the dedup saves a full-width
     // shuffle of the biggest table in the loop
-    var live = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    var undecided = live.select(col("src").as("id")).distinct()
-      .select(col("id"), xxhash64(col("id")).as("prio"))
-      .localCheckpoint(false)
+    val liveGens, undecidedGens = new Ckpt.Generations // one each
+    var live = liveGens.next(edges.select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    var undecided = undecidedGens.next(
+      live.select(col("src").as("id")).distinct()
+        .select(col("id"), xxhash64(col("id")).as("prio")))
     var decided = spark.emptyDataFrame
       .select(lit(0L).as("id"), lit(false).as("in_mis")).limit(0)
 
@@ -70,28 +71,26 @@ object Mis {
         .filter(col("min_nbr").isNull ||
           struct(col("prio").as("p"), col("id").as("i")) < col("min_nbr"))
         .select("id")
-        .localCheckpoint(false)
+        .transform(Ckpt.store(_))
       val dominated = live
         .join(joiners.withColumnRenamed("id", "src"), Seq("src"),
           "left_semi")
         .select(col("dst").as("id")).distinct()
-        .localCheckpoint(false) // never contains a joiner (strict order)
+        .transform(Ckpt.store(_)) // never contains a joiner (strict order)
 
-      // decided pieces are already checkpointed — accumulate lazily
+      // decided pieces are already stored — accumulate lazily
       decided = decided
         .unionAll(joiners.select(col("id"), lit(true).as("in_mis")))
         .unionAll(dominated.select(col("id"), lit(false).as("in_mis")))
-      undecided = undecided
-        .join(joiners.unionAll(dominated), Seq("id"), "left_anti")
-        .localCheckpoint(false)
+      undecided = undecidedGens.next(undecided
+        .join(joiners.unionAll(dominated), Seq("id"), "left_anti"))
       if (undecided.limit(1).count() == 0) done = true
       else {
         val ids = undecided.select("id")
-        live = live
+        live = liveGens.next(live
           .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .localCheckpoint(false)
+          .select("src", "dst"))
       }
       round += 1
     }

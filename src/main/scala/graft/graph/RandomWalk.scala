@@ -32,20 +32,20 @@ object RandomWalk {
     * (start, step, vertex), step 0 = the start itself. */
   def walks(edges: DataFrame, steps: Int, seed: String): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    // Partitioned + sorted by the per-step join key before the lazy
-    // checkpoint, so each step's SMJ re-shuffles only the |V|-row walk
-    // state, never the edge table (the Components/Communities layout
-    // law).
+    // Partitioned + sorted by the per-step join key before the store,
+    // so each step's SMJ re-shuffles only the |V|-row walk state, never
+    // the edge table (the Components/Communities layout law).
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
       .repartition(col("src"))
       .sortWithinPartitions("src")
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
+    val gens = new graft.util.Ckpt.Generations
     var state = verts.select(col("id").as("start"), col("id").as("cur"))
-      .localCheckpoint(false)
+      .transform(gens.next)
     var visits = state.select(col("start"), lit(0).as("step"),
       col("cur").as("vertex"))
     for (k <- 1 to steps) {
@@ -56,7 +56,7 @@ object RandomWalk {
         .groupBy("start")
         .agg(min(struct(col("h"), col("dst"))).as("m"))
         .select(col("start"), col("m.dst").as("cur"))
-        .localCheckpoint(false)
+        .transform(gens.next)
       visits = visits.unionByName(next.select(col("start"),
         lit(k).as("step"), col("cur").as("vertex")))
       state = next

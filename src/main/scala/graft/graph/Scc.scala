@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,15 +46,17 @@ object Scc {
     * (id, scc) where scc = max member id of the vertex's SCC. */
   def run(edges: DataFrame, maxOuterRounds: Int = 40,
           maxInnerRounds: Int = 200): DataFrame = {
-    // Checkpointed: verts, the layout gate's count and the edge layouts
-    // all descend from this distinct — without the checkpoint each one
+    // Stored: verts, the layout gate's count and the edge layouts all
+    // descend from this distinct — without the store each one
     // re-executes it (Spark doesn't dedupe common subtrees).
     val clean = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
-      .localCheckpoint(false)
-    var verts = clean.select(col("src").as("id"))
+      .transform(Ckpt.store(_))
+    // the residue's vertices and its two edge layouts, per peel
+    val vertGens, srcGens, dstGens = new Ckpt.Generations
+    var verts = vertGens.next(clean.select(col("src").as("id"))
       .union(clean.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
+      .distinct())
     // Two stored layouts of the (per-outer-round static) residue edge
     // table — forward coloring joins on src every inner round, the
     // backward containment walk on dst: two layout shuffles per peel
@@ -66,13 +69,12 @@ object Scc {
     // per-round driver probes.
     val loops = clean.filter(col("src") =!= col("dst"))
     val useLayout = loops.count() >= 200000L
-    def layout(df: DataFrame, key: String): DataFrame =
-      if (useLayout)
-        df.repartition(col(key)).sortWithinPartitions(key)
-          .localCheckpoint(false)
-      else df.localCheckpoint(false)
-    var eSrc = layout(loops, "src")
-    var eDst = if (useLayout) layout(eSrc, "dst") else eSrc
+    def layout(df: DataFrame, key: String, gens: Ckpt.Generations) =
+      gens.next(
+        if (useLayout) df.repartition(col(key)).sortWithinPartitions(key)
+        else df)
+    var eSrc = layout(loops, "src", srcGens)
+    var eDst = if (useLayout) layout(eSrc, "dst", dstGens) else eSrc
 
     var result: DataFrame = null
     var outer = 0
@@ -81,7 +83,7 @@ object Scc {
         s"SCC did not finish in $maxOuterRounds outer rounds")
       // -- 1. forward max-color fixpoint (delta frontier) --------------
       val fw = Iterate.run(
-        verts.withColumn("color", col("id")).localCheckpoint(false),
+        Ckpt.store(verts.withColumn("color", col("id"))),
         sendMsg = frontier => frontier
           .join(eSrc.withColumnRenamed("src", "id"), Seq("id"))
           .select(col("dst").as("id"), col("color").as("cand")),
@@ -102,7 +104,7 @@ object Scc {
       val bw = Iterate.run(
         colors.filter(col("color") === col("id"))
           .select(col("id"), col("id").as("scc"))
-          .localCheckpoint(false),
+          .transform(Ckpt.store(_)),
         sendMsg = frontier => frontier
           .join(eDst.withColumnRenamed("dst", "id"), Seq("id"))
           .select(col("src").as("id"), col("scc"))
@@ -121,14 +123,14 @@ object Scc {
 
       result = if (result == null) reached else result.union(reached)
       // -- 4. peel the extracted SCCs out of the residue ---------------
-      verts = verts.join(reached.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(false)
+      verts = vertGens.next(
+        verts.join(reached.select("id"), Seq("id"), "left_anti"))
       val gone = reached.select("id")
       eSrc = layout(eSrc
         .join(gone.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .join(gone.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-        .select("src", "dst"), "src")
-      eDst = if (useLayout) layout(eSrc, "dst") else eSrc
+        .select("src", "dst"), "src", srcGens)
+      eDst = if (useLayout) layout(eSrc, "dst", dstGens) else eSrc
       outer += 1
     }
     result
@@ -166,13 +168,13 @@ object Scc {
              maxInnerRounds: Int = 200): DataFrame = {
     val clean = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val ids = clean.select(col("src").as("id"))
       .union(clean.select(col("dst").as("id")))
       .distinct()
     val labels = ids.join(snapshot, Seq("id"), "left")
       .select(col("id"), coalesce(col("scc"), col("id")).as("label"))
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val quotient = clean
       .join(labels.select(col("id").as("src"), col("label").as("qsrc")),
         Seq("src"))

@@ -75,7 +75,7 @@ object ShortestPath {
     // predecessor sentinel in that same type.
     val source = spark.range(1).select(lit(sourceId).as("id"),
         lit(0L).as("dist"), lit(0).as("hops"), lit(noPrev).as("prev"))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     val sp = struct(col("dist"), col("hops"), col("prev")).as("sp")
     Iterate.run(
       source,
@@ -119,6 +119,7 @@ object ShortestPath {
     val s = st.persist(StorageLevel.MEMORY_AND_DISK)
     var walk = s.select(col("id"), col("dist"),
       array(col("id")).as("path"), col("id").as("head"))
+    val gens = new graft.util.Ckpt.Generations
     for (_ <- 0 until maxSteps) {
       walk = walk
         .join(s.select(col("id").as("head"), col("prev").as("ph")),
@@ -128,7 +129,7 @@ object ShortestPath {
             .otherwise(concat(array(col("ph")), col("path"))).as("path"),
           when(col("ph") === "", col("head"))
             .otherwise(col("ph")).as("head"))
-        .localCheckpoint(false)
+        .transform(gens.next)
     }
     walk.select(col("id"), col("dist"),
       concat_ws("->", col("path")).as("path"))

@@ -41,7 +41,7 @@ object TemporalReach {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val init = seeds.select(col("id"), col("arr"))
       .groupBy("id").agg(min("arr").as("arr"))
-      .localCheckpoint(false)
+      .transform(graft.util.Ckpt.store(_))
     Iterate.run(
       init = init,
       sendMsg = active => active.join(e,

@@ -116,7 +116,7 @@ object Triangles {
               (col("degree") * (col("degree") - 1)))
             .otherwise(lit(0.0)))
       // materialize before dropping the caches the plan depends on
-      out.localCheckpoint(eager = true)
+      graft.util.Ckpt.generation(out).truncate()
     } finally {
       p.oriented.unpersist(blocking = false)
       p.canon.unpersist(blocking = false)

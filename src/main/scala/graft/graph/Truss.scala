@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * two-join pattern [[Triangles]] uses — explode each into its three
   * edges, count support per edge (one hash-agg, map-side combinable),
   * drop edges below k−2, repeat. Like [[KCore]], `earlyStop = false`
-  * takes no count action (localCheckpoint generations; under AQE
-  * building each one still runs its shuffle stages) so a SQL oracle
+  * takes no count action (stored generations, each truncated once the
+  * next is built; under AQE building each one still runs its shuffle
+  * stages) so a SQL oracle
   * can unroll the rounds; with
   * `earlyStop = true` the only per-round driver value is the surviving
   * edge count, and an unchanged count is the fixpoint (peeling is
@@ -51,15 +52,15 @@ object Truss {
   def run(edges: DataFrame, k: Int, rounds: Int,
           earlyStop: Boolean = true): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var e = canon(edges).localCheckpoint(false)
+    val gens = new graft.util.Ckpt.Generations
+    var e = gens.next(canon(edges))
     var prev = -1L
     var done = false
     var r = 0
     while (r < rounds && !done) {
-      val next = e
+      val next = gens.next(e
         .join(support(e).filter(col("supp") >= k - 2),
-          Seq("u", "v"), "left_semi")
-        .localCheckpoint(false)
+          Seq("u", "v"), "left_semi"))
       if (earlyStop) {
         val n = next.count()
         if (n == prev) done = true

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.Ckpt
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -63,7 +64,7 @@ object Ivf {
       .select(row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("h")).cast("long").as("cluster"),
         asDouble(col(vecCol)).as("centroid"))
-      .localCheckpoint() // tiny: k rows, eager
+.transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
 
     for (_ <- 0 until iters) {
       val assigned = assign(data, centroids, idCol, vecCol)
@@ -78,7 +79,7 @@ object Ivf {
         .agg(transform(
           sort_array(collect_list(struct(col("i"), col("m")))),
           s => s.getField("m")).as("centroid"))
-        .localCheckpoint()
+        .transform(Ckpt.generation(_).truncate())
     }
 
     val assignments = assign(data, centroids, idCol, vecCol)
@@ -124,7 +125,7 @@ object Ivf {
       .agg(transform(
         sort_array(collect_list(struct(col("i"), col("m")))),
         s => s.getField("m")).as("centroid"))
-      .localCheckpoint() // tiny: k rows, eager
+.transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
     Index(assign(index.assignments.select(col(idCol), col(vecCol)),
       newCents, idCol, vecCol), newCents)
   }

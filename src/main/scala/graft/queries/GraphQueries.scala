@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Ckpt
 import graft.graph.{Coloring, PageRank, ShortestPath}
 
 /** Iterative-graph queries over a link graph derived from the testdata
@@ -972,9 +973,9 @@ object GraphQueries {
             (col("l_orderkey") * 2).as("src"),
             (col("l_partkey") * 2 + 1).as("dst"))
           .distinct()
-          .localCheckpoint(false)
+          .transform(Ckpt.store(_))
         val colors = Coloring.runFromEdges(edges, speculative = true)
-          .localCheckpoint(false) // truncate the loop lineage; reused 3×
+          .transform(Ckpt.store(_)) // stored once; reused 3×
         val violations = edges
           .join(colors.select(col("id").as("src"), col("color").as("csrc")),
             Seq("src"))
@@ -1016,8 +1017,8 @@ object GraphQueries {
             (col("l_orderkey") * 2).as("src"),
             (col("l_partkey") * 2 + 1).as("dst"))
           .distinct()
-          .localCheckpoint(false)
-        val mis = graft.graph.Mis.run(edges).localCheckpoint(false)
+          .transform(Ckpt.store(_))
+        val mis = graft.graph.Mis.run(edges).transform(Ckpt.store(_))
         val flagged = edges
           .join(mis.select(col("id").as("src"), col("in_mis").as("msrc")),
             Seq("src"))
@@ -1372,7 +1373,7 @@ object GraphQueries {
           .distinct()
         val snapshot = PageRank.run(verts, edges, damping = 0.85,
             maxIter = 3, stopTol = None, gridSnap = Some(1e9))
-          .scores.localCheckpoint(false)
+          .scores.transform(Ckpt.store(_))
         PageRank.run(verts, edges, damping = 0.85, maxIter = 2,
             stopTol = None, gridSnap = Some(1e9),
             initScores = Some(snapshot))
@@ -1496,14 +1497,14 @@ object GraphQueries {
           .select((col("l_orderkey") * 2).as("src"),
             (col("l_partkey") * 2 + 1).as("dst"))
           .distinct()
-          .localCheckpoint(false) // consumed by run() AND coarsen()
+          .transform(Ckpt.store(_)) // consumed by run() AND coarsen()
         val lab2 = graft.graph.Louvain.run(edges, rounds = 2)
         val wed = graft.graph.Louvain.coarsen(edges, lab2)
-          .localCheckpoint(false)
+          .transform(Ckpt.store(_))
         val init = wed.select(col("src").as("id"))
           .union(wed.select(col("dst").as("id")))
           .distinct().select(col("id"), col("id").as("lab"))
-          .localCheckpoint(false) // referenced 4x inside the round
+          .transform(Ckpt.store(_)) // referenced 4x inside the round
         val lab3 = graft.graph.Louvain
           .moveRoundWeighted(wed, init, allowUp = false)
         lab2.select(col("id"), col("lab").as("c2"))
@@ -1699,7 +1700,7 @@ object GraphQueries {
         .select((col("l_orderkey") * 2).as("src"),
           (col("l_partkey") * 2 + 1).as("dst"))
         .distinct()
-        .localCheckpoint(false) // moveRound reads it from both union sides
+        .transform(Ckpt.store(_)) // moveRound reads it from both union sides
       import graft.store.Versioned
       val root = s"/tmp/graft_warm_louvain_${math.abs(dir.hashCode)}"
       val srcMtime = graft.util.FsMeta.mtime(s"$dir/lineitem.parquet")

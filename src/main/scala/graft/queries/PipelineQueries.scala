@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Ckpt
 import graft.operators.Sampling
 import graft.util.Exact
 
@@ -210,10 +211,10 @@ object PipelineQueries {
           .filter(col("c_mktsegment") === "BUILDING")
           .select(col("c_custkey").as("k"))
         // The bit table feeds all 3 probes plus its own count — truncate
-        // once (KCore lazy-checkpoint pattern) so the dimension scan
+        // once (a stored leaf, Ckpt.store) so the dimension scan
         // doesn't re-run per consumer.
         val bits = RuntimeFilter.bloomBits(cust, col("k"), k = 3,
-          mBits = 4096).localCheckpoint(false)
+          mBits = 4096).transform(Ckpt.store(_))
         val orders = Tables.orders(s, dir)
         val pass = RuntimeFilter.probe(orders, col("o_custkey"), bits,
           k = 3, mBits = 4096)
@@ -1733,7 +1734,7 @@ object PipelineQueries {
               (lit(1.0) - col("l_discount"))).as("cents"))
           .groupBy("l_partkey")
           .agg(sum("cents").as("rev_cents"))
-          .localCheckpoint(false) // reused by the total AND the filter
+          .transform(Ckpt.store(_)) // reused by the total AND the filter
         val tot = perPart.agg(sum("rev_cents").as("tot"),
           count(lit(1)).as("n"))
         perPart.crossJoin(broadcast(tot))

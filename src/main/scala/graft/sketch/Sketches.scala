@@ -1,6 +1,7 @@
 package graft.sketch
 
 import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.Ckpt
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -94,10 +95,10 @@ object Sketches {
     * hash-deterministic, so it oracle-checks (q96). */
   def kmvJaccard(a: DataFrame, b: DataFrame, value: Column,
                  k: Int): DataFrame = {
-    val ka = kSmallestHashes(a, value, k).localCheckpoint(false)
-    val kb = kSmallestHashes(b, value, k).localCheckpoint(false)
+    val ka = Ckpt.store(kSmallestHashes(a, value, k))
+    val kb = Ckpt.store(kSmallestHashes(b, value, k))
     val ku = ka.unionAll(kb).distinct().orderBy("h").limit(k)
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val matches = ku.join(ka, Seq("h"), "left_semi")
       .join(kb, Seq("h"), "left_semi")
     ku.agg(count(lit(1)).as("k_used"))
@@ -121,10 +122,10 @@ object Sketches {
     * result oracle-checks (q115). */
   def kmvSetOps(a: DataFrame, b: DataFrame, value: Column,
                 k: Int): DataFrame = {
-    val ka = kSmallestHashes(a, value, k).localCheckpoint(false)
-    val kb = kSmallestHashes(b, value, k).localCheckpoint(false)
+    val ka = Ckpt.store(kSmallestHashes(a, value, k))
+    val kb = Ckpt.store(kSmallestHashes(b, value, k))
     val ku = ka.unionAll(kb).distinct().orderBy("h").limit(k)
-      .localCheckpoint(false)
+      .transform(Ckpt.store(_))
     val matches = ku.join(ka, Seq("h"), "left_semi")
       .join(kb, Seq("h"), "left_semi")
     ku.agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_h"))
@@ -215,7 +216,7 @@ object Sketches {
     // exchange carries pruned candidates" shape is unchanged at scale
     val vals = graft.util.Par.widen(df.select(value.as("term")))
     val sketch = countMinTable(vals, col("term"), d, w)
-      .localCheckpoint(false) // d consumers below; build the scan once
+      .transform(Ckpt.store(_)) // d consumers below; build the scan once
     // Row-preserving scan-stage probe: one broadcast join per hash row
     // (d tiny joins, never an explode or a term-keyed shuffle), then
     // est = least of the d cells. Rows keep their identity, so the
@@ -311,7 +312,7 @@ object Sketches {
         ceil(snapped.cast("double") / lit(1000000.0)).as("bucket"): _*)
       .groupBy((keys :+ "bucket").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // feeds the walk and the per-group totals
+      .transform(Ckpt.store(_)) // feeds the walk and the per-group totals
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*).orderBy("bucket")
     val cum = sketch.withColumn("cum", sum("cnt").over(w))

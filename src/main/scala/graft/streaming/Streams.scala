@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Ckpt
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -894,7 +895,7 @@ object Streams {
                          docsRoot: String, passes: Int,
                          intervalSec: Int = 1): Long = {
     val spark = links0.sparkSession
-    var links = links0.localCheckpoint()
+    var links = Ckpt.generation(links0).truncate()
     var docs: DataFrame = null
     val done = new java.util.concurrent.CountDownLatch(passes)
     val q = crawlTrigger(spark, intervalSec) { batchId =>
@@ -902,12 +903,12 @@ object Streams {
         val now = 42L + batchId
         val r = graft.crawl.Crawl.pass(links, getter,
           staleBefore = now, now = now)
-        links = r.links.localCheckpoint()
-        docs =
-          if (docs == null) r.documents.localCheckpoint()
+        links = Ckpt.generation(r.links).truncate()
+        docs = Ckpt.generation(
+          if (docs == null) r.documents
           else graft.store.StoreOps.latestByKey(
-            docs.unionByName(r.documents), Seq("link_id"), "indexed_at")
-            .localCheckpoint()
+            docs.unionByName(r.documents), Seq("link_id"), "indexed_at"))
+          .truncate()
         graft.store.Versioned.commitOverwrite(docs, docsRoot)
         done.countDown()
       }

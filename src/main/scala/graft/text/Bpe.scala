@@ -82,7 +82,8 @@ object Bpe {
                   onRound: Int => Unit = _ => ()): Seq[(Int, String, String, Long)] = {
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     require(batch >= 1, s"batch must be >= 1, got $batch")
-    var vocab = vocabulary(docs, textCol).localCheckpoint(false)
+    val gens = new graft.util.Ckpt.Generations
+    var vocab = gens.next(vocabulary(docs, textCol))
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false
@@ -124,7 +125,7 @@ object Bpe {
         }
         vocab = vocab
           .select(newToks.as("toks"), col("cnt"))
-          .localCheckpoint(false)
+          .transform(gens.next)
         rank += batchMerges.size
       }
     }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,8 @@ object ScaleCanary {
           pmod(xxhash64(col("id"), lit(3)), lit(1000)))
           .otherwise(pmod(xxhash64(col("id"), lit(3)), lit(nV))).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint() // eager: time the operators, not the generator
+      // eager: time the operators, not the generator
+      .transform(Ckpt.generation(_).truncate())
     val verts = spark.range(nV).select(col("id"))
 
     // ---- documents: 25-token texts; every 100th doc duplicates its
@@ -44,7 +46,7 @@ object ScaleCanary {
             when(pmod(col("id"), lit(100)) === 1, col("id") - 1)
               .otherwise(col("id")) * 131 + i, lit(7)), lit(5000)))),
           " ").as("text"))
-      .localCheckpoint()
+      .transform(Ckpt.generation(_).truncate())
     val planted = nD / 100
 
     // ---- embeddings: 64-dim hash-derived unit-ish vectors; every
@@ -60,7 +62,7 @@ object ScaleCanary {
             // the copy gets a +0.01 nudge on every component
             when(pmod(col("id"), lit(100)) === 1, 0.01).otherwise(0.0))
             .cast("float")).as("embedding"))
-      .localCheckpoint()
+      .transform(Ckpt.generation(_).truncate())
 
     // Inputs are lineage-truncated checkpoints: their blocks are the
     // ONLY copy, so the per-op cleanup must never drop them.
@@ -156,7 +158,7 @@ object ScaleCanary {
       pqBooks = graft.ml.Pq.collectBooks(
         graft.ml.Pq.train(emb, m = 8, k = 16, iters = 2), m = 8)
       pqEnc = graft.ml.Pq.encode(emb, pqBooks, subDim = 8)
-        .localCheckpoint(false)
+        .transform(Ckpt.store(_))
       val n = pqEnc.count()
       keep = keep ++ spark.sparkContext.getPersistentRDDs.keySet
       n
@@ -276,7 +278,7 @@ object ScaleCanary {
     val bloom = time("bloom filter probe") {
       val dim = spark.range(20000).select((col("id") * 7).as("k"))
       val bits = graft.operators.RuntimeFilter.bloomBits(
-        dim, col("k"), k = 3, mBits = 1 << 18).localCheckpoint(false)
+        dim, col("k"), k = 3, mBits = 1 << 18).transform(Ckpt.store(_))
       graft.operators.RuntimeFilter.probe(
         edges.select(col("src").as("k")), col("k"), bits,
         k = 3, mBits = 1 << 18).count()
@@ -324,7 +326,7 @@ object ScaleCanary {
             when(pmod(col("id"), lit(100)) === 1, col("id") - 1)
               .otherwise(col("id")) * 131 + i, lit(7)), lit(500000L)))),
           " ").as("text"))
-      .localCheckpoint()
+      .transform(Ckpt.generation(_).truncate())
     val sparsePlanted = 200000L / 100
     val sc = time("sparse cosine pairs") {
       graft.ml.SparseSim.tfidfCosinePairs(sdocs, maxDf = 64,
@@ -420,7 +422,7 @@ object ScaleCanary {
           (pmod(xxhash64(col("id"), lit(13)), lit(5)) + 1).cast("int"))
           .as("event_type"),
         (col("id") * 1000L).as("ts_us"))
-      .localCheckpoint()
+      .transform(Ckpt.generation(_).truncate())
     // the event stream feeds several legs — shield its blocks from the
     // per-op cleanup (the previous leg already swept its own blocks)
     keep = spark.sparkContext.getPersistentRDDs.keySet
@@ -601,7 +603,7 @@ object ScaleCanary {
     // buffer per partition instead of shuffling register rows
     val ids = spark.range(50000000L)
       .select(concat(lit("u"), pmod(xxhash64(col("id")), lit(20000000L)))
-        .as("u")).localCheckpoint()
+        .as("u")).transform(Ckpt.generation(_).truncate())
     // shared input of the two timed legs — shield it from per-leg cleanup
     keep = keep ++ spark.sparkContext.getPersistentRDDs.keySet
     val hn = time("hll native (50M)") {
@@ -627,7 +629,7 @@ object ScaleCanary {
     // otherwise drop the blocks, making the verify leg re-derive the
     // candidate stage — twice, since ids also reads it)
     val ppCand = graft.dedup.Dedup.prefixCandidates(docs, shingleN = 3,
-      threshold = 0.5).localCheckpoint(false)
+      threshold = 0.5).transform(Ckpt.store(_))
     val ppCandN = time("ppjoin candidates") {
       val n = ppCand.count()
       keep = keep ++ spark.sparkContext.getPersistentRDDs.keySet
@@ -1032,7 +1034,7 @@ object ScaleCanary {
           .otherwise(pmod(xxhash64(col("id"), lit(9)), lit(2)))
           .as("y"),
         pmod(col("id"), lit(16)).as("g"))
-      .localCheckpoint()
+      .transform(Ckpt.generation(_).truncate())
     val aucRow = time("logreg fit + auc (500k)") {
       val w = graft.ml.LogReg.fit(feats, Seq("x1"), "y", iters = 3,
         lr = 1.0)

@@ -16,10 +16,11 @@ object Logs {
   def quietExpected(): Unit = {
     Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
-    // Bench, Prof and ScaleCanary intentionally unpersist finished queries'
-    // localCheckpoint blocks (they are invisible to clearCache); Spark
-    // warns "lineage has been truncated and cannot be recomputed" per
-    // RDD, which is precisely the intent — the result was consumed.
+    // Bench, Prof and ScaleCanary intentionally unpersist finished
+    // queries' stored blocks (Ckpt generations, invisible to
+    // clearCache); Spark warns "lineage has been truncated and cannot be
+    // recomputed" per truncated RDD, which is precisely the intent — the
+    // result was consumed.
     Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
   }

@@ -742,6 +742,56 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("under AQE a HITS iteration exchanges only the V-sized score " +
+      "frames: one exchange per step, none over either edge layout") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // each step's score frame is a stored generation built in its own
+    // SQL execution, so its plan is only visible to the session's
+    // execution listeners. No broadcasts and no coalesced shuffle reads:
+    // the shape a cluster-scale input gets, where no side is small
+    // enough to broadcast and no partition small enough to merge (a
+    // coalesced score frame is exchanged once more, by its join key)
+    val iters = 2
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevC = spark.conf.get(coalesce)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(coalesce, "false")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val plans = try BuildJobs.plans(spark) {
+      graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect(); ()
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+      spark.conf.set(coalesce, prevC)
+    }
+    // walks the final adaptive plan, query stages included
+    object H extends AdaptiveSparkPlanHelper
+    def exchanges(p: SparkPlan) = H.collect(p) {
+      case e: ShuffleExchangeExec => e }
+    def isEdges(p: SparkPlan) = H.collect(p) {
+      case s: RDDScanExec if s.output.map(_.name) == Seq("src", "dst") => s
+    }.nonEmpty
+    // a step: an inner join of a stored edge layout with the previous
+    // score frame, summed by the other endpoint
+    val steps = plans.filter(p => H.collect(p) {
+      case j: SortMergeJoinExec if j.joinType ==
+          org.apache.spark.sql.catalyst.plans.Inner => j }.nonEmpty)
+    assert(steps.size == 2 * iters,
+      s"expected ${2 * iters} auth/hub steps among ${plans.size} plans")
+    steps.foreach { p =>
+      val join = H.collect(p) { case j: SortMergeJoinExec => j }.head
+      val edgeSide = Seq(join.left, join.right).filter(isEdges)
+      assert(edgeSide.size == 1, p.toString)
+      assert(exchanges(edgeSide.head).isEmpty,
+        s"the edge layout is exchanged:\n$p")
+      assert(exchanges(p).size == 1, s"${exchanges(p).size} exchanges:\n$p")
+    }
+  }
+
   test("a PageRank superstep under AQE never exchanges the cached edge " +
       "layout") {
     import spark.implicits._
@@ -784,14 +834,89 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("a multi-iteration PageRank over string ids never exchanges the " +
+      "cached edge layout under AQE") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val iters = 3
+    val name = (i: Long) => s"v$i"
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plans = try BuildJobs.plans(spark) {
+      graft.graph.PageRank.run(
+        (1L to 5L).map(name).toDF("id"),
+        graphEdges.map { case (a, b) => (name(a), name(b)) }
+          .toDF("src", "dst"),
+        maxIter = iters, stopTol = None).scores.collect(); ()
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+    object H extends AdaptiveSparkPlanHelper
+    def edgeSide(p: SparkPlan) = H.collect(p) {
+      case s: InMemoryTableScanExec
+          if Set("dst", "od").subsetOf(s.output.map(_.name).toSet) => s
+    }.nonEmpty
+    val joins = plans.flatMap(p => H.collect(p) {
+      case j: SortMergeJoinExec if edgeSide(j) &&
+          j.leftKeys.exists(_.references.exists(_.name == "src")) => j
+    })
+    assert(joins.size == iters, s"${joins.size} superstep joins among " +
+      s"${plans.size} plans")
+    joins.foreach { j =>
+      val side = Seq(j.left, j.right).filter(edgeSide)
+      assert(side.size == 1, j.toString)
+      assert(H.collect(side.head) { case x: ShuffleExchangeExec => x }.isEmpty,
+        s"the edge side is exchanged:\n$j")
+    }
+  }
+
+  test("under AQE a Louvain move round never exchanges its stored edge " +
+      "union by dst") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // each round's labels are a stored generation built in its own
+    // "checkpoint" SQL execution, which the listeners see
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val plans = try BuildJobs.plans(spark) {
+      graft.graph.Louvain.run(graphEdges.toDF("src", "dst"), rounds = 2)
+        .collect(); ()
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+    object H extends AdaptiveSparkPlanHelper
+    // the stored both-orientation edge union: (src, dst, w)
+    def isEdges(p: SparkPlan) = H.collect(p) {
+      case s: RDDScanExec if s.output.map(_.name) == Seq("src", "dst", "w") =>
+        s
+    }.nonEmpty
+    // a round's neighbor-label join, on dst, of the edges with the labels
+    val joins = plans.flatMap(p => H.collect(p) {
+      case j: SortMergeJoinExec if isEdges(j) &&
+          j.leftKeys.exists(_.references.exists(_.name == "dst")) => j
+    })
+    assert(joins.size == 2, s"${joins.size} neighbor joins among " +
+      s"${plans.size} plans")
+    joins.foreach { j =>
+      val side = Seq(j.left, j.right).filter(isEdges)
+      assert(side.size == 1, j.toString)
+      assert(H.collect(side.head) { case x: ShuffleExchangeExec => x }.isEmpty,
+        s"the edge union is exchanged:\n$j")
+    }
+  }
+
   test("a Louvain move round exchanges its candidate stream three times") {
     import spark.implicits._
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // Louvain's rounds run under Ckpt.lean, which never reports to the
-    // execution listeners, so the round is read from moveRound's own
-    // plan, as the argmax case above does
+    // the round is read from moveRound's own plan, as the argmax case
+    // above does (Louvain.run's stored rounds report to the listeners as
+    // "checkpoint" executions; the AQE case above reads them there)
     val labels = (1L to 5L).map(i => (i, i)).toDF("id", "lab")
     val p = clusterShape {
       graft.graph.Louvain.moveRound(graphEdges.toDF("src", "dst"), labels,

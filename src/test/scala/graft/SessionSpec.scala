@@ -46,6 +46,18 @@ class SessionSpec extends SparkSpec {
     assert(sites == Seq("src/main/scala/graft/Session.scala"))
   }
 
+  test("only graft.util checkpoints: no localCheckpoint or checkpoint " +
+      "call elsewhere in src/main") {
+    // every stored frame and loop generation goes through graft.util.Ckpt,
+    // which never marks an RDD lazily (a lazy mark can deadlock Spark 4.1)
+    val call = """localCheckpoint\s*\(|\.\s*checkpoint\s*\(""".r
+    val sites = codeUnder("src/main/scala").collect {
+      case (path, code) if !path.startsWith("src/main/scala/graft/util/") &&
+          call.findFirstIn(code).isDefined => path
+    }
+    assert(sites.isEmpty, sites)
+  }
+
   test("engine code warns through log4j, not System.err") {
     val errPrintln = """System\s*\.\s*err\s*\.\s*println""".r
     // the mains own their console: Bench, Verify, Demo and tools/

@@ -48,15 +48,72 @@ class CkptSpec extends SparkSpec {
     assert(g.frame.agg(sum("s")).first().getLong(0) == (0L until 100L).sum)
   }
 
+  private def leaf(f: DataFrame): LogicalRDD = f.queryExecution.analyzed
+    .collectFirst { case l: LogicalRDD => l }.get
+
   test("a generation plans like the stock checkpoint: the origin's " +
       "statistics and output layout carry over") {
-    val stock = grouped.localCheckpoint(eager = false)
-    val gen = Ckpt.generation(grouped).frame
-    def leaf(f: DataFrame) = f.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l }.get
-    assert(leaf(gen).outputPartitioning == leaf(stock).outputPartitioning)
-    assert(leaf(gen).outputOrdering == leaf(stock).outputOrdering)
     def size(f: DataFrame) = f.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(size(gen) == size(stock))
+    assert(size(Ckpt.generation(grouped).frame) ==
+      size(grouped.localCheckpoint(eager = false)))
+    // the layout is compared with AQE off: under AQE the stock
+    // checkpoint reports none (the layout pin below)
+    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val g = grouped
+      val stock = leaf(g.localCheckpoint(eager = false))
+      val gen = leaf(Ckpt.generation(g).frame)
+      assert(gen.outputPartitioning == stock.outputPartitioning)
+      assert(gen.outputOrdering == stock.outputOrdering)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevA)
+  }
+
+  test("the default leaf estimate replaces the origin's statistics only " +
+      "when asked") {
+    def size(l: LogicalRDD) = l.computeStats().sizeInBytes
+    assert(size(leaf(Ckpt.store(grouped, originStats = false))) ==
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    assert(size(leaf(Ckpt.store(grouped))) ==
+      grouped.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
+
+  test("under AQE a generation keeps the layout its final plan ran " +
+      "with: hash partitioned and sorted by the key") {
+    import org.apache.spark.sql.catalyst.plans.physical.{
+      CoalescedHashPartitioning, HashPartitioning}
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val df = spark.range(0L, 1000L, 1L, 4)
+      .select((col("id") % 10).as("k"), col("id"))
+      .repartition(col("k")).sortWithinPartitions("k")
+    val l = leaf(Ckpt.generation(df).frame)
+    val k = l.output.find(_.name == "k").get
+    // a coalesced shuffle read keeps its exact boundaries
+    val hash = l.outputPartitioning match {
+      case h: HashPartitioning => h
+      case CoalescedHashPartitioning(h, _) => h
+      case other => fail(s"not hash partitioned: $other")
+    }
+    assert(hash.expressions == Seq(k), l.outputPartitioning)
+    assert(l.outputPartitioning.numPartitions == l.rdd.getNumPartitions)
+    assert(l.outputOrdering.map(_.child) == Seq(k))
+    assert(l.outputOrdering.forall(_.isAscending))
+  }
+
+  test("generations whose shuffle reads coalesced differently still " +
+      "join exactly") {
+    // skewed: most rows under one key, so AQE coalesces the two reads
+    // with different boundaries
+    def keyed(n: Long, mod: Int) = spark.range(0L, n, 1L, 4)
+      .select(when(col("id") % 7 === 0, col("id") % mod).otherwise(lit(0L))
+        .as("k"), col("id").as(s"v$mod"))
+      .repartition(col("k"))
+    val a = Ckpt.generation(keyed(20000L, 50)).frame
+    val b = Ckpt.generation(keyed(3000L, 13)).frame
+    val got = a.join(b, "k").count()
+    val want = a.groupBy("k").count().withColumnRenamed("count", "ca")
+      .join(b.groupBy("k").count().withColumnRenamed("count", "cb"), "k")
+      .agg(sum(col("ca") * col("cb"))).first().getLong(0)
+    assert(got == want && want > 0)
   }
 }
