@@ -52,16 +52,8 @@ object Betweenness {
     // backward dependency pass joins on dst, so each keeps its own
     // stored layout — otherwise every per-round SMJ re-shuffles +
     // re-sorts the 2E-row edge table for that pass.
-    val und = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .transform(Ckpt.store(_))
-    val undByDst = und
-      .repartition(col("dst"))
-      .sortWithinPartitions("dst")
-      .transform(Ckpt.store(_))
+    val und = GraphUtil.layout(GraphUtil.undirected(edges), "src")
+    val undByDst = GraphUtil.layout(und, "dst")
 
     // Forward: levels(r) = (id, seed, sigma) for vertices first reached
     // at depth r. The frontier IS the level — delta state only.

@@ -49,12 +49,7 @@ object Communities {
     // this, distinct's (src, dst) partitioning forced a full 2E-row
     // edge exchange + sort EVERY round (measured 5.5 → 3.5 s on q82's
     // 1M-edge graph at sf0.1).
-    val und = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .transform(graft.util.Ckpt.store(_))
+    val und = GraphUtil.layout(GraphUtil.undirected(edges), "src")
 
     val init = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))

@@ -19,6 +19,18 @@ object GraphUtil {
     math.max(4, math.min(spark.sparkContext.defaultParallelism.toLong,
       edges / 128000L + 1).toInt)
 
+  /** Both orientations of `edges` (src, dst), one row per pair. */
+  def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+
+  /** `df` stored hash-partitioned and sorted by `key`: a loop's edge
+    * layout, which each round's sort-merge join on `key` reads without
+    * exchanging it (the Components/Communities layout law). */
+  def layout(df: DataFrame, key: String): DataFrame =
+    graft.util.Ckpt.store(df.repartition(col(key)).sortWithinPartitions(key))
+
   /** `df`'s row count as its optimized plan estimates it, with no job:
     * the plan's row count where its statistics carry one, else its size
     * estimate over its row width (exact for a local relation; for a

@@ -43,9 +43,7 @@ object HyperBall {
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
-      .repartition(col("dst"))
-      .sortWithinPartitions("dst")
-      .transform(graft.util.Ckpt.store(_))
+      .transform(GraphUtil.layout(_, "dst"))
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()

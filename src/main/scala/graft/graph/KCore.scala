@@ -49,10 +49,7 @@ object KCore {
     * one `groupBy(src)` over the symmetric table. */
   def run(edges: DataFrame, k: Int, rounds: Int,
           earlyStop: Boolean = true): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .transform(graft.util.Ckpt.store(_))
+    val und = graft.util.Ckpt.store(GraphUtil.undirected(edges))
 
     var e = und
     var prev = -1L

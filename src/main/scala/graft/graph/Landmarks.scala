@@ -36,12 +36,7 @@ object Landmarks {
     // leaf carries both through): each round's frontier join
     // re-shuffles only the frontier, not the 2E-row edge table — the
     // same layout law as Components/Communities.
-    val und = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .transform(graft.util.Ckpt.store(_))
+    val und = GraphUtil.layout(GraphUtil.undirected(edges), "src")
 
     Iterate.run(
       graft.util.Ckpt.store(

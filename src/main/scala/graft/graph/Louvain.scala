@@ -70,18 +70,16 @@ object Louvain {
     core(e2, deg, deg.agg(sum("k").as("m2")), labels, allowUp)
   }
 
-  /** Louvain's frames are stored with the default leaf estimate
-    * (`originStats = false`, see [[Ckpt.generation]]): a round reads
-    * the previous labels four times, so carried estimates compound. */
-  private def lean(df: DataFrame): DataFrame =
-    Ckpt.store(df, originStats = false)
-
-  /** [[bothWays]] stored hash-partitioned by `dst`, the key of every
-    * round's neighbor-label join, so no round exchanges the edge union.
-    * `rows`: the caller's estimate of `wedges`' row count. */
-  private def storedBothWays(we: DataFrame, rows: Long): DataFrame =
-    lean(bothWays(we).repartition(
-      GraphUtil.partitionLaw(rows, we.sparkSession), col("dst")))
+  /** `df` stored with the default leaf estimate (`originStats = false`,
+    * see [[Ckpt.generation]]), as every Louvain frame is: a round reads
+    * the previous labels four times, so carried estimates compound.
+    * With `byDst` (the caller's row estimate) `df` is stored
+    * hash-partitioned by `dst`, the key of every round's neighbor-label
+    * join, so no round exchanges the edge union. */
+  private def lean(df: DataFrame, byDst: Option[Long] = None): DataFrame =
+    Ckpt.store(byDst.fold(df)(rows => df.repartition(
+      GraphUtil.partitionLaw(rows, df.sparkSession), col("dst"))),
+      originStats = false)
 
   /** Both-orientation non-self edges (src, dst, w). */
   private def bothWays(wedges: DataFrame): DataFrame = {
@@ -223,7 +221,7 @@ object Louvain {
       : (DataFrame, Int, Long, java.math.BigDecimal) = {
     require(roundCap >= 2, s"need >= 2 rounds for a down+up pair")
     val we = lean(wedges)
-    val e2 = storedBothWays(we, GraphUtil.estimatedRows(wedges))
+    val e2 = lean(bothWays(we), Some(GraphUtil.estimatedRows(wedges)))
     val deg = lean(degrees(we))
     val m2 = deg.agg(sum("k").as("m2"))
     var lab = deg.select(col("id"), col("id").as("lab"))
@@ -323,7 +321,7 @@ object Louvain {
     // (the two union branches), which would re-run an expensive caller
     // edge derivation per branch
     val we = lean(edges.select(col("src"), col("dst"), lit(1L).as("w")))
-    val e2 = storedBothWays(we, GraphUtil.estimatedRows(edges))
+    val e2 = lean(bothWays(we), Some(GraphUtil.estimatedRows(edges)))
     val deg = lean(e2.select(col("src").as("id"), col("w"))
       .groupBy("id").agg(sum("w").as("k")))
     val m2 = deg.agg(sum("k").as("m2"))

@@ -38,9 +38,7 @@ object RandomWalk {
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
-      .transform(graft.util.Ckpt.store(_))
+      .transform(GraphUtil.layout(_, "src"))
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val gens = new graft.util.Ckpt.Generations

@@ -53,7 +53,9 @@ object Scc {
       col("dst").cast("long").as("dst")).distinct()
       .transform(Ckpt.store(_))
     // the residue's vertices and its two edge layouts, per peel
-    val vertGens, srcGens, dstGens = new Ckpt.Generations
+    val vertGens = new Ckpt.Generations
+    val layoutGens = Map("src" -> new Ckpt.Generations,
+      "dst" -> new Ckpt.Generations)
     var verts = vertGens.next(clean.select(col("src").as("id"))
       .union(clean.select(col("dst").as("id")))
       .distinct())
@@ -69,12 +71,11 @@ object Scc {
     // per-round driver probes.
     val loops = clean.filter(col("src") =!= col("dst"))
     val useLayout = loops.count() >= 200000L
-    def layout(df: DataFrame, key: String, gens: Ckpt.Generations) =
-      gens.next(
-        if (useLayout) df.repartition(col(key)).sortWithinPartitions(key)
-        else df)
-    var eSrc = layout(loops, "src", srcGens)
-    var eDst = if (useLayout) layout(eSrc, "dst", dstGens) else eSrc
+    def layout(df: DataFrame, key: String) = layoutGens(key).next(
+      if (useLayout) df.repartition(col(key)).sortWithinPartitions(key)
+      else df)
+    var eSrc = layout(loops, "src")
+    var eDst = if (useLayout) layout(eSrc, "dst") else eSrc
 
     var result: DataFrame = null
     var outer = 0
@@ -129,8 +130,8 @@ object Scc {
       eSrc = layout(eSrc
         .join(gone.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .join(gone.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-        .select("src", "dst"), "src", srcGens)
-      eDst = if (useLayout) layout(eSrc, "dst", dstGens) else eSrc
+        .select("src", "dst"), "src")
+      eDst = if (useLayout) layout(eSrc, "dst") else eSrc
       outer += 1
     }
     result

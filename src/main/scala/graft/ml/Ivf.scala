@@ -64,7 +64,7 @@ object Ivf {
       .select(row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("h")).cast("long").as("cluster"),
         asDouble(col(vecCol)).as("centroid"))
-.transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
+      .transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
 
     for (_ <- 0 until iters) {
       val assigned = assign(data, centroids, idCol, vecCol)
@@ -125,7 +125,7 @@ object Ivf {
       .agg(transform(
         sort_array(collect_list(struct(col("i"), col("m")))),
         s => s.getField("m")).as("centroid"))
-.transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
+      .transform(Ckpt.generation(_).truncate()) // tiny: k rows, eager
     Index(assign(index.assignments.select(col(idCol), col(vecCol)),
       newCents, idCol, vecCol), newCents)
   }

@@ -47,10 +47,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Fold-based cosine, for benchmarking against the native path. */
-  def cosineFold(a: Column, b: Column): Column =
-    dotFold(a, b) / (sqrt(dotFold(a, a)) * sqrt(dotFold(b, b)))
-
   /** Exact top-k by cosine against one query vector. */
   def bruteForceTopK(emb: DataFrame, query: Seq[Float], k: Int,
                      idCol: String = "vec_id",

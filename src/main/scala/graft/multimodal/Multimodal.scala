@@ -142,14 +142,6 @@ object Multimodal {
       case _ => None
     }).getOrElse(decodeStub(kind, payload))
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),   // image|audio|video
-    StructField("payload", BinaryType, nullable = false),
-    StructField("meta_width", IntegerType),
-    StructField("meta_height", IntegerType),
-    StructField("meta_duration_ms", IntegerType)))
-
   /** STUB decode, for payloads no JDK codec accepts (all audio/video,
     * and non-image synthetic fixtures): derives deterministic
     * pseudo-dimensions from payload bytes so tests can assert exact

@@ -45,7 +45,7 @@ object RecordLinkage {
     val base = records.select(
       (col(idCol) +: blockCols.map(col)) ++
         fields.map { case (n, e) => e.as(s"f_$n") }: _*)
-.transform(graft.util.Ckpt.store(_)) // u-stats + both join sides read it
+      .transform(graft.util.Ckpt.store(_)) // u-stats + both join sides read it
 
     // u_f = Σ cnt² / n² — exact integers up to the single divide.
     val uFrames = fields.map { case (n, _) =>

@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.Ckpt
 import graft.operators.Sampling
 import graft.util.Exact
 
@@ -214,7 +213,7 @@ object PipelineQueries {
         // once (a stored leaf, Ckpt.store) so the dimension scan
         // doesn't re-run per consumer.
         val bits = RuntimeFilter.bloomBits(cust, col("k"), k = 3,
-          mBits = 4096).transform(Ckpt.store(_))
+          mBits = 4096).transform(graft.util.Ckpt.store(_))
         val orders = Tables.orders(s, dir)
         val pass = RuntimeFilter.probe(orders, col("o_custkey"), bits,
           k = 3, mBits = 4096)
@@ -1734,7 +1733,8 @@ object PipelineQueries {
               (lit(1.0) - col("l_discount"))).as("cents"))
           .groupBy("l_partkey")
           .agg(sum("cents").as("rev_cents"))
-          .transform(Ckpt.store(_)) // reused by the total AND the filter
+          // reused by the total AND the filter
+          .transform(graft.util.Ckpt.store(_))
         val tot = perPart.agg(sum("rev_cents").as("tot"),
           count(lit(1)).as("n"))
         perPart.crossJoin(broadcast(tot))

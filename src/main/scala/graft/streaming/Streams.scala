@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.util.Ckpt
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -895,7 +894,7 @@ object Streams {
                          docsRoot: String, passes: Int,
                          intervalSec: Int = 1): Long = {
     val spark = links0.sparkSession
-    var links = Ckpt.generation(links0).truncate()
+    var links = graft.util.Ckpt.generation(links0).truncate()
     var docs: DataFrame = null
     val done = new java.util.concurrent.CountDownLatch(passes)
     val q = crawlTrigger(spark, intervalSec) { batchId =>
@@ -903,8 +902,8 @@ object Streams {
         val now = 42L + batchId
         val r = graft.crawl.Crawl.pass(links, getter,
           staleBefore = now, now = now)
-        links = Ckpt.generation(r.links).truncate()
-        docs = Ckpt.generation(
+        links = graft.util.Ckpt.generation(r.links).truncate()
+        docs = graft.util.Ckpt.generation(
           if (docs == null) r.documents
           else graft.store.StoreOps.latestByKey(
             docs.unionByName(r.documents), Seq("link_id"), "indexed_at"))

@@ -139,8 +139,6 @@ object Porter {
     w
   }
 
-  val stemUdf = udf(stem _)
-
   /** Stemmed token array — the analyzer's optional final stage. */
   def stemAll(tokens: Column): Column = {
     val f = udf((ts: Seq[String]) => ts.map(stem))

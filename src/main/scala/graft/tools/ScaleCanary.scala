@@ -774,8 +774,6 @@ object ScaleCanary {
     // semi-join probe scanned all 64 files' key columns), rewrite only
     // the files that really hold matches, and carry every skipped file
     // verbatim into the new manifest.
-    val zParentFiles = graft.store.Versioned.files(zroot)
-      .map(p => p.substring(p.indexOf("data/")))
     val updates = zdf.filter(col("x") <= 63L && col("y") <= 63L)
       .select(col("x"), col("y"), (col("payload") + 1000000000L)
         .as("payload"))
@@ -786,7 +784,6 @@ object ScaleCanary {
     }
     require(mCand.size <= 8 && mCand.size + mSkip.size == 64,
       s"merge pre-prune admitted ${mCand.size}/64 files for a 1/64 box")
-    val preMergeCount = graft.store.Versioned.read(spark, zroot).count()
     val vm = time("sidecar-pruned merge commit (5M)") {
       graft.store.Versioned.commitMerge(updates, zroot, Seq("x", "y"))
     }

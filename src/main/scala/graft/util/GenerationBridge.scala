@@ -10,14 +10,14 @@ import org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection
 import org.apache.spark.sql.classic.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution,
   SQLExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.storage.StorageLevel
 
 import scala.reflect.ClassTag
 
 /** `localCheckpoint(false)` split in two, so that no job can race the
   * checkpoint ([[graft.util.Ckpt.Generation]]). */
-object GenerationBridge {
+object GenerationBridge extends AdaptiveSparkPlanHelper {
   /** `df` as an RDD leaf over rows stored (MEMORY_AND_DISK, the local
     * checkpoint's level) by the first job that computes them, built
     * like the stock local checkpoint: one "checkpoint" SQL execution
@@ -62,10 +62,7 @@ object GenerationBridge {
   private def leaf(df: DataFrame, rdd: RDD[InternalRow],
                    originStats: Boolean): DataFrame = {
     val qe = df.queryExecution
-    val plan = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val plan = stripAQEPlan(qe.executedPlan)
     val partitioning = plan.outputPartitioning match {
       case c: PartitioningCollection => c.partitionings.head
       case p => p

@@ -6,7 +6,6 @@ package org.apache.spark.sql.graftagg
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,13 +117,6 @@ case class HllSketchAgg(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
     copy(inputAggBufferOffset = newOffset)
-}
-
-/** Raw register export for interop/debug: array<byte>-as-ints of the
-  * final register file. Unused by the query surface; kept minimal. */
-object HllAgg {
-  def registersToArray(buf: Array[Byte]): GenericArrayData =
-    new GenericArrayData(buf.map(_.toInt))
 }
 
 object AggBridge {

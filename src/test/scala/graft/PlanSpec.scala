@@ -211,8 +211,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("k-core peels restrict edges via semi-joins, no cartesian") {
-    // q68's final plan is generation-truncated (localCheckpoint per
-    // round) — pin the per-round shape on the round body itself.
+    // q68's final plan reads a stored generation per round (Ckpt) —
+    // pin the per-round shape on the round body itself.
     val li = Tables.lineitem(spark, dir)
       .select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
@@ -666,8 +666,8 @@ class PlanSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
     val labels = (1L to 5L).map(i => (i, i)).toDF("id", "lab")
-    // LPA's rounds run inside Iterate's lazy checkpoints, so its argmax
-    // plan is only visible to the session's execution listeners
+    // LPA's rounds are Iterate's stored generations, so its argmax plan
+    // is only visible to the session's execution listeners
     val plans = BuildJobs.plans(spark) {
       graft.graph.Communities.labelPropagation(edges, 1).collect(); ()
     }.map(_.toString)
@@ -710,8 +710,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // each step's score frame is a lazy localCheckpoint, so its plan
-    // is only visible to the session's execution listeners
+    // each step's score frame is a stored generation built in its own
+    // SQL execution, so its plan is only visible to the session's
+    // execution listeners
     val iters = 2
     val plans = clusterShape(BuildJobs.plans(spark) {
       graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect(); ()
@@ -742,31 +743,31 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("under AQE a HITS iteration exchanges only the V-sized score " +
-      "frames: one exchange per step, none over either edge layout") {
+  /** A HITS run's auth/hub steps under AQE with broadcasts off (the
+    * shape a cluster-scale input gets, where no side is small enough to
+    * broadcast), each with its exchanges, after asserting that neither
+    * stored edge layout is exchanged. Each step's score frame is a
+    * stored generation built in its own SQL execution, so its plan is
+    * only visible to the session's execution listeners. */
+  private def hitsStepsUnderAqe(coalesce: Boolean)
+      : Seq[(org.apache.spark.sql.execution.SparkPlan, Int)] = {
     import spark.implicits._
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // each step's score frame is a stored generation built in its own
-    // SQL execution, so its plan is only visible to the session's
-    // execution listeners. No broadcasts and no coalesced shuffle reads:
-    // the shape a cluster-scale input gets, where no side is small
-    // enough to broadcast and no partition small enough to merge (a
-    // coalesced score frame is exchanged once more, by its join key)
     val iters = 2
-    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevC = spark.conf.get(coalesce)
+    val prevC = spark.conf.get(coalesceKey)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(coalesce, "false")
+    spark.conf.set(coalesceKey, coalesce.toString)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val plans = try BuildJobs.plans(spark) {
       graft.graph.Hits.run(graphEdges.toDF("src", "dst"), iters).collect(); ()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set(coalesce, prevC)
+      spark.conf.set(coalesceKey, prevC)
     }
     // walks the final adaptive plan, query stages included
     object H extends AdaptiveSparkPlanHelper
@@ -782,14 +783,35 @@ class PlanSpec extends SparkSpec {
           org.apache.spark.sql.catalyst.plans.Inner => j }.nonEmpty)
     assert(steps.size == 2 * iters,
       s"expected ${2 * iters} auth/hub steps among ${plans.size} plans")
-    steps.foreach { p =>
+    steps.map { p =>
       val join = H.collect(p) { case j: SortMergeJoinExec => j }.head
       val edgeSide = Seq(join.left, join.right).filter(isEdges)
       assert(edgeSide.size == 1, p.toString)
       assert(exchanges(edgeSide.head).isEmpty,
         s"the edge layout is exchanged:\n$p")
-      assert(exchanges(p).size == 1, s"${exchanges(p).size} exchanges:\n$p")
+      (p, exchanges(p).size)
     }
+  }
+
+  test("under AQE a HITS iteration exchanges only the V-sized score " +
+      "frames: one exchange per step, none over either edge layout") {
+    // no coalesced shuffle reads: no partition is small enough to merge
+    hitsStepsUnderAqe(coalesce = false).foreach { case (p, n) =>
+      assert(n == 1, s"$n exchanges:\n$p")
+    }
+  }
+
+  test("under the session's partition coalescing a HITS step still " +
+      "never exchanges either edge layout") {
+    // a coalesced score frame keeps its coalesced boundaries, which no
+    // edge layout shares: the next step exchanges it once more by its
+    // join key (V-sized), so a step exchanges at most twice. Only the
+    // first step, over the uncoalesced vertex frame, exchanges once.
+    val counts = hitsStepsUnderAqe(coalesce = true).map { case (p, n) =>
+      assert(n <= 2, s"$n exchanges:\n$p")
+      n
+    }
+    assert(counts.head == 1, counts)
   }
 
   test("a PageRank superstep under AQE never exchanges the cached edge " +

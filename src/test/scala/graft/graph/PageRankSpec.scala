@@ -285,7 +285,7 @@ class PageRankSpec extends SparkSpec {
     }
     assert(rows == gv.size)
     // no count of the edges or vertices and no SAD action: the jobs
-    // are the stages of the two lazy checkpoints and the collect
+    // are the stages of the two stored generations and the collect
     assert(jobs.size <= 12, s"${jobs.size} jobs: $jobs")
   }
 }
