@@ -803,10 +803,10 @@ class PlanSpec extends SparkSpec {
 
   test("under the session's partition coalescing a HITS step still " +
       "never exchanges either edge layout") {
-    // a coalesced score frame keeps its coalesced boundaries, which no
-    // edge layout shares: the next step exchanges it once more by its
-    // join key (V-sized), so a step exchanges at most twice. Only the
-    // first step, over the uncoalesced vertex frame, exchanges once.
+    // a coalesced score frame reports no partitioning (a coalesced read
+    // co-partitions with nothing): the next step exchanges it once more
+    // by its join key (V-sized), so a step exchanges at most twice. Only
+    // the first step, over the uncoalesced vertex frame, exchanges once.
     val counts = hitsStepsUnderAqe(coalesce = true).map { case (p, n) =>
       assert(n <= 2, s"$n exchanges:\n$p")
       n

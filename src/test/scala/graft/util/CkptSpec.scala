@@ -80,24 +80,30 @@ class CkptSpec extends SparkSpec {
 
   test("under AQE a generation keeps the layout its final plan ran " +
       "with: hash partitioned and sorted by the key") {
-    import org.apache.spark.sql.catalyst.plans.physical.{
-      CoalescedHashPartitioning, HashPartitioning}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val df = spark.range(0L, 1000L, 1L, 4)
+    val keyed = spark.range(0L, 1000L, 1L, 4)
       .select((col("id") % 10).as("k"), col("id"))
-      .repartition(col("k")).sortWithinPartitions("k")
-    val l = leaf(Ckpt.generation(df).frame)
-    val k = l.output.find(_.name == "k").get
-    // a coalesced shuffle read keeps its exact boundaries
-    val hash = l.outputPartitioning match {
-      case h: HashPartitioning => h
-      case CoalescedHashPartitioning(h, _) => h
-      case other => fail(s"not hash partitioned: $other")
+    def layout(df: DataFrame) = {
+      val l = leaf(Ckpt.generation(df.sortWithinPartitions("k")).frame)
+      val k = l.output.find(_.name == "k").get
+      assert(l.outputOrdering.map(_.child) == Seq(k))
+      assert(l.outputOrdering.forall(_.isAscending))
+      assert(l.outputPartitioning.numPartitions == l.rdd.getNumPartitions)
+      (l.outputPartitioning, k)
     }
-    assert(hash.expressions == Seq(k), l.outputPartitioning)
-    assert(l.outputPartitioning.numPartitions == l.rdd.getNumPartitions)
-    assert(l.outputOrdering.map(_.child) == Seq(k))
-    assert(l.outputOrdering.forall(_.isAscending))
+    // a numbered repartition is never coalesced
+    layout(keyed.repartition(4, col("k"))) match {
+      case (HashPartitioning(Seq(k1), 4), k) => assert(k1 == k)
+      case (other, _) => fail(s"not hash partitioned by k: $other")
+    }
+    // 8 tiny shuffle partitions, which AQE coalesces: a coalesced read
+    // co-partitions with nothing, so the leaf reports no partitioning
+    val prevP = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try assert(!layout(keyed.repartition(col("k")))._1
+      .isInstanceOf[HashPartitioning])
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevP)
   }
 
   test("generations whose shuffle reads coalesced differently still " +
