@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{col, lit, max, pmod}
 
-/** Shared sizing rules for the iterative graph operators. */
+/** Shared sizing and edge-layout rules for the iterative graph operators. */
 object GraphUtil {
 
   /** Partition count for a cached edge table of `edges` rows: ~128k
